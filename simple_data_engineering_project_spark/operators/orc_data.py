@@ -368,11 +368,17 @@ def rlev2_decode(data: bytes, count: int, signed: bool) -> list[int]:
             if width and length > 2:
                 deltas, pos = _take_many(data, pos, width, length - 2)
                 sign = 1 if delta0 >= 0 else -1
-                if length - 2 >= 16:
+                if (
+                    length - 2 >= 16
+                    and (width < 64 or max(deltas) < 2**63)
+                    and -(2**63) <= base + delta0 < 2**63
+                ):
                     import numpy as np
 
-                    # prefix-sum the deltas in one vector op; int64 is
-                    # exact (ORC values fit int64 by contract)
+                    # prefix-sum the deltas in one vector op; wrapping
+                    # int64 sums are exact for values that fit int64
+                    # (ORC's contract) once every step and the start
+                    # fit int64 themselves
                     steps = np.asarray(deltas, dtype=np.int64)
                     seq.extend(
                         (

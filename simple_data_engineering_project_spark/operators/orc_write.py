@@ -220,19 +220,35 @@ def rlev2_encode(values: list[int], signed: bool) -> bytes:
     # segment's values become literals IN BULK except its last value,
     # which seeds the next run — byte-identical to the greedy
     # one-value-at-a-time walk (literal flushes stay at exactly 512).
+    #
+    # int64 subtraction wraps once some |v| >= 2^62, so such inputs take
+    # the exact Python-int walk instead; there a delta outside int64
+    # never becomes a DELTA run (readers hold deltas in int64).
     if n >= 2:
         import numpy as np
 
-        darr = np.asarray(values[1:], dtype=np.int64) - np.asarray(
-            values[:-1], dtype=np.int64
-        )
-        bounds = np.flatnonzero(darr[1:] != darr[:-1]) + 1
-        seg_start = np.concatenate(([0], bounds))
-        seg_last = np.concatenate((bounds - 1, [len(darr) - 1]))
-        # seg_end_at[k] = seg_last of the segment containing delta k
-        seg_end_at = np.repeat(seg_last, seg_last - seg_start + 1)
-        deltas = darr.tolist()
-        seg_end_at = seg_end_at.tolist()
+        try:
+            arr = np.asarray(values, dtype=np.int64)
+            exact = -(2**62) < arr.min() and arr.max() < 2**62
+        except OverflowError:
+            exact = False
+        if exact:
+            darr = arr[1:] - arr[:-1]
+            bounds = np.flatnonzero(darr[1:] != darr[:-1]) + 1
+            seg_start = np.concatenate(([0], bounds))
+            seg_last = np.concatenate((bounds - 1, [len(darr) - 1]))
+            # seg_end_at[k] = seg_last of the segment containing delta k
+            seg_end_at = np.repeat(seg_last, seg_last - seg_start + 1)
+            deltas = darr.tolist()
+            seg_end_at = seg_end_at.tolist()
+        else:
+            deltas = [b - a for a, b in zip(values, values[1:])]
+            seg_end_at = deltas[:]
+            seg_end_at[-1] = len(deltas) - 1
+            for k in range(len(deltas) - 2, -1, -1):
+                seg_end_at[k] = (
+                    seg_end_at[k + 1] if deltas[k] == deltas[k + 1] else k
+                )
     i = 0
     while i < n:
         if i == n - 1:
@@ -251,7 +267,9 @@ def rlev2_encode(values: list[int], signed: bool) -> bytes:
             out.append(((width - 1) << 3) | (length - 3))
             out += u.to_bytes(width, "big")
             i += length
-        elif (d == 0 and length > 10) or (d != 0 and length >= 4):
+        elif (d == 0 and length > 10) or (
+            d != 0 and length >= 4 and -(2**63) <= d < 2**63
+        ):
             flush_lits()
             # fixed-delta DELTA run: header sub=3, wcode=0, 9-bit
             # length-1; base (zigzag when signed), delta ALWAYS zigzag

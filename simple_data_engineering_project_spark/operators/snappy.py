@@ -57,6 +57,8 @@ def snappy_decompress(data: bytes) -> bytes:
                 ln = int.from_bytes(data[pos : pos + extra], "little")
                 pos += extra
             ln += 1
+            if pos + ln > n:
+                raise ValueError("snappy literal runs past end of input")
             out += data[pos : pos + ln]
             olen += ln
             pos += ln
@@ -90,7 +92,7 @@ def snappy_decompress(data: bytes) -> bytes:
             if rem:
                 out += out[start : start + rem]
         olen += ln
-    if olen != total:
+    if len(out) != total:
         raise ValueError("snappy length mismatch")
     return bytes(out)
 

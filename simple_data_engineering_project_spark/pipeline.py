@@ -16,14 +16,23 @@ Scale notes: file listing and header probing are control-plane metadata
 (names + first line), never data; the data path is one DataFrame plan —
 scan all valid files at once (vs the reference's sequential per-file
 loop), derive columns, one shuffle for the keyed upsert.
+
+Spark job budget per run: the stage write and the warehouse write on a
+first load; the stage write, the moved-month key probe and the merge
+write on a merge (plus a partition-pruned count when some months are
+untouched). ``rows_upserted`` and ``warehouse_rows`` are observations
+on those writes, not count jobs, and read-backs use the known schema,
+so no schema-inference job runs. Landing generates every file from one
+``spark.range`` in one write.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .operators.upsert import upsert_last_write_wins
 from .schemas import (
@@ -37,19 +46,32 @@ from .sources import archive_move, list_files, scan_parquet, sink_parquet
 
 
 def generate_cocoa_data(
-    spark: SparkSession, num_records: int, seed: int = 42,
-    partitions: int | None = None,
+    spark: SparkSession, num_records: int, seed: int = 42
 ) -> DataFrame:
-    """Synthetic cocoa shipments (reference A16, generate_data.py:24-47).
+    """Synthetic cocoa shipments (reference A16, generate_data.py:24-47):
+    the one-file case of :func:`_cocoa_files`."""
+    return _cocoa_files(spark, 1, num_records, seed).drop("__file")
 
-    Same value domains, rebuilt as KEY-DERIVED column expressions over
-    ``spark.range`` — fully distributed (the reference builds rows in a
-    Python loop) and deterministic given (num_records, seed):
 
-    - shipment_id: md5(seed, id) — unique + reproducible (the reference's
-      uuid4 is nondeterministic, a correctness trap per SURVEY §1.4)
+def _cocoa_files(
+    spark: SparkSession, num_files: int, rows_per_file: int, seed: int
+) -> DataFrame:
+    """``num_files`` synthetic shipment files of ``rows_per_file`` rows
+    each, built from ONE ``spark.range`` and tagged with ``__file``.
+
+    Same value domains as the reference, rebuilt as KEY-DERIVED column
+    expressions — fully distributed (the reference builds rows in a
+    Python loop) and deterministic given (rows_per_file, seed): file
+    ``f`` is the frame of row seed ``seed + f`` over local row ids
+    ``lid`` in ``[0, rows_per_file)``. The row seed is a column, so
+    every file shares one plan (one Py4J frame instead of one per file
+    plus a union chain).
+
+    - shipment_id: md5(row seed, lid) — unique + reproducible (the
+      reference's uuid4 is nondeterministic, a correctness trap per
+      SURVEY §1.4)
     - every random draw is a Knuth multiplicative-hash uniform of
-      (id, seed, column-index) in PURE INTEGER arithmetic (the
+      (lid, row seed, column-index) in PURE INTEGER arithmetic (the
       dp_noisy_counts/dataset_split mechanism) instead of ``F.rand``:
       rand() values depend on the RANGE PARTITIONING (a different core
       count reshuffles every draw), while the hash is row-keyed — stable
@@ -59,15 +81,19 @@ def generate_cocoa_data(
       [now-2y, now], nondeterministic; we pin the window)
     - temperature_celsius: NULL with p = 0.1 (generate_data.py:40-41)
     """
+    per_file = max(rows_per_file, 1)
+    file = F.expr(f"id div {per_file}")
+    lid = F.col("id") % F.lit(per_file)
+    row_seed = F.lit(seed) + file
 
     def u_int(k: int, scale: int):
-        # floor(uniform(id,k) * scale) without any float op:
-        # h ∈ [0, 2^32) via ((id*31+seed*131+k) % 1000003) * knuth, then
-        # (h*scale) >> 32 — pure int64 (h*scale < 2^58 for every scale
-        # here; a double division would lose exactness past 2^53),
-        # ANSI-overflow-safe, and bit-identical in DuckDB
+        # floor(uniform(lid,k) * scale) without any float op:
+        # h ∈ [0, 2^32) via ((lid*31+row_seed*131+k) % 1000003) * knuth,
+        # then (h*scale) >> 32 — pure int64 (h*scale < 2^58 for every
+        # scale here; a double division would lose exactness past
+        # 2^53), ANSI-overflow-safe, and bit-identical in DuckDB
         h = (
-            (F.col("id") * 31 + F.lit(seed * 131 + k)) % F.lit(1_000_003)
+            (lid * 31 + row_seed * 131 + F.lit(k)) % F.lit(1_000_003)
         ) * F.lit(2654435761) % F.lit(4294967296)
         return F.shiftrightunsigned(h * F.lit(scale), 32)
 
@@ -75,37 +101,47 @@ def generate_cocoa_data(
     beans = F.array(*[F.lit(b) for b in BEAN_TYPES])
     epoch_lo = F.lit(1672531200)  # 2023-01-01 UTC
     window_s = 2 * 365 * 24 * 3600
-    rng = (
-        spark.range(num_records)
-        if partitions is None
-        # callers generating MANY frames in one job (land_csv_files)
-        # pass a per-frame width: the default splits every frame over
-        # defaultParallelism tasks, and 6 frames × 32 cores = 192
-        # near-empty tasks whose scheduling overhead dominated the
-        # landing stage (round-16 measurement: ~1.5 s of the 3-4 s
-        # stage was task dispatch)
-        else spark.range(0, num_records, numPartitions=partitions)
+    return spark.range(num_files * rows_per_file).select(
+        F.md5(F.concat(F.lit("seed"), row_seed, F.lit("-"), lid)).alias(
+            "shipment_id"
+        ),
+        F.timestamp_seconds(epoch_lo + u_int(0, window_s)).alias("timestamp"),
+        F.concat(
+            F.lit("FARM-"), (100 + u_int(1, 101)).cast("string")
+        ).alias("farm_id"),
+        regions[u_int(2, len(COCOA_REGIONS)).cast("int")].alias("region"),
+        beans[u_int(3, len(BEAN_TYPES)).cast("int")].alias("bean_type"),
+        # integer basis points / deciunits: the domain is already
+        # 2dp/1dp-stepped, and integer construction sidesteps the
+        # Spark-vs-DuckDB ROUND half-boundary divergence
+        ((750 + u_int(4, 230)) / F.lit(100.0)).alias("quality_score"),
+        (500 + u_int(5, 4501)).cast("double").alias("shipment_weight_kg"),
+        F.when(
+            u_int(6, 10) >= 1,
+            (180 + u_int(7, 70)) / F.lit(10.0),
+        ).alias("temperature_celsius"),
+        file.cast("int").alias("__file"),
     )
-    return (
-        rng
-        .select(
-            F.md5(F.concat(F.lit(f"seed{seed}-"), F.col("id"))).alias("shipment_id"),
-            F.timestamp_seconds(epoch_lo + u_int(0, window_s)).alias("timestamp"),
-            F.concat(
-                F.lit("FARM-"), (100 + u_int(1, 101)).cast("string")
-            ).alias("farm_id"),
-            regions[u_int(2, len(COCOA_REGIONS)).cast("int")].alias("region"),
-            beans[u_int(3, len(BEAN_TYPES)).cast("int")].alias("bean_type"),
-            # integer basis points / deciunits: the domain is already
-            # 2dp/1dp-stepped, and integer construction sidesteps the
-            # Spark-vs-DuckDB ROUND half-boundary divergence
-            ((750 + u_int(4, 230)) / F.lit(100.0)).alias("quality_score"),
-            (500 + u_int(5, 4501)).cast("double").alias("shipment_weight_kg"),
-            F.when(
-                u_int(6, 10) >= 1,
-                (180 + u_int(7, 70)) / F.lit(10.0),
-            ).alias("temperature_celsius"),
-        )
+
+
+_LANDING_COLS = [f.name for f in COCOA_LANDING_SCHEMA.fields]
+
+
+def _csv_line():
+    """One landing CSV line per row, as Spark's CSV writer formats it
+    with ``timestampFormat=yyyy-MM-dd'T'HH:mm:ss``: a NULL in any
+    column, the timestamp included, is an empty field."""
+    return F.concat_ws(
+        ",",
+        *[
+            F.coalesce(
+                F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
+                if c == "timestamp"
+                else F.col(c).cast("string"),
+                F.lit(""),
+            )
+            for c in _LANDING_COLS
+        ],
     )
 
 
@@ -116,58 +152,30 @@ def land_csv_files(
     rows_per_file: int = 2000,
     seed: int = 42,
 ) -> list[str]:
-    """Land ``num_files`` CSV files (reference gen_dag.py:36-52).
+    """Land ``num_files`` CSV files (reference gen_dag.py:36-52); file
+    ``i`` holds the rows of seed ``seed + i``.
 
     Each file is written as a single-partition CSV directory then renamed
     to a flat ``.csv`` path so the landing layout matches the reference's
     (one object per file).
     """
-    import math
-
-    from pyspark.sql import functions as F
-
-    from .schemas import COCOA_LANDING_SCHEMA
-
-    # ONE write job for all files, with the per-row work done at FULL
-    # width before the one-file-per-object exchange (round-16, guide
-    # §2.3 "project before the exchange" applied to a write): the CSV
+    # ONE frame and ONE write job for all files, with the per-row work
+    # done at FULL width before the one-file-per-object exchange
+    # ("project before the exchange", applied to a write): the CSV
     # LINE for every record is formatted as a string column while the
     # data is still spread over the cluster, so the exchange on the
     # file id moves finished text and the num_files single-task writers
-    # (the one-object-per-file landing contract) only dump bytes.
-    # Previously the 6 writer tasks did all 600k rows of CSV encoding
-    # while 26 cores idled, and each per-seed frame split over
-    # defaultParallelism tasks (192 near-empty tasks of scheduling
-    # overhead). Line formatting mirrors the uniVocity writer exactly
-    # on this schema (timestampFormat pattern via date_format;
-    # Double.toString via cast(string); NULL → empty field) — every
-    # value domain is quote-free, pinned by
+    # (the one-object-per-file landing contract) only dump bytes. Line
+    # formatting mirrors the uniVocity writer exactly on this schema
+    # (timestampFormat pattern via date_format; Double.toString via
+    # cast(string); NULL → empty field) — every value domain is
+    # quote-free, pinned by
     # tests/test_pipeline.py::test_land_csv_lines_match_jvm_writer.
-    cols = [f.name for f in COCOA_LANDING_SCHEMA.fields]
-    per_frame = max(
-        1,
-        math.ceil(spark.sparkContext.defaultParallelism / max(num_files, 1)),
-    )
-    tagged = None
-    for i in range(num_files):
-        df = generate_cocoa_data(
-            spark, rows_per_file, seed=seed + i, partitions=per_frame
-        ).withColumn("__file", F.lit(i))
-        tagged = df if tagged is None else tagged.unionByName(df)
-    line = F.concat_ws(
-        ",",
-        *[
-            F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
-            if c == "timestamp"
-            else F.coalesce(F.col(c).cast("string"), F.lit(""))
-            for c in cols
-        ],
-    )
-    body = tagged.select(
-        line.alias("line"), F.col("__file"), F.lit(1).alias("__rank")
+    body = _cocoa_files(spark, num_files, rows_per_file, seed).select(
+        _csv_line().alias("line"), F.col("__file"), F.lit(1).alias("__rank")
     )
     header = spark.createDataFrame(
-        [(",".join(cols), i, 0) for i in range(num_files)],
+        [(",".join(_LANDING_COLS), i, 0) for i in range(num_files)],
         "line string, __file int, __rank int",
     )
     tmp = f"{landing_dir}/.tmp_gen"
@@ -278,16 +286,17 @@ class PipelineResult:
 WAREHOUSE_PARTITION_COL = "load_month"
 
 
+def _load_month():
+    return F.coalesce(F.date_format("timestamp", "yyyy-MM"), F.lit("unknown"))
+
+
 def _with_load_month(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        WAREHOUSE_PARTITION_COL,
-        F.coalesce(F.date_format("timestamp", "yyyy-MM"), F.lit("unknown")),
-    )
+    return df.withColumn(WAREHOUSE_PARTITION_COL, _load_month())
 
 
-def _write_partitioned(df: DataFrame, path: str) -> None:
+def _write_partitioned(df: DataFrame, path: str) -> int:
     """partitionBy write clustered on the partition column and SORTED
-    on the merge key within partitions.
+    on the merge key within partitions; returns the rows written.
 
     Without the repartition every shuffle task holding rows of a month
     opens a writer for it — months × tasks small files. Clustering first
@@ -299,15 +308,29 @@ def _write_partitioned(df: DataFrame, path: str) -> None:
     shipment_id min/max zone map TIGHT and disjoint, so the next run's
     key-range probe (run_batch_pipeline's moved-month scan) skips row
     groups at the parquet footer instead of decoding them. The same
-    layout move zorder_layout makes for multi-column ranges.
+    layout move zorder_layout makes for multi-column ranges. Caveat:
+    the optimizer currently removes this sort, because the partitioned
+    writer adds its own local sort on the partition column above it,
+    so the written files are NOT key-sorted; sorting on
+    (partition column, shipment_id) would keep the order.
+
+    The row count is an observation on the write itself, not a second
+    job. It sits right after the exchange: adaptive execution replaces
+    an empty shuffle's consumers with an empty relation, which would
+    drop an observation placed before the exchange, and one placed
+    after the sort would keep the optimizer from planning the sort as
+    it does without the observation (the stored bytes would change).
     """
+    written = Observation()
     (
         df.repartition(F.col(WAREHOUSE_PARTITION_COL))
+        .observe(written, F.count(F.lit(1)).alias("rows"))
         .sortWithinPartitions("shipment_id")
         .write.mode("overwrite")
         .partitionBy(WAREHOUSE_PARTITION_COL)
         .parquet(path)
     )
+    return written.get["rows"]
 
 
 def run_batch_pipeline(
@@ -326,6 +349,14 @@ def run_batch_pipeline(
     ONE DataFrame; the upsert is last-write-wins on shipment_id against
     the parquet warehouse (A13); archive only after a successful commit
     (A14 ordering — archival is what marks a file durable).
+
+    Spark work per run: the stage write, then on a first load the
+    warehouse write; on a merge the moved-month key probe and the merge
+    write, plus a partition-pruned count only when some months are
+    untouched. ``rows_upserted`` and ``warehouse_rows`` come from
+    observations on the writes (the stage write also yields the batch's
+    key bounds and months), and every read-back uses the known schema,
+    so no side query or schema-inference job runs.
 
     ``keep_history=True`` turns every batch into a numbered snapshot
     (lakehouse-style time travel): instead of deleting a replaced
@@ -360,14 +391,27 @@ def run_batch_pipeline(
     enriched = enrich(landed, deterministic_ts=deterministic_ts)
 
     # Stage columnar (A9) — the warehouse loads from the stage, so a load
-    # failure never leaves the warehouse half-written from raw CSVs.
-    sink_parquet(enriched, staging_dir)
-    staged = scan_parquet(spark, staging_dir)
-    result.rows_upserted = staged.count()
+    # failure never leaves the warehouse half-written from raw CSVs. The
+    # stage write observes the batch: row count, key bounds and months
+    # (bounded by the month domain).
+    part = WAREHOUSE_PARTITION_COL
+    observed = Observation()
+    sink_parquet(
+        enriched.observe(
+            observed,
+            F.count(F.lit(1)).alias("rows"),
+            F.min("shipment_id").alias("lo"),
+            F.max("shipment_id").alias("hi"),
+            F.collect_set(_load_month()).alias("months"),
+        ),
+        staging_dir,
+    )
+    batch = observed.get
+    result.rows_upserted = batch["rows"]
+    schema = enriched.schema
+    staged_m = _with_load_month(spark.read.schema(schema).parquet(staging_dir))
 
     warehouse_path = f"{warehouse_dir}/cocoa_shipments"
-    staged_m = _with_load_month(staged)
-    part = WAREHOUSE_PARTITION_COL
     if _exists(spark, warehouse_path):
         # Partition-scoped merge (reference A13, dag.py:223-237): the
         # reference's ON CONFLICT DO UPDATE touches only conflicting rows;
@@ -375,35 +419,36 @@ def run_batch_pipeline(
         # partitions that can contain a winner or a loser of this batch —
         # never the whole table (a daily batch over a 100 TB warehouse
         # must not rewrite 100 TB).
-        old = scan_parquet(spark, warehouse_path)
-        if part not in old.columns:
+        months = [
+            d.split("=", 1)[1]
+            for d in _list_partition_dirs(spark, warehouse_path)
+        ]
+        if not months:
             # legacy flat layout: one-time full rewrite into the
             # partitioned layout, then future runs merge per-partition
-            old = _with_load_month(old)
+            old = _with_load_month(
+                spark.read.schema(schema).parquet(warehouse_path)
+            )
             affected = None
             old_affected = old
+            untouched = []
         else:
-            # months the batch lands in (bounded: one row per month)
-            batch_months = {
-                r[0] for r in staged_m.select(part).distinct().collect()
-            }
+            old = spark.read.schema(
+                StructType(schema.fields + [StructField(part, StringType())])
+            ).parquet(warehouse_path)
             # months holding a PRIOR version of a batch key (an update may
             # move a key across months; its old copy must be deleted).
             # Column-pruned scan of (key, month) only — parquet reads two
             # columns, not the table — semi-joined against the batch keys.
             # The batch key-RANGE prefilter (round 11) is conservative
             # (the semi-join still decides membership) but PUSHES to the
-            # parquet scan, where the sorted-within-partition warehouse
-            # layout (_write_partitioned) gives every row group a tight
-            # shipment_id zone map: row groups outside the batch's key
-            # range are skipped at the footer, never decoded. Bounds are
-            # a 1-row aggregate — bounded driver data.
-            lo, hi = staged_m.agg(
-                F.min("shipment_id"), F.max("shipment_id")
-            ).first()
+            # parquet scan: row groups whose shipment_id zone map lies
+            # outside the batch's key range are skipped at the footer,
+            # never decoded (selective once the files are key-sorted,
+            # see _write_partitioned).
             moved = (
                 old.select("shipment_id", part)
-                .filter(F.col("shipment_id").between(lo, hi))
+                .filter(F.col("shipment_id").between(batch["lo"], batch["hi"]))
                 .join(
                     F.broadcast(staged_m.select("shipment_id").distinct()),
                     "shipment_id",
@@ -413,14 +458,20 @@ def run_batch_pipeline(
                 .distinct()
                 .collect()
             )
-            affected = sorted(batch_months | {r[0] for r in moved})
+            affected = sorted(set(batch["months"]) | {r[0] for r in moved})
             old_affected = old.filter(F.col(part).isin(affected))
+            untouched = sorted(set(months) - set(affected))
         merged = upsert_last_write_wins(
             old_affected, staged_m, keys=["shipment_id"], tiebreak=["processed_at"]
         )
         # write-then-swap: never overwrite partitions we are reading from
         tmp = f"{warehouse_dir}/.cocoa_shipments_next"
-        _write_partitioned(merged, tmp)
+        result.warehouse_rows = _write_partitioned(merged, tmp)
+        if untouched:
+            # partition-pruned: reads only the untouched months' footers
+            result.warehouse_rows += old.filter(
+                F.col(part).isin(untouched)
+            ).count()
         version = _next_version(spark, warehouse_dir) if keep_history else None
         if affected is None:
             if keep_history:
@@ -470,21 +521,17 @@ def run_batch_pipeline(
             result.rewritten_partitions = list(affected)
         result.version = version
     else:
-        _write_partitioned(staged_m, warehouse_path)
+        result.warehouse_rows = _write_partitioned(staged_m, warehouse_path)
         result.rewritten_partitions = ["*"]
         if keep_history:
-            months = sorted(
-                {r[0] for r in staged_m.select(part).distinct().collect()}
-            )
             _write_manifest(
                 spark,
                 warehouse_dir,
                 {"version": 0, "full": False,
-                 "created": months, "replaced": []},
+                 "created": sorted(batch["months"]), "replaced": []},
             )
             result.version = 0
 
-    result.warehouse_rows = scan_parquet(spark, warehouse_path).count()
     result.processed_files = list(valid)
 
     for path in valid:  # A14: archive only what committed

@@ -439,3 +439,22 @@ def test_review_fix_snappy_long_nonoverlapping_copy():
     tag = 0b10 | ((ln - 1) << 2)
     stream += bytes([tag & 0xFF]) + (40).to_bytes(2, "little")
     assert snappy_decompress(bytes(stream)) == lit + lit
+
+
+def test_snappy_truncated_literal_raises():
+    # a stream that declares 10 output bytes and a 10-byte literal but
+    # carries only 5 literal bytes is truncated, not a short success
+    import pytest
+
+    from simple_data_engineering_project_spark.operators.snappy import (
+        snappy_decompress,
+    )
+
+    stream = bytes([10, (10 - 1) << 2]) + b"abcde"
+    with pytest.raises(ValueError):
+        snappy_decompress(stream)
+    # the same truncation followed by a copy that reaches into the
+    # missing bytes must not validate against the declared length
+    stream = bytes([14, (10 - 1) << 2]) + b"abcde" + bytes([0x01, 8])
+    with pytest.raises(ValueError):
+        snappy_decompress(stream)

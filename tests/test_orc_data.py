@@ -1132,6 +1132,63 @@ def test_pure_writer_deep_shapes_edge_residue_orc():
     assert rlev2_decode(rlev2_encode(v, True), len(v), True) == v
 
 
+# int64 extremes: the true delta between -2^63 and 2^63-1 does not fit
+# int64, so a wrapping subtraction would emit a wrong DELTA run
+_INT64_EDGES = [-(2**63), 2**63 - 1] + [2**63 - k for k in range(2, 40)] + [
+    -(2**63), -(2**63) + 1, -(2**63) + 2, -(2**63) + 3, 0, 2**62, 2**62,
+    2**62, 2**62 + 5, 2**62 + 10, 2**62 + 15, 2**62 + 20,
+]
+
+
+def test_rlev2_encode_int64_extremes_roundtrip():
+    from simple_data_engineering_project_spark.operators.orc_write import (
+        rlev2_encode,
+    )
+
+    v = _INT64_EDGES
+    assert rlev2_decode(rlev2_encode(v, True), len(v), True) == v
+    # mirrored and reversed orders walk the same edges downward
+    for w in ([-x - 1 for x in v], v[::-1]):
+        assert rlev2_decode(rlev2_encode(w, True), len(w), True) == w
+
+
+def test_orc_int64_extremes_read_by_pyarrow():
+    """The written file holds the values for both readers. pyarrow's
+    C++ reader adds deltas in wrapping int64, so it alone would also
+    accept a wrapped delta; the own reader adds exactly and does not."""
+    from simple_data_engineering_project_spark.operators.orc_write import (
+        build_orc_bytes,
+    )
+
+    v = _INT64_EDGES
+    blob = build_orc_bytes({"x": v}, {"x": "bigint"}, "none")
+    assert po.ORCFile(io.BytesIO(blob)).read().column("x").to_pylist() == v
+    assert read_orc_columns(blob, ["x"])["x"] == v
+
+
+def test_rlev2_delta_decode_step_past_int64():
+    """A DELTA run (width 64) whose one step is >= 2^63: a monotone
+    jump from near -2^63 to near 2^63-1, then 16 unit steps. The
+    vectorized prefix sum cannot hold that step; the decode must still
+    be exact."""
+    from simple_data_engineering_project_spark.operators.orc_write import (
+        _WIDTHS,
+        _varint,
+        _zigzag,
+    )
+
+    want = [-(2**63), -(2**63) + 1] + [2**63 - 17 + k for k in range(17)]
+    deltas = [b - a for a, b in zip(want[1:], want[2:])]
+    assert deltas[0] >= 2**63 and len(deltas) >= 16
+    length = len(want)
+    wcode = _WIDTHS.index(64)
+    blob = bytes([0xC0 | (wcode << 1) | ((length - 1) >> 8),
+                  (length - 1) & 0xFF])
+    blob += _varint(_zigzag(want[0])) + _varint(_zigzag(want[1] - want[0]))
+    blob += b"".join(d.to_bytes(8, "big") for d in deltas)
+    assert rlev2_decode(blob, length, True) == want
+
+
 @pytest.mark.parametrize("codec", ["none", "zlib", "snappy"])
 def test_pure_writer_full_scalar_kind_set(codec, spark, tmp_path):
     """Round 11: the writer covers the reader's whole scalar kind set —

@@ -202,6 +202,10 @@ def test_merge_rewrites_only_affected_partitions(spark, dirs):
     # and the merge is still correct: no duplicate key, update won
     wh2 = spark.read.parquet(f"{dirs['warehouse']}/cocoa_shipments")
     assert wh2.count() == 1000
+    # the count of a merge with untouched months: rows written plus the
+    # untouched months' rows
+    assert res2.warehouse_rows == 1000
+    assert res2.rows_upserted == 1
     upd = wh2.filter(F.col("shipment_id") == row["shipment_id"]).collect()[0]
     assert upd["farm_id"] == "FARM-777"
 
@@ -424,3 +428,205 @@ def test_land_csv_lines_match_jvm_writer(spark, dirs, tmp_path):
 
     assert ours[0] == jvm_lines[0]  # header, first line
     assert sorted(ours[1:]) == sorted(jvm_lines[1:])
+
+
+def test_csv_line_null_timestamp_matches_jvm_writer(spark, tmp_path):
+    # a NULL timestamp must be an empty field, like every other column,
+    # not a dropped field that shifts the rest of the line
+    import datetime
+
+    from pyspark.sql.types import StructField, StructType
+
+    from simple_data_engineering_project_spark.pipeline import _csv_line
+    from simple_data_engineering_project_spark.schemas import (
+        COCOA_LANDING_SCHEMA,
+    )
+
+    schema = StructType(
+        [StructField(f.name, f.dataType, True) for f in COCOA_LANDING_SCHEMA]
+    )
+    df = spark.createDataFrame(
+        [
+            ("a", None, "FARM-1", "Volta", "Criollo", 8.5, 1000.0, 20.5),
+            ("b", None, None, None, None, None, None, None),
+            ("c", datetime.datetime(2024, 1, 2, 3, 4, 5), "FARM-2",
+             "Ashanti", "Forastero", 9.25, 501.0, None),
+        ],
+        schema,
+    )
+    jvm_dir = str(tmp_path / "jvm_csv")
+    (
+        df.coalesce(1)
+        .write.option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
+        .csv(jvm_dir)
+    )
+    jvm_part = [p for p in list_files(spark, jvm_dir, ".csv")][0]
+    with open(jvm_part[len("file:"):] if jvm_part.startswith("file:") else jvm_part) as f:
+        jvm_lines = sorted(f.read().splitlines())
+
+    ours = sorted(r[0] for r in df.select(_csv_line()).collect())
+    assert ours == jvm_lines
+    assert ours[0].split(",")[1] == ""
+    assert all(len(line.split(",")) == len(schema) for line in ours)
+
+
+def _read_rows(spark, path):
+    df = spark.read.parquet(path)
+    return {r["shipment_id"]: r.asDict() for r in df.collect()}
+
+
+def _write_csv(path, rows):
+    with open(path, "w") as f:
+        f.write(
+            "shipment_id,timestamp,farm_id,region,bean_type,quality_score,"
+            "shipment_weight_kg,temperature_celsius\n"
+        )
+        for r in rows:
+            f.write(",".join(r) + "\n")
+
+
+def test_legacy_flat_warehouse_upgrades_to_partitioned(spark, dirs):
+    # a warehouse written before the month layout (flat parquet, no
+    # load_month column) is rewritten whole into the partitioned layout
+    # by the next merge; the batch still wins on conflicting keys
+    import os
+
+    from simple_data_engineering_project_spark.schemas import (
+        COCOA_LANDING_SCHEMA,
+    )
+
+    seed_dir = f"{dirs['landing']}_seed"
+    paths = land_csv_files(spark, seed_dir, num_files=1, rows_per_file=300, seed=21)
+    table = f"{dirs['warehouse']}/cocoa_shipments"
+    enrich(
+        spark.read.schema(COCOA_LANDING_SCHEMA)
+        .option("header", "true")
+        .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
+        .csv(paths),
+        "2024-01-01 00:00:00",
+    ).write.parquet(table)
+    assert not any("=" in n for n in os.listdir(table))
+
+    # file 0 re-sends the flat table's 300 keys, file 1 adds 300 new ones
+    land_csv_files(spark, dirs["landing"], num_files=2, rows_per_file=300, seed=21)
+    res = _run(spark, dirs)
+    assert res.rewritten_partitions == ["*"]
+    assert res.rows_upserted == 600
+    assert res.warehouse_rows == 600
+    names = os.listdir(table)
+    assert any(n.startswith("load_month=") for n in names)
+    assert not any(n.endswith(".parquet") for n in names)
+    wh = spark.read.parquet(table)
+    assert "load_month" in wh.columns
+    assert wh.count() == 600
+    assert wh.select("shipment_id").distinct().count() == 600
+    # every re-sent key now carries the batch's stamp
+    assert wh.filter(F.col("processed_at") != F.lit(TS).cast("timestamp")).count() == 0
+
+    # and the next batch merges per partition
+    land_csv_files(spark, dirs["landing"], num_files=1, rows_per_file=50, seed=23)
+    res = _run(spark, dirs)
+    assert res.rewritten_partitions != ["*"]
+    assert res.warehouse_rows == 650 == spark.read.parquet(table).count()
+
+
+def _jobs_of(spark, group, fn, *args):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_job_budget(spark, dirs):
+    # landing is one write; a first load is the stage write plus the
+    # warehouse write; a merge adds only the moved-month key probe — no
+    # count, distinct, bound or schema-inference side jobs
+    import uuid
+
+    tag = uuid.uuid4().hex
+    args = (
+        spark, dirs["landing"], dirs["staging"], dirs["warehouse"],
+        dirs["archive"], TS,
+    )
+    _, n = _jobs_of(
+        spark, f"land-{tag}", land_csv_files, spark, dirs["landing"], 3, 500, 41
+    )
+    assert n <= 2, n
+    res, n = _jobs_of(spark, f"load-{tag}", run_batch_pipeline, *args)
+    assert res.warehouse_rows == 1500
+    assert n <= 3, n
+    # seed 42 re-sends seeds 42/43 of the first load and adds seed 44
+    land_csv_files(spark, dirs["landing"], 3, 500, 42)
+    res, n = _jobs_of(spark, f"merge-{tag}", run_batch_pipeline, *args)
+    assert res.warehouse_rows == 2000
+    assert n <= 8, n
+
+
+def test_result_fields_match_side_queries(spark, dirs):
+    # rows_upserted / warehouse_rows / rewritten_partitions come from
+    # write observations and the key probe; they must equal what direct
+    # queries of the stage and the warehouse give, and the table must
+    # equal last-write-wins over the previous table and the batch
+    table = f"{dirs['warehouse']}/cocoa_shipments"
+    land_csv_files(spark, dirs["landing"], num_files=2, rows_per_file=400, seed=17)
+    res = _run(spark, dirs)
+    assert res.rows_upserted == spark.read.parquet(dirs["staging"]).count() == 800
+    assert res.warehouse_rows == spark.read.parquet(table).count() == 800
+    before = _read_rows(spark, table)
+
+    keys = sorted(before)
+    same, moved = before[keys[0]], before[keys[1]]
+    batch = [
+        # stays in its month
+        [same["shipment_id"], same["timestamp"].strftime("%Y-%m-%dT%H:%M:%S"),
+         "FARM-1", "Volta", "Criollo", "9.0", "1000.0", ""],
+        # moves to a month the table does not hold yet
+        [moved["shipment_id"], "2030-07-01T00:00:00",
+         "FARM-2", "Volta", "Criollo", "8.0", "1200.0", "21.5"],
+        # a new key in an existing month
+        ["new-key", same["timestamp"].strftime("%Y-%m-%dT%H:%M:%S"),
+         "FARM-3", "Volta", "Criollo", "8.5", "800.0", "19.0"],
+    ]
+    _write_csv(f"{dirs['landing']}/batch.csv", batch)
+    res = _run(spark, dirs)
+    after = _read_rows(spark, table)
+
+    assert res.rows_upserted == spark.read.parquet(dirs["staging"]).count() == 3
+    assert res.warehouse_rows == spark.read.parquet(table).count() == 801
+    assert res.rewritten_partitions == sorted(
+        {same["load_month"], moved["load_month"], "2030-07"}
+    )
+    months = {r["load_month"] for r in before.values()}
+    assert len(months - set(res.rewritten_partitions)) > 0  # untouched exist
+    # the table equals the previous table overwritten by the batch
+    assert set(after) == set(before) | {"new-key"}
+    for k in set(before) - {same["shipment_id"], moved["shipment_id"]}:
+        assert after[k] == before[k]
+    assert after[same["shipment_id"]]["farm_id"] == "FARM-1"
+    assert after[moved["shipment_id"]]["load_month"] == "2030-07"
+    assert after["new-key"]["shipment_value_usd"] == 2000.0
+
+
+def test_header_only_batches_are_empty_loads(spark, dirs):
+    # a valid file with no rows loads nothing, on an empty warehouse and
+    # on an existing one, and is archived like any processed file
+    import os
+
+    os.makedirs(dirs["landing"])
+    _write_csv(f"{dirs['landing']}/empty_a.csv", [])
+    res = _run(spark, dirs)
+    assert (res.rows_upserted, res.warehouse_rows) == (0, 0)
+    assert len(res.archived_files) == 1
+
+    land_csv_files(spark, dirs["landing"], num_files=1, rows_per_file=200, seed=19)
+    res = _run(spark, dirs)
+    assert res.warehouse_rows == 200
+
+    _write_csv(f"{dirs['landing']}/empty_b.csv", [])
+    res = _run(spark, dirs)
+    assert (res.rows_upserted, res.warehouse_rows) == (0, 200)
+    assert res.rewritten_partitions == []
+    assert len(res.archived_files) == 1

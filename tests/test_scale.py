@@ -963,8 +963,6 @@ _COLLECT_ALLOWLIST = {
     ("operators/multimodal.py", "partition_by_payload_bytes", "media.select(F.sum(F.coalesce(F.length('payload'), F.lit(0))"),  # 1-row sum
     ("plans/catalog.py", "window_ntile_percent_q", "o.agg(F.min('o_totalprice'), F.max('o_totalprice'), F.min('o"),  # 1 row
     ("plans/catalog.py", "orders_pareto_q", "cust.agg(F.min('rev_cents'), F.max('rev_cents'), F.min('o_cu"),  # 1 row
-    # per-ingest-batch keys — bounded by one batch, not warehouse size
-    ("pipeline.py", "run_batch_pipeline", "staged_m.select(part).distinct()"),
     # moved-month probe: distinct months only — bounded by the month
     # domain, never row-proportional (round 11 added the pushed
     # key-range prefilter ahead of the semi-join)
