@@ -17,13 +17,19 @@ Scale notes: file listing and header probing are control-plane metadata
 scan all valid files at once (vs the reference's sequential per-file
 loop), derive columns, one shuffle for the keyed upsert.
 
-Spark job budget per run: the stage write and the warehouse write on a
-first load; the stage write, the moved-month key probe and the merge
-write on a merge (plus a partition-pruned count when some months are
-untouched). ``rows_upserted`` and ``warehouse_rows`` are observations
-on those writes, not count jobs, and read-backs use the known schema,
-so no schema-inference job runs. Landing generates every file from one
-``spark.range`` in one write.
+Spark job budget:
+
+- landing: one job, the text write (no exchange);
+- first load: the stage write and the warehouse write;
+- merge: the stage write and the merge write, plus the moved-month key
+  probe only when the batch misses a stored month, plus a
+  partition-pruned count only when some months are untouched.
+
+``rows_upserted`` and ``warehouse_rows`` are observations on those
+writes, not count jobs, and read-backs use the known schema, so no
+schema-inference job runs. Filesystem work (listing, header probes,
+deletes, renames, archive moves) goes through one ``HadoopFS`` handle
+per call.
 """
 
 from __future__ import annotations
@@ -42,37 +48,44 @@ from .schemas import (
     PRICE_PER_KG_USD,
     REQUIRED_COCOA_COLUMNS,
 )
-from .sources import archive_move, list_files, scan_parquet, sink_parquet
+from .sources import HadoopFS, scan_parquet, sink_parquet
 
 
 def generate_cocoa_data(
     spark: SparkSession, num_records: int, seed: int = 42
 ) -> DataFrame:
     """Synthetic cocoa shipments (reference A16, generate_data.py:24-47):
-    the one-file case of :func:`_cocoa_files`."""
-    return _cocoa_files(spark, 1, num_records, seed).drop("__file")
+    :func:`_cocoa_columns` over ``lid = id``, as file 0 of row seed
+    ``seed`` (the ``id div`` term is 0; it keeps the schema's
+    nullability what it has always been)."""
+    row_seed = f"({seed}L + id div {max(num_records, 1)})"
+    return spark.range(num_records).selectExpr(
+        *[
+            f"{sql} AS `{name}`"
+            for name, sql in _cocoa_columns("id", row_seed).items()
+        ]
+    )
 
 
-def _cocoa_files(
-    spark: SparkSession, num_files: int, rows_per_file: int, seed: int
-) -> DataFrame:
-    """``num_files`` synthetic shipment files of ``rows_per_file`` rows
-    each, built from ONE ``spark.range`` and tagged with ``__file``.
+def _cocoa_columns(lid: str, row_seed: str) -> dict[str, str]:
+    """SQL text of the synthetic shipment columns, in landing order, for
+    local row id ``lid`` and row seed ``row_seed`` (both SQL bigint
+    expressions).
+
+    The frame is SQL text so that building it is one JVM call: the same
+    columns built through ``pyspark.sql.functions`` cost ~1,300 Py4J
+    round trips, one per ``F.*`` call and literal.
 
     Same value domains as the reference, rebuilt as KEY-DERIVED column
     expressions — fully distributed (the reference builds rows in a
-    Python loop) and deterministic given (rows_per_file, seed): file
-    ``f`` is the frame of row seed ``seed + f`` over local row ids
-    ``lid`` in ``[0, rows_per_file)``. The row seed is a column, so
-    every file shares one plan (one Py4J frame instead of one per file
-    plus a union chain).
+    Python loop) and deterministic given (lid, row seed).
 
     - shipment_id: md5(row seed, lid) — unique + reproducible (the
       reference's uuid4 is nondeterministic, a correctness trap per
       SURVEY §1.4)
     - every random draw is a Knuth multiplicative-hash uniform of
       (lid, row seed, column-index) in PURE INTEGER arithmetic (the
-      dp_noisy_counts/dataset_split mechanism) instead of ``F.rand``:
+      dp_noisy_counts/dataset_split mechanism) instead of ``rand()``:
       rand() values depend on the RANGE PARTITIONING (a different core
       count reshuffles every draw), while the hash is row-keyed — stable
       across parallelism, engines, and layouts, which is what makes the
@@ -81,68 +94,67 @@ def _cocoa_files(
       [now-2y, now], nondeterministic; we pin the window)
     - temperature_celsius: NULL with p = 0.1 (generate_data.py:40-41)
     """
-    per_file = max(rows_per_file, 1)
-    file = F.expr(f"id div {per_file}")
-    lid = F.col("id") % F.lit(per_file)
-    row_seed = F.lit(seed) + file
 
-    def u_int(k: int, scale: int):
+    def u_int(k: int, scale: int) -> str:
         # floor(uniform(lid,k) * scale) without any float op:
         # h ∈ [0, 2^32) via ((lid*31+row_seed*131+k) % 1000003) * knuth,
         # then (h*scale) >> 32 — pure int64 (h*scale < 2^58 for every
         # scale here; a double division would lose exactness past
-        # 2^53), ANSI-overflow-safe, and bit-identical in DuckDB
+        # 2^53), ANSI-overflow-safe, and bit-identical in DuckDB.
+        # 2654435761 and 4294967296 are bigint literals.
         h = (
-            (lid * 31 + row_seed * 131 + F.lit(k)) % F.lit(1_000_003)
-        ) * F.lit(2654435761) % F.lit(4294967296)
-        return F.shiftrightunsigned(h * F.lit(scale), 32)
+            f"(({lid} * 31 + {row_seed} * 131 + {k}) % 1000003)"
+            " * 2654435761 % 4294967296"
+        )
+        return f"shiftrightunsigned(({h}) * {scale}, 32)"
 
-    regions = F.array(*[F.lit(r) for r in COCOA_REGIONS])
-    beans = F.array(*[F.lit(b) for b in BEAN_TYPES])
-    epoch_lo = F.lit(1672531200)  # 2023-01-01 UTC
+    def pick(values: list[str], k: int) -> str:
+        items = ", ".join(f"'{v}'" for v in values)
+        return f"array({items})[CAST({u_int(k, len(values))} AS INT)]"
+
     window_s = 2 * 365 * 24 * 3600
-    return spark.range(num_files * rows_per_file).select(
-        F.md5(F.concat(F.lit("seed"), row_seed, F.lit("-"), lid)).alias(
-            "shipment_id"
-        ),
-        F.timestamp_seconds(epoch_lo + u_int(0, window_s)).alias("timestamp"),
-        F.concat(
-            F.lit("FARM-"), (100 + u_int(1, 101)).cast("string")
-        ).alias("farm_id"),
-        regions[u_int(2, len(COCOA_REGIONS)).cast("int")].alias("region"),
-        beans[u_int(3, len(BEAN_TYPES)).cast("int")].alias("bean_type"),
+    return {
+        "shipment_id": f"md5(concat('seed', {row_seed}, '-', {lid}))",
+        # 1672531200 = 2023-01-01 UTC
+        "timestamp": f"timestamp_seconds(1672531200 + {u_int(0, window_s)})",
+        "farm_id": f"concat('FARM-', CAST(100 + {u_int(1, 101)} AS STRING))",
+        "region": pick(COCOA_REGIONS, 2),
+        "bean_type": pick(BEAN_TYPES, 3),
         # integer basis points / deciunits: the domain is already
         # 2dp/1dp-stepped, and integer construction sidesteps the
-        # Spark-vs-DuckDB ROUND half-boundary divergence
-        ((750 + u_int(4, 230)) / F.lit(100.0)).alias("quality_score"),
-        (500 + u_int(5, 4501)).cast("double").alias("shipment_weight_kg"),
-        F.when(
-            u_int(6, 10) >= 1,
-            (180 + u_int(7, 70)) / F.lit(10.0),
-        ).alias("temperature_celsius"),
-        file.cast("int").alias("__file"),
-    )
+        # Spark-vs-DuckDB ROUND half-boundary divergence. A bare 100.0
+        # would be a DECIMAL literal; 100.0D is the double.
+        "quality_score": f"(750 + {u_int(4, 230)}) / 100.0D",
+        "shipment_weight_kg": f"CAST(500 + {u_int(5, 4501)} AS DOUBLE)",
+        "temperature_celsius": (
+            f"CASE WHEN {u_int(6, 10)} >= 1"
+            f" THEN (180 + {u_int(7, 70)}) / 10.0D END"
+        ),
+    }
 
 
 _LANDING_COLS = [f.name for f in COCOA_LANDING_SCHEMA.fields]
 
 
-def _csv_line():
-    """One landing CSV line per row, as Spark's CSV writer formats it
-    with ``timestampFormat=yyyy-MM-dd'T'HH:mm:ss``: a NULL in any
-    column, the timestamp included, is an empty field."""
-    return F.concat_ws(
-        ",",
-        *[
-            F.coalesce(
-                F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss")
-                if c == "timestamp"
-                else F.col(c).cast("string"),
-                F.lit(""),
-            )
-            for c in _LANDING_COLS
-        ],
+def _csv_line_sql(cols: dict[str, str]) -> str:
+    """SQL text of one landing CSV line over the column expressions
+    ``cols``, as Spark's CSV writer formats it with
+    ``timestampFormat=yyyy-MM-dd'T'HH:mm:ss``: a NULL in any column, the
+    timestamp included, is an empty field."""
+    fields = [
+        f"date_format({cols[c]}, 'yyyy-MM-dd\\'T\\'HH:mm:ss')"
+        if c == "timestamp"
+        else f"CAST({cols[c]} AS STRING)"
+        for c in _LANDING_COLS
+    ]
+    return "concat_ws(',', {})".format(
+        ", ".join(f"coalesce({f}, '')" for f in fields)
     )
+
+
+def _csv_line():
+    """:func:`_csv_line_sql` over a frame's own landing columns."""
+    return F.expr(_csv_line_sql({c: f"`{c}`" for c in _LANDING_COLS}))
 
 
 def land_csv_files(
@@ -153,61 +165,56 @@ def land_csv_files(
     seed: int = 42,
 ) -> list[str]:
     """Land ``num_files`` CSV files (reference gen_dag.py:36-52); file
-    ``i`` holds the rows of seed ``seed + i``.
+    ``i`` holds the rows of seed ``seed + i``, header first, then its
+    rows in ``lid`` order. Returns the landed paths in file order.
 
-    Each file is written as a single-partition CSV directory then renamed
-    to a flat ``.csv`` path so the landing layout matches the reference's
-    (one object per file).
+    One Spark job, no exchange: ``spark.range`` with one range
+    partition per file yields partition ``i`` = ids of file ``i``, and
+    the text write of that partition is part file ``i``, renamed to a
+    flat ``.csv`` path so the landing layout matches the reference's
+    (one object per file). Position 0 of each file is its header line;
+    the other positions are formatted as CSV lines in the same
+    projection (``_csv_line_sql`` mirrors the uniVocity writer on this
+    schema, whose value domains are all quote-free; pinned by
+    tests/test_pipeline.py::test_land_csv_lines_match_jvm_writer).
     """
-    # ONE frame and ONE write job for all files, with the per-row work
-    # done at FULL width before the one-file-per-object exchange
-    # ("project before the exchange", applied to a write): the CSV
-    # LINE for every record is formatted as a string column while the
-    # data is still spread over the cluster, so the exchange on the
-    # file id moves finished text and the num_files single-task writers
-    # (the one-object-per-file landing contract) only dump bytes. Line
-    # formatting mirrors the uniVocity writer exactly on this schema
-    # (timestampFormat pattern via date_format; Double.toString via
-    # cast(string); NULL → empty field) — every value domain is
-    # quote-free, pinned by
-    # tests/test_pipeline.py::test_land_csv_lines_match_jvm_writer.
-    body = _cocoa_files(spark, num_files, rows_per_file, seed).select(
-        _csv_line().alias("line"), F.col("__file"), F.lit(1).alias("__rank")
+    per_file = rows_per_file + 1
+    pos = f"id % {per_file}"
+    # the header position reuses lid 0, so every draw stays in range
+    cols = _cocoa_columns(
+        f"greatest({pos} - 1, 0)", f"({seed}L + id div {per_file})"
     )
-    header = spark.createDataFrame(
-        [(",".join(_LANDING_COLS), i, 0) for i in range(num_files)],
-        "line string, __file int, __rank int",
-    )
+    header = ",".join(_LANDING_COLS)
     tmp = f"{landing_dir}/.tmp_gen"
     (
-        body.unionByName(header)
-        .repartition(num_files, "__file")
-        .sortWithinPartitions("__file", "__rank")  # header row first
-        .select("line", "__file")
+        spark.range(0, num_files * per_file, 1, num_files)
+        .selectExpr(
+            f"CASE WHEN {pos} = 0 THEN '{header}'"
+            f" ELSE {_csv_line_sql(cols)} END"
+        )
         .write.mode("overwrite")
-        .partitionBy("__file")
         .text(tmp)
     )
+    fs = HadoopFS(spark)
+    parts = fs.list_files(tmp, ".txt")
+    if len(parts) != num_files:
+        raise RuntimeError(
+            f"landing wrote {len(parts)} part files for {num_files} files"
+        )
+    # part-<i>-<job>.txt is range partition i
+    parts.sort(key=lambda p: int(p.rsplit("/", 1)[1].split("-")[1]))
     paths = []
-    for i in range(num_files):
-        part = [p for p in list_files(spark, f"{tmp}/__file={i}", ".txt")][0]
+    for i, part in enumerate(parts):
         dst = f"{landing_dir}/cocoa_shipments_{seed + i:04d}_{i}.csv"
-        archive_move(spark, part, dst)
+        fs.move(part, dst)
         paths.append(dst)
-    _rm(spark, tmp)
+    fs.delete(tmp)
     return paths
 
 
-def _rm(spark: SparkSession, path: str) -> None:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def validate_header(spark: SparkSession, path: str) -> tuple[bool, set[str]]:
+def validate_header(
+    spark: SparkSession, path: str, fs: HadoopFS | None = None
+) -> tuple[bool, set[str]]:
     """Reference A5 (dag.py:186-190): a file missing any required column is
     skipped whole with a warning, not failed.
 
@@ -219,12 +226,11 @@ def validate_header(spark: SparkSession, path: str) -> tuple[bool, set[str]]:
     (round-15 optimization, guide §5 "the driver should do almost no
     data work" cuts both ways: a one-line read IS driver-sized work,
     and a Spark job per file is the expensive way to do it).
+
+    ``fs`` is the caller's :class:`HadoopFS` handle, if it has one.
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
+    first = (fs or HadoopFS(spark)).first_line(path)
+    if first is None:
         # ADVICE r15: a file that vanished between list_files and
         # validation is an infrastructure race, not a schema problem —
         # keep the skip semantics (pinned by test_pipeline) but log a
@@ -237,15 +243,7 @@ def validate_header(spark: SparkSession, path: str) -> tuple[bool, set[str]]:
             "(infrastructure race, not a schema problem): %s", path,
         )
         return False, set(REQUIRED_COCOA_COLUMNS)
-    stream = fs.open(p)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        first = reader.readLine()
-    finally:
-        stream.close()
-    if first is None or first == "":
+    if first == "":
         return False, set(REQUIRED_COCOA_COLUMNS)
     cols = {c.strip() for c in first.split(",")}
     missing = set(REQUIRED_COCOA_COLUMNS) - cols
@@ -287,7 +285,7 @@ WAREHOUSE_PARTITION_COL = "load_month"
 
 
 def _load_month():
-    return F.coalesce(F.date_format("timestamp", "yyyy-MM"), F.lit("unknown"))
+    return F.expr("coalesce(date_format(`timestamp`, 'yyyy-MM'), 'unknown')")
 
 
 def _with_load_month(df: DataFrame) -> DataFrame:
@@ -351,12 +349,14 @@ def run_batch_pipeline(
     (A14 ordering — archival is what marks a file durable).
 
     Spark work per run: the stage write, then on a first load the
-    warehouse write; on a merge the moved-month key probe and the merge
-    write, plus a partition-pruned count only when some months are
-    untouched. ``rows_upserted`` and ``warehouse_rows`` come from
-    observations on the writes (the stage write also yields the batch's
-    key bounds and months), and every read-back uses the known schema,
-    so no side query or schema-inference job runs.
+    warehouse write; on a merge the merge write, plus the moved-month
+    key probe only when the batch misses a stored month (when it spans
+    every stored month, the months it rewrites already hold any moved
+    key's old copy), plus a partition-pruned count only when some
+    months are untouched. ``rows_upserted`` and ``warehouse_rows`` come
+    from observations on the writes (the stage write also yields the
+    batch's key bounds and months), and every read-back uses the known
+    schema, so no side query or schema-inference job runs.
 
     ``keep_history=True`` turns every batch into a numbered snapshot
     (lakehouse-style time travel): instead of deleting a replaced
@@ -368,13 +368,14 @@ def run_batch_pipeline(
     same frugality contract as the merge itself.
     """
     result = PipelineResult()
-    files = list_files(spark, landing_dir, ".csv")
+    fs = HadoopFS(spark)
+    files = fs.list_files(landing_dir, ".csv")
     if not files:
         return result  # A15 empty-input short-circuit
 
     valid = []
     for path in files:
-        ok, missing = validate_header(spark, path)
+        ok, missing = validate_header(spark, path, fs)
         if ok:
             valid.append(path)
         else:
@@ -412,17 +413,14 @@ def run_batch_pipeline(
     staged_m = _with_load_month(spark.read.schema(schema).parquet(staging_dir))
 
     warehouse_path = f"{warehouse_dir}/cocoa_shipments"
-    if _exists(spark, warehouse_path):
+    if fs.exists(warehouse_path):
         # Partition-scoped merge (reference A13, dag.py:223-237): the
         # reference's ON CONFLICT DO UPDATE touches only conflicting rows;
         # the file-granular equivalent is rewriting only the hive
         # partitions that can contain a winner or a loser of this batch —
         # never the whole table (a daily batch over a 100 TB warehouse
         # must not rewrite 100 TB).
-        months = [
-            d.split("=", 1)[1]
-            for d in _list_partition_dirs(spark, warehouse_path)
-        ]
+        months = _partitions(fs, warehouse_path)
         if not months:
             # legacy flat layout: one-time full rewrite into the
             # partitioned layout, then future runs merge per-partition
@@ -436,30 +434,39 @@ def run_batch_pipeline(
             old = spark.read.schema(
                 StructType(schema.fields + [StructField(part, StringType())])
             ).parquet(warehouse_path)
-            # months holding a PRIOR version of a batch key (an update may
-            # move a key across months; its old copy must be deleted).
-            # Column-pruned scan of (key, month) only — parquet reads two
-            # columns, not the table — semi-joined against the batch keys.
-            # The batch key-RANGE prefilter (round 11) is conservative
-            # (the semi-join still decides membership) but PUSHES to the
-            # parquet scan: row groups whose shipment_id zone map lies
-            # outside the batch's key range are skipped at the footer,
-            # never decoded (selective once the files are key-sorted,
-            # see _write_partitioned).
-            moved = (
-                old.select("shipment_id", part)
-                .filter(F.col("shipment_id").between(batch["lo"], batch["hi"]))
-                .join(
-                    F.broadcast(staged_m.select("shipment_id").distinct()),
-                    "shipment_id",
-                    "left_semi",
+            if set(months) <= set(batch["months"]):
+                # the probe below can only add stored months, and the
+                # batch rewrites every one of them already
+                affected = sorted(batch["months"])
+                old_affected = old
+            else:
+                # months holding a PRIOR version of a batch key (an
+                # update may move a key across months; its old copy must
+                # be deleted). Column-pruned scan of (key, month) only —
+                # parquet reads two columns, not the table — semi-joined
+                # against the batch keys. The batch key-RANGE prefilter
+                # (round 11) is conservative (the semi-join still decides
+                # membership) but PUSHES to the parquet scan: row groups
+                # whose shipment_id zone map lies outside the batch's key
+                # range are skipped at the footer, never decoded
+                # (selective once the files are key-sorted, see
+                # _write_partitioned).
+                moved = (
+                    old.select("shipment_id", part)
+                    .filter(
+                        F.col("shipment_id").between(batch["lo"], batch["hi"])
+                    )
+                    .join(
+                        F.broadcast(staged_m.select("shipment_id").distinct()),
+                        "shipment_id",
+                        "left_semi",
+                    )
+                    .select(part)
+                    .distinct()
+                    .collect()
                 )
-                .select(part)
-                .distinct()
-                .collect()
-            )
-            affected = sorted(set(batch["months"]) | {r[0] for r in moved})
-            old_affected = old.filter(F.col(part).isin(affected))
+                affected = sorted(set(batch["months"]) | {r[0] for r in moved})
+                old_affected = old.filter(F.col(part).isin(affected))
             untouched = sorted(set(months) - set(affected))
         merged = upsert_last_write_wins(
             old_affected, staged_m, keys=["shipment_id"], tiebreak=["processed_at"]
@@ -472,48 +479,43 @@ def run_batch_pipeline(
             result.warehouse_rows += old.filter(
                 F.col(part).isin(untouched)
             ).count()
-        version = _next_version(spark, warehouse_dir) if keep_history else None
+        version = _next_version(fs, warehouse_dir) if keep_history else None
         if affected is None:
             if keep_history:
                 # pre-state is the whole (legacy flat) table — keep it as
                 # one full snapshot
-                archive_move(
-                    spark,
+                fs.move(
                     warehouse_path,
                     f"{warehouse_dir}/{HISTORY_DIR}/v{version}/__full__",
                 )
                 _write_manifest(
-                    spark,
+                    fs,
                     warehouse_dir,
                     {"version": version, "full": True,
                      "created": [], "replaced": []},
                 )
             else:
-                _rm(spark, warehouse_path)
-            archive_move(spark, tmp, warehouse_path)
+                fs.delete(warehouse_path)
+            fs.move(tmp, warehouse_path)
             result.rewritten_partitions = ["*"]
         else:
             replaced, created = [], []
             for m in affected:
                 dst = f"{warehouse_path}/{part}={m}"
-                src = f"{tmp}/{part}={m}"
-                if keep_history and _exists(spark, dst):
+                if keep_history and fs.exists(dst):
                     replaced.append(m)
-                    archive_move(
-                        spark,
+                    fs.move(
                         dst,
                         f"{warehouse_dir}/{HISTORY_DIR}/v{version}/{part}={m}",
                     )
-                else:
-                    if keep_history:
-                        created.append(m)
-                    _rm(spark, dst)
-                if _exists(spark, src):
-                    archive_move(spark, src, dst)
-            _rm(spark, tmp)
+                elif keep_history:
+                    created.append(m)
+                # a month the merge emptied has no part in tmp
+                fs.replace(f"{tmp}/{part}={m}", dst)
+            fs.delete(tmp)
             if keep_history:
                 _write_manifest(
-                    spark,
+                    fs,
                     warehouse_dir,
                     {"version": version, "full": False,
                      "created": sorted(created), "replaced": sorted(replaced)},
@@ -525,7 +527,7 @@ def run_batch_pipeline(
         result.rewritten_partitions = ["*"]
         if keep_history:
             _write_manifest(
-                spark,
+                fs,
                 warehouse_dir,
                 {"version": 0, "full": False,
                  "created": sorted(batch["months"]), "replaced": []},
@@ -536,16 +538,9 @@ def run_batch_pipeline(
 
     for path in valid:  # A14: archive only what committed
         name = path.rsplit("/", 1)[-1]
-        if archive_move(spark, path, f"{archive_dir}/{name}"):
+        if fs.move(path, f"{archive_dir}/{name}"):
             result.archived_files.append(path)
     return result
-
-
-def _exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return bool(p.getFileSystem(conf).exists(p))
 
 
 # ---------------------------------------------------------------- history
@@ -555,59 +550,34 @@ def _exists(spark: SparkSession, path: str) -> bool:
 HISTORY_DIR = "_history"
 
 
-def _write_manifest(spark: SparkSession, warehouse_dir: str, obj: dict) -> None:
+def _write_manifest(fs: HadoopFS, warehouse_dir: str, obj: dict) -> None:
     import json
 
     path = (
         f"{warehouse_dir}/{HISTORY_DIR}/manifest_v{obj['version']:06d}.json"
     )
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(obj).encode("utf-8")))
-    finally:
-        out.close()
+    fs.write_bytes(path, json.dumps(obj).encode("utf-8"))
 
 
-def _read_manifests(spark: SparkSession, warehouse_dir: str) -> list[dict]:
+def _read_manifests(fs: HadoopFS, warehouse_dir: str) -> list[dict]:
     import json
 
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    out = []
-    for path in list_files(spark, f"{warehouse_dir}/{HISTORY_DIR}", ".json"):
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(conf)
-        stream = fs.open(p)
-        try:
-            raw = jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        finally:
-            stream.close()
-        out.append(json.loads(bytes(raw).decode("utf-8")))
+    out = [
+        json.loads(fs.read_bytes(path).decode("utf-8"))
+        for path in fs.list_files(f"{warehouse_dir}/{HISTORY_DIR}", ".json")
+    ]
     return sorted(out, key=lambda m: m["version"])
 
 
-def _next_version(spark: SparkSession, warehouse_dir: str) -> int:
-    manifests = _read_manifests(spark, warehouse_dir)
+def _next_version(fs: HadoopFS, warehouse_dir: str) -> int:
+    manifests = _read_manifests(fs, warehouse_dir)
     return manifests[-1]["version"] + 1 if manifests else 0
 
 
-def _list_partition_dirs(spark: SparkSession, table_path: str) -> list[str]:
-    """Names of hive partition directories directly under ``table_path``."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return []
-    return sorted(
-        str(s.getPath().getName())
-        for s in fs.listStatus(p)
-        if s.isDirectory() and "=" in str(s.getPath().getName())
-    )
+def _partitions(fs: HadoopFS, table_path: str) -> list[str]:
+    """Values of the hive partition directories directly under
+    ``table_path``, sorted."""
+    return [d.split("=", 1)[1] for d in fs.list_dirs(table_path) if "=" in d]
 
 
 def read_warehouse_version(
@@ -636,7 +606,8 @@ def read_warehouse_version(
     """
     part = WAREHOUSE_PARTITION_COL
     warehouse_path = f"{warehouse_dir}/cocoa_shipments"
-    manifests = _read_manifests(spark, warehouse_dir)
+    fs = HadoopFS(spark)
+    manifests = _read_manifests(fs, warehouse_dir)
     if not manifests:
         raise ValueError(f"no snapshot history under {warehouse_dir}")
     max_v = manifests[-1]["version"]
@@ -662,9 +633,7 @@ def read_warehouse_version(
     for m in manifests:
         for p in m.get("created", []):
             created_at.setdefault(p, m["version"])
-    base = {
-        d.split("=", 1)[1] for d in _list_partition_dirs(spark, base_path)
-    }
+    base = set(_partitions(fs, base_path))
     replaced_later: dict[str, int] = {}
     for m in manifests:
         if m["version"] > version and (
@@ -713,15 +682,15 @@ def rollback_warehouse(
     warehouse_path = f"{warehouse_dir}/cocoa_shipments"
     tmp = f"{warehouse_dir}/.cocoa_shipments_rollback"
     _write_partitioned(state, tmp)
-    new_version = _next_version(spark, warehouse_dir)
-    archive_move(
-        spark,
+    fs = HadoopFS(spark)
+    new_version = _next_version(fs, warehouse_dir)
+    fs.move(
         warehouse_path,
         f"{warehouse_dir}/{HISTORY_DIR}/v{new_version}/__full__",
     )
-    archive_move(spark, tmp, warehouse_path)
+    fs.move(tmp, warehouse_path)
     _write_manifest(
-        spark,
+        fs,
         warehouse_dir,
         {"version": new_version, "full": True, "created": [],
          "replaced": [], "rollback_of": version},
@@ -742,15 +711,13 @@ def expire_history(
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    manifests = _read_manifests(spark, warehouse_dir)
+    fs = HadoopFS(spark)
+    manifests = _read_manifests(fs, warehouse_dir)
     if not manifests:
         return []
     cutoff = manifests[-1]["version"] - keep_last + 1
     expired = [m["version"] for m in manifests if m["version"] < cutoff]
     for v in expired:
-        _rm(spark, f"{warehouse_dir}/{HISTORY_DIR}/v{v}")
-        _rm(
-            spark,
-            f"{warehouse_dir}/{HISTORY_DIR}/manifest_v{v:06d}.json",
-        )
+        fs.delete(f"{warehouse_dir}/{HISTORY_DIR}/v{v}")
+        fs.delete(f"{warehouse_dir}/{HISTORY_DIR}/manifest_v{v:06d}.json")
     return expired

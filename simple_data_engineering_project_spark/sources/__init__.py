@@ -9,7 +9,8 @@ Spark-first mapping of the reference's io surface:
 - parquet stage write/read (``dag.py:203-211``) → ``write.parquet`` /
   ``read.parquet`` with pushdown and pruning intact.
 - archive move (``dag.py:259-266``) → filesystem rename via the JVM Hadoop
-  FileSystem API so it works identically for file:// and s3a:// paths.
+  FileSystem API (:class:`HadoopFS`) so it works identically for file://
+  and s3a:// paths.
 
 All paths are plain strings; anything Hadoop understands (local, s3a, hdfs)
 works unchanged — at 100 TB these same calls fan out over the cluster.
@@ -18,6 +19,7 @@ works unchanged — at 100 TB these same calls fan out over the cluster.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -77,24 +79,140 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+class HadoopFS:
+    """Hadoop FileSystem operations for one call: listings, probes,
+    deletes, renames, small reads and writes.
+
+    A ``jvm.org.apache.hadoop.fs.Path`` lookup is five Py4J round trips
+    and every ``getFileSystem`` one more, so the handle looks the Path
+    class up once and resolves each FileSystem once per scheme and
+    authority (the key of Hadoop's own FileSystem cache): ``file:``,
+    ``viewfs://`` and ``s3a://`` paths still each reach their own store,
+    and an operation costs one round trip per Path plus one per
+    FileSystem call.
+    """
+
+    def __init__(self, spark: SparkSession):
+        sc = spark.sparkContext
+        self._jvm = sc._jvm
+        self._conf = sc._jsc.hadoopConfiguration()
+        self._path = self._class("org.apache.hadoop.fs.Path")
+        self._filesystems: dict = {}
+
+    def _class(self, name: str):
+        # a dotted name resolves in one round trip, not one per segment
+        return getattr(self._jvm, name)
+
+    def _resolve(self, path: str):
+        p = self._path(path)
+        key = urlsplit(path)[:2]
+        fs = self._filesystems.get(key)
+        if fs is None:
+            fs = self._filesystems[key] = p.getFileSystem(self._conf)
+        return fs, p
+
+    def exists(self, path: str) -> bool:
+        fs, p = self._resolve(path)
+        return bool(fs.exists(p))
+
+    def delete(self, path: str) -> bool:
+        """Recursive delete; False when ``path`` is absent."""
+        fs, p = self._resolve(path)
+        return bool(fs.delete(p, True))
+
+    def move(self, src: str, dst: str) -> bool:
+        """Archive move (reference dag.py:259-266): rename ``src`` to
+        ``dst``, creating the parent of ``dst`` first if needed.
+
+        Replaces the reference's copy+delete pair with an
+        atomic-where-supported rename."""
+        fs, src_p = self._resolve(src)
+        dst_p = self._path(dst)
+        parent = dst_p.getParent()
+        if parent is not None and not fs.exists(parent):
+            fs.mkdirs(parent)
+        return bool(fs.rename(src_p, dst_p))
+
+    def replace(self, src: str, dst: str) -> None:
+        """Drop ``dst``, then move ``src`` into its place if ``src``
+        exists; the parent of ``dst`` must exist."""
+        fs, dst_p = self._resolve(dst)
+        src_p = self._path(src)
+        fs.delete(dst_p, True)
+        if fs.exists(src_p):
+            fs.rename(src_p, dst_p)
+
+    def _children(self, directory: str) -> list:
+        """(FileStatus, Path, name) of each entry directly under
+        ``directory``; empty when it is absent."""
+        fs, p = self._resolve(directory)
+        if not fs.exists(p):
+            return []
+        out = []
+        for status in fs.listStatus(p):
+            path = status.getPath()
+            out.append((status, path, str(path.getName())))
+        return out
+
+    def list_files(self, directory: str, suffix: str) -> list[str]:
+        """Sorted full paths of the files directly under ``directory``
+        whose names end with ``suffix``."""
+        return sorted(
+            str(path.toString())
+            for status, path, name in self._children(directory)
+            if name.endswith(suffix) and status.isFile()
+        )
+
+    def list_dirs(self, directory: str) -> list[str]:
+        """Sorted names of the directories directly under ``directory``."""
+        return sorted(
+            name
+            for status, _, name in self._children(directory)
+            if status.isDirectory()
+        )
+
+    def first_line(self, path: str) -> str | None:
+        """The first line of ``path`` read as UTF-8 ("" for an empty
+        file), or None when the file is absent."""
+        fs, p = self._resolve(path)
+        if not fs.exists(p):
+            return None
+        stream = fs.open(p)
+        try:
+            reader = self._class("java.io.BufferedReader")(
+                self._class("java.io.InputStreamReader")(stream, "UTF-8")
+            )
+            return reader.readLine() or ""
+        finally:
+            stream.close()
+
+    def read_bytes(self, path: str) -> bytes:
+        fs, p = self._resolve(path)
+        stream = fs.open(p)
+        try:
+            io_utils = self._class("org.apache.commons.io.IOUtils")
+            return bytes(io_utils.toByteArray(stream))
+        finally:
+            stream.close()
+
+    def write_bytes(self, path: str, data: bytes) -> None:
+        fs, p = self._resolve(path)
+        out = fs.create(p, True)
+        try:
+            out.write(bytearray(data))
+        finally:
+            out.close()
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence probe — works for file://, s3a://, hdfs://."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return bool(p.getFileSystem(conf).exists(p))
+    return HadoopFS(spark).exists(path)
 
 
 def fs_delete(spark: SparkSession, path: str) -> bool:
     """Recursive Hadoop-FS delete (no-op if absent) — portable, unlike
     shutil.rmtree which only understands local paths."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    if fs.exists(p):
-        return bool(fs.delete(p, True))
-    return False
+    return HadoopFS(spark).delete(path)
 
 
 def swap_directory(spark: SparkSession, tmp: str, path: str) -> None:
@@ -106,17 +224,18 @@ def swap_directory(spark: SparkSession, tmp: str, path: str) -> None:
     never a missing dataset — unlike delete-then-rename, whose crash
     window loses the path entirely.
     """
+    fs = HadoopFS(spark)
     old = f"{path}__old"
-    fs_delete(spark, old)
-    if fs_exists(spark, path):
-        if not archive_move(spark, path, old):
+    fs.delete(old)
+    if fs.exists(path):
+        if not fs.move(path, old):
             raise IOError(f"swap_directory: could not move {path} aside")
-    if not archive_move(spark, tmp, path):
+    if not fs.move(tmp, path):
         # roll the old data back into place before failing
-        if fs_exists(spark, old):
-            archive_move(spark, old, path)
+        if fs.exists(old):
+            fs.move(old, path)
         raise IOError(f"swap_directory: could not publish {tmp} -> {path}")
-    fs_delete(spark, old)
+    fs.delete(old)
 
 
 def scan_csv(
@@ -153,16 +272,11 @@ def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
 def parquet_data_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     """(name, bytes) of the parquet data files under ``path`` — Hadoop FS
     listing, so it works for s3a://hdfs:// too."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isFile() and name.endswith(".parquet"):
-            out.append((name, int(st.getLen())))
-    return out
+    return [
+        (name, int(status.getLen()))
+        for status, _, name in HadoopFS(spark)._children(path)
+        if name.endswith(".parquet") and status.isFile()
+    ]
 
 
 def compact_parquet(
@@ -263,24 +377,6 @@ def save_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def archive_move(spark: SparkSession, src: str, dst: str) -> bool:
-    """Post-commit archive: rename src → dst via Hadoop FileSystem.
-
-    Replaces the reference's copy+delete pair (dag.py:263-265) with an
-    atomic-where-supported rename; works for any Hadoop-visible FS.
-    """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    conf = jsc.hadoopConfiguration()
-    src_path = jvm.org.apache.hadoop.fs.Path(src)
-    dst_path = jvm.org.apache.hadoop.fs.Path(dst)
-    fs = src_path.getFileSystem(conf)
-    dst_parent = dst_path.getParent()
-    if dst_parent is not None and not fs.exists(dst_parent):
-        fs.mkdirs(dst_parent)
-    return bool(fs.rename(src_path, dst_path))
-
-
 def compact_small_files(
     spark: SparkSession,
     path: str,
@@ -304,10 +400,7 @@ def compact_small_files(
 
     Returns the number of output files written.
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = HadoopFS(spark)._resolve(path)
     total_bytes = fs.getContentSummary(p).getLength()
     n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
     df = spark.read.parquet(path)
@@ -317,12 +410,7 @@ def compact_small_files(
     tmp = f"{path}__compact"
     out.write.mode("overwrite").parquet(tmp)
     swap_directory(spark, tmp, path)
-    files = [
-        s
-        for s in fs.listStatus(jvm.org.apache.hadoop.fs.Path(path))
-        if s.isFile() and str(s.getPath().getName()).endswith(".parquet")
-    ]
-    return len(files)
+    return len(parquet_data_files(spark, path))
 
 
 def list_files(spark: SparkSession, directory: str, suffix: str = ".csv") -> list[str]:
@@ -332,15 +420,7 @@ def list_files(spark: SparkSession, directory: str, suffix: str = ".csv") -> lis
     data; the reference's manifest snapshot is the same listing frozen as
     JSON. Bulk data never flows through this.
     """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(directory)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return []
-    statuses = fs.listStatus(path)
-    out = [str(s.getPath().toString()) for s in statuses if s.isFile()]
-    return sorted(k for k in out if k.endswith(suffix))
+    return HadoopFS(spark).list_files(directory, suffix)
 
 
 __all__ = [
@@ -353,7 +433,7 @@ __all__ = [
     "json_roundtrip",
     "orc_roundtrip",
     "save_bucketed",
-    "archive_move",
+    "HadoopFS",
     "fs_exists",
     "fs_delete",
     "swap_directory",

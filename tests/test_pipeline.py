@@ -542,8 +542,8 @@ def _jobs_of(spark, group, fn, *args):
 
 def test_pipeline_job_budget(spark, dirs):
     # landing is one write; a first load is the stage write plus the
-    # warehouse write; a merge adds only the moved-month key probe — no
-    # count, distinct, bound or schema-inference side jobs
+    # warehouse write; a merge adds at most the moved-month key probe —
+    # no count, distinct, bound or schema-inference side jobs
     import uuid
 
     tag = uuid.uuid4().hex
@@ -554,7 +554,7 @@ def test_pipeline_job_budget(spark, dirs):
     _, n = _jobs_of(
         spark, f"land-{tag}", land_csv_files, spark, dirs["landing"], 3, 500, 41
     )
-    assert n <= 2, n
+    assert n == 1, n
     res, n = _jobs_of(spark, f"load-{tag}", run_batch_pipeline, *args)
     assert res.warehouse_rows == 1500
     assert n <= 3, n
@@ -630,3 +630,133 @@ def test_header_only_batches_are_empty_loads(spark, dirs):
     assert (res.rows_upserted, res.warehouse_rows) == (0, 200)
     assert res.rewritten_partitions == []
     assert len(res.archived_files) == 1
+
+
+def _stage_rows(spark, staging_dir):
+    rows = _read_rows(spark, staging_dir)
+    for r in rows.values():
+        r["load_month"] = r["timestamp"].strftime("%Y-%m")
+    return rows
+
+
+def test_merge_spanning_every_month_skips_the_key_probe(spark, dirs):
+    # a batch whose months cover every stored month rewrites all of them,
+    # so a key that moves month loses its old copy without the
+    # moved-month probe: the merge is the stage write plus the merge
+    # write (the probe added 4 jobs)
+    import uuid
+
+    table = f"{dirs['warehouse']}/cocoa_shipments"
+    land_csv_files(spark, dirs["landing"], num_files=2, rows_per_file=300, seed=31)
+    _run(spark, dirs)
+    before = _read_rows(spark, table)
+    stored = {r["load_month"] for r in before.values()}
+
+    key = sorted(before)[0]
+    old_month = before[key]["load_month"]
+    new_month = next(m for m in sorted(stored) if m != old_month)
+    land_csv_files(spark, dirs["landing"], num_files=1, rows_per_file=300, seed=40)
+    _write_csv(
+        f"{dirs['landing']}/move.csv",
+        [[key, f"{new_month}-15T12:00:00", "FARM-5", "Volta", "Criollo",
+          "8.0", "1000.0", "21.5"]],
+    )
+    res, n = _jobs_of(spark, f"merge-{uuid.uuid4().hex}", _run, spark, dirs)
+    assert n <= 4, n
+
+    after = _read_rows(spark, table)
+    batch = _stage_rows(spark, dirs["staging"])
+    assert stored <= {r["load_month"] for r in batch.values()}
+    assert after == {**before, **batch}
+    assert after[key]["load_month"] == new_month
+    moved = spark.read.parquet(table).filter(F.col("shipment_id") == key)
+    assert moved.count() == 1  # the stale copy in the old month is gone
+    assert res.rewritten_partitions == sorted(
+        {r["load_month"] for r in batch.values()}
+    )
+    assert res.warehouse_rows == len(after) == 900
+
+
+def _py4j_commands(spark, fn, *args):
+    """(result, Py4J commands this thread sent to the JVM during fn)."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send, me, n = client.send_command, threading.get_ident(), [0]
+
+    def counting(*a, **k):
+        if threading.get_ident() == me:  # not the py4j finalizer thread
+            n[0] += 1
+        return send(*a, **k)
+
+    client.send_command = counting
+    try:
+        out = fn(*args)
+    finally:
+        del client.send_command
+    return out, n[0]
+
+
+def test_pipeline_py4j_round_trip_budget(spark, dirs):
+    # every F.* call, literal and Hadoop Path lookup is a driver->JVM
+    # round trip; landing builds its frame as SQL text and the pipeline
+    # shares one FileSystem handle, so both stay far below the ~2,000
+    # commands each that column-by-column building cost
+    args = (
+        spark, dirs["landing"], dirs["staging"], dirs["warehouse"],
+        dirs["archive"], TS,
+    )
+    land_csv_files(spark, dirs["landing"], 6, 200, 50)
+    run_batch_pipeline(*args)
+    _, n = _py4j_commands(
+        spark, land_csv_files, spark, dirs["landing"], 6, 200, 53
+    )
+    assert n <= 150, n
+    res, n = _py4j_commands(spark, run_batch_pipeline, *args)
+    assert res.warehouse_rows == 1800
+    assert n <= 1500, n
+
+
+def test_land_files_hold_the_generator_rows_in_lid_order(spark, dirs):
+    # more files than cores: file i is range partition i, holding the
+    # header and then generate_cocoa_data(rows, seed + i) in lid order
+    from simple_data_engineering_project_spark.pipeline import _csv_line
+    from simple_data_engineering_project_spark.schemas import (
+        COCOA_LANDING_SCHEMA,
+    )
+
+    header = ",".join(f.name for f in COCOA_LANDING_SCHEMA.fields)
+    paths = land_csv_files(
+        spark, dirs["landing"], num_files=9, rows_per_file=40, seed=3
+    )
+    assert [p.rsplit("/", 1)[-1] for p in paths] == [
+        f"cocoa_shipments_{3 + i:04d}_{i}.csv" for i in range(9)
+    ]
+    assert list_files(spark, dirs["landing"], ".csv") == sorted(
+        f"file:{p}" for p in paths
+    )
+    for i, path in enumerate(paths):
+        want = [
+            r[0]
+            for r in generate_cocoa_data(spark, 40, 3 + i)
+            .select(_csv_line())
+            .collect()
+        ]
+        with open(path) as f:
+            assert f.read().splitlines() == [header] + want
+
+
+def test_land_header_only_files_load_as_empty_batches(spark, dirs):
+    paths = land_csv_files(
+        spark, dirs["landing"], num_files=2, rows_per_file=0, seed=8
+    )
+    for path in paths:
+        with open(path) as f:
+            assert f.read().splitlines() == [
+                "shipment_id,timestamp,farm_id,region,bean_type,"
+                "quality_score,shipment_weight_kg,temperature_celsius"
+            ]
+    res = _run(spark, dirs)
+    assert (res.rows_upserted, res.warehouse_rows) == (0, 0)
+    assert res.skipped_files == []
+    assert len(res.archived_files) == 2
