@@ -30,10 +30,23 @@ writes, not count jobs, and read-backs use the known schema, so no
 schema-inference job runs. Filesystem work (listing, header probes,
 deletes, renames, archive moves) goes through one ``HadoopFS`` handle
 per call.
+
+One commit, :func:`_commit`, publishes every table write (first load,
+merge, legacy upgrade, rollback). The write goes to the temp tree
+``.cocoa_shipments_next``, then for each unit (a month, or the whole
+tree) the live copy, if stored, is renamed into the retired directory
+``.cocoa_shipments_retired`` and the new copy into its place. Last, the
+retired directory becomes snapshot ``_history/v{N}`` (``keep_history``)
+or is deleted. A crash between a unit's two renames leaves its live path
+absent, its old copy retired and its new one in the temp tree; nothing
+is lost, and the next write stops on the leftover retired directory
+instead of merging against the incomplete table.
 """
 
 from __future__ import annotations
 
+import json
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -358,14 +371,27 @@ def run_batch_pipeline(
     batch's key bounds and months), and every read-back uses the known
     schema, so no side query or schema-inference job runs.
 
+    The commit is one :func:`_commit` for every layout: the first load
+    and a legacy flat table are one whole-tree unit, a partitioned table
+    one unit per affected month. Each unit's stored copy is renamed into
+    the retired directory, then its new copy (if the write produced one:
+    a month the merge emptied has none) into place. Which copies are
+    stored is known from the listing taken before the merge, so the
+    commit sends no probe for them. Crash window: between a unit's two
+    renames its live path is absent, with the old copy in
+    ``.cocoa_shipments_retired`` and the new one in
+    ``.cocoa_shipments_next``. A leftover retired directory makes the
+    next run raise ``IOError`` before it writes anything.
+
     ``keep_history=True`` turns every batch into a numbered snapshot
-    (lakehouse-style time travel): instead of deleting a replaced
-    partition, its pre-batch copy moves to
+    (lakehouse-style time travel): the retired directory, holding the
+    pre-batch copies of the replaced partitions, becomes
     ``{warehouse_dir}/_history/v{N}/`` and a JSON manifest records which
-    partitions batch N created vs replaced. Reconstruct any past state
-    with :func:`read_warehouse_version`; history cost is one extra copy
-    of only the partitions each batch touches (never the table) — the
-    same frugality contract as the merge itself.
+    partitions batch N created vs replaced; without history it is
+    deleted. Reconstruct any past state with
+    :func:`read_warehouse_version`; history cost is one extra copy of
+    only the partitions each batch touches (never the table) — the same
+    frugality contract as the merge itself.
     """
     result = PipelineResult()
     fs = HadoopFS(spark)
@@ -383,6 +409,7 @@ def run_batch_pipeline(
     if not valid:
         return result
 
+    fs.check_retired(f"{warehouse_dir}/{RETIRED}")
     landed = (
         spark.read.schema(COCOA_LANDING_SCHEMA)
         .option("header", "true")
@@ -412,7 +439,9 @@ def run_batch_pipeline(
     schema = enriched.schema
     staged_m = _with_load_month(spark.read.schema(schema).parquet(staging_dir))
 
-    warehouse_path = f"{warehouse_dir}/cocoa_shipments"
+    warehouse_path = f"{warehouse_dir}/{TABLE}"
+    # the commit's units: month -> whether a live copy of it is stored,
+    # or FULL for the whole tree (first load, legacy flat layout)
     if fs.exists(warehouse_path):
         # Partition-scoped merge (reference A13, dag.py:223-237): the
         # reference's ON CONFLICT DO UPDATE touches only conflicting rows;
@@ -424,12 +453,10 @@ def run_batch_pipeline(
         if not months:
             # legacy flat layout: one-time full rewrite into the
             # partitioned layout, then future runs merge per-partition
-            old = _with_load_month(
+            old_affected = _with_load_month(
                 spark.read.schema(schema).parquet(warehouse_path)
             )
-            affected = None
-            old_affected = old
-            untouched = []
+            units = {FULL: True}
         else:
             old = spark.read.schema(
                 StructType(schema.fields + [StructField(part, StringType())])
@@ -467,72 +494,22 @@ def run_batch_pipeline(
                 )
                 affected = sorted(set(batch["months"]) | {r[0] for r in moved})
                 old_affected = old.filter(F.col(part).isin(affected))
+            units = {m: m in months for m in affected}
             untouched = sorted(set(months) - set(affected))
+            if untouched:
+                # partition-pruned: reads only the untouched months' footers
+                result.warehouse_rows = old.filter(
+                    F.col(part).isin(untouched)
+                ).count()
         merged = upsert_last_write_wins(
             old_affected, staged_m, keys=["shipment_id"], tiebreak=["processed_at"]
         )
-        # write-then-swap: never overwrite partitions we are reading from
-        tmp = f"{warehouse_dir}/.cocoa_shipments_next"
-        result.warehouse_rows = _write_partitioned(merged, tmp)
-        if untouched:
-            # partition-pruned: reads only the untouched months' footers
-            result.warehouse_rows += old.filter(
-                F.col(part).isin(untouched)
-            ).count()
-        version = _next_version(fs, warehouse_dir) if keep_history else None
-        if affected is None:
-            if keep_history:
-                # pre-state is the whole (legacy flat) table — keep it as
-                # one full snapshot
-                fs.move(
-                    warehouse_path,
-                    f"{warehouse_dir}/{HISTORY_DIR}/v{version}/__full__",
-                )
-                _write_manifest(
-                    fs,
-                    warehouse_dir,
-                    {"version": version, "full": True,
-                     "created": [], "replaced": []},
-                )
-            else:
-                fs.delete(warehouse_path)
-            fs.move(tmp, warehouse_path)
-            result.rewritten_partitions = ["*"]
-        else:
-            replaced, created = [], []
-            for m in affected:
-                dst = f"{warehouse_path}/{part}={m}"
-                if keep_history and fs.exists(dst):
-                    replaced.append(m)
-                    fs.move(
-                        dst,
-                        f"{warehouse_dir}/{HISTORY_DIR}/v{version}/{part}={m}",
-                    )
-                elif keep_history:
-                    created.append(m)
-                # a month the merge emptied has no part in tmp
-                fs.replace(f"{tmp}/{part}={m}", dst)
-            fs.delete(tmp)
-            if keep_history:
-                _write_manifest(
-                    fs,
-                    warehouse_dir,
-                    {"version": version, "full": False,
-                     "created": sorted(created), "replaced": sorted(replaced)},
-                )
-            result.rewritten_partitions = list(affected)
-        result.version = version
     else:
-        result.warehouse_rows = _write_partitioned(staged_m, warehouse_path)
-        result.rewritten_partitions = ["*"]
-        if keep_history:
-            _write_manifest(
-                fs,
-                warehouse_dir,
-                {"version": 0, "full": False,
-                 "created": sorted(batch["months"]), "replaced": []},
-            )
-            result.version = 0
+        merged, units = staged_m, {FULL: False}
+    # write-then-swap: never overwrite partitions we are reading from
+    result.warehouse_rows += _write_partitioned(merged, f"{warehouse_dir}/{NEXT}")
+    result.version = _commit(fs, warehouse_dir, units, keep_history, batch["months"])
+    result.rewritten_partitions = ["*"] if FULL in units else list(units)
 
     result.processed_files = list(valid)
 
@@ -543,6 +520,84 @@ def run_batch_pipeline(
     return result
 
 
+# ----------------------------------------------------------------- commit
+
+#: The live table, the temp tree every write goes to, and the directory
+#: the commit renames replaced live copies into, all under the
+#: warehouse directory.
+TABLE = "cocoa_shipments"
+NEXT = ".cocoa_shipments_next"
+RETIRED = ".cocoa_shipments_retired"
+
+#: Commit unit standing for the whole table tree (and its name in a
+#: snapshot): a first load, a legacy flat layout, a rollback.
+FULL = "__full__"
+
+
+def _commit(
+    fs: HadoopFS,
+    warehouse_dir: str,
+    units: dict[str, bool],
+    keep_history: bool,
+    batch_months: Sequence[str] = (),
+    **manifest_extra,
+) -> int | None:
+    """Publish the temp tree over the live table: one
+    :meth:`HadoopFS.swap` of ``units`` (month → whether a live copy of
+    it is stored, or :data:`FULL` → whether the table exists), which
+    renames each stored copy into the retired directory and then the new
+    one into place.
+
+    ``keep_history`` only decides what becomes of the retired directory:
+    it is renamed to ``_history/v{N}`` after snapshot N's manifest is
+    written (returns N), or deleted (returns None). The manifest comes
+    from the units: a stored month was "replaced", a new one "created";
+    a whole-tree unit is ``full`` when it retired a tree, and otherwise
+    (a first load) creates ``batch_months``.
+
+    Crash window: between a unit's two renames its live path is absent,
+    its old copy in the retired directory and its new one in the temp
+    tree. Until the retired directory is gone, every later write raises
+    (:meth:`HadoopFS.check_retired`) instead of merging against the
+    incomplete table.
+    """
+    live, tmp = f"{warehouse_dir}/{TABLE}", f"{warehouse_dir}/{NEXT}"
+    retired = f"{warehouse_dir}/{RETIRED}"
+    # a unit's path below the table root, "" for the whole tree
+    rel = {m: "" if m == FULL else f"/{WAREHOUSE_PARTITION_COL}={m}" for m in units}
+    any_retired = fs.swap(
+        [
+            (tmp + rel[m], live + rel[m], (rel[m][1:] or FULL) if stored else None)
+            for m, stored in units.items()
+        ],
+        retired,
+    )
+    fs.delete(tmp)
+    if not keep_history:
+        if any_retired:
+            fs.delete(retired)
+        return None
+    manifests = _read_manifests(fs, warehouse_dir)
+    version = manifests[-1]["version"] + 1 if manifests else 0
+    first_load = units == {FULL: False}
+    manifest = {
+        "version": version,
+        "full": units.get(FULL, False),
+        "created": sorted(
+            batch_months if first_load else [m for m in units if not units[m]]
+        ),
+        "replaced": sorted(m for m in units if units[m] and m != FULL),
+        **manifest_extra,
+    }
+    fs.write_bytes(
+        f"{warehouse_dir}/{HISTORY_DIR}/manifest_v{version:06d}.json",
+        json.dumps(manifest).encode("utf-8"),
+    )
+    if any_retired:
+        fs.move(retired, f"{warehouse_dir}/{HISTORY_DIR}/v{version}")
+    return version
+
+
 # ---------------------------------------------------------------- history
 
 #: Subdirectory of the warehouse holding snapshot manifests and the
@@ -550,28 +605,12 @@ def run_batch_pipeline(
 HISTORY_DIR = "_history"
 
 
-def _write_manifest(fs: HadoopFS, warehouse_dir: str, obj: dict) -> None:
-    import json
-
-    path = (
-        f"{warehouse_dir}/{HISTORY_DIR}/manifest_v{obj['version']:06d}.json"
-    )
-    fs.write_bytes(path, json.dumps(obj).encode("utf-8"))
-
-
 def _read_manifests(fs: HadoopFS, warehouse_dir: str) -> list[dict]:
-    import json
-
     out = [
         json.loads(fs.read_bytes(path).decode("utf-8"))
         for path in fs.list_files(f"{warehouse_dir}/{HISTORY_DIR}", ".json")
     ]
     return sorted(out, key=lambda m: m["version"])
-
-
-def _next_version(fs: HadoopFS, warehouse_dir: str) -> int:
-    manifests = _read_manifests(fs, warehouse_dir)
-    return manifests[-1]["version"] + 1 if manifests else 0
 
 
 def _partitions(fs: HadoopFS, table_path: str) -> list[str]:
@@ -605,7 +644,7 @@ def read_warehouse_version(
     hive directories + JSON manifests.
     """
     part = WAREHOUSE_PARTITION_COL
-    warehouse_path = f"{warehouse_dir}/cocoa_shipments"
+    warehouse_path = f"{warehouse_dir}/{TABLE}"
     fs = HadoopFS(spark)
     manifests = _read_manifests(fs, warehouse_dir)
     if not manifests:
@@ -622,7 +661,7 @@ def read_warehouse_version(
     ]
     horizon = min(fulls_after) if fulls_after else None
     if horizon is not None:
-        base_path = f"{warehouse_dir}/{HISTORY_DIR}/v{horizon}/__full__"
+        base_path = f"{warehouse_dir}/{HISTORY_DIR}/v{horizon}/{FULL}"
         if version == horizon - 1:
             # the saved full tree IS the requested state verbatim
             return scan_parquet(spark, base_path)
@@ -673,29 +712,16 @@ def rollback_warehouse(
     snapshot, never by erasing history (the audit trail survives; a
     rollback of a rollback works).
 
-    Materializes the reconstructed state to a temp tree first, then
-    moves the current live tree into history as a ``__full__`` snapshot
-    and swaps the rebuilt tree in — the same write-then-swap discipline
-    as the merge. Returns the new snapshot id.
+    Materializes the reconstructed state to the temp tree first, then
+    commits it as one whole-tree unit with history on (the same commit
+    as the merge's): the current live tree becomes the new snapshot's
+    ``__full__`` copy. Returns the new snapshot id.
     """
-    state = read_warehouse_version(spark, warehouse_dir, version)
-    warehouse_path = f"{warehouse_dir}/cocoa_shipments"
-    tmp = f"{warehouse_dir}/.cocoa_shipments_rollback"
-    _write_partitioned(state, tmp)
     fs = HadoopFS(spark)
-    new_version = _next_version(fs, warehouse_dir)
-    fs.move(
-        warehouse_path,
-        f"{warehouse_dir}/{HISTORY_DIR}/v{new_version}/__full__",
-    )
-    fs.move(tmp, warehouse_path)
-    _write_manifest(
-        fs,
-        warehouse_dir,
-        {"version": new_version, "full": True, "created": [],
-         "replaced": [], "rollback_of": version},
-    )
-    return new_version
+    fs.check_retired(f"{warehouse_dir}/{RETIRED}")
+    state = read_warehouse_version(spark, warehouse_dir, version)
+    _write_partitioned(state, f"{warehouse_dir}/{NEXT}")
+    return _commit(fs, warehouse_dir, {FULL: True}, True, rollback_of=version)
 
 
 def expire_history(

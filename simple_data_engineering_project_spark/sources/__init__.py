@@ -18,7 +18,7 @@ works unchanged — at 100 TB these same calls fan out over the cluster.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -133,14 +133,42 @@ class HadoopFS:
             fs.mkdirs(parent)
         return bool(fs.rename(src_p, dst_p))
 
-    def replace(self, src: str, dst: str) -> None:
-        """Drop ``dst``, then move ``src`` into its place if ``src``
-        exists; the parent of ``dst`` must exist."""
-        fs, dst_p = self._resolve(dst)
-        src_p = self._path(src)
-        fs.delete(dst_p, True)
-        if fs.exists(src_p):
-            fs.rename(src_p, dst_p)
+    def check_retired(self, retired: str) -> None:
+        """Raise ``IOError`` when ``retired`` exists: a :meth:`swap` that
+        did not finish left it, and it may hold the only copy of a live
+        path. Callers check before writing a new copy, and never delete
+        it themselves."""
+        if self.exists(retired):
+            raise IOError(
+                f"{retired} is left by an unfinished commit and may hold "
+                "the only copy of a live path; restore or remove it first"
+            )
+
+    def swap(self, units: list[tuple[str, str, str | None]], retired: str) -> bool:
+        """Publish each unit ``(new, live, name)``: retire, then install.
+
+        When ``name`` is not None, ``live`` exists and is first renamed to
+        ``{retired}/{name}``; the caller knows which live copies exist, so
+        no probe is sent for them. Then ``new``, if the write produced it,
+        is renamed to ``live``. ``retired`` must not exist yet (see
+        :meth:`check_retired`); it is created on the first retire, all
+        units on one FileSystem. Returns whether anything was retired.
+
+        A crash leaves every old copy either live or in ``retired``; only
+        between a unit's two renames is its live path absent.
+        """
+        made = False
+        for new, live, name in units:
+            fs, live_p = self._resolve(live)
+            if name is not None:
+                if not made:
+                    fs.mkdirs(self._path(retired))
+                    made = True
+                _rename(fs, live_p, self._path(f"{retired}/{name}"))
+            new_p = self._path(new)
+            if fs.exists(new_p):
+                _rename(fs, new_p, live_p)
+        return made
 
     def _children(self, directory: str) -> list:
         """(FileStatus, Path, name) of each entry directly under
@@ -204,6 +232,11 @@ class HadoopFS:
             out.close()
 
 
+def _rename(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise IOError(f"could not rename {src.toString()} to {dst.toString()}")
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence probe — works for file://, s3a://, hdfs://."""
     return HadoopFS(spark).exists(path)
@@ -215,27 +248,29 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
     return HadoopFS(spark).delete(path)
 
 
-def swap_directory(spark: SparkSession, tmp: str, path: str) -> None:
-    """Publish ``tmp`` as ``path`` without a window where ``path`` is gone.
+def rewrite_directory(
+    spark: SparkSession, path: str, write: Callable[[str, bool], None]
+) -> None:
+    """Replace the directory ``path`` with the copy ``write(tmp, stored)``
+    writes to ``tmp`` (``stored``: whether ``path`` exists now).
 
-    Rename the old directory aside first (path → path__old), move the new
-    one in, then drop the old: a crash at any point leaves either the old
-    or the new dataset at ``path`` (plus at worst a stale __old to sweep),
-    never a missing dataset — unlike delete-then-rename, whose crash
-    window loses the path entirely.
+    The new copy is published by :meth:`HadoopFS.swap` through the
+    retired directory ``{path}__old``, which is deleted once the new copy
+    is in place. Readers see the old or the new directory, never a
+    partial write; only between the swap's two renames is ``path``
+    absent, and then its old copy is in ``{path}__old``. A
+    ``{path}__old`` left by an unfinished rewrite raises ``IOError``
+    before anything is written, and is kept.
     """
     fs = HadoopFS(spark)
     old = f"{path}__old"
-    fs.delete(old)
-    if fs.exists(path):
-        if not fs.move(path, old):
-            raise IOError(f"swap_directory: could not move {path} aside")
-    if not fs.move(tmp, path):
-        # roll the old data back into place before failing
-        if fs.exists(old):
-            fs.move(old, path)
-        raise IOError(f"swap_directory: could not publish {tmp} -> {path}")
-    fs.delete(old)
+    fs.check_retired(old)
+    stored = fs.exists(path)
+    tmp = f"{path}__next"
+    write(tmp, stored)
+    name = path.rstrip("/").rsplit("/", 1)[-1]
+    if fs.swap([(tmp, path, name if stored else None)], old):
+        fs.delete(old)
 
 
 def scan_csv(
@@ -407,9 +442,9 @@ def compact_small_files(
     out = df.repartition(int(n_out))
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
-    tmp = f"{path}__compact"
-    out.write.mode("overwrite").parquet(tmp)
-    swap_directory(spark, tmp, path)
+    rewrite_directory(
+        spark, path, lambda tmp, _: out.write.mode("overwrite").parquet(tmp)
+    )
     return len(parquet_data_files(spark, path))
 
 
@@ -436,7 +471,7 @@ __all__ = [
     "HadoopFS",
     "fs_exists",
     "fs_delete",
-    "swap_directory",
+    "rewrite_directory",
     "compact_small_files",
     "list_files",
 ]

@@ -215,39 +215,40 @@ def stream_upsert_warehouse(
     one transaction per micro-batch via ``foreachBatch``.
 
     Each micro-batch applies :func:`~..operators.upsert.upsert_last_write_wins`
-    between the current warehouse and the batch, then atomically swaps the
-    result in (write to a side path + rename). The checkpoint replaces the
+    between the current warehouse and the batch, writes the result to a
+    side path and publishes it with
+    :func:`~..sources.rewrite_directory` (the current copy is renamed
+    aside, then the new one into place). The checkpoint replaces the
     reference's manifest snapshots (A2); replay of a failed batch is
     idempotent because the upsert is deterministic — the exact guarantee
-    the reference gets from ON CONFLICT (README.md:31).
+    the reference gets from ON CONFLICT (README.md:31). A copy left aside
+    by a crash between those two renames fails every later micro-batch
+    instead of being taken for "no warehouse yet".
 
     At warehouse scale the swap becomes partition-overwrite or a Delta
     MERGE; the per-batch logic is unchanged.
     """
     from ..operators.upsert import upsert_last_write_wins
-    from ..sources import fs_exists, swap_directory
+    from ..sources import rewrite_directory
 
     keys = keys or ["event_id"]
 
     def _apply(batch_df, batch_id: int) -> None:
         s = batch_df.sparkSession
-        # Existence is tested explicitly — only "first batch, warehouse not
-        # yet created" may fall back to merged=batch. Any other failure
-        # (schema-drift ValueError from the upsert, transient FS error)
-        # must propagate so the micro-batch fails and REPLAYS; swallowing
-        # it here would replace the whole warehouse with one micro-batch.
-        if fs_exists(s, warehouse_path):
-            current = s.read.parquet(warehouse_path)
-            merged = upsert_last_write_wins(current, batch_df, keys=keys)
-        else:
+
+        def write(tmp: str, stored: bool) -> None:
+            # only "warehouse not yet created" may fall back to
+            # merged=batch; any other failure (schema-drift ValueError
+            # from the upsert, transient FS error) must propagate so the
+            # micro-batch fails and REPLAYS — swallowing it would replace
+            # the whole warehouse with one micro-batch
             merged = batch_df
-        # stage the merged table fully (this materializes the read of the
-        # old warehouse), then swap directories — readers see old or new,
-        # never a partial write and never a missing path (rename-aside
-        # swap, portable Hadoop FS ops)
-        tmp = f"{warehouse_path}__staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        swap_directory(s, tmp, warehouse_path)
+            if stored:
+                current = s.read.parquet(warehouse_path)
+                merged = upsert_last_write_wins(current, batch_df, keys=keys)
+            merged.write.mode("overwrite").parquet(tmp)
+
+        rewrite_directory(s, warehouse_path, write)
 
     events = read_events_stream(spark, source_dir, max_files_per_trigger)
     return (

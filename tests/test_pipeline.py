@@ -34,7 +34,7 @@ def dirs(tmp_path):
     shutil.rmtree(base, ignore_errors=True)
 
 
-def _run(spark, dirs):
+def _run(spark, dirs, keep_history=False):
     return run_batch_pipeline(
         spark,
         landing_dir=dirs["landing"],
@@ -42,6 +42,7 @@ def _run(spark, dirs):
         warehouse_dir=dirs["warehouse"],
         archive_dir=dirs["archive"],
         deterministic_ts=TS,
+        keep_history=keep_history,
     )
 
 
@@ -311,11 +312,16 @@ def _run_hist(spark, dirs, seed):
     )
 
 
+def _snapshot_of(df):
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
 def _snapshot(spark, dirs):
     from simple_data_engineering_project_spark.sources import scan_parquet
 
-    df = scan_parquet(spark, f"{dirs['warehouse']}/cocoa_shipments")
-    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+    return _snapshot_of(
+        scan_parquet(spark, f"{dirs['warehouse']}/cocoa_shipments")
+    )
 
 
 def test_time_travel_reconstructs_every_snapshot(spark, dirs):
@@ -485,12 +491,32 @@ def _write_csv(path, rows):
             f.write(",".join(r) + "\n")
 
 
-def test_legacy_flat_warehouse_upgrades_to_partitioned(spark, dirs):
-    # a warehouse written before the month layout (flat parquet, no
-    # load_month column) is rewritten whole into the partitioned layout
-    # by the next merge; the batch still wins on conflicting keys
+def _tree_bytes(root: str) -> dict[str, bytes]:
+    """{path relative to root: content} of every file under root."""
     import os
 
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(dirpath, fn)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("keep_history", [False, True])
+def test_legacy_flat_warehouse_upgrades_to_partitioned(spark, dirs, keep_history):
+    # a warehouse written before the month layout (flat parquet, no
+    # load_month column) is rewritten whole into the partitioned layout
+    # by the next merge; the batch still wins on conflicting keys. With
+    # history, the flat table is kept whole as snapshot v0's __full__
+    # copy, byte for byte
+    import json
+    import os
+
+    from simple_data_engineering_project_spark.pipeline import (
+        read_warehouse_version,
+    )
     from simple_data_engineering_project_spark.schemas import (
         COCOA_LANDING_SCHEMA,
     )
@@ -506,10 +532,16 @@ def test_legacy_flat_warehouse_upgrades_to_partitioned(spark, dirs):
         "2024-01-01 00:00:00",
     ).write.parquet(table)
     assert not any("=" in n for n in os.listdir(table))
+    flat = {
+        name: data
+        for name, data in _tree_bytes(table).items()
+        if name.endswith(".parquet")
+    }
+    assert flat
 
     # file 0 re-sends the flat table's 300 keys, file 1 adds 300 new ones
     land_csv_files(spark, dirs["landing"], num_files=2, rows_per_file=300, seed=21)
-    res = _run(spark, dirs)
+    res = _run(spark, dirs, keep_history)
     assert res.rewritten_partitions == ["*"]
     assert res.rows_upserted == 600
     assert res.warehouse_rows == 600
@@ -523,11 +555,25 @@ def test_legacy_flat_warehouse_upgrades_to_partitioned(spark, dirs):
     # every re-sent key now carries the batch's stamp
     assert wh.filter(F.col("processed_at") != F.lit(TS).cast("timestamp")).count() == 0
 
+    history = f"{dirs['warehouse']}/_history"
+    if keep_history:
+        assert res.version == 0
+        kept = _tree_bytes(f"{history}/v0/__full__")
+        assert {n: d for n, d in kept.items() if n.endswith(".parquet")} == flat
+        with open(f"{history}/manifest_v000000.json") as f:
+            assert json.load(f)["full"] is True
+        v0 = read_warehouse_version(spark, dirs["warehouse"], 0)
+        assert _snapshot_of(v0) == _snapshot(spark, dirs)
+    else:
+        assert res.version is None
+        assert not os.path.exists(history)
+
     # and the next batch merges per partition
     land_csv_files(spark, dirs["landing"], num_files=1, rows_per_file=50, seed=23)
-    res = _run(spark, dirs)
+    res = _run(spark, dirs, keep_history)
     assert res.rewritten_partitions != ["*"]
     assert res.warehouse_rows == 650 == spark.read.parquet(table).count()
+    assert res.version == (1 if keep_history else None)
 
 
 def _jobs_of(spark, group, fn, *args):
@@ -716,6 +762,22 @@ def test_pipeline_py4j_round_trip_budget(spark, dirs):
     assert res.warehouse_rows == 1800
     assert n <= 1500, n
 
+    # the same merge with history: the retired months move to the
+    # snapshot in one rename, so history costs about its manifest (the
+    # manifest listing, read and write), not commands per month
+    hist = {k: f"{v}_hist" for k, v in dirs.items()}
+    args = (
+        spark, hist["landing"], hist["staging"], hist["warehouse"],
+        hist["archive"], TS, True,
+    )
+    land_csv_files(spark, hist["landing"], 6, 200, 50)
+    run_batch_pipeline(*args)
+    land_csv_files(spark, hist["landing"], 6, 200, 53)
+    res_hist, n_hist = _py4j_commands(spark, run_batch_pipeline, *args)
+    assert res_hist.rewritten_partitions == res.rewritten_partitions
+    assert res_hist.version == 1
+    assert n_hist - n <= 50, (n_hist, n)
+
 
 def test_land_files_hold_the_generator_rows_in_lid_order(spark, dirs):
     # more files than cores: file i is range partition i, holding the
@@ -760,3 +822,83 @@ def test_land_header_only_files_load_as_empty_batches(spark, dirs):
     assert (res.rows_upserted, res.warehouse_rows) == (0, 0)
     assert res.skipped_files == []
     assert len(res.archived_files) == 2
+
+
+class _CrashOnInstall:
+    """A Hadoop FileSystem whose first rename out of the temp tree
+    raises, as a crash between a commit's retire and install would."""
+
+    def __init__(self, fs, state):
+        self._fs, self._state = fs, state
+
+    def rename(self, src, dst):
+        if not self._state["crashed"] and ".cocoa_shipments_next" in str(
+            src.toString()
+        ):
+            self._state["crashed"] = True
+            raise IOError("crash at install")
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _parquet_rows(root: str, skip: str = "\0") -> list[tuple]:
+    """Rows of every parquet file under root outside the subtree skip,
+    read by pyarrow (the partition column lives in the path)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    rows = []
+    for dirpath, dirnames, files in os.walk(root):
+        dirnames[:] = [d for d in dirnames if d != skip]
+        for fn in files:
+            if fn.endswith(".parquet"):
+                table = pq.read_table(os.path.join(dirpath, fn))
+                rows += [tuple(sorted(r.items())) for r in table.to_pylist()]
+    return rows
+
+
+def test_crash_at_install_loses_no_stored_row(spark, dirs, monkeypatch):
+    # a commit renames each stored month aside before installing its new
+    # copy, so a crash at the install leaves every pre-merge row on disk
+    # (live tree plus retired directory); the next run then stops on the
+    # retired directory instead of merging against the incomplete table,
+    # and so does a rollback
+    from simple_data_engineering_project_spark.pipeline import (
+        rollback_warehouse,
+    )
+    from simple_data_engineering_project_spark.sources import HadoopFS
+
+    table = f"{dirs['warehouse']}/cocoa_shipments"
+    tmp = f"{dirs['warehouse']}/.cocoa_shipments_next"
+    retired = f"{dirs['warehouse']}/.cocoa_shipments_retired"
+    land_csv_files(spark, dirs["landing"], num_files=2, rows_per_file=300, seed=61)
+    _run(spark, dirs)
+    stored = _parquet_rows(table)
+    assert len(stored) == 600
+
+    land_csv_files(spark, dirs["landing"], num_files=1, rows_per_file=300, seed=62)
+    state = {"crashed": False}
+    resolve = HadoopFS._resolve
+
+    def crashing(self, path):
+        fs, p = resolve(self, path)
+        return _CrashOnInstall(fs, state), p
+
+    with monkeypatch.context() as m:
+        m.setattr(HadoopFS, "_resolve", crashing)
+        with pytest.raises(IOError, match="crash at install"):
+            _run(spark, dirs)
+    assert state["crashed"]
+    on_disk = set(_parquet_rows(dirs["warehouse"], skip=".cocoa_shipments_next"))
+    assert set(stored) <= on_disk
+
+    left = (_tree_bytes(tmp), _tree_bytes(retired))
+    assert left[1]  # the crash fell after a month was retired
+    with pytest.raises(IOError, match="cocoa_shipments_retired"):
+        _run(spark, dirs)
+    with pytest.raises(IOError, match="cocoa_shipments_retired"):
+        rollback_warehouse(spark, dirs["warehouse"], 0)
+    assert (_tree_bytes(tmp), _tree_bytes(retired)) == left

@@ -153,6 +153,33 @@ def test_compact_small_files(spark, sf_smoke, tmp_path):
     assert sorted(back.columns) == sorted(ev.columns)
 
 
+def test_compaction_stops_on_a_leftover_retired_directory(spark, tmp_path):
+    # {path}__old left by an unfinished rewrite may hold the only copy of
+    # the data: compaction raises before writing anything and keeps it
+    import os
+
+    from simple_data_engineering_project_spark.sources import (
+        compact_small_files,
+    )
+
+    def tree(root):
+        out = {}
+        for dirpath, _dirs, files in os.walk(root):
+            for fn in files:
+                with open(os.path.join(dirpath, fn), "rb") as f:
+                    out[os.path.relpath(os.path.join(dirpath, fn), root)] = f.read()
+        return out
+
+    path = str(tmp_path / "frag")
+    spark.range(200).repartition(8).write.parquet(path)
+    spark.range(50).write.parquet(f"{path}__old/frag")
+    before = (tree(path), tree(f"{path}__old"))
+    with pytest.raises(IOError, match="frag__old"):
+        compact_small_files(spark, path)
+    assert (tree(path), tree(f"{path}__old")) == before
+    assert sorted(os.listdir(tmp_path)) == ["frag", "frag__old"]
+
+
 def _iter_physical_nodes(node):
     yield node
     # AdaptiveSparkPlanExec hides the real tree behind initialPlan (its
