@@ -2,7 +2,9 @@
 
 Usage: python scripts/profile_entry.py entry [entry ...] [--n 3] [--cprofile]
 
-Methodology mirrors bench.py (noop sink, same session settings); adds
+Methodology mirrors bench.py (noop sink, same session settings; the
+cold pass runs ``q.fn``, the steady passes ``q.query``, which skips a
+declared fixture stage and reads what the cold pass wrote); adds
 optional driver-side cProfile of the steady pass so pure-Python codec
 entries show their hot loops. Job descriptions are set so any UI or
 event-log inspection maps timings to entries.
@@ -68,26 +70,22 @@ def main() -> None:
         t0 = time.perf_counter()
         _execute(q.fn(spark, SF_DIR))
         cold = time.perf_counter() - t0
-        os.environ["SDEP_BENCH_REUSE_FIXTURES"] = "1"
         steady = []
-        try:
-            for i in range(n):
-                spark.sparkContext.setJobDescription(f"{name}: steady {i}")
-                t0 = time.perf_counter()
-                _execute(q.fn(spark, SF_DIR))
-                steady.append(round(time.perf_counter() - t0, 3))
-            if do_prof:
-                import cProfile
-                import pstats
+        for i in range(n):
+            spark.sparkContext.setJobDescription(f"{name}: steady {i}")
+            t0 = time.perf_counter()
+            _execute(q.query(spark, SF_DIR))
+            steady.append(round(time.perf_counter() - t0, 3))
+        if do_prof:
+            import cProfile
+            import pstats
 
-                pr = cProfile.Profile()
-                pr.enable()
-                _execute(q.fn(spark, SF_DIR))
-                pr.disable()
-                st = pstats.Stats(pr)
-                st.sort_stats("cumulative").print_stats(25)
-        finally:
-            os.environ.pop("SDEP_BENCH_REUSE_FIXTURES", None)
+            pr = cProfile.Profile()
+            pr.enable()
+            _execute(q.query(spark, SF_DIR))
+            pr.disable()
+            st = pstats.Stats(pr)
+            st.sort_stats("cumulative").print_stats(25)
         print(f"{name}: cold={cold:.3f} steady={steady}")
 
 

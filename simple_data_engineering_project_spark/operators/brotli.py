@@ -966,13 +966,6 @@ def _emit_prefix_code(bw: _BitW, freqs: dict[int, int], alphabet: int):
     return _canonical_codes(lengths)
 
 
-def _emit_const_code(bw: _BitW, sym: int, abits: int) -> None:
-    """Simple 1-symbol prefix code (0 bits per decode)."""
-    bw.w(1, 2)
-    bw.w(0, 2)
-    bw.w(sym, abits)
-
-
 # explicit-distance cell index by (insert_high, copy_high): raw
 # cmd>>6 = index + 2 (cells 0/1 are the implicit-last-distance twins
 # of (0,0)/(0,8))

@@ -99,29 +99,6 @@ def _hash_family(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     return [(rnd.randrange(1, _P), rnd.randrange(0, _P)) for _ in range(num_hashes)]
 
 
-def minhash_signature(shingle_col, num_hashes: int = 64, seed: int = 42):
-    """MinHash signature as one array expression (small-input API).
-
-    For corpus-scale signature computation use the explode→groupBy path
-    inside :func:`minhash_lsh_candidates` — min-aggregates run in
-    whole-stage codegen with map-side partial aggregation, while this
-    array fold is evaluated interpreted per row.
-    """
-    hashes = F.transform(shingle_col, _shingle_hash)
-
-    def _mk(a: int, b: int):
-        # one-arg closure: a two-arg lambda (h, ab) would make
-        # F.transform bind the second parameter to the ELEMENT INDEX
-        return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_P))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(hashes, _mk(a, b)))
-            for a, b in _hash_family(num_hashes, seed)
-        ]
-    )
-
-
 def _minhash_sig_arrow(num_hashes: int, seed: int):
     """Row-local MinHash signature as an Arrow-batched column: takes the
     array<long> of shingle hashes (JVM xxhash64 — bit-identical to the

@@ -2571,18 +2571,6 @@ def audio_flac_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_extract, schema=FLAC_SCHEMA)
 
 
-def decode_audio(payload: bytes) -> object:
-    """STUB for compressed *psychoacoustic* audio codecs (MP3/AAC/Opus)
-    — those require real DSP libraries, absent here. What decodes for
-    REAL: PCM WAV (:func:`decode_wav`), and G.711 μ-law/A-law + IMA
-    ADPCM WAVs (:func:`.audio_codecs.decode_wav_compressed`)."""
-    raise NotImplementedError(
-        "psychoacoustic audio decode (MP3/AAC/Opus) is stubbed: no codec "
-        "libraries in this environment (PCM WAV → decode_wav, "
-        "G.711/IMA-ADPCM WAV → audio_codecs.decode_wav_compressed)"
-    )
-
-
 _PNG_COLOR_OF_CHANNELS = {1: 0, 2: 4, 3: 2, 4: 6}  # samples/pixel → color type
 
 

@@ -147,30 +147,6 @@ def _hyperplanes(seed: int, bands: int, bits: int, dim: int) -> list[list[float]
     ]
 
 
-def srp_signature(vec, dim: int, bands: int = 8, bits: int = 8, seed: int = 42):
-    """Signed-random-projection signature: array of per-band bucket ids.
-
-    Expression form for small band×bit×dim products. For real corpora use
-    :func:`srp_signature_udf` — an unrolled bands×bits×dim expression tree
-    (thousands of nodes) costs more in Catalyst analysis + codegen than
-    the data itself.
-    """
-    planes = _hyperplanes(seed, bands, bits, dim)
-
-    def band_bucket(band: int):
-        acc = F.lit(0).cast("long")
-        for bit in range(bits):
-            w = planes[band * bits + bit]
-            proj = None
-            for d in range(dim):
-                term = vec[d].cast("double") * F.lit(w[d])
-                proj = term if proj is None else proj + term
-            acc = acc * 2 + F.when(proj >= 0, 1).otherwise(0)
-        return acc
-
-    return F.array(*[band_bucket(b) for b in range(bands)])
-
-
 def srp_signature_udf(dim: int, bands: int = 8, bits: int = 8, seed: int = 42):
     """Arrow-vectorized SRP signatures: one numpy matmul per batch.
 

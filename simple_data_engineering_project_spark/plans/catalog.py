@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -30,6 +30,7 @@ from ..operators import joins as join_ops
 from ..operators import multimodal as mm_ops
 from ..operators import similarity as sim_ops
 from ..operators import text as text_ops
+from ..operators.ddl import split_top
 from ..operators.upsert import upsert_last_write_wins
 from ..session import tune_for_queries
 from ..schemas import BEAN_TYPES as _BEAN_TYPES
@@ -43,23 +44,45 @@ SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/sdep_spark_scratch")
 @dataclass(frozen=True)
 class CatalogQuery:
     name: str
-    fn: Callable[[SparkSession, str], DataFrame]
+    fn: Callable[[SparkSession, str], DataFrame]  # stage, then query
+    query: Callable[[SparkSession, str], DataFrame]  # the read half
     oracle: str | None  # DuckDB SQL, or None → rows-only check
     tier: str  # A (reference-executed) | B (reference-delegated SQL) | C (extension)
     note: str = ""
+    stage: Callable[[SparkSession, str], None] | None = None
 
 
 _REGISTRY: dict[str, CatalogQuery] = {}
 
 
-def register(name: str, oracle: str | None, tier: str, note: str = ""):
-    def deco(fn):
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            tune_for_queries(spark)
-            return fn(spark, sf_dir)
+def register(
+    name: str, oracle: str | None, tier: str, note: str = "", stage=None
+):
+    """Register a builder ``(spark, sf_dir) -> DataFrame``.
 
-        _REGISTRY[name] = CatalogQuery(name, wrapped, oracle, tier, note)
-        return wrapped
+    ``stage(spark, sf_dir)``, when given, writes the on-disk fixture the
+    builder reads. ``fn`` always stages first, so every call the oracle
+    grades reads a fixture it wrote itself; ``query`` skips the stage,
+    for a caller that ran ``fn`` on the same ``sf_dir`` just before
+    (bench.py's steady-state pass times the read path that way)."""
+
+    def deco(build):
+        def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune_for_queries(spark)
+            return build(spark, sf_dir)
+
+        fn = query
+        if stage is not None:
+
+            def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+                tune_for_queries(spark)
+                stage(spark, sf_dir)
+                return build(spark, sf_dir)
+
+        _REGISTRY[name] = CatalogQuery(
+            name, fn, query, oracle, tier, note, stage
+        )
+        return fn
 
     return deco
 
@@ -107,38 +130,6 @@ def _stage_base(spark, sf_dir, table="orders", cols=("o_orderkey",)):
         .select(*cols)
         .repartition(_stage_width(spark))
     )
-
-
-def _bench_reuse_fixture(out: str, stage, tag: str = "ok") -> None:
-    """Bench-only fixture reuse, the one home of the protocol (review
-    finding — three hand-rolled copies could drift): bench.py's
-    steady-state timed pass sets SDEP_BENCH_REUSE_FIXTURES right
-    after an untimed pass of the same entry in the same process, so
-    the staged fixture under ``out`` is fresh by construction and the
-    timed number measures the READ path. ``stage()`` must leave its
-    output in ``out``; the marker is written only after it completes
-    (a ``mode("overwrite")`` stage clears the directory, marker
-    included — the ordering that makes a crashed stage re-run). The
-    correctness driver never sets the flag and always stages fresh."""
-    marker = f"{out}/.synth_complete"
-    if (
-        os.environ.get("SDEP_BENCH_REUSE_FIXTURES") == "1"
-        and os.path.exists(marker)
-    ):
-        # ``tag`` guards fixtures whose scratch path is NOT SF-keyed
-        # (parquet_footer_stats: the DuckDB oracle's static glob pins
-        # the path) — an externally persisted reuse flag across
-        # different-SF runs must re-stage, not serve the stale SF
-        # (ADVICE r15).
-        try:
-            with open(marker) as mf:
-                if mf.read() == tag:
-                    return
-        except OSError:
-            pass
-    stage()
-    with open(marker, "w") as mf:
-        mf.write(tag)
 
 
 # =====================================================================
@@ -478,7 +469,7 @@ def scan_json_q(spark, sf_dir):
 def scan_orc_pure_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_columns
 
     out = _scratch(sf_dir, "orc_pure_orders")
     cols = [
@@ -488,20 +479,11 @@ def scan_orc_pure_q(spark, sf_dir):
     _t(spark, sf_dir, "orders").select(*cols).repartition(
         _stage_width(spark)
     ).write.mode("overwrite").orc(out)
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.orc_data import read_orc_columns
-
-        for b in batches:
-            for path in b["path"]:
-                decoded = read_orc_columns(path, cols)
-                yield _pd.DataFrame(decoded)
-
-    return pdf.mapInPandas(
-        _read,
-        schema="o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.orc")),
+        lambda path: read_orc_columns(path, cols),
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
         "o_totalprice double, o_orderpriority string",
     )
 
@@ -5714,12 +5696,8 @@ def tpch_q20_q(spark, sf_dir):
 
 
 # Patch in the generated lang-id oracle (registered with None above).
-_REGISTRY["text_lang_id"] = CatalogQuery(
-    "text_lang_id",
-    _REGISTRY["text_lang_id"].fn,
-    _lang_id_oracle(),
-    "C",
-    _REGISTRY["text_lang_id"].note,
+_REGISTRY["text_lang_id"] = replace(
+    _REGISTRY["text_lang_id"], oracle=_lang_id_oracle()
 )
 
 
@@ -5811,12 +5789,10 @@ def _curate_corpus_oracle() -> str:
 # Promote curate_corpus from rows-only to oracle-checked (r5): its
 # pipeline is deterministic end-to-end, so the staged composition gets
 # the strong rows+schema+hash check.
-_REGISTRY["curate_corpus"] = CatalogQuery(
-    "curate_corpus",
-    _REGISTRY["curate_corpus"].fn,
-    _curate_corpus_oracle(),
-    "C",
-    _REGISTRY["curate_corpus"].note.replace(
+_REGISTRY["curate_corpus"] = replace(
+    _REGISTRY["curate_corpus"],
+    oracle=_curate_corpus_oracle(),
+    note=_REGISTRY["curate_corpus"].note.replace(
         "Rows-only; every stage is individually oracle-checked or "
         "unit-pinned.",
         "Oracle-checked end-to-end: the DuckDB twin chains the stage "
@@ -9963,6 +9939,23 @@ def text_cms_topk_q(spark, sf_dir):
     )
 
 
+def _footer_stats_stage(spark, sf_dir):
+    """Stage lineitem WIDE for parquet_footer_stats: a coalesce(1)
+    write would bill a single-task full-table write to a FOOTER-decode
+    entry and leave the per-file walk one task wide — the declared
+    scale shape is a parallel walk over a file LISTING. 256 KB blocks
+    still force several row groups per file. The path is not SF-keyed:
+    the oracle's static glob reads the same staged files, so both
+    decoders see identical bytes."""
+    (
+        _t(spark, sf_dir, "lineitem")
+        .repartition(_stage_width(spark))
+        .write.mode("overwrite")
+        .option("parquet.block.size", 256 * 1024)
+        .parquet(f"{SCRATCH}/footer_probe")
+    )
+
+
 @register(
     "parquet_footer_stats",
     f"""
@@ -9991,58 +9984,20 @@ def text_cms_topk_q(spark, sf_dir):
     "round-trip. Footer-only I/O is the point at 100 TB: planning "
     "touches KBs per file, and the per-file walk parallelizes as a "
     "row-local mapInPandas over the file listing.",
+    stage=_footer_stats_stage,
 )
 def parquet_footer_stats_q(spark, sf_dir):
-    import pandas as _pd
+    from ..operators.parquet_meta import read_footer_stats
 
     out = f"{SCRATCH}/footer_probe"
-    li = _t(spark, sf_dir, "lineitem")
-
-    # Stage WIDE and reuse across bench steady passes (round-15, the
-    # scan_parquet_brotli protocol): the former coalesce(1) write both
-    # billed a single-task full-table write to a FOOTER-decode entry
-    # every run and left the per-file walk one task wide — the declared
-    # scale shape is a parallel walk over a file LISTING. 256 KB blocks
-    # still force several row groups per file; the oracle reads the
-    # same staged glob, so both decoders see identical bytes.
-    def _stage():
-        (
-            li.repartition(_stage_width(spark))
-            .write.mode("overwrite")
-            .option("parquet.block.size", 256 * 1024)
-            .parquet(out)
-        )
-
-    # SF-tagged marker: this scratch path is NOT SF-keyed (the DuckDB
-    # oracle's static glob pins it), so cross-SF reuse must re-stage
-    _bench_reuse_fixture(
-        out, _stage, tag=os.path.basename(os.path.normpath(sf_dir))
-    )
     paths = sorted(
         f"{out}/{p}"
         for p in os.listdir(out)
         if p.endswith(".parquet") and not p.startswith(".")
     )
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _extract(batches):
-        from ..operators.parquet_meta import read_footer_stats
-
-        for b in batches:
-            rows = []
-            for path in b["path"]:
-                rows.extend(read_footer_stats(path))
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "row_group", "column", "num_values", "null_count",
-                    "compressed_bytes", "uncompressed_bytes", "codec",
-                ],
-            )
-
-    return pdf.mapInPandas(
-        _extract,
-        schema="row_group int, column string, num_values bigint, "
+    return _file_scan(
+        spark, paths, read_footer_stats,
+        "row_group int, column string, num_values bigint, "
         "null_count bigint, compressed_bytes bigint, "
         "uncompressed_bytes bigint, codec string",
     ).withColumnRenamed("column", "col_path")
@@ -10756,20 +10711,40 @@ def _shard_sink_roundtrip(
     shards = d.mapInPandas(_write, schema="path string, n int")
     shards.count()  # materialize the export before reading it back
 
-    paths = sorted(_glob.glob(f"{out}/shard-*.{suffix}"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-    columns = [c.strip().split()[0] for c in read_schema.split(",")]
+    columns = [c.split()[0] for c in split_top(read_schema)]
+
+    def _read(path):
+        with open(path, "rb") as f:
+            payload = f.read()
+        return _pd.DataFrame(decode_shard(payload), columns=columns).astype(
+            pandas_dtypes
+        )
+
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/shard-*.{suffix}")), _read,
+        read_schema,
+    )
+
+
+def _file_scan(spark, paths, read_file, schema):
+    """The read half of every fixture scan: one unpartitioned ``path``
+    row per file and ONE ``mapInPandas`` over them, so each task walks
+    its files with the pure reader (no shuffle, no JVM reader).
+    ``read_file(path)`` returns one file's rows in any form
+    ``pandas.DataFrame(..., columns=...)`` takes — row dicts, a column
+    dict or a DataFrame — keyed by ``schema``'s column names."""
+    columns = [c.split()[0] for c in split_top(schema)]
 
     def _read(batches):
-        for b in batches:
-            rows = []
-            for path in b["path"]:
-                with open(path, "rb") as f:
-                    payload = f.read()
-                rows.extend(decode_shard(payload))
-            yield _pd.DataFrame(rows, columns=columns).astype(pandas_dtypes)
+        import pandas as _pd
 
-    return pdf.mapInPandas(_read, schema=read_schema)
+        for b in batches:
+            for path in b["path"]:
+                yield _pd.DataFrame(read_file(path), columns=columns)
+
+    return spark.createDataFrame(
+        [(p,) for p in paths], "path string"
+    ).mapInPandas(_read, schema=schema)
 
 
 @register(
@@ -11860,6 +11835,54 @@ def decontaminate_embedding_q(spark, sf_dir):
     )
 
 
+def _stage_warc_shards(spark, sf_dir):
+    """EXPORT documents as multi-record WARC shards from executors, one
+    file per Arrow batch, alternating gzipped members. Declared as the
+    stage so the steady pass times the DataSource read path, not the
+    executor-side fixture write (round-7 finding: 5.4 s was mostly
+    synthesis)."""
+    import glob as _glob
+    import uuid as _uuid
+
+    import pandas as _pd
+
+    from ..operators.multimodal import _html_escape
+    from ..operators.warc import encode_warc
+
+    out = _scratch(sf_dir, "warc_ds")
+    os.makedirs(out, exist_ok=True)
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+
+    def _write(batches):
+        for b in batches:
+            pages = []
+            gz = False
+            for doc_id, text in zip(b["doc_id"], b["text"]):
+                did = int(doc_id)
+                t = text or ""
+                if not t:
+                    continue
+                lines = [t[i : i + 80] for i in range(0, len(t), 80)]
+                html = (
+                    "<html><head><title>doc</title>"
+                    "<style>p{color:red}</style></head><body>"
+                    + "".join(f"<p>{_html_escape(ln)}</p>" for ln in lines)
+                    + "<script>var x=1;</script></body></html>"
+                ).encode("latin-1", "replace")
+                pages.append((f"http://example.org/{did}", html))
+                gz = did % 2 == 0  # last doc decides: both layouts occur
+            if not pages:
+                continue
+            path = f"{out}/shard-{_uuid.uuid4().hex}.warc"
+            with open(path, "wb") as f:
+                f.write(encode_warc(pages, gzip_members=gz))
+            yield _pd.DataFrame({"path": [path], "n": [len(pages)]})
+
+    for old in _glob.glob(f"{out}/*.warc"):
+        os.remove(old)
+    d.mapInPandas(_write, schema="path string, n int").count()
+
+
 @register(
     "scan_warc_datasource",
     """
@@ -11894,68 +11917,11 @@ def decontaminate_embedding_q(spark, sf_dir):
     "and the codegen html_to_text strip; the sha must equal the "
     "pure-SQL reconstruction — same oracle as warc_extract, now "
     "end-to-end through the DataSource API.",
+    stage=_stage_warc_shards,
 )
 def scan_warc_datasource_q(spark, sf_dir):
-    import glob as _glob
-    import uuid as _uuid
-
-    import pandas as _pd
-
     from ..operators.datasources import WarcShardDataSource
-    from ..operators.multimodal import _html_escape
     from ..operators.text import html_to_text
-    from ..operators.warc import encode_warc
-
-    out = _scratch(sf_dir, "warc_ds")
-    os.makedirs(out, exist_ok=True)
-    # Bench-only fixture reuse: bench.py's timed steady-state pass sets
-    # the flag IMMEDIATELY after an untimed pass of this same fn in the
-    # same process, so the shards on disk are fresh by construction and
-    # the timed number measures the DataSource read path, not the
-    # executor-side fixture write (round-7 finding: 5.4 s was mostly
-    # synthesis). The marker is written only after the synthesis job
-    # completes; the correctness driver never sets the flag and always
-    # synthesizes fresh.
-    marker = f"{out}/.synth_complete"
-    reuse = (
-        os.environ.get("SDEP_BENCH_REUSE_FIXTURES") == "1"
-        and os.path.exists(marker)
-    )
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def _write(batches):
-        for b in batches:
-            pages = []
-            gz = False
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                did = int(doc_id)
-                t = text or ""
-                if not t:
-                    continue
-                lines = [t[i : i + 80] for i in range(0, len(t), 80)]
-                html = (
-                    "<html><head><title>doc</title>"
-                    "<style>p{color:red}</style></head><body>"
-                    + "".join(f"<p>{_html_escape(ln)}</p>" for ln in lines)
-                    + "<script>var x=1;</script></body></html>"
-                ).encode("latin-1", "replace")
-                pages.append((f"http://example.org/{did}", html))
-                gz = did % 2 == 0  # last doc decides: both layouts occur
-            if not pages:
-                continue
-            path = f"{out}/shard-{_uuid.uuid4().hex}.warc"
-            with open(path, "wb") as f:
-                f.write(encode_warc(pages, gzip_members=gz))
-            yield _pd.DataFrame({"path": [path], "n": [len(pages)]})
-
-    if not reuse:
-        if os.path.exists(marker):
-            os.remove(marker)
-        for old in _glob.glob(f"{out}/*.warc"):
-            os.remove(old)
-        d.mapInPandas(_write, schema="path string, n int").count()
-        with open(marker, "w") as f:
-            f.write("ok")
 
     try:
         spark.dataSource.register(WarcShardDataSource)
@@ -11963,7 +11929,9 @@ def scan_warc_datasource_q(spark, sf_dir):
         pass  # already registered in this session
 
     scanned = (
-        spark.read.format("warcshards").option("path", out).load()
+        spark.read.format("warcshards")
+        .option("path", _scratch(sf_dir, "warc_ds"))
+        .load()
     )
     text = html_to_text("html")
     return scanned.select(
@@ -12481,7 +12449,7 @@ def sink_orc_nested_q(spark, sf_dir):
 def scan_orc_nested_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_nested_columns
 
     out = _scratch(sf_dir, "orc_nested_orders")
     o = _stage_base(
@@ -12517,47 +12485,26 @@ def scan_orc_nested_q(spark, sf_dir):
         .write.mode("overwrite")
         .orc(out)
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
 
-    def _read(batches):
-        from ..operators.orc_data import read_orc_nested_columns
+    def _read(path):
+        d = read_orc_nested_columns(path, ["o_orderkey", "lst", "st"])
+        return [
+            {
+                "o_orderkey": key,
+                "lst_len": -1 if lv is None else len(lv),
+                "lst_csv": "NULL"
+                if lv is None
+                else ",".join("N" if x is None else str(x) for x in lv),
+                "s": None if sv is None else sv["s"],
+                "p": None if sv is None else sv["p"],
+                "st_null": 1 if sv is None else 0,
+            }
+            for key, lv, sv in zip(d["o_orderkey"], d["lst"], d["st"])
+        ]
 
-        for b in batches:
-            for path in b["path"]:
-                d = read_orc_nested_columns(
-                    path, ["o_orderkey", "lst", "st"]
-                )
-                rows = []
-                for key, lv, sv in zip(
-                    d["o_orderkey"], d["lst"], d["st"]
-                ):
-                    rows.append(
-                        {
-                            "o_orderkey": key,
-                            "lst_len": -1 if lv is None else len(lv),
-                            "lst_csv": "NULL"
-                            if lv is None
-                            else ",".join(
-                                "N" if x is None else str(x)
-                                for x in lv
-                            ),
-                            "s": None if sv is None else sv["s"],
-                            "p": None if sv is None else sv["p"],
-                            "st_null": 1 if sv is None else 0,
-                        }
-                    )
-                yield _pd.DataFrame(
-                    rows,
-                    columns=[
-                        "o_orderkey", "lst_len", "lst_csv", "s", "p",
-                        "st_null",
-                    ],
-                )
-
-    return pdf.mapInPandas(
-        _read,
-        schema="o_orderkey bigint, lst_len int, lst_csv string, "
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/part-*.orc")), _read,
+        "o_orderkey bigint, lst_len int, lst_csv string, "
         "s string, p double, st_null int",
     )
 
@@ -12731,29 +12678,19 @@ _NESTED2_SCHEMA = (
 def scan_parquet_nested2_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_data import read_parquet_nested_columns
 
     out = _scratch(sf_dir, "pq_nested2_orders")
     _nested2_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.parquet_data import read_parquet_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_parquet_nested_columns(
-                    path, ["o_orderkey", "ls", "m"]
-                )
-                yield _pd.DataFrame(
-                    _nested2_flatten_rows(d, decode_bytes=True),
-                    columns=[
-                        "o_orderkey", "ls_len", "ls_csv", "m_len", "m_csv",
-                    ],
-                )
-
-    return pdf.mapInPandas(_read, schema=_NESTED2_SCHEMA)
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.parquet")),
+        lambda path: _nested2_flatten_rows(
+            read_parquet_nested_columns(path, ["o_orderkey", "ls", "m"]),
+            decode_bytes=True,
+        ),
+        _NESTED2_SCHEMA,
+    )
 
 
 @register(
@@ -12775,29 +12712,19 @@ def scan_parquet_nested2_q(spark, sf_dir):
 def scan_orc_nested2_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_nested_columns
 
     out = _scratch(sf_dir, "orc_nested2_orders")
     _nested2_frame(spark, sf_dir).write.mode("overwrite").orc(out)
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.orc_data import read_orc_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_orc_nested_columns(
-                    path, ["o_orderkey", "ls", "m"]
-                )
-                yield _pd.DataFrame(
-                    _nested2_flatten_rows(d, decode_bytes=False),
-                    columns=[
-                        "o_orderkey", "ls_len", "ls_csv", "m_len", "m_csv",
-                    ],
-                )
-
-    return pdf.mapInPandas(_read, schema=_NESTED2_SCHEMA)
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.orc")),
+        lambda path: _nested2_flatten_rows(
+            read_orc_nested_columns(path, ["o_orderkey", "ls", "m"]),
+            decode_bytes=False,
+        ),
+        _NESTED2_SCHEMA,
+    )
 
 
 def _nested2_python_values(keys):
@@ -13395,42 +13322,35 @@ def _pdna(v) -> bool:
 def scan_parquet_prune_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_data import read_parquet_pruned_columns
 
     LO, HI = 1000, 2999
     out = _scratch(sf_dir, "parquet_prune_orders")
+    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
     (
         _t(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        .select(*cols)
         .repartitionByRange(4, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite")
         .option("parquet.block.size", 64 * 1024)
         .parquet(out)
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
 
-    def _read(batches):
-        from ..operators.parquet_data import read_parquet_pruned_columns
-
-        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-        for b in batches:
-            for path in b["path"]:
-                data, _r, _t_ = read_parquet_pruned_columns(
-                    path, cols, "o_orderkey", lo=LO, hi=HI
-                )
-                data["o_orderpriority"] = [
-                    None if v is None else v.decode("utf-8")
-                    for v in data["o_orderpriority"]
-                ]
-                yield _pd.DataFrame(data, columns=cols)
+    def _read(path):
+        data, _r, _t_ = read_parquet_pruned_columns(
+            path, cols, "o_orderkey", lo=LO, hi=HI
+        )
+        data["o_orderpriority"] = [
+            None if v is None else v.decode("utf-8")
+            for v in data["o_orderpriority"]
+        ]
+        return data
 
     return (
-        pdf.mapInPandas(
-            _read,
-            schema="o_orderkey bigint, o_totalprice double, "
-            "o_orderpriority string",
+        _file_scan(
+            spark, sorted(_glob.glob(f"{out}/part-*.parquet")), _read,
+            "o_orderkey bigint, o_totalprice double, o_orderpriority string",
         )
         # group elimination is conservative: the exact row filter
         # still runs on the surviving groups' rows
@@ -13466,38 +13386,28 @@ def scan_parquet_prune_q(spark, sf_dir):
 def scan_orc_prune_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_pruned_columns
 
     LO, HI = 1000, 2999
     out = _scratch(sf_dir, "orc_prune_orders")
+    cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
     (
         _t(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice", "o_orderpriority")
+        .select(*cols)
         .repartitionByRange(8, "o_orderkey")
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite")
         .option("orc.stripe.size", 64 * 1024)
         .orc(out)
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.orc_data import read_orc_pruned_columns
-
-        cols = ["o_orderkey", "o_totalprice", "o_orderpriority"]
-        for b in batches:
-            for path in b["path"]:
-                data, _r, _t_ = read_orc_pruned_columns(
-                    path, cols, "o_orderkey", lo=LO, hi=HI
-                )
-                yield _pd.DataFrame(data, columns=cols)
-
     return (
-        pdf.mapInPandas(
-            _read,
-            schema="o_orderkey bigint, o_totalprice double, "
-            "o_orderpriority string",
+        _file_scan(
+            spark,
+            sorted(_glob.glob(f"{out}/part-*.orc")),
+            lambda path: read_orc_pruned_columns(
+                path, cols, "o_orderkey", lo=LO, hi=HI
+            )[0],
+            "o_orderkey bigint, o_totalprice double, o_orderpriority string",
         )
         # stripe elimination is conservative: the exact row filter
         # still runs on the surviving stripes' rows
@@ -13612,7 +13522,7 @@ def scan_parquet_int96_q(spark, sf_dir):
 def scan_orc_rle1_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_nested_columns
 
     out = _scratch(sf_dir, "orc_rle1_orders")
     o = _stage_base(
@@ -13654,50 +13564,31 @@ def scan_orc_rle1_q(spark, sf_dir):
         .option("orc.write.format", "0.11")
         .orc(out)
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
 
-    def _read(batches):
-        from ..operators.orc_data import read_orc_nested_columns
-
+    def _read(path):
         cols = ["o_orderkey", "cat", "tag", "price", "dte", "dc", "arr"]
-        for b in batches:
-            for path in b["path"]:
-                d = read_orc_nested_columns(path, cols)
-                rows = []
-                for key, cat, tag, price, dte, dc, av in zip(
-                    d["o_orderkey"], d["cat"], d["tag"], d["price"],
-                    d["dte"], d["dc"], d["arr"],
-                ):
-                    rows.append(
-                        {
-                            "o_orderkey": key,
-                            "cat": cat,
-                            "tag": tag,
-                            "price": price,
-                            # pure reader returns DATE as epoch days
-                            "dte_days": dte,
-                            # exact integer ten-thousandths
-                            "dc_tenk": None
-                            if dc is None
-                            else int(dc.scaleb(4)),
-                            "arr_len": -1 if av is None else len(av),
-                            "arr_sum": None
-                            if av is None
-                            else sum(av),
-                        }
-                    )
-                yield _pd.DataFrame(
-                    rows,
-                    columns=[
-                        "o_orderkey", "cat", "tag", "price", "dte_days",
-                        "dc_tenk", "arr_len", "arr_sum",
-                    ],
-                )
+        d = read_orc_nested_columns(path, cols)
+        return [
+            {
+                "o_orderkey": key,
+                "cat": cat,
+                "tag": tag,
+                "price": price,
+                # pure reader returns DATE as epoch days
+                "dte_days": dte,
+                # exact integer ten-thousandths
+                "dc_tenk": None if dc is None else int(dc.scaleb(4)),
+                "arr_len": -1 if av is None else len(av),
+                "arr_sum": None if av is None else sum(av),
+            }
+            for key, cat, tag, price, dte, dc, av in zip(
+                *(d[c] for c in cols)
+            )
+        ]
 
-    return pdf.mapInPandas(
-        _read,
-        schema="o_orderkey bigint, cat string, tag string, "
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/part-*.orc")), _read,
+        "o_orderkey bigint, cat string, tag string, "
         "price double, dte_days int, dc_tenk bigint, arr_len int, "
         "arr_sum bigint",
     )
@@ -13986,30 +13877,19 @@ def _nested5_sink_decode(t):
 def scan_parquet_nested5_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_data import read_parquet_nested_columns
 
     out = _scratch(sf_dir, "pq_nested5_orders")
     _nested5_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.parquet_data import read_parquet_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_parquet_nested_columns(
-                    path, ["o_orderkey", "ms", "ml"]
-                )
-                yield _pd.DataFrame(
-                    _nested5_flatten_rows(d, decode_bytes=True),
-                    columns=[
-                        "o_orderkey", "ms_len", "ms_csv", "ml_len",
-                        "ml_csv",
-                    ],
-                )
-
-    return pdf.mapInPandas(_read, schema=_NESTED5_SCHEMA)
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.parquet")),
+        lambda path: _nested5_flatten_rows(
+            read_parquet_nested_columns(path, ["o_orderkey", "ms", "ml"]),
+            decode_bytes=True,
+        ),
+        _NESTED5_SCHEMA,
+    )
 
 
 @register(
@@ -14032,30 +13912,19 @@ def scan_parquet_nested5_q(spark, sf_dir):
 def scan_orc_nested5_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_nested_columns
 
     out = _scratch(sf_dir, "orc_nested5_orders")
     _nested5_frame(spark, sf_dir).write.mode("overwrite").orc(out)
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.orc_data import read_orc_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_orc_nested_columns(
-                    path, ["o_orderkey", "ms", "ml"]
-                )
-                yield _pd.DataFrame(
-                    _nested5_flatten_rows(d, decode_bytes=False),
-                    columns=[
-                        "o_orderkey", "ms_len", "ms_csv", "ml_len",
-                        "ml_csv",
-                    ],
-                )
-
-    return pdf.mapInPandas(_read, schema=_NESTED5_SCHEMA)
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.orc")),
+        lambda path: _nested5_flatten_rows(
+            read_orc_nested_columns(path, ["o_orderkey", "ms", "ml"]),
+            decode_bytes=False,
+        ),
+        _NESTED5_SCHEMA,
+    )
 
 
 @register(
@@ -14467,6 +14336,22 @@ def _nested6_sink_decode(t):
     return _nested6_flatten_rows(d, decode_bytes=False)
 
 
+# The nested6 scans stage through a JVM deep-nested write that was 80%
+# of the recorded time and drifted with bench-run JVM state (the
+# r14/r15 quiet-tracker flag); declaring it as the stage lets the
+# steady pass time the PURE READER (~0.4 s across 8 parallel tasks).
+def _stage_pq_nested6(spark, sf_dir):
+    _nested6_frame(spark, sf_dir).write.mode("overwrite").parquet(
+        _scratch(sf_dir, "pq_nested6_orders")
+    )
+
+
+def _stage_orc_nested6(spark, sf_dir):
+    _nested6_frame(spark, sf_dir).write.mode("overwrite").orc(
+        _scratch(sf_dir, "orc_nested6_orders")
+    )
+
+
 @register(
     "scan_parquet_nested6",
     _NESTED6_ORACLE,
@@ -14484,44 +14369,23 @@ def _nested6_sink_decode(t):
     "from source keys; the unit battery cross-validates 7 deep "
     "compositions vs pyarrow across row-group splits. Only UNION "
     "remains out of envelope.",
+    stage=_stage_pq_nested6,
 )
 def scan_parquet_nested6_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_data import read_parquet_nested_columns
 
     out = _scratch(sf_dir, "pq_nested6_orders")
-    # Bench-only fixture reuse: the timed number measures the PURE
-    # READER (decode is ~0.4 s across 8 parallel tasks; the JVM
-    # nested-write staging was 80% of the recorded time and drifted
-    # with bench-run JVM state — the r14/r15 quiet-tracker flag on
-    # this entry).
-    _bench_reuse_fixture(
-        out,
-        lambda: _nested6_frame(spark, sf_dir)
-        .write.mode("overwrite")
-        .parquet(out),
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.parquet")),
+        lambda path: _nested6_flatten_rows(
+            read_parquet_nested_columns(path, ["o_orderkey", "lll", "mm"]),
+            decode_bytes=True,
+        ),
+        _NESTED6_SCHEMA,
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.parquet_data import read_parquet_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_parquet_nested_columns(
-                    path, ["o_orderkey", "lll", "mm"]
-                )
-                yield _pd.DataFrame(
-                    _nested6_flatten_rows(d, decode_bytes=True),
-                    columns=[
-                        "o_orderkey", "lll_len", "lll_csv", "mm_len",
-                        "mm_csv",
-                    ],
-                )
-
-    return pdf.mapInPandas(_read, schema=_NESTED6_SCHEMA)
 
 
 @register(
@@ -14538,40 +14402,23 @@ def scan_parquet_nested6_q(spark, sf_dir):
     "scalars hash-matched vs DuckDB; unit battery cross-validates 7 "
     "deep compositions vs pyarrow.orc across 4 codecs + multi-"
     "stripe. Only UNION remains declined.",
+    stage=_stage_orc_nested6,
 )
 def scan_orc_nested6_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_data import read_orc_nested_columns
 
     out = _scratch(sf_dir, "orc_nested6_orders")
-    # bench-only fixture reuse — see scan_parquet_nested6_q
-    _bench_reuse_fixture(
-        out,
-        lambda: _nested6_frame(spark, sf_dir)
-        .write.mode("overwrite")
-        .orc(out),
+    return _file_scan(
+        spark,
+        sorted(_glob.glob(f"{out}/part-*.orc")),
+        lambda path: _nested6_flatten_rows(
+            read_orc_nested_columns(path, ["o_orderkey", "lll", "mm"]),
+            decode_bytes=False,
+        ),
+        _NESTED6_SCHEMA,
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.orc_data import read_orc_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_orc_nested_columns(
-                    path, ["o_orderkey", "lll", "mm"]
-                )
-                yield _pd.DataFrame(
-                    _nested6_flatten_rows(d, decode_bytes=False),
-                    columns=[
-                        "o_orderkey", "lll_len", "lll_csv", "mm_len",
-                        "mm_csv",
-                    ],
-                )
-
-    return pdf.mapInPandas(_read, schema=_NESTED6_SCHEMA)
 
 
 @register(
@@ -14672,6 +14519,22 @@ _PAGEINDEX_ORACLE = """
     """
 
 
+def _stage_pq_pageindex(spark, sf_dir):
+    """Stage at cluster width: a constant repartition(4) capped the
+    pure page-index decode at 4 tasks on a 32-core box. 512-row pages
+    keep every file multi-page, so the index-pruning path is exercised
+    per file; the oracle recomputes the filter from source rows,
+    layout-independent."""
+    (
+        _t(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_totalprice")
+        .repartition(_stage_width(spark))
+        .write.mode("overwrite")
+        .option("parquet.page.row.count.limit", "512")
+        .parquet(_scratch(sf_dir, "pq_pageindex_orders"))
+    )
+
+
 @register(
     "scan_parquet_pageindex",
     _PAGEINDEX_ORACLE,
@@ -14691,55 +14554,29 @@ _PAGEINDEX_ORACLE = """
     "rows. Page-skip counts (pages_decoded << pages_total) are "
     "pinned by the unit battery on pyarrow-written AND own-written "
     "indexes.",
+    stage=_stage_pq_pageindex,
 )
 def scan_parquet_pageindex_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_data import read_parquet_pages_pruned_columns
+
+    def _read(path):
+        d, _r, _tot = read_parquet_pages_pruned_columns(
+            path,
+            ["o_orderkey", "o_custkey", "o_totalprice"],
+            "o_orderkey", 100, 2000,
+        )
+        return {
+            "o_orderkey": d["o_orderkey"],
+            "o_custkey": d["o_custkey"],
+            "price": d["o_totalprice"],
+        }
 
     out = _scratch(sf_dir, "pq_pageindex_orders")
-
-    # Stage at cluster width and reuse across bench steady passes
-    # (round-15, the scan_parquet_brotli protocol): the constant
-    # repartition(4) capped the pure page-index decode at 4 tasks on a
-    # 32-core box, and re-staging billed a JVM write to a READ-path
-    # entry every run. 512-row pages keep every file multi-page, so
-    # the index-pruning path is still exercised per file; the oracle
-    # recomputes the filter from source rows, layout-independent.
-    def _stage():
-        (
-            _t(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .repartition(_stage_width(spark))
-            .write.mode("overwrite")
-            .option("parquet.page.row.count.limit", "512")
-            .parquet(out)
-        )
-
-    _bench_reuse_fixture(out, _stage)
-    paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.parquet_data import (
-            read_parquet_pages_pruned_columns,
-        )
-
-        for b in batches:
-            for path in b["path"]:
-                d, _r, _tot = read_parquet_pages_pruned_columns(
-                    path,
-                    ["o_orderkey", "o_custkey", "o_totalprice"],
-                    "o_orderkey", 100, 2000,
-                )
-                yield _pd.DataFrame({
-                    "o_orderkey": d["o_orderkey"],
-                    "o_custkey": d["o_custkey"],
-                    "price": d["o_totalprice"],
-                })
-
-    return pdf.mapInPandas(
-        _read, schema="o_orderkey bigint, o_custkey bigint, price double"
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/part-*.parquet")), _read,
+        "o_orderkey bigint, o_custkey bigint, price double",
     ).orderBy("o_orderkey")
 
 
@@ -14873,7 +14710,7 @@ def sink_parquet_pageindex_q(spark, sf_dir):
 def scan_parquet_bloom_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_bloom import read_parquet_bloom_pruned_columns
 
     out = _scratch(sf_dir, "pq_bloom_orders")
     (
@@ -14893,34 +14730,27 @@ def scan_parquet_bloom_q(spark, sf_dir):
         .select("o_orderkey")
         .collect()
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
 
-    def _read(batches):
-        from ..operators.parquet_bloom import (
-            read_parquet_bloom_pruned_columns,
+    def _read(path):
+        d, _r, tot, flt = read_parquet_bloom_pruned_columns(
+            path,
+            ["o_orderkey", "o_custkey", "o_totalprice"],
+            "o_orderkey",
+            needles,
         )
+        if flt != tot:
+            raise AssertionError(
+                "staged file lacks bloom filters on some groups"
+            )
+        return {
+            "o_orderkey": d["o_orderkey"],
+            "o_custkey": d["o_custkey"],
+            "price": d["o_totalprice"],
+        }
 
-        for b in batches:
-            for path in b["path"]:
-                d, _r, tot, flt = read_parquet_bloom_pruned_columns(
-                    path,
-                    ["o_orderkey", "o_custkey", "o_totalprice"],
-                    "o_orderkey",
-                    needles,
-                )
-                if flt != tot:
-                    raise AssertionError(
-                        "staged file lacks bloom filters on some groups"
-                    )
-                yield _pd.DataFrame({
-                    "o_orderkey": d["o_orderkey"],
-                    "o_custkey": d["o_custkey"],
-                    "price": d["o_totalprice"],
-                })
-
-    return pdf.mapInPandas(
-        _read, schema="o_orderkey bigint, o_custkey bigint, price double"
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/part-*.parquet")), _read,
+        "o_orderkey bigint, o_custkey bigint, price double",
     ).orderBy("o_orderkey")
 
 
@@ -15046,8 +14876,9 @@ def sink_parquet_bloom_q(spark, sf_dir):
     "the decode runs worker-side.",
 )
 def scan_orc_union_q(spark, sf_dir):
-    import pandas as _pd
     from py4j.java_gateway import get_field, set_field
+
+    from ..operators.orc_data import read_orc_nested_columns
 
     src = (
         _t(spark, sf_dir, "orders")
@@ -15090,29 +14921,18 @@ def scan_orc_union_q(spark, sf_dir):
     w.addRowBatch(batch)
     w.close()
 
-    pdf = spark.createDataFrame([(out,)], "path string")
+    def _read(path):
+        d = read_orc_nested_columns(path, ["k", "u"])
+        return {
+            "o_orderkey": d["k"],
+            # tag from the DECODED value's type: proves the byte-RLE tag
+            # stream routed each row to the right variant child
+            "tag": [0 if isinstance(v, int) else 1 for v in d["u"]],
+            "u_val": [str(v) for v in d["u"]],
+        }
 
-    def _read(batches):
-        from ..operators.orc_data import read_orc_nested_columns
-
-        for b in batches:
-            for path in b["path"]:
-                d = read_orc_nested_columns(path, ["k", "u"])
-                yield _pd.DataFrame(
-                    {
-                        "o_orderkey": d["k"],
-                        # tag from the DECODED value's type: proves the
-                        # byte-RLE tag stream routed each row to the
-                        # right variant child
-                        "tag": [
-                            0 if isinstance(v, int) else 1 for v in d["u"]
-                        ],
-                        "u_val": [str(v) for v in d["u"]],
-                    }
-                )
-
-    return pdf.mapInPandas(
-        _read, schema="o_orderkey bigint, tag int, u_val string"
+    return _file_scan(
+        spark, [out], _read, "o_orderkey bigint, tag int, u_val string"
     )
 
 
@@ -15311,7 +15131,7 @@ def sink_orc_bloom_q(spark, sf_dir):
 def scan_orc_bloom_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.orc_bloom import read_orc_bloom_pruned_columns
 
     out = _scratch(sf_dir, "orc_bloom_orders")
     (
@@ -15331,33 +15151,85 @@ def scan_orc_bloom_q(spark, sf_dir):
         .select("o_orderkey")
         .collect()
     )
-    paths = sorted(_glob.glob(f"{out}/part-*.orc"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
 
-    def _read(batches):
-        from ..operators.orc_bloom import read_orc_bloom_pruned_columns
+    def _read(path):
+        d, _r, tot, flt = read_orc_bloom_pruned_columns(
+            path,
+            ["o_orderkey", "o_custkey", "o_totalprice"],
+            "o_orderkey",
+            needles,
+        )
+        if flt != tot:
+            raise AssertionError(
+                "staged file lacks bloom filters on some stripes"
+            )
+        return {
+            "o_orderkey": d["o_orderkey"],
+            "o_custkey": d["o_custkey"],
+            "price": d["o_totalprice"],
+        }
+
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/part-*.orc")), _read,
+        "o_orderkey bigint, o_custkey bigint, price double",
+    ).orderBy("o_orderkey")
+
+
+def _stage_pq_brotli(spark, sf_dir):
+    """BROTLI parquet shards written from EXECUTORS by pyarrow (the
+    in-container reference encoder), one shard per task: width is
+    restored by _stage_base BEFORE the derivation, so the exchange
+    moves bare source columns and the array/tag construction runs at
+    full width (round-16, guide §2.3). Declared as the stage so the
+    steady pass times the pure-Python RFC 7932 READ path, not the
+    pyarrow re-encode."""
+    import glob as _glob
+
+    import pandas as _pd
+
+    out = _scratch(sf_dir, "pq_brotli_orders")
+    o = _stage_base(
+        spark, sf_dir,
+        cols=("o_orderkey", "o_orderpriority", "o_totalprice"),
+    )
+    k = F.col("o_orderkey")
+    n = (k % 5).cast("int")
+    arr = F.when(k % 7 == 0, F.lit(None).cast("array<bigint>")).otherwise(
+        F.transform(
+            F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
+                F.array().cast("array<int>")
+            ),
+            lambda i: (k * 10 + i).cast("bigint"),
+        )
+    )
+    staged = o.select(
+        k.alias("o_orderkey"),
+        F.when(k % 9 == 0, F.lit(None).cast("string"))
+        .otherwise(F.col("o_orderpriority"))
+        .alias("cat"),
+        F.concat(F.lit("t-"), k.cast("string")).alias("tag"),
+        F.col("o_totalprice").alias("price"),
+        arr.alias("arr"),
+    )
+
+    def _write(batches):
+        import uuid as _uuid
+
+        import pyarrow as _pa
+        import pyarrow.parquet as _pq
 
         for b in batches:
-            for path in b["path"]:
-                d, _r, tot, flt = read_orc_bloom_pruned_columns(
-                    path,
-                    ["o_orderkey", "o_custkey", "o_totalprice"],
-                    "o_orderkey",
-                    needles,
-                )
-                if flt != tot:
-                    raise AssertionError(
-                        "staged file lacks bloom filters on some stripes"
-                    )
-                yield _pd.DataFrame({
-                    "o_orderkey": d["o_orderkey"],
-                    "o_custkey": d["o_custkey"],
-                    "price": d["o_totalprice"],
-                })
+            if not len(b):
+                continue
+            t = _pa.Table.from_pandas(b, preserve_index=False)
+            path = f"{out}/shard-{_uuid.uuid4().hex}.parquet"
+            _pq.write_table(t, path, compression="brotli")
+            yield _pd.DataFrame({"path": [path], "n": [len(b)]})
 
-    return pdf.mapInPandas(
-        _read, schema="o_orderkey bigint, o_custkey bigint, price double"
-    ).orderBy("o_orderkey")
+    os.makedirs(out, exist_ok=True)
+    for old in _glob.glob(f"{out}/shard-*.parquet"):
+        os.remove(old)
+    staged.mapInPandas(_write, schema="path string, n int").count()
 
 
 @register(
@@ -15394,109 +15266,32 @@ def scan_orc_bloom_q(spark, sf_dir):
     "from source rows; tests/test_brotli.py fuzzes the codec across "
     "9 quality levels x payload shapes plus truncation/bit-flip "
     "sweeps. FILE-PER-TASK mapInPandas both directions, no shuffle.",
+    stage=_stage_pq_brotli,
 )
 def scan_parquet_brotli_q(spark, sf_dir):
     import glob as _glob
 
-    import pandas as _pd
+    from ..operators.parquet_data import read_parquet_nested_columns
+
+    def _read(path):
+        cols = ["o_orderkey", "cat", "tag", "price", "arr"]
+        d = read_parquet_nested_columns(path, cols)
+        return [
+            {
+                "o_orderkey": key,
+                "cat": None if cat is None else cat.decode(),
+                "tag": tag.decode(),
+                "price": price,
+                "arr_len": -1 if av is None else len(av),
+                "arr_sum": None if av is None else sum(av),
+            }
+            for key, cat, tag, price, av in zip(*(d[c] for c in cols))
+        ]
 
     out = _scratch(sf_dir, "pq_brotli_orders")
-    o = _stage_base(
-        spark, sf_dir,
-        cols=("o_orderkey", "o_orderpriority", "o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    n = (k % 5).cast("int")
-    arr = F.when(k % 7 == 0, F.lit(None).cast("array<bigint>")).otherwise(
-        F.transform(
-            F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-                F.array().cast("array<int>")
-            ),
-            lambda i: (k * 10 + i).cast("bigint"),
-        )
-    )
-    staged = o.select(
-        k.alias("o_orderkey"),
-        F.when(k % 9 == 0, F.lit(None).cast("string"))
-        .otherwise(F.col("o_orderpriority"))
-        .alias("cat"),
-        F.concat(F.lit("t-"), k.cast("string")).alias("tag"),
-        F.col("o_totalprice").alias("price"),
-        arr.alias("arr"),
-        # one shard per task both directions (width restored by
-        # _stage_base BEFORE the derivation: the exchange moves bare
-        # source columns and the array/tag construction runs at full
-        # width — round-16, guide §2.3)
-    )
-
-    def _write(batches):
-        import uuid as _uuid
-
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        for b in batches:
-            if not len(b):
-                continue
-            t = _pa.Table.from_pandas(b, preserve_index=False)
-            path = f"{out}/shard-{_uuid.uuid4().hex}.parquet"
-            _pq.write_table(t, path, compression="brotli")
-            yield _pd.DataFrame({"path": [path], "n": [len(b)]})
-
-    def _stage():
-        os.makedirs(out, exist_ok=True)
-        # Invalidate the reuse marker BEFORE touching the shards: this
-        # hand-rolled cleaner (unlike a mode("overwrite") write) does
-        # not clear the directory wholesale, so a crash between the
-        # shard deletes and the write job must not leave a live marker
-        # over an empty directory — the crash-ordering contract
-        # _bench_reuse_fixture documents (round-15 review finding).
-        marker = f"{out}/.synth_complete"
-        if os.path.exists(marker):
-            os.remove(marker)
-        for old in _glob.glob(f"{out}/shard-*.parquet"):
-            os.remove(old)
-        staged.mapInPandas(_write, schema="path string, n int").count()
-
-    # bench-only fixture reuse (the scan_parquet_nested6 treatment):
-    # the timed steady pass measures the pure-Python RFC 7932 READ
-    # path, not the pyarrow re-encode; the correctness driver always
-    # stages fresh
-    _bench_reuse_fixture(out, _stage)
-    paths = sorted(_glob.glob(f"{out}/shard-*.parquet"))
-    pdf = spark.createDataFrame([(p,) for p in paths], "path string")
-
-    def _read(batches):
-        from ..operators.parquet_data import read_parquet_nested_columns
-
-        cols = ["o_orderkey", "cat", "tag", "price", "arr"]
-        for b in batches:
-            for path in b["path"]:
-                d = read_parquet_nested_columns(path, cols)
-                rows = []
-                for key, cat, tag, price, av in zip(
-                    d["o_orderkey"], d["cat"], d["tag"], d["price"],
-                    d["arr"],
-                ):
-                    rows.append({
-                        "o_orderkey": key,
-                        "cat": None if cat is None else cat.decode(),
-                        "tag": tag.decode(),
-                        "price": price,
-                        "arr_len": -1 if av is None else len(av),
-                        "arr_sum": None if av is None else sum(av),
-                    })
-                yield _pd.DataFrame(
-                    rows,
-                    columns=[
-                        "o_orderkey", "cat", "tag", "price", "arr_len",
-                        "arr_sum",
-                    ],
-                )
-
-    return pdf.mapInPandas(
-        _read,
-        schema="o_orderkey bigint, cat string, tag string, "
+    return _file_scan(
+        spark, sorted(_glob.glob(f"{out}/shard-*.parquet")), _read,
+        "o_orderkey bigint, cat string, tag string, "
         "price double, arr_len int, arr_sum bigint",
     )
 
@@ -15613,161 +15408,13 @@ def sink_parquet_brotli_q(spark, sf_dir):
     )
 
 
-# ---------------------------------------------------------------------
-# Driver-window rotation. The driver's CORRECTNESS gate grades the first
-# 50 entries of queries() per round; with 104 entries, a fixed order
-# leaves the tail permanently unverified (round-1 finding). Entries the
-# gate has already hash-verified rotate to the back so every query lands
-# in the window across rounds. Within the unverified block, oracle-backed
-# entries go first (they get the strong rows+schema+hash check; rows-only
-# entries get the weaker check regardless of position).
-# ---------------------------------------------------------------------
-
-def _graded_from_reports() -> set[str]:
-    """Names cleanly graded by any CORRECTNESS_r*.json in the repo root.
-
-    The driver drops one report per round; a query counts as graded only
-    at the strength matching its *current* oracle status:
-
-    - oracle-backed entry (``_REGISTRY[name].oracle is not None``) →
-      requires ``hash_match is True`` (the strong rows+schema+hash check);
-    - rows-only entry → a completed rows check with rows counts
-      (``err == "no_oracle"`` and ``spark_rows > 0``).
-
-    An entry that gains an oracle *after* a weak rows-only grade
-    therefore re-enters the window for the strong check (round-2 judge
-    finding: dedup_ngram_jaccard / dedup_fuzzy_keep_one were graded
-    rows-only in round 1, then given DuckDB oracles — the old rule let
-    the stale weak grade mask the new oracle). Crashed entries never
-    count — they must re-enter the window until a clean grade lands.
-    Reading the reports directly makes the rotation self-maintaining:
-    no per-round edit of a hand-kept set.
-    """
-    import glob
-    import json
-
-    root = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    graded: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            report = json.load(open(path))
-        except (OSError, ValueError):
-            continue
-        if not isinstance(report, dict):
-            continue
-        for name, row in report.items():
-            if not isinstance(row, dict):
-                continue
-            has_oracle = (
-                name in _REGISTRY and _REGISTRY[name].oracle is not None
-            )
-            if row.get("hash_match") is True:
-                graded.add(name)
-            elif not has_oracle and (
-                row.get("err") == "no_oracle" and (row.get("spark_rows") or 0) > 0
-            ):
-                graded.add(name)
-    return graded
-
-
-# Keys of CORRECTNESS_r01.json that were cleanly graded in round 1 —
-# the static floor in case the report files are absent (fresh clone).
-# The two canon crashes (agg_collect_array, approx_stats) are NOT
-# listed: their fixes must be graded in the round-2 window. Also NOT
-# listed: dedup_ngram_jaccard / dedup_fuzzy_keep_one — graded rows-only
-# in round 1 but oracle-backed since, so they must re-enter a window for
-# the strong hash check (same rule _graded_from_reports applies). Later
-# rounds come from the report files via _graded_from_reports().
-_DRIVER_VERIFIED: set[str] = {
-    "agg_value_by_region", "agg_quality_trend", "agg_regional_distribution",
-    "filter_predicates", "topk_shipments", "point_lookup", "enrich_value",
-    "union_all", "upsert_last_write_wins", "scan_parquet_pushdown",
-    "scan_csv", "sink_parquet", "scan_json", "scan_orc",
-    # gen_synthetic: rows-only in r1, oracle-backed in round 8 (Knuth-
-    # hash generator replay) — must re-enter a grading window
-
-    "join_broadcast_dims", "join_semi", "join_anti", "join_range",
-    "join_asof", "agg_rollup", "agg_cube", "window_rank",
-    "window_lag_moving", "setops", "setops_except", "exact_stats",
-    "scalar_functions", "json_extract",
-    "subquery_correlated", "agg_unpivot",
-    "json_struct", "scalar_datetime", "events_tumbling_agg",
-    "events_session_agg", "events_sliding_agg", "agg_grouping_sets",
-    "agg_pivot", "window_ntile_percent", "corr_stats", "agg_salted_skew",
-    "sample_hash", "dedup_exact",
-    # dedup_minhash / dedup_simhash / dedup_embedding were graded
-    # rows-only in round 1 but gained full DuckDB oracles in round 8 —
-    # removed from the static floor so they re-enter a grading window
-    # for the strong hash check (doc_winnow, upgraded the same round,
-    # was never in this floor; its round-2 rows-only grading is
-    # likewise discounted by _graded_from_reports' has_oracle rule).
-}
-
-# Round-1 canon crashes, now fixed — pinned to the head of the window so
-# CORRECTNESS_r02 records the fix.
-_WINDOW_FRONT: list[str] = ["agg_collect_array", "approx_stats"]
-
-# 52 candidates, 50 slots: these two locally-oracle-verified join variants
-# wait for the round-3 window.
-_WINDOW_DEFER: set[str] = {"join_cross", "join_null_safe"}
-
-# Round-9 freshness pins (r8 verdict Next #7): rows-only entries whose
-# latest driver sample had aged past ~3 rounds (similarity_topk_lsh/ivf
-# r3, events_hll_rollup r4, similarity_topk_pq / text_compress_ratio
-# r6). They re-pass locally every round via pytest, but the driver's
-# recorded status should not age — pin them into the window right after
-# the fresh entries so CORRECTNESS_r09+ re-records them every round.
-_WINDOW_RESAMPLE: list[str] = [
-    "similarity_topk_lsh",
-    "similarity_topk_ivf",
-    "similarity_topk_pq",
-    "events_hll_rollup",
-    "text_compress_ratio",
-    "approx_stats",
-    # sink_parquet_brotli rode this window in round 13 after its graded
-    # subset changed (o_orderkey%4=1 trim); CORRECTNESS_r13 recorded the
-    # fresh hash-PASS on the new derivation, so it returned to the
-    # verified set in round 14.
-]
-
-
-def _driver_order() -> list[str]:
-    names = list(_REGISTRY)
-    verified_now = _DRIVER_VERIFIED | _graded_from_reports()
-    front = [n for n in _WINDOW_FRONT if n not in verified_now]
-    back = verified_now | _WINDOW_DEFER | set(front)
-    fresh_oracle = [
-        n for n in names if n not in back and _REGISTRY[n].oracle is not None
-    ]
-    fresh_rows_only = [
-        n for n in names if n not in back and _REGISTRY[n].oracle is None
-    ]
-    resample = [
-        n
-        for n in _WINDOW_RESAMPLE
-        if n in names
-        and n not in front
-        and n not in fresh_oracle
-        and n not in fresh_rows_only
-    ]
-    deferred = [
-        n for n in names if n in _WINDOW_DEFER and n not in verified_now
-    ]
-    verified = [
-        n for n in names if n in verified_now and n not in resample
-    ]
-    return (
-        front + fresh_oracle + fresh_rows_only + resample + deferred + verified
-    )
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: _REGISTRY[name].fn for name in _driver_order()}
+    """Every entry's builder, in registration order."""
+    return {name: q.fn for name, q in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
+    """Every oracle-backed entry's DuckDB SQL, in registration order."""
     return {
-        name: _REGISTRY[name].oracle
-        for name in _driver_order()
-        if _REGISTRY[name].oracle is not None
+        name: q.oracle for name, q in _REGISTRY.items() if q.oracle is not None
     }

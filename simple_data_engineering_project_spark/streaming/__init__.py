@@ -180,28 +180,6 @@ def enrich_stream_static(
     return events.join(F.broadcast(dims), key)
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    source_dir: str,
-    query_name: str = "events_stream",
-    gap_queries: bool = False,
-) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
-    """Drive the tumbling aggregation into an in-memory sink (tests/bench).
-
-    ``availableNow`` processes everything currently in the source then
-    stops — the batch-parity mode the tests assert against.
-    """
-    events = read_events_stream(spark, source_dir)
-    agg = tumbling_counts(events)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_upsert_warehouse(
     spark: SparkSession,
     source_dir: str,
