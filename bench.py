@@ -68,6 +68,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from simple_data_engineering_project_spark.plans import catalog
+from simple_data_engineering_project_spark.plans.catalog import SCRATCH
 from simple_data_engineering_project_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -523,7 +524,7 @@ def main() -> None:
         run_batch_pipeline,
     )
 
-    warm_base = "/tmp/sdep_bench_warmpipe"
+    warm_base = f"{SCRATCH}/bench_warmpipe"
     shutil.rmtree(warm_base, ignore_errors=True)
     land_csv_files(spark, f"{warm_base}/landing", num_files=1, rows_per_file=2_000)
     run_batch_pipeline(
@@ -570,7 +571,7 @@ def main() -> None:
     # discarded retry's reading must neither launder a contaminated
     # published number nor smear a clean one (round-14 review).
     def _timed_pipeline() -> tuple[float, float]:
-        base = "/tmp/sdep_bench_pipeline"
+        base = f"{SCRATCH}/bench_pipeline"
         shutil.rmtree(base, ignore_errors=True)
         fmon = _foreign_monitor()
         t0 = time.perf_counter()

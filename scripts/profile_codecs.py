@@ -3,19 +3,20 @@
 Usage: python scripts/profile_codecs.py [entry ...]
 
 Profiles the executor-side work of the pure-format scan/sink family
-directly: the sink entries' per-batch derive+encode(+decode-verify)
-path on a representative Arrow-batch-sized slice of real orders keys,
-and the scan entries' per-file decode+flatten path on the already-
-staged fixture files under $SPARK_GRAFT_SCRATCH. Prints the top
-cumulative frames per entry so the hot loop is named before anything
-is rewritten (guide §1: measure first).
+directly: for every nested shape × format of the catalog's table, the
+sink entries' per-batch derive → encode → pyarrow decode+flatten path
+on a representative Arrow-batch-sized slice of real orders rows, and
+the scan entries' per-file decode+flatten path on the already-staged
+fixture files under $SPARK_GRAFT_SCRATCH. Prints the top cumulative
+frames per entry so the hot loop is named before anything is rewritten
+(guide §1: measure first).
 """
 
 from __future__ import annotations
 
 import cProfile
 import glob
-import io
+import importlib
 import os
 import pstats
 import sys
@@ -25,22 +26,30 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow.parquet as pq
 
+from simple_data_engineering_project_spark.operators import orc_data, parquet_data
+from simple_data_engineering_project_spark.operators.parquet_write import (
+    build_parquet_bytes,
+)
+
+# the ``plans`` package exports a ``catalog()`` function under the
+# module's name, so the module itself comes from the import system
+C = importlib.import_module("simple_data_engineering_project_spark.plans.catalog")
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/sdep_spark_scratch")
 TAG = os.path.basename(os.path.normpath(SF_DIR))
+SHAPES = (C._NESTED, C._NESTED2, C._NESTED3, C._NESTED4, C._NESTED5, C._NESTED6)
+FORMATS = (C._PARQUET, C._ORC)
 
 
-def _orders_keys(n=20000):
-    t = pq.read_table(f"{SF_DIR}/orders.parquet", columns=["o_orderkey"])
-    return [int(x) for x in t.column("o_orderkey").to_pylist()[:n]]
+def _orders_batch(cols, n=20000):
+    t = pq.read_table(f"{SF_DIR}/orders.parquet", columns=list(cols))
+    return t.slice(0, n).to_pydict()
 
 
 def _docs_batch(n=5000):
     t = pq.read_table(
         f"{SF_DIR}/documents.parquet", columns=["doc_id", "lang", "text"]
     )
-    import pandas as pd
-
     return t.slice(0, n).to_pandas()
 
 
@@ -58,142 +67,67 @@ def profile(label, fn, runs=1):
 
 
 def main():
-    import importlib
-
-    C = importlib.import_module(
-        "simple_data_engineering_project_spark.plans.catalog"
-    )
-    from simple_data_engineering_project_spark.operators.parquet_write import (
-        build_parquet_bytes,
-    )
-    from simple_data_engineering_project_spark.operators.orc_write import (
-        build_orc_bytes,
-    )
-    from simple_data_engineering_project_spark.operators import (
-        parquet_data,
-        orc_data,
-    )
-
     want = set(sys.argv[1:])
 
     def on(name):
         return not want or name in want
 
-    keys = _orders_keys()
-    print(f"keys: {len(keys)} orders keys from {SF_DIR}")
-
-    # ---- sink nested5 ----
-    if on("sink_parquet_nested5") or on("sink_orc_nested5"):
-        mss, mls = C._nested5_python_values(keys)
-
-        if on("sink_parquet_nested5"):
+    # ---- nested sinks: derive, encode, pyarrow decode + flatten ----
+    for shape in SHAPES:
+        sinks = [
+            (f"sink_{fmt.suffix}_{shape.tag}", fmt)
+            for fmt in FORMATS
+            if on(f"sink_{fmt.suffix}_{shape.tag}")
+        ]
+        if not sinks:
+            continue
+        batch = _orders_batch(shape.sink_cols)
+        print(f"\n{shape.tag}: {len(batch['o_orderkey'])} orders rows from {SF_DIR}")
+        profile(f"{shape.tag} derive (python values)", lambda: shape.values(batch))
+        columns = shape.values(batch)
+        for name, fmt in sinks:
+            profile(f"{name} encode", lambda: fmt.encode(columns, shape.ddl))
+            payload = fmt.encode(columns, shape.ddl)
             profile(
-                "nested5 derive (python values)",
-                lambda: C._nested5_python_values(keys),
-            )
-            profile(
-                "sink_parquet_nested5 encode",
-                lambda: build_parquet_bytes(
-                    {"o_orderkey": keys, "ms": mss, "ml": mls},
-                    C._NESTED5_DDL,
-                    compression="snappy",
-                    page_version=2,
-                ),
-            )
-            payload = build_parquet_bytes(
-                {"o_orderkey": keys, "ms": mss, "ml": mls},
-                C._NESTED5_DDL,
-                compression="snappy",
-                page_version=2,
-            )
-            profile(
-                "sink_parquet_nested5 decode (pyarrow+flatten)",
-                lambda: C._nested5_sink_decode(
-                    pq.read_table(io.BytesIO(payload))
-                ),
-            )
-        if on("sink_orc_nested5"):
-            profile(
-                "sink_orc_nested5 encode",
-                lambda: build_orc_bytes(
-                    {"o_orderkey": keys, "ms": mss, "ml": mls},
-                    C._NESTED5_DDL,
-                    compression="zlib",
+                f"{name} decode (pyarrow+flatten)",
+                lambda: shape.flatten(
+                    C._arrow_columns(fmt.read_back(payload)), decode_bytes=False
                 ),
             )
 
-    # ---- sink nested6 ----
-    if on("sink_parquet_nested6") or on("sink_orc_nested6"):
-        llls, mms = C._nested6_python_values(keys)
-        if on("sink_parquet_nested6"):
-            profile(
-                "nested6 derive (python values)",
-                lambda: C._nested6_python_values(keys),
-            )
-            profile(
-                "sink_parquet_nested6 encode",
-                lambda: build_parquet_bytes(
-                    {"o_orderkey": keys, "lll": llls, "mm": mms},
-                    C._NESTED6_DDL,
-                    compression="snappy",
-                    page_version=2,
-                ),
-            )
-        if on("sink_orc_nested6"):
-            profile(
-                "sink_orc_nested6 encode",
-                lambda: build_orc_bytes(
-                    {"o_orderkey": keys, "lll": llls, "mm": mms},
-                    C._NESTED6_DDL,
-                    compression="zlib",
-                ),
-            )
-
-    # ---- scan nested5/6 + pure decodes over staged fixtures ----
+    # ---- scans: pure decode + flatten over staged fixtures ----
+    # scan_parquet_nested reads through pure_parquet_scan and flattens
+    # in Spark, so it has no table-built read path to profile here.
     scans = {
-        "scan_parquet_nested5": (
-            f"{SCRATCH}/{TAG}/pq_nested5_orders/part-*.parquet",
-            lambda p: parquet_data.read_parquet_nested_columns(
-                p, ["o_orderkey", "ms", "ml"]
+        f"scan_{fmt.suffix}_{shape.tag}": (
+            f"{C.SCRATCH}/{TAG}/{fmt.prefix}_{shape.tag}_orders/part-*.{fmt.suffix}",
+            lambda p, fmt=fmt, shape=shape: shape.flatten(
+                fmt.read(p, list(shape.ddl)), fmt.decode_bytes
             ),
-        ),
-        "scan_orc_nested5": (
-            f"{SCRATCH}/{TAG}/orc_nested5_orders/part-*.orc",
-            lambda p: orc_data.read_orc_nested_columns(
-                p, ["o_orderkey", "ms", "ml"]
-            ),
-        ),
-        "scan_parquet_nested6": (
-            f"{SCRATCH}/{TAG}/pq_nested6_orders/part-*.parquet",
-            lambda p: parquet_data.read_parquet_nested_columns(
-                p, ["o_orderkey", "lll", "mm"]
-            ),
-        ),
-        "scan_orc_nested6": (
-            f"{SCRATCH}/{TAG}/orc_nested6_orders/part-*.orc",
-            lambda p: orc_data.read_orc_nested_columns(
-                p, ["o_orderkey", "lll", "mm"]
-            ),
-        ),
-        "scan_parquet_pure": (
-            f"{SF_DIR}/orders.parquet",
-            lambda p: parquet_data.read_parquet_nested_columns(
-                p,
-                ["o_orderkey", "o_custkey", "o_orderstatus",
-                 "o_totalprice", "o_orderpriority"],
-            ),
-        ),
-        "scan_orc_pure": (
-            f"{SCRATCH}/{TAG}/orc_pure_orders/part-*.orc",
-            lambda p: orc_data.read_orc_columns(
-                p,
-                ["o_orderkey", "o_custkey", "o_orderstatus",
-                 "o_totalprice", "o_orderpriority"],
-            ),
-        ),
+        )
+        for shape in SHAPES
+        if shape.frame is not None
+        for fmt in FORMATS
+        if (fmt, shape) != (C._PARQUET, C._NESTED)
     }
+    scans["scan_parquet_pure"] = (
+        f"{SF_DIR}/orders.parquet",
+        lambda p: parquet_data.read_parquet_nested_columns(
+            p,
+            ["o_orderkey", "o_custkey", "o_orderstatus",
+             "o_totalprice", "o_orderpriority"],
+        ),
+    )
+    scans["scan_orc_pure"] = (
+        f"{C.SCRATCH}/{TAG}/orc_pure_orders/part-*.orc",
+        lambda p: orc_data.read_orc_columns(
+            p,
+            ["o_orderkey", "o_custkey", "o_orderstatus",
+             "o_totalprice", "o_orderpriority"],
+        ),
+    )
     for name, (pat, rd) in scans.items():
-        if not on(name) or rd is None:
+        if not on(name):
             continue
         paths = sorted(glob.glob(pat))
         if not paths:

@@ -31,6 +31,10 @@ from ..operators import multimodal as mm_ops
 from ..operators import similarity as sim_ops
 from ..operators import text as text_ops
 from ..operators.ddl import split_top
+from ..operators.orc_data import read_orc_nested_columns
+from ..operators.orc_write import build_orc_bytes
+from ..operators.parquet_data import read_parquet_nested_columns
+from ..operators.parquet_write import build_parquet_bytes
 from ..operators.upsert import upsert_last_write_wins
 from ..session import tune_for_queries
 from ..schemas import BEAN_TYPES as _BEAN_TYPES
@@ -10665,11 +10669,14 @@ def _shard_sink_roundtrip(
     read_schema, pandas_dtypes, select_cols=("doc_id", "text"),
     table="documents", where=None,
 ):
-    """Shared scaffold for the export sinks (webdataset / tar.zst /
-    arrow IPC): shard ``documents`` one archive per Arrow batch written
-    FROM EXECUTORS (no driver data path), materialize the export, then
-    read every shard back and emit per-document verification rows for
-    the oracle. ``encode_batch(pandas_batch) -> payload bytes``;
+    """Shared scaffold for the export sinks (webdataset, TFRecord,
+    tar.zst, Arrow IPC and the pure parquet/ORC/Avro writers; the
+    twelve nested twins call it through :func:`_nested_sink`): shard
+    ``table`` (``documents`` by default) one file per Arrow batch
+    written FROM EXECUTORS (no driver data path), materialize the
+    export, then read every shard back and emit per-row verification
+    rows for the oracle.
+    ``encode_batch(pandas_batch) -> payload bytes``;
     ``decode_shard(payload) -> list[row dict]``.
 
     Partitioning IS the sharding, after width restoration: the encode
@@ -10825,8 +10832,6 @@ def sink_webdataset_q(spark, sf_dir):
     "write-path rule: reference READERS in-container.",
 )
 def sink_parquet_pure_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
     def _encode(b):
         return build_parquet_bytes(
             {
@@ -10849,7 +10854,9 @@ def sink_parquet_pure_q(spark, sf_dir):
             {
                 "doc_id": int(doc_id),
                 "lang": lang,
-                "text_sha": _hl.sha256((text or "").encode()).hexdigest(),
+                "text_sha": None
+                if text is None
+                else _hl.sha256(text.encode("utf-8")).hexdigest(),
             }
             for doc_id, lang, text in zip(
                 t.column("doc_id").to_pylist(),
@@ -10962,8 +10969,6 @@ def sink_tfrecord_q(spark, sf_dir):
     "reader. File-per-task, no shuffle.",
 )
 def sink_orc_pure_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
     def _encode(b):
         return build_orc_bytes(
             {
@@ -11941,6 +11946,272 @@ def scan_warc_datasource_q(spark, sf_dir):
     )
 
 
+# ---- nested twins: one shape × format table -----------------------------
+# Six nested shapes derived from orders keys, each exported (sink_*)
+# and four of them also scanned (scan_*), in parquet and in ORC. A
+# shape holds what is particular to it: the oracle, the derivation as
+# a Spark fixture and as its Python twin, and the flattening to the
+# oracle's scalars. A format holds the recipes every shape shares:
+# Spark's JVM writer, the pure reader and writer, and the pyarrow
+# read-back that grades an export against a reference reader.
+
+
+@dataclass(frozen=True)
+class _NestedShape:
+    tag: str  # scratch-leaf infix: "nested", "nested2", ...
+    oracle: str
+    schema: str  # the flattened rows
+    ddl: dict[str, str]  # the nested columns, as the pure writers take them
+    dtypes: dict[str, str]  # pandas dtypes of an export's read-back rows
+    sink_cols: tuple[str, ...]  # orders columns an export selects
+    values: Callable  # batch -> writer columns: the Python twin of frame
+    flatten: Callable  # (columns, decode_bytes) -> rows
+    frame: Callable | None = None  # (spark, sf_dir) -> fixture; None: no scan
+
+
+@dataclass(frozen=True)
+class _NestedFormat:
+    prefix: str  # scratch-leaf prefix
+    suffix: str  # file suffix
+    write: Callable  # (frame, path): Spark's JVM writer
+    read: Callable  # (path, columns) -> columns: the pure nested reader
+    decode_bytes: bool  # the pure reader returns strings as utf-8 bytes
+    encode: Callable  # (columns, ddl) -> bytes: the pure writer
+    read_back: Callable  # bytes -> pyarrow table: the reference reader
+
+
+def _parquet_read_back(payload):
+    import io as _io
+
+    import pyarrow.parquet as _pq
+
+    return _pq.read_table(_io.BytesIO(payload))
+
+
+def _orc_read_back(payload):
+    import io as _io
+
+    import pyarrow.orc as _po
+
+    return _po.ORCFile(_io.BytesIO(payload)).read()
+
+
+_PARQUET = _NestedFormat(
+    prefix="pq",
+    suffix="parquet",
+    write=lambda frame, out: frame.write.mode("overwrite").parquet(out),
+    read=read_parquet_nested_columns,
+    decode_bytes=True,
+    encode=lambda columns, ddl: build_parquet_bytes(
+        columns, ddl, compression="snappy", page_version=2
+    ),
+    read_back=_parquet_read_back,
+)
+_ORC = _NestedFormat(
+    prefix="orc",
+    suffix="orc",
+    write=lambda frame, out: frame.write.mode("overwrite").orc(out),
+    read=read_orc_nested_columns,
+    decode_bytes=False,
+    encode=lambda columns, ddl: build_orc_bytes(
+        columns, ddl, compression="zlib"
+    ),
+    read_back=_orc_read_back,
+)
+
+
+def _text(v, decode_bytes: bool):
+    """A string from a nested reader (the parquet reader's are bytes)."""
+    return v.decode("utf-8") if decode_bytes and isinstance(v, bytes) else v
+
+
+def _arrow_columns(t):
+    """A pyarrow table as the column dict the pure nested readers
+    return: pyarrow reads a map, also one inside a map's values, as a
+    list of (key, value) tuples, the readers as a dict."""
+    import pyarrow as _pa
+
+    def dicts(v, typ):
+        if v is None or not _pa.types.is_map(typ):
+            return v
+        return {k: dicts(x, typ.item_type) for k, x in v}
+
+    return {
+        f.name: [dicts(v, f.type) for v in t.column(f.name).to_pylist()]
+        for f in t.schema
+    }
+
+
+def _nested_sink(fmt: _NestedFormat, shape: _NestedShape):
+    """The export twin: the pure writer encodes each batch's Python
+    derivation, pyarrow reads every file back for the oracle."""
+
+    def build(spark, sf_dir):
+        return _shard_sink_roundtrip(
+            spark, sf_dir, f"{fmt.prefix}_{shape.tag}_sink", fmt.suffix,
+            lambda b: fmt.encode(shape.values(b), shape.ddl),
+            lambda payload: shape.flatten(
+                _arrow_columns(fmt.read_back(payload)), decode_bytes=False
+            ),
+            shape.schema, shape.dtypes,
+            select_cols=shape.sink_cols,
+            table="orders",
+        )
+
+    return build
+
+
+def _nested_scan(fmt: _NestedFormat, shape: _NestedShape):
+    """``(stage, read)`` of the scan twin: Spark's JVM writer stages
+    ``shape.frame``, the pure reader decodes it FILE-PER-TASK."""
+    leaf = f"{fmt.prefix}_{shape.tag}_orders"
+
+    def stage(spark, sf_dir):
+        fmt.write(shape.frame(spark, sf_dir), _scratch(sf_dir, leaf))
+
+    def read(spark, sf_dir):
+        import glob as _glob
+
+        out = _scratch(sf_dir, leaf)
+        return _file_scan(
+            spark,
+            sorted(_glob.glob(f"{out}/part-*.{fmt.suffix}")),
+            lambda path: shape.flatten(
+                fmt.read(path, list(shape.ddl)), fmt.decode_bytes
+            ),
+            shape.schema,
+        )
+
+    return stage, read
+
+
+def _restaged(stage, read):
+    """A builder that stages its fixture, then reads it: a scan that
+    does not declare its stage, so bench.py's timed pass restages it
+    too."""
+
+    def build(spark, sf_dir):
+        stage(spark, sf_dir)
+        return read(spark, sf_dir)
+
+    return build
+
+
+_NESTED_ORACLE = """
+    SELECT o_orderkey,
+           CAST(CASE WHEN o_orderkey % 7 = 0 THEN -1
+                ELSE o_orderkey % 5 END AS INT) AS lst_len,
+           CASE WHEN o_orderkey % 7 = 0 THEN 'NULL'
+                ELSE COALESCE(array_to_string(
+                  list_transform(
+                    range(1, CAST(o_orderkey % 5 AS BIGINT) + 1),
+                    i -> CASE WHEN i = 3 AND o_orderkey % 3 = 0 THEN 'N'
+                         ELSE CAST(o_orderkey * 10 + i AS VARCHAR) END),
+                  ','), '')
+           END AS lst_csv,
+           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 13 = 0
+                THEN NULL ELSE o_orderstatus END AS s,
+           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 17 = 0
+                THEN NULL ELSE o_totalprice END AS p,
+           CAST(CASE WHEN o_orderkey % 11 = 0 THEN 1 ELSE 0 END AS INT)
+             AS st_null
+    FROM orders
+    """
+
+
+def _nested_frame(spark, sf_dir):
+    """orders → (o_orderkey, lst: array<bigint>, st: struct<s:string,
+    p:double>) with null/empty/null-element list and null-struct/
+    null-field residue — the fixture of both nested scans."""
+    o = _stage_base(
+        spark, sf_dir,
+        cols=("o_orderkey", "o_orderstatus", "o_totalprice"),
+    )
+    k = F.col("o_orderkey")
+    n = (k % 5).cast("int")
+    lst = F.when(k % 7 == 0, F.lit(None).cast("array<bigint>")).otherwise(
+        F.transform(
+            F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
+                F.array().cast("array<int>")
+            ),
+            lambda i: F.when(
+                (i == 3) & (k % 3 == 0), F.lit(None).cast("bigint")
+            ).otherwise((k * 10 + i).cast("bigint")),
+        )
+    )
+    st = F.when(
+        k % 11 == 0, F.lit(None).cast("struct<s:string,p:double>")
+    ).otherwise(
+        F.struct(
+            F.when(k % 13 == 0, F.lit(None).cast("string"))
+            .otherwise(F.col("o_orderstatus"))
+            .alias("s"),
+            F.when(k % 17 == 0, F.lit(None).cast("double"))
+            .otherwise(F.col("o_totalprice"))
+            .alias("p"),
+        )
+    )
+    return o.select(k.alias("o_orderkey"), lst.alias("lst"), st.alias("st"))
+
+
+def _nested_values(b):
+    """The Python twin of :func:`_nested_frame`."""
+    keys = [int(x) for x in b["o_orderkey"]]
+    lsts, sts = [], []
+    for k, st_s, st_p in zip(keys, b["o_orderstatus"], b["o_totalprice"]):
+        if k % 7 == 0:
+            lsts.append(None)
+        else:
+            lsts.append([
+                None if (i == 3 and k % 3 == 0) else k * 10 + i
+                for i in range(1, k % 5 + 1)
+            ])
+        if k % 11 == 0:
+            sts.append(None)
+        else:
+            sts.append({
+                "s": None if k % 13 == 0 else str(st_s),
+                "p": None if k % 17 == 0 else float(st_p),
+            })
+    return {"o_orderkey": keys, "lst": lsts, "st": sts}
+
+
+def _nested_flatten(d, decode_bytes: bool):
+    """Flatten to the oracle's scalars: list length and null-preserving
+    CSV, struct fields, struct-null flag."""
+    return [
+        {
+            "o_orderkey": key,
+            "lst_len": -1 if lv is None else len(lv),
+            "lst_csv": "NULL"
+            if lv is None
+            else ",".join("N" if x is None else str(x) for x in lv),
+            "s": None if sv is None else _text(sv["s"], decode_bytes),
+            "p": None if sv is None else sv["p"],
+            "st_null": 1 if sv is None else 0,
+        }
+        for key, lv, sv in zip(d["o_orderkey"], d["lst"], d["st"])
+    ]
+
+
+_NESTED = _NestedShape(
+    tag="nested",
+    oracle=_NESTED_ORACLE,
+    schema="o_orderkey bigint, lst_len int, lst_csv string, s string, "
+    "p double, st_null int",
+    ddl={
+        "o_orderkey": "bigint",
+        "lst": "array<bigint>",
+        "st": "struct<s:string,p:double>",
+    },
+    dtypes={"o_orderkey": "int64", "lst_len": "int32", "st_null": "int32"},
+    sink_cols=("o_orderkey", "o_orderstatus", "o_totalprice"),
+    values=_nested_values,
+    flatten=_nested_flatten,
+    frame=_nested_frame,
+)
+
+
 @register(
     "scan_parquet_nested",
     """
@@ -11992,39 +12263,7 @@ def scan_parquet_nested_q(spark, sf_dir):
     from ..operators.parquet_data import pure_parquet_scan
 
     out = _scratch(sf_dir, "parquet_nested_orders")
-    o = _stage_base(
-        spark, sf_dir,
-        cols=("o_orderkey", "o_orderstatus", "o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    n = (k % 5).cast("int")
-    lst = F.when(k % 7 == 0, F.lit(None).cast("array<bigint>")).otherwise(
-        F.transform(
-            F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-                F.array().cast("array<int>")
-            ),
-            lambda i: F.when(
-                (i == 3) & (k % 3 == 0), F.lit(None).cast("bigint")
-            ).otherwise((k * 10 + i).cast("bigint")),
-        )
-    )
-    st = F.when(
-        k % 11 == 0, F.lit(None).cast("struct<s:string,p:double>")
-    ).otherwise(
-        F.struct(
-            F.when(k % 13 == 0, F.lit(None).cast("string"))
-            .otherwise(F.col("o_orderstatus"))
-            .alias("s"),
-            F.when(k % 17 == 0, F.lit(None).cast("double"))
-            .otherwise(F.col("o_totalprice"))
-            .alias("p"),
-        )
-    )
-    (
-        o.select(k.alias("o_orderkey"), lst.alias("lst"), st.alias("st"))
-        .write.mode("overwrite")
-        .parquet(out)
-    )
+    _nested_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
     paths = sorted(_glob.glob(f"{out}/part-*.parquet"))
     decoded = pure_parquet_scan(
         spark,
@@ -12074,8 +12313,6 @@ def scan_parquet_nested_q(spark, sf_dir):
     "File-per-task, no shuffle.",
 )
 def sink_parquet_typed_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
     def _encode(b):
         ts_us = [
             None if _pdna(v) else int(v.value) // 1000 for v in b["ts"]
@@ -12157,8 +12394,6 @@ def sink_parquet_typed_q(spark, sf_dir):
     "the double is IEEE-exact in both engines.",
 )
 def sink_parquet_v2_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
     def _encode(b):
         n_chars = [int(x) for x in b["n_chars"]]
         return build_parquet_bytes(
@@ -12207,28 +12442,9 @@ def sink_parquet_v2_q(spark, sf_dir):
     )
 
 
-@register(
+register(
     "sink_parquet_nested",
-    """
-    SELECT o_orderkey,
-           CAST(CASE WHEN o_orderkey % 7 = 0 THEN -1
-                ELSE o_orderkey % 5 END AS INT) AS lst_len,
-           CASE WHEN o_orderkey % 7 = 0 THEN 'NULL'
-                ELSE COALESCE(array_to_string(
-                  list_transform(
-                    range(1, CAST(o_orderkey % 5 AS BIGINT) + 1),
-                    i -> CASE WHEN i = 3 AND o_orderkey % 3 = 0 THEN 'N'
-                         ELSE CAST(o_orderkey * 10 + i AS VARCHAR) END),
-                  ','), '')
-           END AS lst_csv,
-           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 13 = 0
-                THEN NULL ELSE o_orderstatus END AS s,
-           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 17 = 0
-                THEN NULL ELSE o_totalprice END AS p,
-           CAST(CASE WHEN o_orderkey % 11 = 0 THEN 1 ELSE 0 END AS INT)
-             AS st_null
-    FROM orders
-    """,
+    _NESTED.oracle,
     tier="C",
     note="C12 parquet NESTED export (round 11, the write-side twin of "
     "scan_parquet_nested, same derivation and oracle as the orc scan "
@@ -12245,121 +12461,12 @@ def sink_parquet_v2_q(spark, sf_dir):
     "unit battery re-reads through DuckDB, Spark's JVM reader AND the "
     "repo's own nested assembler on BOTH page versions. "
     "File-per-task, no shuffle.",
-)
-def sink_parquet_nested_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
-    _encode = _nested_residue_encode_decode(
-        lambda cols: build_parquet_bytes(
-            cols,
-            {
-                "o_orderkey": "bigint",
-                "lst": "array<bigint>",
-                "st": "struct<s:string,p:double>",
-            },
-            compression="snappy",
-            page_version=2,
-        )
-    )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        return _nested_residue_flatten(_pq.read_table(_io.BytesIO(payload)))
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "pq_nested_sink", "parquet", _encode, _decode,
-        "o_orderkey long, lst_len int, lst_csv string, s string, "
-        "p double, st_null int",
-        {"o_orderkey": "int64", "lst_len": "int32", "st_null": "int32"},
-        select_cols=("o_orderkey", "o_orderstatus", "o_totalprice"),
-        table="orders",
-    )
+)(_nested_sink(_PARQUET, _NESTED))
 
 
-def _nested_residue_encode_decode(build_bytes):
-    """Shared encode/decode pair for the nested export twins
-    (sink_parquet_nested / sink_orc_nested): same orders-derived
-    array<bigint> + struct<s:string,p:double> residue cases, same
-    flattening the shared oracle recomputes."""
-
-    def _encode(b):
-        lsts, sts = [], []
-        for k, st_s, st_p in zip(
-            b["o_orderkey"], b["o_orderstatus"], b["o_totalprice"]
-        ):
-            k = int(k)
-            if k % 7 == 0:
-                lsts.append(None)
-            else:
-                lsts.append([
-                    None if (i == 3 and k % 3 == 0) else k * 10 + i
-                    for i in range(1, k % 5 + 1)
-                ])
-            if k % 11 == 0:
-                sts.append(None)
-            else:
-                sts.append({
-                    "s": None if k % 13 == 0 else str(st_s),
-                    "p": None if k % 17 == 0 else float(st_p),
-                })
-        return build_bytes(
-            {
-                "o_orderkey": [int(x) for x in b["o_orderkey"]],
-                "lst": lsts,
-                "st": sts,
-            }
-        )
-
-    return _encode
-
-
-def _nested_residue_flatten(t):
-    """Flatten a read-back pyarrow table from the nested export twins
-    into the scalar rows the shared oracle recomputes."""
-    rows = []
-    for k, lst, st in zip(
-        t.column("o_orderkey").to_pylist(),
-        t.column("lst").to_pylist(),
-        t.column("st").to_pylist(),
-    ):
-        rows.append({
-            "o_orderkey": int(k),
-            "lst_len": -1 if lst is None else len(lst),
-            "lst_csv": "NULL" if lst is None else ",".join(
-                "N" if e is None else str(e) for e in lst
-            ),
-            "s": None if st is None else st["s"],
-            "p": None if st is None else st["p"],
-            "st_null": 1 if st is None else 0,
-        })
-    return rows
-
-
-@register(
+register(
     "sink_orc_nested",
-    """
-    SELECT o_orderkey,
-           CAST(CASE WHEN o_orderkey % 7 = 0 THEN -1
-                ELSE o_orderkey % 5 END AS INT) AS lst_len,
-           CASE WHEN o_orderkey % 7 = 0 THEN 'NULL'
-                ELSE COALESCE(array_to_string(
-                  list_transform(
-                    range(1, CAST(o_orderkey % 5 AS BIGINT) + 1),
-                    i -> CASE WHEN i = 3 AND o_orderkey % 3 = 0 THEN 'N'
-                         ELSE CAST(o_orderkey * 10 + i AS VARCHAR) END),
-                  ','), '')
-           END AS lst_csv,
-           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 13 = 0
-                THEN NULL ELSE o_orderstatus END AS s,
-           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 17 = 0
-                THEN NULL ELSE o_totalprice END AS p,
-           CAST(CASE WHEN o_orderkey % 11 = 0 THEN 1 ELSE 0 END AS INT)
-             AS st_null
-    FROM orders
-    """,
+    _NESTED.oracle,
     tier="C",
     note="C12 ORC NESTED export (round 11, the ORC twin of "
     "sink_parquet_nested — same derivation, same oracle): the pure "
@@ -12374,61 +12481,12 @@ def _nested_residue_flatten(t):
     "shapes through Spark's JVM reader AND the repo's own nested "
     "assembler across all three codecs, multi-stripe. File-per-task, "
     "no shuffle.",
-)
-def sink_orc_nested_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
-    _encode = _nested_residue_encode_decode(
-        lambda cols: build_orc_bytes(
-            cols,
-            {
-                "o_orderkey": "bigint",
-                "lst": "array<bigint>",
-                "st": "struct<s:string,p:double>",
-            },
-            compression="zlib",
-        )
-    )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        return _nested_residue_flatten(_po.ORCFile(_io.BytesIO(payload)).read())
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "orc_nested_sink", "orc", _encode, _decode,
-        "o_orderkey long, lst_len int, lst_csv string, s string, "
-        "p double, st_null int",
-        {"o_orderkey": "int64", "lst_len": "int32", "st_null": "int32"},
-        select_cols=("o_orderkey", "o_orderstatus", "o_totalprice"),
-        table="orders",
-    )
+)(_nested_sink(_ORC, _NESTED))
 
 
-@register(
+register(
     "scan_orc_nested",
-    """
-    SELECT o_orderkey,
-           CAST(CASE WHEN o_orderkey % 7 = 0 THEN -1
-                ELSE o_orderkey % 5 END AS INT) AS lst_len,
-           CASE WHEN o_orderkey % 7 = 0 THEN 'NULL'
-                ELSE COALESCE(array_to_string(
-                  list_transform(
-                    range(1, CAST(o_orderkey % 5 AS BIGINT) + 1),
-                    i -> CASE WHEN i = 3 AND o_orderkey % 3 = 0 THEN 'N'
-                         ELSE CAST(o_orderkey * 10 + i AS VARCHAR) END),
-                  ','), '')
-           END AS lst_csv,
-           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 13 = 0
-                THEN NULL ELSE o_orderstatus END AS s,
-           CASE WHEN o_orderkey % 11 = 0 OR o_orderkey % 17 = 0
-                THEN NULL ELSE o_totalprice END AS p,
-           CAST(CASE WHEN o_orderkey % 11 = 0 THEN 1 ELSE 0 END AS INT)
-             AS st_null
-    FROM orders
-    """,
+    _NESTED.oracle,
     tier="C",
     note="C12 pure-Python ORC NESTED scan (round 10) — the ORC twin "
     "of scan_parquet_nested, same derivation and oracle: Spark's JVM "
@@ -12445,68 +12503,7 @@ def sink_orc_nested_q(spark, sf_dir):
     "rows; the unit battery cross-validates vs pyarrow.orc across 4 "
     "codecs + multi-stripe + Spark-written files. FILE-PER-TASK "
     "mapInPandas, no shuffle.",
-)
-def scan_orc_nested_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.orc_data import read_orc_nested_columns
-
-    out = _scratch(sf_dir, "orc_nested_orders")
-    o = _stage_base(
-        spark, sf_dir,
-        cols=("o_orderkey", "o_orderstatus", "o_totalprice"),
-    )
-    k = F.col("o_orderkey")
-    n = (k % 5).cast("int")
-    lst = F.when(k % 7 == 0, F.lit(None).cast("array<bigint>")).otherwise(
-        F.transform(
-            F.when(n >= 1, F.sequence(F.lit(1), n)).otherwise(
-                F.array().cast("array<int>")
-            ),
-            lambda i: F.when(
-                (i == 3) & (k % 3 == 0), F.lit(None).cast("bigint")
-            ).otherwise((k * 10 + i).cast("bigint")),
-        )
-    )
-    st = F.when(
-        k % 11 == 0, F.lit(None).cast("struct<s:string,p:double>")
-    ).otherwise(
-        F.struct(
-            F.when(k % 13 == 0, F.lit(None).cast("string"))
-            .otherwise(F.col("o_orderstatus"))
-            .alias("s"),
-            F.when(k % 17 == 0, F.lit(None).cast("double"))
-            .otherwise(F.col("o_totalprice"))
-            .alias("p"),
-        )
-    )
-    (
-        o.select(k.alias("o_orderkey"), lst.alias("lst"), st.alias("st"))
-        .write.mode("overwrite")
-        .orc(out)
-    )
-
-    def _read(path):
-        d = read_orc_nested_columns(path, ["o_orderkey", "lst", "st"])
-        return [
-            {
-                "o_orderkey": key,
-                "lst_len": -1 if lv is None else len(lv),
-                "lst_csv": "NULL"
-                if lv is None
-                else ",".join("N" if x is None else str(x) for x in lv),
-                "s": None if sv is None else sv["s"],
-                "p": None if sv is None else sv["p"],
-                "st_null": 1 if sv is None else 0,
-            }
-            for key, lv, sv in zip(d["o_orderkey"], d["lst"], d["st"])
-        ]
-
-    return _file_scan(
-        spark, sorted(_glob.glob(f"{out}/part-*.orc")), _read,
-        "o_orderkey bigint, lst_len int, lst_csv string, "
-        "s string, p double, st_null int",
-    )
+)(_restaged(*_nested_scan(_ORC, _NESTED)))
 
 
 _NESTED2_ORACLE = """
@@ -12605,135 +12602,13 @@ def _nested2_frame(spark, sf_dir):
     return o.select(k.alias("o_orderkey"), ls.alias("ls"), m.alias("m"))
 
 
-def _nested2_flatten_rows(d, decode_bytes: bool):
-    """Flatten pure-reader output for the deep-nesting twins: list
-    elements render as 'q:t' ('_' for null fields, 'N' for a null
-    element), map entries as sorted 'key=value' ('N' for null values).
-    ``decode_bytes`` utf-8-decodes the parquet reader's byte
-    strings."""
-
-    def _s(v):
-        if v is None:
-            return None
-        return v.decode("utf-8") if decode_bytes and isinstance(v, bytes) else v
-
-    rows = []
-    for key, lv, mv in zip(d["o_orderkey"], d["ls"], d["m"]):
-        if lv is None:
-            ls_len, ls_csv = -1, "NULL"
-        else:
-            ls_len = len(lv)
-            ls_csv = ",".join(
-                "N" if e is None else (
-                    ("_" if e["q"] is None else str(e["q"]))
-                    + ":"
-                    + ("_" if e["t"] is None else _s(e["t"]))
-                )
-                for e in lv
-            )
-        if mv is None:
-            m_len, m_csv = -1, "NULL"
-        else:
-            m_len = len(mv)
-            m_csv = ",".join(
-                f"{_s(kk)}={'N' if vv is None else vv}"
-                for kk, vv in sorted(
-                    (( _s(kk), vv) for kk, vv in mv.items())
-                )
-            )
-        rows.append({
-            "o_orderkey": key,
-            "ls_len": ls_len,
-            "ls_csv": ls_csv,
-            "m_len": m_len,
-            "m_csv": m_csv,
-        })
-    return rows
-
-
-_NESTED2_SCHEMA = (
-    "o_orderkey bigint, ls_len int, ls_csv string, m_len int, m_csv string"
-)
-
-
-@register(
-    "scan_parquet_nested2",
-    _NESTED2_ORACLE,
-    tier="C",
-    note="C12 pure-Python parquet DEEP-NESTING scan (round 11, closing "
-    "the round-10 decline boundary): list<struct<q:bigint,t:string>> "
-    "and map<string,bigint> assemble from repetition/definition levels "
-    "through one shared repeated-group Dremel pass — the element "
-    "struct's fields are sibling leaves sharing reps and the defs "
-    "pattern up to the element group's level, so any leaf drives the "
-    "null-list/empty-list/null-element skeleton and each leaf's own "
-    "defs seat field-level nulls; maps are the same shape with the "
-    "pair group as the element. Spark's JVM writer stages the fixture "
-    "(null/empty/null-element/null-field/null-value residue), the "
-    "pure reader assembles it FILE-PER-TASK via mapInPandas, flattened "
-    "scalars hash-match DuckDB recomputing from source rows; the unit "
-    "battery cross-validates vs pyarrow over v1+v2 pages × dict/plain "
-    "× multi-row-group. Deeper nesting still declines loudly.",
-)
-def scan_parquet_nested2_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.parquet_data import read_parquet_nested_columns
-
-    out = _scratch(sf_dir, "pq_nested2_orders")
-    _nested2_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return _file_scan(
-        spark,
-        sorted(_glob.glob(f"{out}/part-*.parquet")),
-        lambda path: _nested2_flatten_rows(
-            read_parquet_nested_columns(path, ["o_orderkey", "ls", "m"]),
-            decode_bytes=True,
-        ),
-        _NESTED2_SCHEMA,
-    )
-
-
-@register(
-    "scan_orc_nested2",
-    _NESTED2_ORACLE,
-    tier="C",
-    note="C12 pure-Python ORC DEEP-NESTING scan (round 11, the ORC "
-    "twin of scan_parquet_nested2 — same fixture, same oracle): "
-    "list<struct<q,t>> decodes as parent PRESENT+LENGTH over an "
-    "element STRUCT that carries its own PRESENT across all elements "
-    "with field columns sized by the present elements; map<string,"
-    "bigint> is the LIST layout with two children (key and value "
-    "columns each sized by the summed lengths). Spark-JVM-written "
-    "fixture, FILE-PER-TASK mapInPandas read-back, flattened scalars "
-    "hash-matched vs DuckDB on source rows; unit battery "
-    "cross-validates vs pyarrow.orc across 4 codecs + multi-stripe. "
-    "UNION and deeper nesting still decline loudly.",
-)
-def scan_orc_nested2_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.orc_data import read_orc_nested_columns
-
-    out = _scratch(sf_dir, "orc_nested2_orders")
-    _nested2_frame(spark, sf_dir).write.mode("overwrite").orc(out)
-    return _file_scan(
-        spark,
-        sorted(_glob.glob(f"{out}/part-*.orc")),
-        lambda path: _nested2_flatten_rows(
-            read_orc_nested_columns(path, ["o_orderkey", "ls", "m"]),
-            decode_bytes=False,
-        ),
-        _NESTED2_SCHEMA,
-    )
-
-
-def _nested2_python_values(keys):
+def _nested2_values(b):
     """The _nested2_frame derivation in plain Python — the write-side
     twins build their nested values executor-side from the batch
     keys."""
+    keys = [int(x) for x in b["o_orderkey"]]
     lss, ms = [], []
     for k in keys:
-        k = int(k)
         if k % 7 == 0:
             lss.append(None)
         else:
@@ -12751,33 +12626,107 @@ def _nested2_python_values(keys):
                 f"k{j}": (None if (k + j) % 17 == 0 else k + j)
                 for j in range(k % 3)
             })
-    return lss, ms
+    return {"o_orderkey": keys, "ls": lss, "m": ms}
 
 
-def _nested2_sink_decode(t):
-    """pyarrow table → flattened rows (maps come back as key/value
-    tuple lists from pyarrow; normalize to dicts first)."""
-    d = {
-        "o_orderkey": t.column("o_orderkey").to_pylist(),
-        "ls": t.column("ls").to_pylist(),
-        "m": [
-            None if r is None else dict(r)
-            for r in t.column("m").to_pylist()
-        ],
-    }
-    return _nested2_flatten_rows(d, decode_bytes=False)
+def _nested2_flatten(d, decode_bytes: bool):
+    """Flatten for the deep-nesting twins: list elements render as
+    'q:t' ('_' for null fields, 'N' for a null element), map entries as
+    sorted 'key=value' ('N' for null values)."""
+    rows = []
+    for key, lv, mv in zip(d["o_orderkey"], d["ls"], d["m"]):
+        if lv is None:
+            ls_len, ls_csv = -1, "NULL"
+        else:
+            ls_len = len(lv)
+            ls_csv = ",".join(
+                "N" if e is None else (
+                    ("_" if e["q"] is None else str(e["q"]))
+                    + ":"
+                    + ("_" if e["t"] is None else _text(e["t"], decode_bytes))
+                )
+                for e in lv
+            )
+        if mv is None:
+            m_len, m_csv = -1, "NULL"
+        else:
+            m_len = len(mv)
+            m_csv = ",".join(
+                f"{kk}={'N' if vv is None else vv}"
+                for kk, vv in sorted(
+                    (_text(kk, decode_bytes), vv) for kk, vv in mv.items()
+                )
+            )
+        rows.append({
+            "o_orderkey": key,
+            "ls_len": ls_len,
+            "ls_csv": ls_csv,
+            "m_len": m_len,
+            "m_csv": m_csv,
+        })
+    return rows
 
 
-_NESTED2_DDL = {
-    "o_orderkey": "bigint",
-    "ls": "array<struct<q:bigint,t:string>>",
-    "m": "map<string,bigint>",
-}
+_NESTED2 = _NestedShape(
+    tag="nested2",
+    oracle=_NESTED2_ORACLE,
+    schema="o_orderkey bigint, ls_len int, ls_csv string, m_len int, "
+    "m_csv string",
+    ddl={
+        "o_orderkey": "bigint",
+        "ls": "array<struct<q:bigint,t:string>>",
+        "m": "map<string,bigint>",
+    },
+    dtypes={"o_orderkey": "int64", "ls_len": "int32", "m_len": "int32"},
+    sink_cols=("o_orderkey",),
+    values=_nested2_values,
+    flatten=_nested2_flatten,
+    frame=_nested2_frame,
+)
 
 
-@register(
+register(
+    "scan_parquet_nested2",
+    _NESTED2.oracle,
+    tier="C",
+    note="C12 pure-Python parquet DEEP-NESTING scan (round 11, closing "
+    "the round-10 decline boundary): list<struct<q:bigint,t:string>> "
+    "and map<string,bigint> assemble from repetition/definition levels "
+    "through one shared repeated-group Dremel pass — the element "
+    "struct's fields are sibling leaves sharing reps and the defs "
+    "pattern up to the element group's level, so any leaf drives the "
+    "null-list/empty-list/null-element skeleton and each leaf's own "
+    "defs seat field-level nulls; maps are the same shape with the "
+    "pair group as the element. Spark's JVM writer stages the fixture "
+    "(null/empty/null-element/null-field/null-value residue), the "
+    "pure reader assembles it FILE-PER-TASK via mapInPandas, flattened "
+    "scalars hash-match DuckDB recomputing from source rows; the unit "
+    "battery cross-validates vs pyarrow over v1+v2 pages × dict/plain "
+    "× multi-row-group. Deeper nesting still declines loudly.",
+)(_restaged(*_nested_scan(_PARQUET, _NESTED2)))
+
+
+register(
+    "scan_orc_nested2",
+    _NESTED2.oracle,
+    tier="C",
+    note="C12 pure-Python ORC DEEP-NESTING scan (round 11, the ORC "
+    "twin of scan_parquet_nested2 — same fixture, same oracle): "
+    "list<struct<q,t>> decodes as parent PRESENT+LENGTH over an "
+    "element STRUCT that carries its own PRESENT across all elements "
+    "with field columns sized by the present elements; map<string,"
+    "bigint> is the LIST layout with two children (key and value "
+    "columns each sized by the summed lengths). Spark-JVM-written "
+    "fixture, FILE-PER-TASK mapInPandas read-back, flattened scalars "
+    "hash-matched vs DuckDB on source rows; unit battery "
+    "cross-validates vs pyarrow.orc across 4 codecs + multi-stripe. "
+    "UNION and deeper nesting still decline loudly.",
+)(_restaged(*_nested_scan(_ORC, _NESTED2)))
+
+
+register(
     "sink_parquet_nested2",
-    _NESTED2_ORACLE,
+    _NESTED2.oracle,
     tier="C",
     note="C12 parquet DEEP-NESTING export (round 11, the write-side "
     "twin of scan_parquet_nested2 — same derivation, same oracle): "
@@ -12790,39 +12739,12 @@ _NESTED2_DDL = {
     "battery re-reads through DuckDB, Spark's JVM reader AND the "
     "repo's own assembler on both page versions. File-per-task, no "
     "shuffle.",
-)
-def sink_parquet_nested2_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        lss, ms = _nested2_python_values(keys)
-        return build_parquet_bytes(
-            {"o_orderkey": keys, "ls": lss, "m": ms},
-            _NESTED2_DDL,
-            compression="snappy",
-            page_version=2,
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        return _nested2_sink_decode(_pq.read_table(_io.BytesIO(payload)))
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "pq_nested2_sink", "parquet", _encode, _decode,
-        _NESTED2_SCHEMA,
-        {"o_orderkey": "int64", "ls_len": "int32", "m_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_PARQUET, _NESTED2))
 
 
-@register(
+register(
     "sink_orc_nested2",
-    _NESTED2_ORACLE,
+    _NESTED2.oracle,
     tier="C",
     note="C12 ORC DEEP-NESTING export (round 11, the ORC twin of "
     "sink_parquet_nested2 — same derivation, same oracle): the pure "
@@ -12836,35 +12758,7 @@ def sink_parquet_nested2_q(spark, sf_dir):
     "re-reads through Spark's JVM reader AND the repo's own nested "
     "assembler across all three codecs, multi-stripe. File-per-task, "
     "no shuffle.",
-)
-def sink_orc_nested2_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        lss, ms = _nested2_python_values(keys)
-        return build_orc_bytes(
-            {"o_orderkey": keys, "ls": lss, "m": ms},
-            _NESTED2_DDL,
-            compression="zlib",
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        return _nested2_sink_decode(
-            _po.ORCFile(_io.BytesIO(payload)).read()
-        )
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "orc_nested2_sink", "orc", _encode, _decode,
-        _NESTED2_SCHEMA,
-        {"o_orderkey": "int64", "ls_len": "int32", "m_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_ORC, _NESTED2))
 
 
 _NESTED3_ORACLE = """
@@ -12891,19 +12785,14 @@ _NESTED3_ORACLE = """
     FROM orders
     """
 
-_NESTED3_SCHEMA = (
-    "o_orderkey bigint, st_null int, a bigint, v_len int, "
-    "v_csv string, s string"
-)
 
-
-def _nested3_python_values(keys):
+def _nested3_values(b):
     """struct<a, v:array<bigint>, s> rows with null-struct/null-field/
     null-list/empty-list/null-element residue, derived from the batch
     keys — the struct<list> write-twin fixture."""
+    keys = [int(x) for x in b["o_orderkey"]]
     out = []
     for k in keys:
-        k = int(k)
         if k % 17 == 0:
             out.append(None)
             continue
@@ -12918,14 +12807,12 @@ def _nested3_python_values(keys):
             "v": v,
             "s": None if k % 13 == 0 else f"s{k % 9}",
         })
-    return out
+    return {"o_orderkey": keys, "st": out}
 
 
-def _nested3_flatten(t):
+def _nested3_flatten(d, decode_bytes: bool):
     rows = []
-    for k, st in zip(
-        t.column("o_orderkey").to_pylist(), t.column("st").to_pylist()
-    ):
+    for k, st in zip(d["o_orderkey"], d["st"]):
         if st is None:
             rows.append({
                 "o_orderkey": int(k), "st_null": 1, "a": None,
@@ -12941,14 +12828,31 @@ def _nested3_flatten(t):
             "v_csv": "NULL" if v is None else ",".join(
                 "N" if e is None else str(e) for e in v
             ),
-            "s": st["s"],
+            "s": _text(st["s"], decode_bytes),
         })
     return rows
 
 
-@register(
+_NESTED3 = _NestedShape(
+    tag="nested3",
+    oracle=_NESTED3_ORACLE,
+    schema="o_orderkey bigint, st_null int, a bigint, v_len int, "
+    "v_csv string, s string",
+    ddl={
+        "o_orderkey": "bigint",
+        "st": "struct<a:bigint,v:array<bigint>,s:string>",
+    },
+    dtypes={"o_orderkey": "int64", "st_null": "int32", "a": "Int64",
+            "v_len": "int32"},
+    sink_cols=("o_orderkey",),
+    values=_nested3_values,
+    flatten=_nested3_flatten,
+)
+
+
+register(
     "sink_parquet_nested3",
-    _NESTED3_ORACLE,
+    _NESTED3.oracle,
     tier="C",
     note="C12 parquet STRUCT<LIST> export (round 11, completing the "
     "deep-shape family in both directions): the pure writer emits a "
@@ -12962,42 +12866,12 @@ def _nested3_flatten(t):
     "by DuckDB from source keys; the unit battery adds DuckDB/"
     "Spark-JVM/own-reader re-reads on both page versions plus the "
     "pyarrow-written READ-side twin. File-per-task, no shuffle.",
-)
-def sink_parquet_nested3_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        return build_parquet_bytes(
-            {"o_orderkey": keys, "st": _nested3_python_values(keys)},
-            {
-                "o_orderkey": "bigint",
-                "st": "struct<a:bigint,v:array<bigint>,s:string>",
-            },
-            compression="snappy",
-            page_version=2,
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        return _nested3_flatten(_pq.read_table(_io.BytesIO(payload)))
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "pq_nested3_sink", "parquet", _encode, _decode,
-        _NESTED3_SCHEMA,
-        {"o_orderkey": "int64", "st_null": "int32", "a": "Int64",
-         "v_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_PARQUET, _NESTED3))
 
 
-@register(
+register(
     "sink_orc_nested3",
-    _NESTED3_ORACLE,
+    _NESTED3.oracle,
     tier="C",
     note="C12 ORC STRUCT<LIST> export (round 11, the ORC twin of "
     "sink_parquet_nested3 — same derivation, same oracle): the pure "
@@ -13009,36 +12883,7 @@ def sink_parquet_nested3_q(spark, sf_dir):
     "from executors; PYARROW read-back graded vs DuckDB on source "
     "keys; Spark-JVM + own-reader re-reads in the unit battery. "
     "File-per-task, no shuffle.",
-)
-def sink_orc_nested3_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        return build_orc_bytes(
-            {"o_orderkey": keys, "st": _nested3_python_values(keys)},
-            {
-                "o_orderkey": "bigint",
-                "st": "struct<a:bigint,v:array<bigint>,s:string>",
-            },
-            compression="zlib",
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        return _nested3_flatten(_po.ORCFile(_io.BytesIO(payload)).read())
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "orc_nested3_sink", "orc", _encode, _decode,
-        _NESTED3_SCHEMA,
-        {"o_orderkey": "int64", "st_null": "int32", "a": "Int64",
-         "v_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_ORC, _NESTED3))
 
 
 _NESTED4_ORACLE = """
@@ -13065,15 +12910,13 @@ _NESTED4_ORACLE = """
     FROM orders
     """
 
-_NESTED4_SCHEMA = "o_orderkey bigint, ll_len int, ll_csv string"
 
-
-def _nested4_python_values(keys):
+def _nested4_values(b):
     """list<list<bigint>> rows with null-outer/empty-outer/null-inner/
     empty-inner/null-element residue derived from the batch keys."""
+    keys = [int(x) for x in b["o_orderkey"]]
     out = []
     for k in keys:
-        k = int(k)
         if k % 7 == 0:
             out.append(None)
             continue
@@ -13089,14 +12932,12 @@ def _nested4_python_values(keys):
                     for j in range(1, (k + i) % 3 + 2)
                 ])
         out.append(outer)
-    return out
+    return {"o_orderkey": keys, "ll": out}
 
 
-def _nested4_flatten(t):
+def _nested4_flatten(d, decode_bytes: bool):
     rows = []
-    for k, ll in zip(
-        t.column("o_orderkey").to_pylist(), t.column("ll").to_pylist()
-    ):
+    for k, ll in zip(d["o_orderkey"], d["ll"]):
         if ll is None:
             rows.append({"o_orderkey": int(k), "ll_len": -1,
                          "ll_csv": "NULL"})
@@ -13114,9 +12955,21 @@ def _nested4_flatten(t):
     return rows
 
 
-@register(
+_NESTED4 = _NestedShape(
+    tag="nested4",
+    oracle=_NESTED4_ORACLE,
+    schema="o_orderkey bigint, ll_len int, ll_csv string",
+    ddl={"o_orderkey": "bigint", "ll": "array<array<bigint>>"},
+    dtypes={"o_orderkey": "int64", "ll_len": "int32"},
+    sink_cols=("o_orderkey",),
+    values=_nested4_values,
+    flatten=_nested4_flatten,
+)
+
+
+register(
     "sink_parquet_nested4",
-    _NESTED4_ORACLE,
+    _NESTED4.oracle,
     tier="C",
     note="C12 parquet LIST<LIST> export (round 11, the two-repeated-"
     "level shape): the pure writer emits 6-state definition levels "
@@ -13129,38 +12982,12 @@ def _nested4_flatten(t):
     "the unit battery re-reads via DuckDB, Spark's JVM reader AND the "
     "own two-level Dremel assembler on both page versions. "
     "File-per-task, no shuffle.",
-)
-def sink_parquet_nested4_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        return build_parquet_bytes(
-            {"o_orderkey": keys, "ll": _nested4_python_values(keys)},
-            {"o_orderkey": "bigint", "ll": "array<array<bigint>>"},
-            compression="snappy",
-            page_version=2,
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        return _nested4_flatten(_pq.read_table(_io.BytesIO(payload)))
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "pq_nested4_sink", "parquet", _encode, _decode,
-        _NESTED4_SCHEMA,
-        {"o_orderkey": "int64", "ll_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_PARQUET, _NESTED4))
 
 
-@register(
+register(
     "sink_orc_nested4",
-    _NESTED4_ORACLE,
+    _NESTED4.oracle,
     tier="C",
     note="C12 ORC LIST<LIST> export (round 11, the ORC twin of "
     "sink_parquet_nested4 — same derivation, same oracle): the pure "
@@ -13171,32 +12998,7 @@ def sink_parquet_nested4_q(spark, sf_dir):
     "ARROW BATCH from executors; PYARROW read-back graded vs DuckDB "
     "on source keys; Spark-JVM + own-reader re-reads in the unit "
     "battery. File-per-task, no shuffle.",
-)
-def sink_orc_nested4_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        return build_orc_bytes(
-            {"o_orderkey": keys, "ll": _nested4_python_values(keys)},
-            {"o_orderkey": "bigint", "ll": "array<array<bigint>>"},
-            compression="zlib",
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        return _nested4_flatten(_po.ORCFile(_io.BytesIO(payload)).read())
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "orc_nested4_sink", "orc", _encode, _decode,
-        _NESTED4_SCHEMA,
-        {"o_orderkey": "int64", "ll_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_ORC, _NESTED4))
 
 
 @register(
@@ -13224,8 +13026,6 @@ def sink_orc_nested4_q(spark, sf_dir):
     "shuffle.",
 )
 def sink_orc_typed_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
     def _encode(b):
         import decimal as _dec
         import math as _math
@@ -13522,8 +13322,6 @@ def scan_parquet_int96_q(spark, sf_dir):
 def scan_orc_rle1_q(spark, sf_dir):
     import glob as _glob
 
-    from ..operators.orc_data import read_orc_nested_columns
-
     out = _scratch(sf_dir, "orc_rle1_orders")
     o = _stage_base(
         spark, sf_dir,
@@ -13640,17 +13438,6 @@ _NESTED5_ORACLE = """
     FROM orders
     """
 
-_NESTED5_SCHEMA = (
-    "o_orderkey bigint, ms_len int, ms_csv string, ml_len int, "
-    "ml_csv string"
-)
-
-_NESTED5_DDL = {
-    "o_orderkey": "bigint",
-    "ms": "map<string,struct<s:string,p:double>>",
-    "ml": "map<string,array<bigint>>",
-}
-
 
 def _nested5_frame(spark, sf_dir):
     """orders → (o_orderkey, ms: map<string,struct<s,p>>, ml:
@@ -13738,9 +13525,10 @@ def _nested5_frame(spark, sf_dir):
     return o.select(k.alias("o_orderkey"), ms.alias("ms"), ml.alias("ml"))
 
 
-def _nested5_python_values(keys):
+def _nested5_values(b):
     """The Python twin of :func:`_nested5_frame`'s derivation — the
     sink entries feed it to the pure writers."""
+    keys = [int(x) for x in b["o_orderkey"]]
     mss, mls = [], []
     for k in keys:
         if k % 7 == 0:
@@ -13775,25 +13563,14 @@ def _nested5_python_values(keys):
                         for j in range(1, (k + i) % 4 + 2)
                     ]
             mls.append(row)
-    return mss, mls
+    return {"o_orderkey": keys, "ms": mss, "ml": mls}
 
 
-def _nested5_flatten_rows(d, decode_bytes: bool):
-    """Flatten reader output for the map-with-nested-values twins:
-    struct values render as 's:p' ('_' for null fields, p as an exact
-    integer), list values as ';'-joined elements ('N' for nulls);
-    entries sort by key. ``decode_bytes`` utf-8-decodes the parquet
-    reader's byte strings."""
-
-    def _s(v):
-        if v is None:
-            return None
-        return (
-            v.decode("utf-8")
-            if decode_bytes and isinstance(v, bytes)
-            else v
-        )
-
+def _nested5_flatten(d, decode_bytes: bool):
+    """Flatten for the map-with-nested-values twins: struct values
+    render as 's:p' ('_' for null fields, p as an exact integer), list
+    values as ';'-joined elements ('N' for nulls); entries sort by
+    key."""
     rows = []
     for key, msv, mlv in zip(d["o_orderkey"], d["ms"], d["ml"]):
         if msv is None:
@@ -13804,12 +13581,15 @@ def _nested5_flatten_rows(d, decode_bytes: bool):
                 f"{kk}=" + (
                     "N"
                     if vv is None
-                    else ("_" if vv["s"] is None else _s(vv["s"]))
+                    else (
+                        "_" if vv["s"] is None
+                        else _text(vv["s"], decode_bytes)
+                    )
                     + ":"
                     + ("_" if vv["p"] is None else str(int(vv["p"])))
                 )
                 for kk, vv in sorted(
-                    ((_s(kk), vv) for kk, vv in msv.items())
+                    (_text(kk, decode_bytes), vv) for kk, vv in msv.items()
                 )
             )
         if mlv is None:
@@ -13825,7 +13605,7 @@ def _nested5_flatten_rows(d, decode_bytes: bool):
                     )
                 )
                 for kk, vv in sorted(
-                    ((_s(kk), vv) for kk, vv in mlv.items())
+                    (_text(kk, decode_bytes), vv) for kk, vv in mlv.items()
                 )
             )
         rows.append({
@@ -13838,26 +13618,27 @@ def _nested5_flatten_rows(d, decode_bytes: bool):
     return rows
 
 
-def _nested5_sink_decode(t):
-    """Flatten a pyarrow read-back (map columns arrive as lists of
-    (key, value) tuples) into the shared oracle's scalar rows."""
-    d = {
-        "o_orderkey": t.column("o_orderkey").to_pylist(),
-        "ms": [
-            None if m is None else dict(m)
-            for m in t.column("ms").to_pylist()
-        ],
-        "ml": [
-            None if m is None else dict(m)
-            for m in t.column("ml").to_pylist()
-        ],
-    }
-    return _nested5_flatten_rows(d, decode_bytes=False)
+_NESTED5 = _NestedShape(
+    tag="nested5",
+    oracle=_NESTED5_ORACLE,
+    schema="o_orderkey bigint, ms_len int, ms_csv string, ml_len int, "
+    "ml_csv string",
+    ddl={
+        "o_orderkey": "bigint",
+        "ms": "map<string,struct<s:string,p:double>>",
+        "ml": "map<string,array<bigint>>",
+    },
+    dtypes={"o_orderkey": "int64", "ms_len": "int32", "ml_len": "int32"},
+    sink_cols=("o_orderkey",),
+    values=_nested5_values,
+    flatten=_nested5_flatten,
+    frame=_nested5_frame,
+)
 
 
-@register(
+register(
     "scan_parquet_nested5",
-    _NESTED5_ORACLE,
+    _NESTED5.oracle,
     tier="C",
     note="C12 pure-Python parquet MAP-WITH-NESTED-VALUES scan (round "
     "12, closing the round-11 decline boundary): map<string,struct<s,"
@@ -13873,28 +13654,12 @@ def _nested5_sink_decode(t):
     "unit battery cross-validates vs pyarrow + DuckDB over v1+v2 "
     "pages × codecs × multi-row-group. Deeper value shapes decline "
     "loudly.",
-)
-def scan_parquet_nested5_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.parquet_data import read_parquet_nested_columns
-
-    out = _scratch(sf_dir, "pq_nested5_orders")
-    _nested5_frame(spark, sf_dir).write.mode("overwrite").parquet(out)
-    return _file_scan(
-        spark,
-        sorted(_glob.glob(f"{out}/part-*.parquet")),
-        lambda path: _nested5_flatten_rows(
-            read_parquet_nested_columns(path, ["o_orderkey", "ms", "ml"]),
-            decode_bytes=True,
-        ),
-        _NESTED5_SCHEMA,
-    )
+)(_restaged(*_nested_scan(_PARQUET, _NESTED5)))
 
 
-@register(
+register(
     "scan_orc_nested5",
-    _NESTED5_ORACLE,
+    _NESTED5.oracle,
     tier="C",
     note="C12 pure-Python ORC MAP-WITH-NESTED-VALUES scan (round 12, "
     "the ORC twin of scan_parquet_nested5 — same fixture, same "
@@ -13908,28 +13673,12 @@ def scan_parquet_nested5_q(spark, sf_dir):
     "on source rows; unit battery cross-validates vs pyarrow.orc "
     "across 3 codecs + multi-stripe. UNION and deeper value shapes "
     "still decline loudly.",
-)
-def scan_orc_nested5_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.orc_data import read_orc_nested_columns
-
-    out = _scratch(sf_dir, "orc_nested5_orders")
-    _nested5_frame(spark, sf_dir).write.mode("overwrite").orc(out)
-    return _file_scan(
-        spark,
-        sorted(_glob.glob(f"{out}/part-*.orc")),
-        lambda path: _nested5_flatten_rows(
-            read_orc_nested_columns(path, ["o_orderkey", "ms", "ml"]),
-            decode_bytes=False,
-        ),
-        _NESTED5_SCHEMA,
-    )
+)(_restaged(*_nested_scan(_ORC, _NESTED5)))
 
 
-@register(
+register(
     "sink_parquet_nested5",
-    _NESTED5_ORACLE,
+    _NESTED5.oracle,
     tier="C",
     note="C12 parquet MAP-WITH-NESTED-VALUES export (round 12, the "
     "write twin of scan_parquet_nested5 — same derivation, same "
@@ -13944,39 +13693,12 @@ def scan_orc_nested5_q(spark, sf_dir):
     "scalars DuckDB recomputes from source keys; the unit battery "
     "re-reads through DuckDB AND the repo's own nested assembler "
     "across v1+v2 × codecs. File-per-task, no shuffle.",
-)
-def sink_parquet_nested5_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        mss, mls = _nested5_python_values(keys)
-        return build_parquet_bytes(
-            {"o_orderkey": keys, "ms": mss, "ml": mls},
-            _NESTED5_DDL,
-            compression="snappy",
-            page_version=2,
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        return _nested5_sink_decode(_pq.read_table(_io.BytesIO(payload)))
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "pq_nested5_sink", "parquet", _encode, _decode,
-        _NESTED5_SCHEMA,
-        {"o_orderkey": "int64", "ms_len": "int32", "ml_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_PARQUET, _NESTED5))
 
 
-@register(
+register(
     "sink_orc_nested5",
-    _NESTED5_ORACLE,
+    _NESTED5.oracle,
     tier="C",
     note="C12 ORC MAP-WITH-NESTED-VALUES export (round 12, the ORC "
     "twin of sink_parquet_nested5 — same derivation, same oracle): "
@@ -13988,33 +13710,7 @@ def sink_parquet_nested5_q(spark, sf_dir):
     "executors. PYARROW read-back graded vs DuckDB on source keys; "
     "Spark-JVM + own-reader re-reads in the unit battery across all "
     "three codecs. File-per-task, no shuffle.",
-)
-def sink_orc_nested5_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        mss, mls = _nested5_python_values(keys)
-        return build_orc_bytes(
-            {"o_orderkey": keys, "ms": mss, "ml": mls},
-            _NESTED5_DDL,
-            compression="zlib",
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        return _nested5_sink_decode(_po.ORCFile(_io.BytesIO(payload)).read())
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "orc_nested5_sink", "orc", _encode, _decode,
-        _NESTED5_SCHEMA,
-        {"o_orderkey": "int64", "ms_len": "int32", "ml_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_ORC, _NESTED5))
 
 
 # ---- nested6: three-deep lists + map-of-map (round 13) --------------
@@ -14087,17 +13783,6 @@ _NESTED6_ORACLE = """
            END AS mm_csv
     FROM orders
     """
-
-_NESTED6_SCHEMA = (
-    "o_orderkey bigint, lll_len int, lll_csv string, mm_len int, "
-    "mm_csv string"
-)
-
-_NESTED6_DDL = {
-    "o_orderkey": "bigint",
-    "lll": "array<array<array<bigint>>>",
-    "mm": "map<string,map<string,bigint>>",
-}
 
 
 def _nested6_frame(spark, sf_dir):
@@ -14202,9 +13887,10 @@ def _nested6_frame(spark, sf_dir):
     return o.select(k.alias("o_orderkey"), lll.alias("lll"), mm.alias("mm"))
 
 
-def _nested6_python_values(keys):
+def _nested6_values(b):
     """Python twin of :func:`_nested6_frame` — feeds the pure writers
     in the sink entries."""
+    keys = [int(x) for x in b["o_orderkey"]]
     llls, mms = [], []
     for k in keys:
         if k % 7 == 0:
@@ -14251,24 +13937,14 @@ def _nested6_python_values(keys):
                         for j in range(1, (k + i) % 3 + 2)
                     }
             mms.append(row)
-    return llls, mms
+    return {"o_orderkey": keys, "lll": llls, "mm": mms}
 
 
-def _nested6_flatten_rows(d, decode_bytes: bool):
-    """Flatten reader output to the shared oracle's scalars: lll as
-    '|'-joined mids ('N' null / 'E' empty), each mid '/'-joined inners,
-    each inner ';'-joined elements ('N' for null); mm entries sort by
-    key, inner entries 'm{j}:v' (';'-joined, 'N' for null value)."""
-
-    def _s(v):
-        if v is None:
-            return None
-        return (
-            v.decode("utf-8")
-            if decode_bytes and isinstance(v, bytes)
-            else v
-        )
-
+def _nested6_flatten(d, decode_bytes: bool):
+    """Flatten to the shared oracle's scalars: lll as '|'-joined mids
+    ('N' null / 'E' empty), each mid '/'-joined inners, each inner
+    ';'-joined elements ('N' for null); mm entries sort by key, inner
+    entries 'm{j}:v' (';'-joined, 'N' for null value)."""
     rows = []
     for key, lll, mm in zip(d["o_orderkey"], d["lll"], d["mm"]):
         if lll is None:
@@ -14297,14 +13973,15 @@ def _nested6_flatten_rows(d, decode_bytes: bool):
                     "N" if vv is None
                     else "E" if len(vv) == 0
                     else ";".join(
-                        f"{_s(ik)}:" + ("N" if iv is None else str(iv))
+                        f"{ik}:" + ("N" if iv is None else str(iv))
                         for ik, iv in sorted(
-                            ((_s(ik), iv) for ik, iv in vv.items())
+                            (_text(ik, decode_bytes), iv)
+                            for ik, iv in vv.items()
                         )
                     )
                 )
                 for kk, vv in sorted(
-                    ((_s(kk), vv) for kk, vv in mm.items())
+                    (_text(kk, decode_bytes), vv) for kk, vv in mm.items()
                 )
             )
         rows.append({
@@ -14317,44 +13994,35 @@ def _nested6_flatten_rows(d, decode_bytes: bool):
     return rows
 
 
-def _nested6_sink_decode(t):
-    """Flatten a pyarrow read-back (maps arrive as (key, value) tuple
-    lists, nested maps recursively) into the shared oracle's rows."""
-
-    def _dictify(m):
-        if m is None:
-            return None
-        return {
-            k: (dict(v) if isinstance(v, list) else v) for k, v in m
-        }
-
-    d = {
-        "o_orderkey": t.column("o_orderkey").to_pylist(),
-        "lll": t.column("lll").to_pylist(),
-        "mm": [_dictify(m) for m in t.column("mm").to_pylist()],
-    }
-    return _nested6_flatten_rows(d, decode_bytes=False)
+_NESTED6 = _NestedShape(
+    tag="nested6",
+    oracle=_NESTED6_ORACLE,
+    schema="o_orderkey bigint, lll_len int, lll_csv string, mm_len int, "
+    "mm_csv string",
+    ddl={
+        "o_orderkey": "bigint",
+        "lll": "array<array<array<bigint>>>",
+        "mm": "map<string,map<string,bigint>>",
+    },
+    dtypes={"o_orderkey": "int64", "lll_len": "int32", "mm_len": "int32"},
+    sink_cols=("o_orderkey",),
+    values=_nested6_values,
+    flatten=_nested6_flatten,
+    frame=_nested6_frame,
+)
 
 
 # The nested6 scans stage through a JVM deep-nested write that was 80%
 # of the recorded time and drifted with bench-run JVM state (the
 # r14/r15 quiet-tracker flag); declaring it as the stage lets the
 # steady pass time the PURE READER (~0.4 s across 8 parallel tasks).
-def _stage_pq_nested6(spark, sf_dir):
-    _nested6_frame(spark, sf_dir).write.mode("overwrite").parquet(
-        _scratch(sf_dir, "pq_nested6_orders")
-    )
+_stage_pq_nested6, _read_pq_nested6 = _nested_scan(_PARQUET, _NESTED6)
+_stage_orc_nested6, _read_orc_nested6 = _nested_scan(_ORC, _NESTED6)
 
 
-def _stage_orc_nested6(spark, sf_dir):
-    _nested6_frame(spark, sf_dir).write.mode("overwrite").orc(
-        _scratch(sf_dir, "orc_nested6_orders")
-    )
-
-
-@register(
+register(
     "scan_parquet_nested6",
-    _NESTED6_ORACLE,
+    _NESTED6.oracle,
     tier="C",
     note="C12 pure-Python parquet GENERIC-DEPTH scan (round 13, "
     "closing the round-12 decline boundary): three-deep lists "
@@ -14370,27 +14038,12 @@ def _stage_orc_nested6(spark, sf_dir):
     "compositions vs pyarrow across row-group splits. Only UNION "
     "remains out of envelope.",
     stage=_stage_pq_nested6,
-)
-def scan_parquet_nested6_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.parquet_data import read_parquet_nested_columns
-
-    out = _scratch(sf_dir, "pq_nested6_orders")
-    return _file_scan(
-        spark,
-        sorted(_glob.glob(f"{out}/part-*.parquet")),
-        lambda path: _nested6_flatten_rows(
-            read_parquet_nested_columns(path, ["o_orderkey", "lll", "mm"]),
-            decode_bytes=True,
-        ),
-        _NESTED6_SCHEMA,
-    )
+)(_read_pq_nested6)
 
 
-@register(
+register(
     "scan_orc_nested6",
-    _NESTED6_ORACLE,
+    _NESTED6.oracle,
     tier="C",
     note="C12 pure-Python ORC GENERIC-DEPTH scan (round 13, the ORC "
     "twin of scan_parquet_nested6 — same fixture, same oracle): "
@@ -14403,27 +14056,12 @@ def scan_parquet_nested6_q(spark, sf_dir):
     "deep compositions vs pyarrow.orc across 4 codecs + multi-"
     "stripe. Only UNION remains declined.",
     stage=_stage_orc_nested6,
-)
-def scan_orc_nested6_q(spark, sf_dir):
-    import glob as _glob
-
-    from ..operators.orc_data import read_orc_nested_columns
-
-    out = _scratch(sf_dir, "orc_nested6_orders")
-    return _file_scan(
-        spark,
-        sorted(_glob.glob(f"{out}/part-*.orc")),
-        lambda path: _nested6_flatten_rows(
-            read_orc_nested_columns(path, ["o_orderkey", "lll", "mm"]),
-            decode_bytes=False,
-        ),
-        _NESTED6_SCHEMA,
-    )
+)(_read_orc_nested6)
 
 
-@register(
+register(
     "sink_parquet_nested6",
-    _NESTED6_ORACLE,
+    _NESTED6.oracle,
     tier="C",
     note="C12 parquet GENERIC-DEPTH export (round 13, the write twin "
     "of scan_parquet_nested6 — same derivation, same oracle): the "
@@ -14436,39 +14074,12 @@ def scan_orc_nested6_q(spark, sf_dir):
     "from source keys; the unit battery re-reads through the repo's "
     "own generic assembler across v1+v2 × codecs × row-group splits. "
     "File-per-task, no shuffle.",
-)
-def sink_parquet_nested6_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        llls, mms = _nested6_python_values(keys)
-        return build_parquet_bytes(
-            {"o_orderkey": keys, "lll": llls, "mm": mms},
-            _NESTED6_DDL,
-            compression="snappy",
-            page_version=2,
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.parquet as _pq
-
-        return _nested6_sink_decode(_pq.read_table(_io.BytesIO(payload)))
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "pq_nested6_sink", "parquet", _encode, _decode,
-        _NESTED6_SCHEMA,
-        {"o_orderkey": "int64", "lll_len": "int32", "mm_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_PARQUET, _NESTED6))
 
 
-@register(
+register(
     "sink_orc_nested6",
-    _NESTED6_ORACLE,
+    _NESTED6.oracle,
     tier="C",
     note="C12 ORC GENERIC-DEPTH export (round 13, the ORC twin of "
     "sink_parquet_nested6 — same derivation, same oracle): the "
@@ -14480,33 +14091,7 @@ def sink_parquet_nested6_q(spark, sf_dir):
     "executors. PYARROW read-back graded vs DuckDB on source keys; "
     "own-reader re-reads in the unit battery across 3 codecs × "
     "stripe splits. File-per-task, no shuffle.",
-)
-def sink_orc_nested6_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
-    def _encode(b):
-        keys = [int(x) for x in b["o_orderkey"]]
-        llls, mms = _nested6_python_values(keys)
-        return build_orc_bytes(
-            {"o_orderkey": keys, "lll": llls, "mm": mms},
-            _NESTED6_DDL,
-            compression="zlib",
-        )
-
-    def _decode(payload):
-        import io as _io
-
-        import pyarrow.orc as _po
-
-        return _nested6_sink_decode(_po.ORCFile(_io.BytesIO(payload)).read())
-
-    return _shard_sink_roundtrip(
-        spark, sf_dir, "orc_nested6_sink", "orc", _encode, _decode,
-        _NESTED6_SCHEMA,
-        {"o_orderkey": "int64", "lll_len": "int32", "mm_len": "int32"},
-        select_cols=("o_orderkey",),
-        table="orders",
-    )
+)(_nested_sink(_ORC, _NESTED6))
 
 
 # ---- page index: page-level skipping (round 13) ---------------------
@@ -14606,8 +14191,6 @@ def scan_parquet_pageindex_q(spark, sf_dir):
     "no shuffle.",
 )
 def sink_parquet_pageindex_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
     def _encode(b):
         keys = [int(x) for x in b["o_orderkey"]]
         return build_parquet_bytes(
@@ -14783,8 +14366,6 @@ def scan_parquet_bloom_q(spark, sf_dir):
     "rows.",
 )
 def sink_parquet_bloom_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
     def _encode(b):
         return build_parquet_bytes(
             {
@@ -14878,8 +14459,6 @@ def sink_parquet_bloom_q(spark, sf_dir):
 def scan_orc_union_q(spark, sf_dir):
     from py4j.java_gateway import get_field, set_field
 
-    from ..operators.orc_data import read_orc_nested_columns
-
     src = (
         _t(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") < 256)
@@ -14962,8 +14541,6 @@ def scan_orc_union_q(spark, sf_dir):
     "values from source rows.",
 )
 def sink_orc_union_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
     def _encode(b):
         cells = [
             (0, int(c)) if int(k) % 2 == 0 else (1, str(p))
@@ -15035,8 +14612,6 @@ def sink_orc_union_q(spark, sf_dir):
     "shuffle; DuckDB grades values from source rows.",
 )
 def sink_orc_bloom_q(spark, sf_dir):
-    from ..operators.orc_write import build_orc_bytes
-
     def _encode(b):
         return build_orc_bytes(
             {
@@ -15271,8 +14846,6 @@ def _stage_pq_brotli(spark, sf_dir):
 def scan_parquet_brotli_q(spark, sf_dir):
     import glob as _glob
 
-    from ..operators.parquet_data import read_parquet_nested_columns
-
     def _read(path):
         cols = ["o_orderkey", "cat", "tag", "price", "arr"]
         d = read_parquet_nested_columns(path, cols)
@@ -15339,8 +14912,6 @@ def scan_parquet_brotli_q(spark, sf_dir):
     "report records the changed subset.",
 )
 def sink_parquet_brotli_q(spark, sf_dir):
-    from ..operators.parquet_write import build_parquet_bytes
-
     def _encode(b):
         keys = [int(x) for x in b["o_orderkey"]]
         return build_parquet_bytes(

@@ -41,6 +41,35 @@ def test_rows_only_query_runs(spark, sf_smoke, name):
     assert len(df.columns) > 0
 
 
+def test_sink_parquet_pure_keeps_null_text(spark, sf_smoke, tmp_path):
+    """A NULL text hashes to NULL, as in the oracle's sha256(text); the
+    testdata has no NULL text, so the tables are copied and a few
+    documents lose theirs."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for path in glob.glob(f"{sf_smoke}/*.parquet"):
+        shutil.copy(path, tmp_path)
+    docs = pq.read_table(f"{sf_smoke}/documents.parquet")
+    drop = pa.array([i % 7 == 0 for i in range(docs.num_rows)])
+    text = pc.if_else(drop, pa.scalar(None, pa.string()), docs["text"])
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text", text)
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    assert docs["text"].null_count > 0
+
+    q = CATALOG["sink_parquet_pure"]
+    con = duck_connection(str(tmp_path))
+    try:
+        problems = compare(q.fn(spark, str(tmp_path)), con, q.oracle, q.name)
+    finally:
+        con.close()
+    assert not problems, "\n".join(problems)
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
