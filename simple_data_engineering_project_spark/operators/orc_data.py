@@ -32,26 +32,20 @@ DuckDB reading the same source rows.
 DECIMAL decodes too (unbounded zigzag-varint unscaled values + a
 signed-RLEv2 per-value scale stream → Python Decimal).
 
-ONE level of nesting decodes too (round 10,
-:func:`read_orc_nested_columns`): array<scalar> via the parent's
-PRESENT + LENGTH streams slicing a child scalar column sized by the
-summed lengths, and struct<scalar,...> via the parent's PRESENT with
-one child entry per present row — cross-validated against pyarrow.orc
-across 4 codecs, multi-stripe layouts, and Spark-written files.
+Nested columns decode through one recursion
+(:func:`read_orc_nested_columns` → :func:`_read_generic_node`): every
+compound node owns a PRESENT stream sized by its parent's present
+count; LIST and MAP add a LENGTH stream whose sum sizes their
+children; STRUCT fields carry one entry per present row; UNION weaves
+its children by a tag stream. Any composition of those, to any depth,
+decodes the same way — cross-validated against pyarrow.orc across 4
+codecs, multi-stripe layouts, and Spark- and Java-written files.
 
-Round 11 adds list<struct<scalars>> (element STRUCT with its own
-PRESENT over all elements), map<scalar,scalar> (LIST layout with
-key/value children), struct fields mixing scalars with
-list<scalar> (struct<list>), and list<list<scalar>> (chained
-LENGTH levels). Round 12 adds integer RLEv1 (Hive-0.11-era files,
-column encodings DIRECT=0/DICTIONARY=1): every integer-stream decode
-dispatches on the column encoding via :func:`_int_rle`,
-cross-validated against pyarrow-written ``file_version="0.11"``
-fixtures, plus map values that are themselves structs or lists
-(map<k,struct<scalars>>, map<k,list<scalar>>). Round 13 adds the
-GENERIC recursive node reader: any LIST/MAP/STRUCT composition —
-three-deep lists, map-of-map, struct<map> — decodes through one
-recursion over the PRESENT/LENGTH chains. Declined loudly: UNION.
+Integer RLEv1 (Hive-0.11-era files, column encodings
+DIRECT=0/DICTIONARY=1) decodes too: every integer-stream decode,
+LENGTH streams included, dispatches on the column encoding via
+:func:`_int_rle`, cross-validated against pyarrow-written
+``file_version="0.11"`` fixtures.
 
 Scale shape: file-per-task, same as parquet_data.pure_parquet_scan —
 each executor decodes whole files independently, no shuffle.
@@ -555,15 +549,15 @@ def _all_subtree_ids(types: list[dict], cid: int) -> list[int]:
 def _read_generic_node(
     cid, count, types, located, encodings, codec
 ) -> list:
-    """Recursive ORC composite decode for ARBITRARY nesting depth
-    (round 13): every node owns a PRESENT stream sized by its parent's
-    present count; LIST/MAP add a LENGTH stream over the present
-    instances and size their children by the summed lengths; STRUCT
-    fields weave by the present flags. Scalars delegate to
-    :func:`_decode_column` (which handles its own PRESENT +
-    dictionary). UNION declines loudly. ORC spec: each compound
-    type's streams nest by the parent's present cardinality —
-    composition needs no per-shape cases."""
+    """``count`` values of the column rooted at type id ``cid``, for
+    ARBITRARY nesting depth: every node owns a PRESENT stream sized by
+    its parent's present count; LIST/MAP add a LENGTH stream over the
+    present instances and size their children by the summed lengths;
+    STRUCT fields weave by the present flags; UNION by its tag stream.
+    Scalars delegate to :func:`_decode_column` (which handles its own
+    PRESENT + dictionary), so a flat column is one call. ORC spec:
+    each compound type's streams nest by the parent's present
+    cardinality — composition needs no per-shape cases."""
     kind = types[cid].get(1, 0)
     if kind == _K_UNION:
         # round 15 (formerly the last pure-format loud decline): a
@@ -803,22 +797,14 @@ def read_orc_pruned_columns(
 def read_orc_nested_columns(
     path_or_bytes, columns: list[str], _keep: list[bool] | None = None
 ) -> dict[str, list]:
-    """Decode top-level columns with ONE level of nesting (round 10):
-    ``array<scalar>`` (LIST type: parent LENGTH stream + child scalar
-    column sized by the summed lengths) and ``struct<scalar,...>``
-    (parent PRESENT only; child columns carry one entry per present
-    parent row). Round 11 adds ``list<struct<scalars>>`` (the element
-    STRUCT carries its own PRESENT over all elements; its field
-    columns are sized by the present elements) and ``map<k,v>``
-    (the LIST layout with two children: key and value columns each
-    sized by the summed lengths; rows come back as Python dicts).
-    Round 12 adds ``map<k, struct<scalars>>`` (the value STRUCT
-    carries its own PRESENT over all entries) and ``map<k,
-    list<scalar>>`` (the value LIST carries its own PRESENT + LENGTH
-    over entries). Scalar columns pass through unchanged. Round 13:
-    any composition the enumerated plans above decline falls through
-    to :func:`_read_generic_node` — only UNION declines loudly,
-    mirroring the parquet reader's contract."""
+    """Decode top-level columns of any type, stripes concatenated in
+    file order (``_keep`` skips stripes eliminated by zone maps). Every
+    column goes through :func:`_read_generic_node`: a scalar column is
+    one flat :func:`_decode_column` call, and LIST / MAP / STRUCT /
+    UNION compositions of any depth recurse over their PRESENT and
+    LENGTH chains. Lists come back as Python lists, structs as dicts,
+    maps as Python dicts (a LIST of {"key", "value"} structs when the
+    keys are composite), unions as the plain value per row."""
     if isinstance(path_or_bytes, (bytes, bytearray)):
         buf = bytes(path_or_bytes)
     else:
@@ -826,155 +812,13 @@ def read_orc_nested_columns(
             buf = f.read()
     codec, _footer, types, stripes = _parse_tail(buf)
     leaves = _leaf_columns(types)
-    plan: dict[str, dict] = {}
     for c in columns:
         if c not in leaves:
             raise ValueError(f"column {c!r} not in file")
-        cid = leaves[c]["col_id"]
-        kind = leaves[c]["kind"]
-        try:
-            if kind == _K_LIST:
-                (elem_id,) = _subtype_ids(types[cid])
-                ek = types[elem_id].get(1, 0)
-                if ek == _K_STRUCT:
-                    # list<struct<scalars>> (round 11): the element struct's
-                    # fields are grandchild columns sized by the PRESENT
-                    # elements
-                    gkids = _subtype_ids(types[elem_id])
-                    gnames = [
-                        n.decode("utf-8")
-                        for n in _as_list(types[elem_id].get(3))
-                    ]
-                    for g in gkids:
-                        if types[g].get(1, 0) in (
-                            _K_LIST, _K_MAP, _K_STRUCT, _K_UNION
-                        ):
-                            raise NotImplementedError(
-                                f"ORC column {c!r}: list<struct> fields "
-                                "must be scalar"
-                            )
-                    plan[c] = {
-                        "kind": kind, "cid": cid, "children": [elem_id],
-                        "elem_struct": (elem_id, gnames, gkids),
-                    }
-                elif ek == _K_LIST:
-                    # list<list<scalar>> (round 11): the inner LIST node
-                    # carries its own PRESENT/LENGTH over the outer
-                    # elements; its element column is a grandchild
-                    (g,) = _subtype_ids(types[elem_id])
-                    if types[g].get(1, 0) in (
-                        _K_LIST, _K_MAP, _K_STRUCT, _K_UNION
-                    ):
-                        raise NotImplementedError(
-                            f"ORC column {c!r}: list<list> elements must "
-                            "be scalar"
-                        )
-                    plan[c] = {
-                        "kind": kind, "cid": cid, "children": [elem_id, g],
-                        "elem_list": (elem_id, g),
-                    }
-                elif ek in (_K_MAP, _K_UNION):
-                    raise NotImplementedError(
-                        f"ORC column {c!r}: unsupported element nesting"
-                    )
-                else:
-                    plan[c] = {"kind": kind, "cid": cid, "children": [elem_id]}
-            elif kind == _K_STRUCT:
-                kids = _subtype_ids(types[cid])
-                fnames = [n.decode("utf-8") for n in _as_list(types[cid].get(3))]
-                list_kids: dict[int, int] = {}
-                extra: list[int] = []
-                for k in kids:
-                    kk = types[k].get(1, 0)
-                    if kk == _K_LIST:
-                        # struct<list<scalar>> field (round 11): the kid's
-                        # PRESENT/LENGTH cover the present struct rows; its
-                        # element column is a grandchild
-                        (g,) = _subtype_ids(types[k])
-                        if types[g].get(1, 0) in (
-                            _K_LIST, _K_MAP, _K_STRUCT, _K_UNION
-                        ):
-                            raise NotImplementedError(
-                                f"ORC column {c!r}: struct list fields "
-                                "must have scalar elements"
-                            )
-                        list_kids[k] = g
-                        extra.append(g)
-                    elif kk in (_K_MAP, _K_STRUCT, _K_UNION):
-                        raise NotImplementedError(
-                            f"ORC column {c!r}: only one level of nesting"
-                        )
-                plan[c] = {
-                    "kind": kind, "cid": cid, "children": kids + extra,
-                    "fields": fnames, "field_kids": kids,
-                    "list_kids": list_kids,
-                }
-            elif kind == _K_MAP:
-                # map<scalar,scalar> (round 11): parent LENGTH stream, two
-                # child columns (keys, values) each sized by the summed
-                # lengths — the LIST layout with two children. Round 12
-                # adds map<k, struct<scalars>> (the value STRUCT carries
-                # its own PRESENT over all entries; field leaves sized by
-                # the present entries) and map<k, list<scalar>> (the value
-                # LIST carries its own PRESENT + LENGTH over entries).
-                kid, vid = _subtype_ids(types[cid])
-                if types[kid].get(1, 0) in (
-                    _K_LIST, _K_MAP, _K_STRUCT, _K_UNION
-                ):
-                    raise NotImplementedError(
-                        f"ORC column {c!r}: map keys must be scalar"
-                    )
-                vk = types[vid].get(1, 0)
-                plan[c] = {"kind": kind, "cid": cid, "children": [kid, vid]}
-                if vk == _K_STRUCT:
-                    gkids = _subtype_ids(types[vid])
-                    gnames = [
-                        n.decode("utf-8")
-                        for n in _as_list(types[vid].get(3))
-                    ]
-                    for g in gkids:
-                        if types[g].get(1, 0) in (
-                            _K_LIST, _K_MAP, _K_STRUCT, _K_UNION
-                        ):
-                            raise NotImplementedError(
-                                f"ORC column {c!r}: map<struct> fields "
-                                "must be scalar"
-                            )
-                    plan[c]["children"] = [kid, vid] + gkids
-                    plan[c]["val_struct"] = (vid, gnames, gkids)
-                elif vk == _K_LIST:
-                    (g,) = _subtype_ids(types[vid])
-                    if types[g].get(1, 0) in (
-                        _K_LIST, _K_MAP, _K_STRUCT, _K_UNION
-                    ):
-                        raise NotImplementedError(
-                            f"ORC column {c!r}: map<list> elements must "
-                            "be scalar"
-                        )
-                    plan[c]["children"] = [kid, vid, g]
-                    plan[c]["val_list"] = (vid, g)
-                elif vk in (_K_MAP, _K_UNION):
-                    raise NotImplementedError(
-                        f"ORC column {c!r}: unsupported map value nesting"
-                    )
-            elif kind == _K_UNION:
-                raise NotImplementedError(
-                    f"ORC column kind {kind} not supported (union)"
-                )
-            else:
-                plan[c] = {"kind": kind, "cid": cid, "children": []}
-        except NotImplementedError:
-            # generic fallback (round 13): any composition the
-            # enumerated plans decline assembles through the
-            # recursive node reader — composite map keys since round
-            # 14 (lists of {"key","value"} structs) and UNION columns
-            # since round 15 (plain values per row, pyarrow-equal;
-            # fixtures staged by the in-container Java ORC writer).
-            plan[c] = {
-                "kind": "generic", "cid": cid,
-                "children": _all_subtree_ids(types, cid)[1:],
-            }
-
+    cids = {c: leaves[c]["col_id"] for c in columns}
+    wanted = {
+        k for cid in cids.values() for k in _all_subtree_ids(types, cid)
+    }
     out: dict[str, list] = {c: [] for c in columns}
     for si, st in enumerate(stripes):
         if _keep is not None and not _keep[si]:
@@ -988,12 +832,6 @@ def read_orc_nested_columns(
         sf = _pb_map(_decompress_stream(codec, sf_raw))
         streams = [_pb_map(s) for s in _as_list(sf.get(1))]
         encodings = [_pb_map(e) for e in _as_list(sf.get(2))]
-        wanted: set[int] = set()
-        for p in plan.values():
-            wanted.add(p["cid"])
-            wanted.update(p["children"])
-            if "elem_struct" in p:
-                wanted.update(p["elem_struct"][2])
         pos = offset
         located: dict[tuple[int, int], bytes] = {}
         for s in streams:
@@ -1003,284 +841,12 @@ def read_orc_nested_columns(
             ):
                 located[(col, skind)] = buf[pos : pos + ln]
             pos += ln
-
-        def dec(cid2, count):
-            e = encodings[cid2] if cid2 < len(encodings) else {}
-            return _decode_column(
-                located, codec, cid2, types[cid2].get(1, 0),
-                e.get(1, 0), e.get(2, 0), count,
-            )
-
         for c in columns:
-            p = plan[c]
-            cid = p["cid"]
-            if p["kind"] == _K_LIST:
-                # the parent's LENGTH stream is integer RLE too: an
-                # 0.11-era DIRECT/DICTIONARY encoding carries RLEv1
-                # (round-12: decoded via _int_rle, formerly declined)
-                enc_parent = (
-                    encodings[cid] if cid < len(encodings) else {}
-                ).get(1, 0)
-                praw = located.get((cid, _S_PRESENT))
-                present = (
-                    _bool_rle(_decompress_stream(codec, praw), n_rows)
-                    if praw is not None
-                    else [True] * n_rows
+            out[c].extend(
+                _read_generic_node(
+                    cids[c], n_rows, types, located, encodings, codec
                 )
-                n_present = sum(present)
-                lraw = located.get((cid, _S_LENGTH))
-                lengths = _int_rle(
-                    _decompress_stream(codec, lraw) if lraw else b"",
-                    n_present,
-                    signed=False,
-                    enc=enc_parent,
-                )
-                n_elems = sum(lengths)
-                if "elem_list" in p:
-                    # list<list>: the inner LIST node's PRESENT covers
-                    # all outer elements; its LENGTH covers the present
-                    # inner lists; the grandchild leaf is sized by the
-                    # summed inner lengths. 0.11 RLEv1 declines like
-                    # every other integer-RLE stream.
-                    inner_id, g = p["elem_list"]
-                    ienc = (
-                        encodings[inner_id]
-                        if inner_id < len(encodings)
-                        else {}
-                    ).get(1, 0)
-                    ipraw = located.get((inner_id, _S_PRESENT))
-                    ipresent = (
-                        _bool_rle(
-                            _decompress_stream(codec, ipraw), n_elems
-                        )
-                        if ipraw is not None
-                        else [True] * n_elems
-                    )
-                    ilraw = located.get((inner_id, _S_LENGTH))
-                    ilengths = _int_rle(
-                        _decompress_stream(codec, ilraw) if ilraw else b"",
-                        sum(ipresent),
-                        signed=False,
-                        enc=ienc,
-                    )
-                    grand = dec(g, sum(ilengths))
-                    elems = []
-                    li = ei = 0
-                    for ipr in ipresent:
-                        if not ipr:
-                            elems.append(None)
-                            continue
-                        ln = ilengths[li]
-                        li += 1
-                        elems.append(grand[ei : ei + ln])
-                        ei += ln
-                elif "elem_struct" in p:
-                    # list<struct>: assemble the element dicts first —
-                    # the element STRUCT column carries its own PRESENT
-                    # over all n_elems positions; its field columns are
-                    # sized by the PRESENT elements
-                    elem_id, gnames, gkids = p["elem_struct"]
-                    eraw = located.get((elem_id, _S_PRESENT))
-                    epresent = (
-                        _bool_rle(
-                            _decompress_stream(codec, eraw), n_elems
-                        )
-                        if eraw is not None
-                        else [True] * n_elems
-                    )
-                    n_ep = sum(epresent)
-                    fields = {
-                        f: dec(g, n_ep) for f, g in zip(gnames, gkids)
-                    }
-                    elems = []
-                    j = 0
-                    for epr in epresent:
-                        if not epr:
-                            elems.append(None)
-                            continue
-                        elems.append({f: fields[f][j] for f in gnames})
-                        j += 1
-                else:
-                    elems = dec(p["children"][0], n_elems)
-                rows: list = []
-                li = 0
-                ei = 0
-                for pr in present:
-                    if not pr:
-                        rows.append(None)
-                        continue
-                    ln = lengths[li]
-                    li += 1
-                    rows.append(elems[ei : ei + ln])
-                    ei += ln
-                out[c].extend(rows)
-            elif p["kind"] == _K_MAP:
-                enc_parent = (
-                    encodings[cid] if cid < len(encodings) else {}
-                ).get(1, 0)
-                praw = located.get((cid, _S_PRESENT))
-                present = (
-                    _bool_rle(_decompress_stream(codec, praw), n_rows)
-                    if praw is not None
-                    else [True] * n_rows
-                )
-                n_present = sum(present)
-                lraw = located.get((cid, _S_LENGTH))
-                lengths = _int_rle(
-                    _decompress_stream(codec, lraw) if lraw else b"",
-                    n_present,
-                    signed=False,
-                    enc=enc_parent,
-                )
-                total = sum(lengths)
-                kid = p["children"][0]
-                keys = dec(kid, total)
-                if "val_struct" in p:
-                    # map<k, struct>: the value STRUCT's PRESENT covers
-                    # all entries; field leaves sized by present entries
-                    vid, gnames, gkids = p["val_struct"]
-                    vraw = located.get((vid, _S_PRESENT))
-                    vpresent = (
-                        _bool_rle(_decompress_stream(codec, vraw), total)
-                        if vraw is not None
-                        else [True] * total
-                    )
-                    n_vp = sum(vpresent)
-                    fields = {
-                        f: dec(g, n_vp) for f, g in zip(gnames, gkids)
-                    }
-                    vals = []
-                    j = 0
-                    for vp in vpresent:
-                        if not vp:
-                            vals.append(None)
-                            continue
-                        vals.append({f: fields[f][j] for f in gnames})
-                        j += 1
-                elif "val_list" in p:
-                    # map<k, list>: the value LIST's PRESENT + LENGTH
-                    # cover the entries; element leaf by summed lengths
-                    vid, g = p["val_list"]
-                    venc = (
-                        encodings[vid] if vid < len(encodings) else {}
-                    ).get(1, 0)
-                    vraw = located.get((vid, _S_PRESENT))
-                    vpresent = (
-                        _bool_rle(_decompress_stream(codec, vraw), total)
-                        if vraw is not None
-                        else [True] * total
-                    )
-                    vlraw = located.get((vid, _S_LENGTH))
-                    vlengths = _int_rle(
-                        _decompress_stream(codec, vlraw) if vlraw else b"",
-                        sum(vpresent),
-                        signed=False,
-                        enc=venc,
-                    )
-                    elems = dec(g, sum(vlengths))
-                    vals = []
-                    li2 = ei2 = 0
-                    for vp in vpresent:
-                        if not vp:
-                            vals.append(None)
-                            continue
-                        ln2 = vlengths[li2]
-                        li2 += 1
-                        vals.append(elems[ei2 : ei2 + ln2])
-                        ei2 += ln2
-                else:
-                    vals = dec(p["children"][1], total)
-                rows = []
-                li = 0
-                ei = 0
-                for pr in present:
-                    if not pr:
-                        rows.append(None)
-                        continue
-                    ln = lengths[li]
-                    li += 1
-                    rows.append(
-                        dict(zip(keys[ei : ei + ln], vals[ei : ei + ln]))
-                    )
-                    ei += ln
-                out[c].extend(rows)
-            elif p["kind"] == _K_STRUCT:
-                praw = located.get((cid, _S_PRESENT))
-                present = (
-                    _bool_rle(_decompress_stream(codec, praw), n_rows)
-                    if praw is not None
-                    else [True] * n_rows
-                )
-                n_present = sum(present)
-                list_kids = p.get("list_kids", {})
-
-                def _dec_field(k, count):
-                    if k not in list_kids:
-                        return dec(k, count)
-                    # struct<list> field: kid PRESENT over the present
-                    # struct rows, LENGTH over its present count, the
-                    # element column sized by the summed lengths. The
-                    # kid's LENGTH stream is integer RLE — dispatched
-                    # by encoding version like every other site
-                    # (round-12: RLEv1 decoded, formerly declined)
-                    kenc = (
-                        encodings[k] if k < len(encodings) else {}
-                    ).get(1, 0)
-                    kpraw = located.get((k, _S_PRESENT))
-                    kpresent = (
-                        _bool_rle(_decompress_stream(codec, kpraw), count)
-                        if kpraw is not None
-                        else [True] * count
-                    )
-                    klraw = located.get((k, _S_LENGTH))
-                    klengths = _int_rle(
-                        _decompress_stream(codec, klraw) if klraw else b"",
-                        sum(kpresent),
-                        signed=False,
-                        enc=kenc,
-                    )
-                    elems = dec(list_kids[k], sum(klengths))
-                    vals = []
-                    li = ei = 0
-                    for kpr in kpresent:
-                        if not kpr:
-                            vals.append(None)
-                            continue
-                        ln = klengths[li]
-                        li += 1
-                        vals.append(elems[ei : ei + ln])
-                        ei += ln
-                    return vals
-
-                fields = {
-                    f: _dec_field(k, n_present)
-                    for f, k in zip(
-                        p["fields"], p.get("field_kids", p["children"])
-                    )
-                }
-                rows = []
-                j = 0
-                for pr in present:
-                    if not pr:
-                        rows.append(None)
-                        continue
-                    rows.append({f: fields[f][j] for f in p["fields"]})
-                    j += 1
-                out[c].extend(rows)
-            elif p["kind"] == "generic":
-                out[c].extend(
-                    _read_generic_node(
-                        cid, n_rows, types, located, encodings, codec
-                    )
-                )
-            else:
-                e = encodings[cid] if cid < len(encodings) else {}
-                out[c].extend(
-                    _decode_column(
-                        located, codec, cid, p["kind"],
-                        e.get(1, 0), e.get(2, 0), n_rows,
-                    )
-                )
+            )
     return out
 
 

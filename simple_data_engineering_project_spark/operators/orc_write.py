@@ -324,78 +324,13 @@ def _kind_of(ddl: str) -> tuple[int, int | None, int | None]:
     raise NotImplementedError(f"type {ddl} not writable")
 
 
-def _struct_fields_of(body: str) -> list[tuple[str, tuple]]:
-    fields = []
-    for part in _split_top(body):
-        fname, _, t = part.partition(":")
-        fields.append((fname.strip(), _kind_of(t.strip().lower())))
-    return fields
-
-
-def _plan_of(ddl: str):
-    """('scalar'|'list', (kind, prec, scale)),
-    ('struct'|'list_struct', [(fname, (kind, prec, scale)), ...]) or
-    ('map', (key kps, value kps)), ('map_struct', (key kps,
-    fields)) or ('map_list', (key kps, elem kps)) — the shapes
-    orc_data.read_orc_nested_columns assembles (round 11 adds
-    list<struct<scalars>> and map<scalar,scalar>; round 12 adds map
-    values that are structs or lists) — the ENUMERATED fast paths.
-    Deeper compositions no longer decline here: build_orc_bytes falls
-    through to :func:`_parse_ddl_tree` + the recursive node emitter
-    (round 13)."""
-    s = ddl.strip()
-    low = s.lower()
-    if low.startswith("array<") and s.endswith(">"):
-        elem = s[6:-1].strip()
-        if elem.lower().startswith("struct<") and elem.endswith(">"):
-            return ("list_struct", _struct_fields_of(elem[7:-1]))
-        if elem.lower().startswith("array<") and elem.endswith(">"):
-            return ("list_list", _kind_of(elem[6:-1].strip().lower()))
-        return ("list", _kind_of(elem.lower()))
-    if low.startswith("map<") and s.endswith(">"):
-        kv = _split_top(s[4:-1])
-        if len(kv) != 2:
-            raise NotImplementedError(f"type {ddl} not writable")
-        vraw = kv[1].strip()
-        vlow = vraw.lower()
-        if vlow.startswith("struct<") and vraw.endswith(">"):
-            # map<k, struct<scalars>> (round 12)
-            return ("map_struct", (_kind_of(kv[0].strip().lower()),
-                                   _struct_fields_of(vraw[7:-1])))
-        if vlow.startswith("array<") and vraw.endswith(">"):
-            # map<k, array<scalar>> (round 12)
-            return ("map_list", (_kind_of(kv[0].strip().lower()),
-                                 _kind_of(vraw[6:-1].strip().lower())))
-        return ("map", (_kind_of(kv[0].strip().lower()),
-                        _kind_of(vlow)))
-    if low.startswith("struct<") and s.endswith(">"):
-        body = s[7:-1]
-        if "array<" in body.lower():
-            # struct with mixed scalar/list fields (round 11)
-            fields = []
-            for part in _split_top(body):
-                fname, _, t = part.partition(":")
-                t = t.strip()
-                if t.lower().startswith("array<") and t.endswith(">"):
-                    fields.append(
-                        (fname.strip(),
-                         ("list", _kind_of(t[6:-1].strip().lower())))
-                    )
-                else:
-                    fields.append(
-                        (fname.strip(), ("scalar", _kind_of(t.lower())))
-                    )
-            return ("struct_mixed", fields)
-        return ("struct", _struct_fields_of(body))
-    return ("scalar", _kind_of(low))
-
-
 def _parse_ddl_tree(ddl: str):
-    """Recursive type tree for the GENERIC nested writer (round 13,
-    the parquet_write twin): ``('scalar', kps)`` / ``('list',
-    subtree)`` / ``('map', (key_kps, value_subtree))`` / ``('struct',
-    [(name, subtree), ...])`` — unbounded depth. Map keys must be
-    scalar (the ORC MAP layout)."""
+    """Type tree of one column's DDL type (the parquet_write twin):
+    ``('scalar', kps)`` / ``('list', subtree)`` / ``('map', (key_kps,
+    value_subtree))`` / ``('struct', [(name, subtree), ...])`` /
+    ``('union', [subtree, ...])`` — unbounded depth. A ``scalar`` root
+    is a flat column; any other root is written by the recursive node
+    emitter. Map keys must be scalar (the ORC MAP layout)."""
     s = ddl.strip()
     low = s.lower()
     if low.startswith("array<") and s.endswith(">"):
@@ -547,43 +482,36 @@ def build_orc_bytes(
                 raise ValueError(f"bloom column {c!r} not in columns")
     names = list(columns)
     num_rows = len(columns[names[0]]) if names else 0
+    # one type tree per column; type ids are handed out in pre-order
+    # (0 = the root struct)
     plans: dict[str, tuple] = {}
     ids: dict[str, int] = {}
     next_id = 1
     for c in names:
-        try:
-            plans[c] = _plan_of(ddl_types[c])
-        except NotImplementedError:
-            # generic fallback (round 13): any composition the
-            # enumerated plans decline writes through the recursive
-            # node emitter
-            plans[c] = ("nested", _parse_ddl_tree(ddl_types[c]))
+        plans[c] = _parse_ddl_tree(ddl_types[c])
         ids[c] = next_id
-        pk, detail = plans[c]
-        if pk == "struct_mixed":
-            next_id += 1 + sum(
-                2 if fk == "list" else 1 for _fn, (fk, _k) in detail
-            )
-        elif pk == "map_struct":  # map + key + value struct + fields
-            next_id += 3 + len(detail[1])
-        elif pk == "nested":
-            next_id += _tree_node_count(detail)
-        else:
-            next_id += {
-                "scalar": 1,
-                "list": 2,
-                "list_list": 3,
-                "struct": 1 + len(detail),
-                "list_struct": 2 + len(detail),
-                "map": 3,
-                "map_list": 4,  # map + key + value list + element
-            }[pk]
+        next_id += _tree_node_count(plans[c])
         if len(columns[c]) != num_rows:
             raise ValueError("ragged columns")
     n_nodes = next_id - 1
 
     def frame(raw: bytes) -> bytes:
         return _frame(raw, codec_id, block_size)
+
+    def assemble_stripe_footer(meta, encs) -> bytes:
+        sfb = bytearray()
+        for col, skind, ln in meta:
+            sfb += _pb_bytes(
+                1,
+                _pb_varint(1, skind) + _pb_varint(2, col) + _pb_varint(3, ln),
+            )
+        for enc, dsize in encs:
+            emsg = _pb_varint(1, enc)
+            if dsize is not None:
+                emsg += _pb_varint(2, dsize)
+            sfb += _pb_bytes(2, emsg)
+        sfb += _pb_bytes(3, b"UTC")  # writerTimezone
+        return frame(bytes(sfb))
 
     def emit_stripe(start: int, n_s: int):
         """(bodies, framed stripe footer, per-column-id stats dicts)
@@ -832,10 +760,11 @@ def build_orc_bytes(
             return rows_p
 
         def emit_node(idx: int, vals: list, tree) -> int:
-            """Recursive stripe emission for a generic nested column
-            (round 13): returns the next free type id. Streams,
-            encodings and statistics land in pre-order = type-id
-            order, the invariant the footer builders rely on."""
+            """Stripe emission for one column's type tree (a scalar
+            root is a flat column): returns the next free type id.
+            Streams, encodings and statistics land in pre-order =
+            type-id order, which the stripe footer and file
+            statistics rely on."""
             nk, nd = tree
             if nk == "scalar":
                 emit_leaf(idx, vals, nd)
@@ -941,177 +870,8 @@ def build_orc_bytes(
             return kid
 
         for c in names:
-            pkind, detail = plans[c]
-            vals = columns[c][start : start + n_s]
-            idx = ids[c]
-            if pkind == "scalar":
-                emit_leaf(idx, vals, detail)
-            elif pkind == "nested":
-                emit_node(idx, vals, detail)
-            elif pkind == "list_list":
-                # outer LENGTH over rows, inner LENGTH over the outer
-                # elements, element leaf over the flattened values
-                rows_p = emit_lengths(idx, vals)
-                inners = [e for v in rows_p for e in v]
-                inners_p = emit_lengths(idx + 1, inners)
-                emit_leaf(
-                    idx + 2, [e for v in inners_p for e in v], detail
-                )
-            elif pkind == "list_struct":
-                # LIST parent → element STRUCT (own PRESENT over all
-                # elements) → field leaves over present elements —
-                # the layout orc_data's nested reader assembles
-                rows_p = emit_lengths(idx, vals)
-                elems = [e for v in rows_p for e in v]
-                epresent = [e is not None for e in elems]
-                emit_present(idx + 1, epresent)
-                encodings.append((0, None))  # struct: DIRECT
-                stats.append({
-                    "n": sum(epresent),
-                    "has_null": not all(epresent),
-                    "kind": None,
-                    "present": [],
-                })
-                elems_p = [e for e in elems if e is not None]
-                for j, (fname, kps) in enumerate(detail):
-                    fvals = [
-                        e.get(fname) if isinstance(e, dict)
-                        else getattr(e, fname)
-                        for e in elems_p
-                    ]
-                    emit_leaf(idx + 2 + j, fvals, kps)
-            elif pkind in ("map", "map_struct", "map_list"):
-                # validate cell shape up front (parquet_write twin,
-                # round-12 advice fix): a list-of-pairs row or a None
-                # key must decline descriptively, not die on a bare
-                # AttributeError/TypeError mid-encode
-                for v in vals:
-                    if v is None:
-                        continue
-                    if not hasattr(v, "keys"):
-                        raise ValueError(
-                            "map cell must be a dict/mapping, got "
-                            f"{type(v).__name__}"
-                        )
-                    if any(k is None for k in v.keys()):
-                        raise ValueError(
-                            "map key is None but ORC map keys are "
-                            "non-nullable in this writer"
-                        )
-                rows_p = emit_lengths(idx, vals)
-                emit_leaf(
-                    idx + 1,
-                    [k for v in rows_p for k in v.keys()],
-                    detail[0],
-                )
-                entries = [x for v in rows_p for x in v.values()]
-                if pkind == "map":
-                    emit_leaf(idx + 2, entries, detail[1])
-                elif pkind == "map_struct":
-                    # value STRUCT: own PRESENT over all entries; field
-                    # leaves over the present entries (round 12 — the
-                    # list_struct layout under a MAP parent)
-                    epresent = [e is not None for e in entries]
-                    emit_present(idx + 2, epresent)
-                    encodings.append((0, None))  # struct: DIRECT
-                    stats.append({
-                        "n": sum(epresent),
-                        "has_null": not all(epresent),
-                        "kind": None,
-                        "present": [],
-                    })
-                    entries_p = [e for e in entries if e is not None]
-                    for j, (fname, kps) in enumerate(detail[1]):
-                        fvals = [
-                            e.get(fname) if isinstance(e, dict)
-                            else getattr(e, fname)
-                            for e in entries_p
-                        ]
-                        emit_leaf(idx + 3 + j, fvals, kps)
-                else:  # map_list
-                    # value LIST: own PRESENT + LENGTH over entries;
-                    # element leaf over the flattened values (round 12)
-                    inners_p = emit_lengths(idx + 2, entries)
-                    emit_leaf(
-                        idx + 3,
-                        [e for v in inners_p for e in v],
-                        detail[1],
-                    )
-            elif pkind == "list":
-                # LIST parent: PRESENT (+) LENGTH = unsigned RLEv2
-                # per-present-row element counts; the child column
-                # carries the flattened elements (orc_data's nested
-                # reader slices it back by the summed lengths)
-                rows_p = emit_lengths(idx, vals)
-                emit_leaf(idx + 1, [e for v in rows_p for e in v], detail)
-            elif pkind == "struct_mixed":
-                # STRUCT whose fields mix scalars and list<scalar>
-                # (round 11): list fields get their own PRESENT over
-                # the present struct rows + LENGTH + element leaf
-                present = [v is not None for v in vals]
-                emit_present(idx, present)
-                encodings.append((0, None))  # DIRECT
-                stats.append({
-                    "n": sum(present),
-                    "has_null": not all(present),
-                    "kind": None,
-                    "present": [],
-                })
-                rows_p = [v for v in vals if v is not None]
-                kid = idx + 1
-                for fname, (fkind, kps) in detail:
-                    fvals = [
-                        v.get(fname) if isinstance(v, dict)
-                        else getattr(v, fname)
-                        for v in rows_p
-                    ]
-                    if fkind == "scalar":
-                        emit_leaf(kid, fvals, kps)
-                        kid += 1
-                    else:
-                        frows_p = emit_lengths(kid, fvals)
-                        emit_leaf(
-                            kid + 1,
-                            [e for v in frows_p for e in v],
-                            kps,
-                        )
-                        kid += 2
-            else:  # struct
-                # STRUCT parent: PRESENT only; each field is a child
-                # column holding one entry per PRESENT struct row
-                present = [v is not None for v in vals]
-                emit_present(idx, present)
-                encodings.append((0, None))  # DIRECT
-                stats.append({
-                    "n": sum(present),
-                    "has_null": not all(present),
-                    "kind": None,
-                    "present": [],
-                })
-                rows_p = [v for v in vals if v is not None]
-                for j, (fname, kps) in enumerate(detail):
-                    fvals = [
-                        v.get(fname) if isinstance(v, dict)
-                        else getattr(v, fname)
-                        for v in rows_p
-                    ]
-                    emit_leaf(idx + 1 + j, fvals, kps)
-
-        stripe_footer = bytearray()
-        for col, skind, ln in stream_meta:
-            msg = (
-                _pb_varint(1, skind)
-                + _pb_varint(2, col)
-                + _pb_varint(3, ln)
-            )
-            stripe_footer += _pb_bytes(1, msg)
-        for enc, dsize in encodings:
-            emsg = _pb_varint(1, enc)
-            if dsize is not None:
-                emsg += _pb_varint(2, dsize)
-            stripe_footer += _pb_bytes(2, emsg)
-        stripe_footer += _pb_bytes(3, b"UTC")  # writerTimezone
-        return bodies, frame(bytes(stripe_footer)), stats
+            emit_node(ids[c], columns[c][start : start + n_s], plans[c])
+        return bodies, assemble_stripe_footer(stream_meta, encodings), stats
 
     index_mode = bloom_cols is not None
     if index_mode:
@@ -1130,21 +890,6 @@ def build_orc_bytes(
                     "ORC bloom filters are written for int-family and "
                     f"string columns; {c!r} is {ddl_types[c]!r}"
                 )
-
-    def assemble_stripe_footer(meta, encs) -> bytes:
-        sfb = bytearray()
-        for col, skind, ln in meta:
-            sfb += _pb_bytes(
-                1,
-                _pb_varint(1, skind) + _pb_varint(2, col) + _pb_varint(3, ln),
-            )
-        for enc, dsize in encs:
-            emsg = _pb_varint(1, enc)
-            if dsize is not None:
-                emsg += _pb_varint(2, dsize)
-            sfb += _pb_bytes(2, emsg)
-        sfb += _pb_bytes(3, b"UTC")  # writerTimezone
-        return frame(bytes(sfb))
 
     body = bytearray(_MAGIC)
     rows_per = stripe_rows or max(num_rows, 1)
@@ -1252,112 +997,7 @@ def build_orc_bytes(
         return [_pb_bytes(4, t)] + subs, kid
 
     for c in names:
-        pkind, detail = plans[c]
-        if pkind == "scalar":
-            types.append(_pb_bytes(4, _scalar_type_pb(detail)))
-        elif pkind == "nested":
-            msgs, _nxt = _tree_types(detail, ids[c])
-            types.extend(msgs)
-        elif pkind == "list":
-            t = _pb_varint(1, 10)  # LIST
-            t += _pb_bytes(2, _varint(ids[c] + 1))
-            types.append(_pb_bytes(4, t))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail)))
-        elif pkind == "list_list":
-            t = _pb_varint(1, 10)  # LIST
-            t += _pb_bytes(2, _varint(ids[c] + 1))
-            types.append(_pb_bytes(4, t))
-            t = _pb_varint(1, 10)  # inner LIST
-            t += _pb_bytes(2, _varint(ids[c] + 2))
-            types.append(_pb_bytes(4, t))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail)))
-        elif pkind == "list_struct":
-            t = _pb_varint(1, 10)  # LIST
-            t += _pb_bytes(2, _varint(ids[c] + 1))
-            types.append(_pb_bytes(4, t))
-            st = _pb_varint(1, _K_STRUCT)
-            st += _pb_bytes(
-                2,
-                b"".join(
-                    _varint(ids[c] + 2 + j) for j in range(len(detail))
-                ),
-            )
-            for fname, _kps in detail:
-                st += _pb_bytes(3, fname.encode("utf-8"))
-            types.append(_pb_bytes(4, st))
-            for _fname, kps in detail:
-                types.append(_pb_bytes(4, _scalar_type_pb(kps)))
-        elif pkind == "map":
-            t = _pb_varint(1, 11)  # MAP
-            t += _pb_bytes(
-                2, _varint(ids[c] + 1) + _varint(ids[c] + 2)
-            )
-            types.append(_pb_bytes(4, t))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail[0])))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail[1])))
-        elif pkind == "map_struct":
-            t = _pb_varint(1, 11)  # MAP
-            t += _pb_bytes(
-                2, _varint(ids[c] + 1) + _varint(ids[c] + 2)
-            )
-            types.append(_pb_bytes(4, t))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail[0])))
-            st = _pb_varint(1, _K_STRUCT)
-            st += _pb_bytes(
-                2,
-                b"".join(
-                    _varint(ids[c] + 3 + j)
-                    for j in range(len(detail[1]))
-                ),
-            )
-            for fname, _kps in detail[1]:
-                st += _pb_bytes(3, fname.encode("utf-8"))
-            types.append(_pb_bytes(4, st))
-            for _fname, kps in detail[1]:
-                types.append(_pb_bytes(4, _scalar_type_pb(kps)))
-        elif pkind == "map_list":
-            t = _pb_varint(1, 11)  # MAP
-            t += _pb_bytes(
-                2, _varint(ids[c] + 1) + _varint(ids[c] + 2)
-            )
-            types.append(_pb_bytes(4, t))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail[0])))
-            lt = _pb_varint(1, 10)  # LIST
-            lt += _pb_bytes(2, _varint(ids[c] + 3))
-            types.append(_pb_bytes(4, lt))
-            types.append(_pb_bytes(4, _scalar_type_pb(detail[1])))
-        elif pkind == "struct_mixed":
-            kid_ids = []
-            kid = ids[c] + 1
-            for _fname, (fk, _k) in detail:
-                kid_ids.append(kid)
-                kid += 2 if fk == "list" else 1
-            t = _pb_varint(1, _K_STRUCT)
-            t += _pb_bytes(2, b"".join(_varint(k) for k in kid_ids))
-            for fname, _f in detail:
-                t += _pb_bytes(3, fname.encode("utf-8"))
-            types.append(_pb_bytes(4, t))
-            for (fname, (fk, kps)), k in zip(detail, kid_ids):
-                if fk == "scalar":
-                    types.append(_pb_bytes(4, _scalar_type_pb(kps)))
-                else:
-                    lt = _pb_varint(1, 10)  # LIST
-                    lt += _pb_bytes(2, _varint(k + 1))
-                    types.append(_pb_bytes(4, lt))
-                    types.append(_pb_bytes(4, _scalar_type_pb(kps)))
-        else:
-            t = _pb_varint(1, _K_STRUCT)
-            t += _pb_bytes(
-                2,
-                b"".join(
-                    _varint(ids[c] + 1 + j) for j in range(len(detail))
-                ),
-            )
-            for fname, _kps in detail:
-                t += _pb_bytes(3, fname.encode("utf-8"))
-            types.append(_pb_bytes(4, t))
-            for _fname, kps in detail:
-                types.append(_pb_bytes(4, _scalar_type_pb(kps)))
+        types.extend(_tree_types(plans[c], ids[c])[0])
 
     # file-level statistics (Footer field 7): the per-stripe stats
     # merged column-wise

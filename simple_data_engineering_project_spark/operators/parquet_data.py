@@ -18,16 +18,10 @@ pyarrow on the worker:
   booleans, length-prefixed byte arrays) or PLAIN_/RLE_DICTIONARY
   (one leading bit-width byte, then RLE/bit-packed hybrid indices into
   the chunk's PLAIN dictionary page);
-- definition levels re-seat nulls; repetition levels (round 10) drive
-  Dremel record assembly for ONE level of nesting — ``array<primitive>``
-  (3-level LIST and top-level repeated-primitive shapes) and
-  ``struct<primitive,...>`` — via :func:`read_parquet_nested_bytes`;
-  round 11 adds ``list<struct<scalars>>``, ``map<k,v>``,
-  ``struct<list>`` and ``list<list<scalar>>``; round 12 adds map
-  values that are themselves structs or lists (``map<k,struct>``,
-  ``map<k,list<scalar>>``); deeper shapes (three-deep lists, nested
-  map values beyond those, unions) decline loudly and remain the JVM
-  reader's job.
+- definition levels re-seat nulls in flat columns; for every other
+  column, repetition and definition levels drive one Dremel record
+  assembly (Melnik et al., VLDB 2010) that handles LIST, MAP and
+  STRUCT composed to any depth — see :func:`read_parquet_nested_bytes`.
 
 Honesty per the repo rule: every path is cross-validated against a
 reference READER in-container — pyarrow reads the same bytes in the
@@ -329,9 +323,11 @@ def _plain_values(data: bytes, pos: int, ptype: int, count: int, type_length: in
 
 def _parse_schema(meta: dict) -> dict[str, dict]:
     """Flatten FileMetaData.schema (field 2, depth-first SchemaElement
-    list) into {leaf_name: {type, type_length, max_def, max_rep}}.
-    Only flat schemas (root + leaves) keep max_rep 0; nested leaves
-    record their depth so readers can refuse them loudly."""
+    list) into {dotted leaf path: {type, type_length, max_def, max_rep,
+    converted, levels}}. ``levels`` holds the cumulative (def, rep,
+    repetition, converted type) after each path element; the generic
+    assembler builds a column's node tree from it, and a flat column
+    is a single leaf with max_rep 0."""
     elems = meta.get(2, [])
     if not elems:
         raise ValueError("parquet footer carries no schema")
@@ -353,9 +349,9 @@ def _parse_schema(meta: dict) -> dict[str, dict]:
             path = f"{prefix}{name}"
             kids = el.get(5, 0)
             # cumulative (def, rep, repetition_code, converted_type)
-            # after each path element — the nested assemblers derive
-            # their null/empty thresholds from the first three; the
-            # generic assembler shapes LIST/MAP values from the fourth
+            # after each path element — the generic assembler's node
+            # thresholds come from the first three, LIST/MAP shaping
+            # from the fourth
             lv = levels + [(d, r, rep, el.get(6))]
             if kids:
                 walk(kids, d, r, f"{path}.", lv)
@@ -436,7 +432,7 @@ def read_column_chunk(buf: bytes, col_meta: dict, leaf: dict) -> list:
     parquet.thrift): 1=type 4=codec 5=num_values 9=data_page_offset
     11=dictionary_page_offset. ``leaf`` comes from :func:`_parse_schema`.
     Nested (repeated) leaves go through :func:`read_chunk_levels` +
-    the assemblers instead.
+    :func:`_assemble_generic` instead.
     """
     if leaf["max_rep"] > 0:
         raise NotImplementedError("nested (repeated) columns not supported")
@@ -545,366 +541,6 @@ def read_chunk_levels(
     return out_reps[:num_values], out_defs[:num_values], out
 
 
-def _assemble_list(reps, defs, present, leaf) -> list:
-    """Dremel record assembly for ONE repeated level: a list column
-    whose element is a primitive leaf (the standard 3-level
-    ``col.list.element`` shape Spark/pyarrow write, and a bare
-    top-level repeated primitive). Thresholds come from the
-    schema's cumulative levels: definition below the enclosing
-    group's level means the list object itself is NULL, below the
-    repeated group's level means present-but-empty, below max_def
-    means a null element."""
-    levels = leaf["levels"]
-    rep_idx = next(
-        i for i, lv in enumerate(levels) if lv[2] == 2
-    )
-    d_rep = levels[rep_idx][0]
-    d_outer = levels[rep_idx - 1][0] if rep_idx > 0 else 0
-    max_def = leaf["max_def"]
-    rows: list = []
-    cur: list | None = None
-    it = iter(present)
-    for r, d in zip(reps, defs):
-        if r == 0:
-            if d < d_outer:
-                rows.append(None)
-                cur = None
-                continue
-            if d < d_rep:
-                rows.append([])
-                cur = None
-                continue
-            cur = []
-            rows.append(cur)
-        elif cur is None:
-            raise ValueError(
-                "repetition level continues a null/empty list"
-            )
-        cur.append(next(it) if d == max_def else None)
-    return rows
-
-
-def _assemble_list_list(reps, defs, present, leaf) -> list:
-    """Dremel assembly for TWO repeated levels — list<list<scalar>>
-    (round 11): the standard shape nests a second 3-level LIST as the
-    outer element (c.list.element.list.element, max_rep 2). Thresholds
-    from the cumulative levels: d < d_outer → null outer list,
-    < d_rep1 → empty outer, < d_elem → null inner list, < d_rep2 →
-    empty inner, < max_def → null element."""
-    lv = leaf["levels"]
-    d_outer, d_rep1, d_elem, d_rep2 = lv[0][0], lv[1][0], lv[2][0], lv[3][0]
-    max_def = leaf["max_def"]
-    rows: list = []
-    outer: list | None = None
-    inner: list | None = None
-    it = iter(present)
-    for r, d in zip(reps, defs):
-        open_inner = True
-        if r == 0:
-            if d < d_outer:
-                rows.append(None)
-                outer = inner = None
-                continue
-            if d < d_rep1:
-                rows.append([])
-                outer = inner = None
-                continue
-            outer = []
-            rows.append(outer)
-        elif r == 2:
-            open_inner = False
-        if outer is None or (not open_inner and inner is None):
-            raise ValueError("repetition level continues a null/empty list")
-        if open_inner:
-            if d < d_elem:
-                outer.append(None)
-                inner = None
-                continue
-            if d < d_rep2:
-                outer.append([])
-                inner = None
-                continue
-            inner = []
-            outer.append(inner)
-        inner.append(next(it) if d == max_def else None)
-    return rows
-
-
-_STRUCT_NULL = object()  # sentinel: the ENCLOSING struct row is null
-
-
-def _assemble_list_field(reps, defs, present, max_def, d_struct, d_outer, d_rep):
-    """Per-row values of ONE list-typed struct field: _STRUCT_NULL when
-    the enclosing struct is null (d < d_struct), None when the field
-    itself is null, [] when empty, else the element list."""
-    rows: list = []
-    cur: list | None = None
-    it = iter(present)
-    for r, d in zip(reps, defs):
-        if r == 0:
-            if d < d_struct:
-                rows.append(_STRUCT_NULL)
-                cur = None
-                continue
-            if d < d_outer:
-                rows.append(None)
-                cur = None
-                continue
-            if d < d_rep:
-                rows.append([])
-                cur = None
-                continue
-            cur = []
-            rows.append(cur)
-        elif cur is None:
-            raise ValueError("repetition level continues a null/empty list")
-        cur.append(next(it) if d == max_def else None)
-    return rows
-
-
-def _assemble_struct_mixed(scalar_parts: dict, list_parts: dict) -> list:
-    """One-level struct whose fields mix scalars and lists
-    (struct<f:scalar, v:array<scalar>> — round 11). ``scalar_parts``
-    maps field -> (defs, present, max_def, d_struct); ``list_parts``
-    maps field -> per-row values from :func:`_assemble_list_field`
-    (with _STRUCT_NULL marking null struct rows). Struct NULLness comes
-    from whichever family is available — all fields agree below the
-    struct's level."""
-    n_rows = None
-    null_row: list[bool] = []
-    seated: dict[str, list] = {}
-    for f, (defs, present, max_def, d_struct) in scalar_parts.items():
-        it = iter(present)
-        seated[f] = [next(it) if d == max_def else None for d in defs]
-        if n_rows is None:
-            n_rows = len(defs)
-            null_row = [d < d_struct for d in defs]
-    for f, rows in list_parts.items():
-        seated[f] = rows
-        if n_rows is None:
-            n_rows = len(rows)
-            null_row = [v is _STRUCT_NULL for v in rows]
-    names = list(scalar_parts) + list(list_parts)
-    out = []
-    for i in range(n_rows or 0):
-        if null_row[i]:
-            out.append(None)
-        else:
-            out.append({
-                f: (None if seated[f][i] is _STRUCT_NULL else seated[f][i])
-                for f in names
-            })
-    return out
-
-
-def _assemble_repeated_group(parts: dict[str, dict], as_map: bool) -> list:
-    """Dremel assembly for a repeated GROUP element — the shared shape
-    under ``list<struct<...>>`` (c.list.element.f leaves) and
-    ``map<k,v>`` (c.key_value.{key,value} leaves, the element group
-    being the pair itself). ``parts`` maps field name -> dict with
-    ``reps``/``defs``/``present``/``max_def`` plus the thresholds
-    ``d_outer`` (cum def before the repeated node), ``d_rep`` (at it)
-    and ``d_elem`` (at the element group; == d_rep for maps). All
-    sibling leaves share reps and the defs pattern up to d_elem, so any
-    leaf drives the skeleton; field-level nulls come from each leaf's
-    own defs. Returns lists of dicts (or None), or Python dicts for
-    ``as_map``."""
-    names = list(parts)
-    f0 = parts[names[0]]
-    seated: dict[str, list] = {}
-    for f, pp in parts.items():
-        it = iter(pp["present"])
-        seated[f] = [
-            next(it) if d == pp["max_def"] else None for d in pp["defs"]
-        ]
-    rows: list = []
-    cur: list | None = None
-    for i, (r, d) in enumerate(zip(f0["reps"], f0["defs"])):
-        if r == 0:
-            if d < f0["d_outer"]:
-                rows.append(None)
-                cur = None
-                continue
-            if d < f0["d_rep"]:
-                rows.append([])
-                cur = None
-                continue
-            cur = []
-            rows.append(cur)
-        elif cur is None:
-            raise ValueError("repetition level continues a null/empty group")
-        if d < f0["d_elem"]:
-            cur.append(None)
-        else:
-            cur.append({f: seated[f][i] for f in names})
-    if as_map:
-        return [
-            None if row is None
-            else {p["key"]: p["value"] for p in row}
-            for row in rows
-        ]
-    return rows
-
-
-def _assemble_map_struct_value(key: dict, vparts: dict[str, dict]) -> list:
-    """``map<k, struct<scalars>>`` (round 12): the key leaf drives the
-    entry skeleton; the value-field leaves are INDEX-ALIGNED with it
-    (all leaves share the repetition structure of the key_value pair),
-    with their own definition levels distinguishing null-value-struct
-    (d < d_value) / null field (d < max_def) / field value. Returns
-    Python dicts (or None for null maps)."""
-    names = list(vparts)
-    seated: dict[str, list] = {}
-    for f, pp in vparts.items():
-        it = iter(pp["present"])
-        seated[f] = [
-            next(it) if d == pp["max_def"] else None for d in pp["defs"]
-        ]
-    f0 = vparts[names[0]]
-    d_value = f0["d_value"]
-    vdefs = f0["defs"]
-    if len(vdefs) != len(key["defs"]):
-        raise ValueError("map key/value leaf level counts disagree")
-    # seat keys positionally (None where d < max_def) instead of
-    # consuming an iterator mid-walk: spec requires REQUIRED keys, but
-    # a spec-odd OPTIONAL key must not silently misalign every later
-    # entry (round-12 review finding) — it surfaces as a None key
-    kit = iter(key["present"])
-    kseated = [
-        next(kit) if d == key["max_def"] else None for d in key["defs"]
-    ]
-    rows: list = []
-    cur: dict | None = None
-    for i, (r, d) in enumerate(zip(key["reps"], key["defs"])):
-        if r == 0:
-            if d < key["d_outer"]:
-                rows.append(None)
-                cur = None
-                continue
-            if d < key["d_rep"]:
-                rows.append({})
-                cur = None
-                continue
-            cur = {}
-            rows.append(cur)
-        elif cur is None:
-            raise ValueError("repetition level continues a null/empty map")
-        cur[kseated[i]] = (
-            None
-            if vdefs[i] < d_value
-            else {f: seated[f][i] for f in names}
-        )
-    return rows
-
-
-def _assemble_map_list_value(key: dict, vleaf: dict) -> list:
-    """``map<k, list<scalar>>`` (round 12): the value leaf carries TWO
-    repetition levels (entry, element), so it is walked independently
-    into per-row entry-value lists — rep 0 new row, rep 1 new entry,
-    rep 2 next element; defs distinguish null map / empty map / null
-    list / empty list / null element / value — then zipped with the
-    key skeleton. Entry counts must agree between the two leaves."""
-    vrows: list = []
-    cur_row: list | None = None
-    cur_list: list | None = None
-    it = iter(vleaf["present"])
-    for r, d in zip(vleaf["reps"], vleaf["defs"]):
-        if r == 0:
-            if d < vleaf["d_outer"]:
-                vrows.append(None)
-                cur_row = None
-                continue
-            if d < vleaf["d_rep"]:
-                vrows.append([])
-                cur_row = None
-                continue
-            cur_row = []
-            vrows.append(cur_row)
-            new_entry = True
-        elif r == 1:
-            if cur_row is None:
-                raise ValueError(
-                    "repetition level continues a null/empty map"
-                )
-            new_entry = True
-        else:
-            new_entry = False
-        if new_entry:
-            if d < vleaf["d_value"]:
-                cur_row.append(None)
-                cur_list = None
-            elif d < vleaf["d_list"]:
-                cur_row.append([])
-                cur_list = None
-            else:
-                cur_list = []
-                cur_row.append(cur_list)
-                cur_list.append(
-                    next(it) if d == vleaf["max_def"] else None
-                )
-        else:
-            if cur_list is None:
-                raise ValueError(
-                    "repetition level continues a null/empty list"
-                )
-            cur_list.append(next(it) if d == vleaf["max_def"] else None)
-    # seat keys positionally — see _assemble_map_struct_value's note on
-    # spec-odd OPTIONAL keys (they surface as None, never misalign)
-    kit = iter(key["present"])
-    kseated = [
-        next(kit) if d == key["max_def"] else None for d in key["defs"]
-    ]
-    krows: list = []
-    kcur: list | None = None
-    for i, (r, d) in enumerate(zip(key["reps"], key["defs"])):
-        if r == 0:
-            if d < key["d_outer"]:
-                krows.append(None)
-                kcur = None
-                continue
-            if d < key["d_rep"]:
-                krows.append([])
-                kcur = None
-                continue
-            kcur = []
-            krows.append(kcur)
-        elif kcur is None:
-            raise ValueError("repetition level continues a null/empty map")
-        kcur.append(kseated[i])
-    if len(krows) != len(vrows):
-        raise ValueError("map key/value leaf row counts disagree")
-    out: list = []
-    for kr, vr in zip(krows, vrows):
-        if kr is None:
-            out.append(None)
-            continue
-        if vr is None or len(vr) != len(kr):
-            raise ValueError("map key/value leaf entry counts disagree")
-        out.append(dict(zip(kr, vr)))
-    return out
-
-
-def _assemble_struct(parts: dict[str, tuple]) -> list:
-    """Assemble a one-level struct from its primitive field chunks.
-    ``parts`` maps field name -> (def_levels, present_values, max_def,
-    d_struct) where ``d_struct`` is the cumulative definition level of
-    the struct group itself — identical across fields, so any field's
-    levels decide struct NULLness (definition below it = the whole
-    struct is NULL, not just the field)."""
-    names = list(parts)
-    seated: dict[str, list] = {}
-    for f, (defs, present, max_def, _ds) in parts.items():
-        it = iter(present)
-        seated[f] = [next(it) if d == max_def else None for d in defs]
-    first_defs, _p, _m, d_struct = parts[names[0]]
-    return [
-        None
-        if d < d_struct
-        else {f: seated[f][i] for f in names}
-        for i, d in enumerate(first_defs)
-    ]
-
-
 class _GenLeaf:
     """Per-leaf cursor for the generic Dremel assembler: seated values
     (positionally aligned with the level streams — None where the def
@@ -929,13 +565,9 @@ def _build_column_tree(col: str, leaves: list[str], schema: dict) -> dict:
     where ``d``/``r`` are the cumulative def/rep levels AT the node,
     ``rep`` its repetition code (0 required / 1 optional / 2 repeated),
     and ``path`` the dotted leaf path for leaf nodes (None for groups).
-    Children keep schema order (the depth-first walk sorted first, so
-    re-sort by each leaf's original index is unnecessary — field order
-    only affects dict key order, and the row converter looks fields up
-    by name)."""
-    root: dict = {
-        "name": col, "children": [], "order": [], "path": None,
-    }
+    Children follow the order of ``leaves`` (field order only affects
+    dict key order, and the row converter looks fields up by name)."""
+    root: dict = {"name": col, "children": [], "path": None}
     for p in leaves:
         segs = p.split(".")
         lv = schema[p]["levels"]
@@ -959,7 +591,6 @@ def _build_column_tree(col: str, leaves: list[str], schema: dict) -> dict:
                 node["children"].append(nxt)
             node = nxt
         node["path"] = p
-    # per-node flat leaf-cursor list (subtree order) filled at read time
     return root
 
 
@@ -970,54 +601,50 @@ def _gen_node_leaves(node: dict, out: list) -> None:
         _gen_node_leaves(ch, out)
 
 
-# (round 14) the former _check_tree_assemblable composite-map-key
-# decline is gone: maps whose keys are themselves composite — legal
-# parquet that Python dicts cannot seat — now decode as a LIST of
-# {"key", "value"} structs instead (the representation pyarrow's
-# tuple-list form uses for the same files; see _assemble_generic).
-
-
 def _assemble_generic(tree: dict, curs: dict[str, "_GenLeaf"]) -> list:
     """Record assembly for ARBITRARY nesting depth (Dremel): LIST and
     MAP annotated groups, structs, and repeated nodes compose freely —
-    three-deep lists, map<k, map<k, v>>, list<map>, struct<map<...>>
-    all reconstruct through the same recursion. Spec refs: Dremel
-    (Melnik et al., VLDB 2010) record assembly; parquet-format
-    LogicalTypes.md nested-shape conventions (3-level LIST,
-    key_value MAP with REQUIRED keys)."""
+    a one-level list or struct and three-deep lists, map<k, map<k, v>>,
+    list<map>, struct<map<...>> all reconstruct through the same
+    recursion. Spec refs: Dremel (Melnik et al., VLDB 2010) record
+    assembly; parquet-format LogicalTypes.md nested-shape conventions
+    (3-level LIST, key_value MAP with REQUIRED keys).
 
-    def sub_leaves(node):
-        if "__leaves" not in node:
-            paths: list = []
-            _gen_node_leaves(node, paths)
-            node["__leaves"] = [curs[p] for p in paths]
-        return node["__leaves"]
+    Each node is compiled once into a reader closure with its leaf
+    cursors and def/rep thresholds bound, so the per-value work is the
+    closure call and the cursor step."""
 
-    def peek_def(node):
-        c = sub_leaves(node)[0]
-        return c.defs[c.pos]
+    def leaves_of(node):
+        paths: list = []
+        _gen_node_leaves(node, paths)
+        return [curs[p] for p in paths]
 
-    def skip(node):
-        for c in sub_leaves(node):
-            c.pos += 1
+    def take(node):
+        c = curs[node["path"]]
+        seated = c.seated
 
-    def build_value(node):
-        """One value for ``node``, all ancestors defined. Consumes one
-        slot from every leaf in the subtree (possibly more for repeated
-        descendants)."""
+        def take_one():
+            p = c.pos
+            c.pos = p + 1
+            return seated[p]
+
+        return take_one
+
+    def field(node):
+        # a struct field that is itself REPEATED (legacy 2-level list)
+        return repeated(node) if node["rep"] == 2 else value(node)
+
+    def value(node):
+        """Reader of one value for ``node``, all ancestors defined.
+        Consumes one slot from every leaf in the subtree (possibly more
+        for repeated descendants)."""
         children = node["children"]
         if not children:  # leaf
-            c = curs[node["path"]]
-            v = c.seated[c.pos]
-            c.pos += 1
-            return v
-        if node["rep"] == 1 and peek_def(node) < node["d"]:
-            skip(node)
-            return None
-        # LIST/MAP annotated group: single repeated child drives a list
+            return take(node)
         if len(children) == 1 and children[0]["rep"] == 2:
+            # LIST/MAP annotated group: single repeated child drives a list
             rep_node = children[0]
-            items = build_repeated(rep_node)
+            items = repeated(rep_node)
             kids = rep_node["children"]
             is_map = (
                 len(kids) == 2
@@ -1027,36 +654,46 @@ def _assemble_generic(tree: dict, curs: dict[str, "_GenLeaf"]) -> list:
                     or rep_node["name"] == "key_value"
                 )
             )
-            if is_map:
-                key_node = next(k for k in kids if k["name"] == "key")
-                if key_node["children"]:
-                    # composite map keys (legal parquet) cannot seat
-                    # as Python dict keys: the map decodes as a LIST
-                    # of {"key","value"} structs — value-equal to the
-                    # pair list pyarrow's to_pylist() gives these
-                    # files (pyarrow yields (key, value) TUPLES; each
-                    # pair here is a {"key","value"} struct — round
-                    # 14, formerly a loud decline)
-                    return items
-                return {e["key"]: e["value"] for e in items}
-            return items
-        return {ch["name"]: build_field(ch) for ch in children}
+            if is_map and not next(
+                k for k in kids if k["name"] == "key"
+            )["children"]:
 
-    def build_field(node):
-        # a struct field that is itself REPEATED (legacy 2-level list)
-        if node["rep"] == 2:
-            return build_repeated(node)
-        return build_value(node)
+                def build():
+                    return {e["key"]: e["value"] for e in items()}
+            else:
+                # composite map keys (legal parquet) cannot seat as
+                # Python dict keys: the map decodes as a LIST of
+                # {"key","value"} structs — value-equal to the pair
+                # list pyarrow's to_pylist() gives these files
+                # (pyarrow yields (key, value) TUPLES)
+                build = items
+        else:
+            fields = [(ch["name"], field(ch)) for ch in children]
 
-    def build_instance(node):
-        """One element of a repeated node (its own def level already
-        established >= node.d by the caller's loop)."""
+            def build():
+                return {name: f() for name, f in fields}
+
+        if node["rep"] != 1:
+            return build
+        sub = leaves_of(node)
+        first = sub[0]
+        d = node["d"]
+
+        def optional():
+            if first.defs[first.pos] < d:
+                for c in sub:
+                    c.pos += 1
+                return None
+            return build()
+
+        return optional
+
+    def instance(node):
+        """Reader of one element of a repeated node (its own def level
+        already established >= node.d by the caller's loop)."""
         kids = node["children"]
         if not kids:  # repeated primitive
-            c = curs[node["path"]]
-            v = c.seated[c.pos]
-            c.pos += 1
-            return v
+            return take(node)
         if len(kids) == 1 and (
             node["name"] in ("list", "bag", "key_value")
             or kids[0]["name"] in ("element", "item", "array_element")
@@ -1065,23 +702,38 @@ def _assemble_generic(tree: dict, curs: dict[str, "_GenLeaf"]) -> list:
             # element node (parquet-format back-compat rules; a
             # repeated group NOT matching these names is itself the
             # element — legacy 2-level list<struct<one field>>)
-            return build_value(kids[0])
-        return {ch["name"]: build_field(ch) for ch in kids}
+            return value(kids[0])
+        fields = [(ch["name"], field(ch)) for ch in kids]
 
-    def build_repeated(node):
-        if peek_def(node) < node["d"]:
-            skip(node)
-            return []
-        items = [build_instance(node)]
-        drv = sub_leaves(node)[0]
-        while drv.pos < drv.n and drv.reps[drv.pos] == node["r"]:
-            items.append(build_instance(node))
-        return items
+        def build():
+            return {name: f() for name, f in fields}
 
+        return build
+
+    def repeated(node):
+        inst = instance(node)
+        sub = leaves_of(node)
+        drv = sub[0]
+        d, r = node["d"], node["r"]
+        reps, defs, n = drv.reps, drv.defs, drv.n
+
+        def run():
+            if defs[drv.pos] < d:
+                for c in sub:
+                    c.pos += 1
+                return []
+            items = [inst()]
+            while drv.pos < n and reps[drv.pos] == r:
+                items.append(inst())
+            return items
+
+        return run
+
+    top = field(tree)
+    drv = leaves_of(tree)[0]
     rows: list = []
-    drv = sub_leaves(tree)[0]
     while drv.pos < drv.n:
-        rows.append(build_field(tree))
+        rows.append(top())
     for c in curs.values():
         if c.pos != c.n:
             raise ValueError(
@@ -1097,18 +749,14 @@ def read_parquet_nested_columns(path: str, columns: list[str]) -> dict[str, list
 
 
 def read_parquet_nested_bytes(buf: bytes, columns: list[str]) -> dict[str, list]:
-    """Decode TOP-LEVEL columns, supporting flat primitives plus ONE
-    level of nesting: ``array<primitive>`` (3-level LIST or a bare
-    top-level repeated primitive) and ``struct<primitive,...>``. Lists come
-    back as Python lists (None for null lists/elements), structs as
-    dicts (None for null structs/fields). Round 11 adds
-    ``list<struct<scalars>>`` (lists of dicts), ``map<k,v>``
-    (Python dicts), ``struct<list>`` and ``list<list<scalar>>``;
-    round 12 adds ``map<k,struct<scalars>>`` and
-    ``map<k,list<scalar>>``. Round 13 adds the GENERIC Dremel
-    assembler: any LIST/MAP/STRUCT composition — three-deep lists,
-    map<k,map>, struct<map>, list<map> — assembles through one
-    recursion; only shapes with no Spark analogue (thrift unions)
+    """Decode TOP-LEVEL columns. A flat column (one non-repeated leaf)
+    takes the flat chunk decode; every other column — lists (3-level
+    LIST, legacy 2-level or a bare repeated primitive), maps, structs,
+    composed to any depth — assembles through :func:`_assemble_generic`.
+    Lists come back as Python lists (None for null lists/elements),
+    structs as dicts (None for null structs/fields), maps as Python
+    dicts (a LIST of {"key", "value"} structs when the keys are
+    composite). Only shapes with no Spark analogue (thrift unions)
     remain out of envelope."""
     meta, schema = _parse_file(buf)
     out: dict[str, list] = {c: [] for c in columns}
@@ -1133,6 +781,9 @@ def _decode_generic_column(
 def _decode_row_group(
     buf: bytes, rg: dict, schema: dict, columns: list[str], out: dict
 ) -> None:
+    """Append one row group's values of ``columns`` to ``out``: a flat
+    column (one non-repeated leaf) through the flat chunk decode, any
+    other column through the generic assembler."""
     by_path: dict[str, dict] = {}
     for cc in rg.get(1, []):
         md = cc.get(3)
@@ -1146,206 +797,9 @@ def _decode_row_group(
         )
         if not leaves:
             raise ValueError(f"column {c!r} not in file")
-        lf0 = schema[leaves[0]]
-        comps = leaves[0].count(".")
-        # LIST: the standard 3-level shape (col.list.element — the
-        # repeated node must be the MIDDLE path component, which
-        # rules out single-field list<struct> and struct<list>
-        # leaves that also present one repeated leaf) or a bare
-        # repeated primitive at top level
-        is_list = (
-            len(leaves) == 1
-            and lf0["max_rep"] == 1
-            and (
-                (comps == 2 and lf0["levels"][1][2] == 2)
-                or comps == 0
-            )
-        )
-        if leaves == [c] and lf0["max_rep"] == 0:
-            out[c].extend(read_column_chunk(buf, by_path[c], lf0))
-        elif is_list:
-            reps, defs, present = read_chunk_levels(
-                buf, by_path[leaves[0]], lf0
-            )
-            out[c].extend(_assemble_list(reps, defs, present, lf0))
-        elif all(
-            (schema[p]["max_rep"] == 0 and p.count(".") == 1)
-            or (
-                schema[p]["max_rep"] == 1
-                and p.count(".") == 3
-                and schema[p]["levels"][2][2] == 2
-                # 3-level LIST field only: a map field (c.f.key_value.*)
-                # presents the same depth/rep signature but needs the
-                # generic assembler
-                and p.split(".")[2] == "list"
-                and p.split(".")[3] == "element"
-            )
-            for p in leaves
-        ):
-            # one-level struct; fields may mix scalars and
-            # array<scalar> (struct<list>, round 11)
-            scalar_parts: dict[str, tuple] = {}
-            list_parts: dict[str, list] = {}
-            for p in leaves:
-                leaf = schema[p]
-                reps, defs, present = read_chunk_levels(
-                    buf, by_path[p], leaf
-                )
-                if leaf["max_rep"] == 0:
-                    scalar_parts[p[len(c) + 1 :]] = (
-                        defs,
-                        present,
-                        leaf["max_def"],
-                        leaf["levels"][0][0],
-                    )
-                else:
-                    lv = leaf["levels"]
-                    fname = p[len(c) + 1 :].split(".")[0]
-                    list_parts[fname] = _assemble_list_field(
-                        reps, defs, present, leaf["max_def"],
-                        lv[0][0], lv[1][0], lv[2][0],
-                    )
-            if list_parts:
-                out[c].extend(
-                    _assemble_struct_mixed(scalar_parts, list_parts)
-                )
-            else:
-                out[c].extend(_assemble_struct(scalar_parts))
-        elif all(
-            schema[p]["max_rep"] == 1
-            and schema[p]["levels"][1][2] == 2
-            and p.count(".") in (2, 3)
-            for p in leaves
-        ) and len({p.count(".") for p in leaves}) == 1:
-            # one repeated GROUP level (round 11): list<struct<...>>
-            # (c.list.element.f — 3 dots) or map<k,v>
-            # (c.key_value.{key,value} — 2 dots, the pair group itself
-            # being the element)
-            comps = leaves[0].count(".")
-            is_map = comps == 2 and {
-                p.rsplit(".", 1)[1] for p in leaves
-            } == {"key", "value"}
-            if comps == 2 and not is_map:
-                raise NotImplementedError(
-                    f"column {c!r}: repeated group with non-map field "
-                    "names is not a supported shape"
-                )
-            gparts: dict[str, dict] = {}
-            for p in leaves:
-                leaf = schema[p]
-                reps, defs, present = read_chunk_levels(
-                    buf, by_path[p], leaf
-                )
-                lv = leaf["levels"]
-                gparts[p.rsplit(".", 1)[1]] = {
-                    "reps": reps,
-                    "defs": defs,
-                    "present": present,
-                    "max_def": leaf["max_def"],
-                    "d_outer": lv[0][0],
-                    "d_rep": lv[1][0],
-                    "d_elem": lv[1][0] if is_map else lv[2][0],
-                }
-            out[c].extend(_assemble_repeated_group(gparts, as_map=is_map))
-        elif (
-            len(leaves) == 1
-            and lf0["max_rep"] == 2
-            and leaves[0].count(".") == 4
-            and lf0["levels"][1][2] == 2
-            and lf0["levels"][3][2] == 2
-        ):
-            # list<list<scalar>> (round 11): two repeated levels
-            reps, defs, present = read_chunk_levels(
-                buf, by_path[leaves[0]], lf0
-            )
-            out[c].extend(_assemble_list_list(reps, defs, present, lf0))
-        elif (
-            f"{c}.key_value.key" in leaves
-            and schema[f"{c}.key_value.key"]["max_rep"] == 1
-            and schema[f"{c}.key_value.key"]["levels"][1][2] == 2
-        ):
-            # map with NESTED values (round 12): the key leaf is the
-            # plain map shape, the value side is a struct (field
-            # leaves at c.key_value.value.f) or a 3-level list
-            # (c.key_value.value.list.element, two repetition levels).
-            # The value-shape dispatch happens BEFORE the key chunk is
-            # decoded — deeper value shapes fall through to the
-            # generic assembler, which reads the key chunk itself
-            # (round-13 review: decoding it here first paid the page
-            # decompress + level decode twice on every generic-path
-            # row group)
-            kp = f"{c}.key_value.key"
-            kl = schema[kp]
-            vleaves = [
-                p for p in leaves
-                if p.startswith(f"{c}.key_value.value")
-            ]
-            value_is_list = (
-                len(vleaves) == 1
-                and vleaves[0].count(".") == 4
-                and schema[vleaves[0]]["max_rep"] == 2
-                and schema[vleaves[0]]["levels"][3][2] == 2
-            )
-            value_is_struct = bool(vleaves) and all(
-                p.count(".") == 3 and schema[p]["max_rep"] == 1
-                for p in vleaves
-            )
-            if value_is_list or value_is_struct:
-                kreps, kdefs, kpres = read_chunk_levels(
-                    buf, by_path[kp], kl
-                )
-                key_part = {
-                    "reps": kreps, "defs": kdefs, "present": kpres,
-                    "max_def": kl["max_def"],
-                    "d_outer": kl["levels"][0][0],
-                    "d_rep": kl["levels"][1][0],
-                }
-            if value_is_list:
-                leaf = schema[vleaves[0]]
-                reps, defs, present = read_chunk_levels(
-                    buf, by_path[vleaves[0]], leaf
-                )
-                lv = leaf["levels"]
-                out[c].extend(
-                    _assemble_map_list_value(
-                        key_part,
-                        {
-                            "reps": reps, "defs": defs,
-                            "present": present,
-                            "max_def": leaf["max_def"],
-                            "d_outer": lv[0][0], "d_rep": lv[1][0],
-                            "d_value": lv[2][0], "d_list": lv[3][0],
-                        },
-                    )
-                )
-            elif value_is_struct:
-                vparts: dict[str, dict] = {}
-                for p in vleaves:
-                    leaf = schema[p]
-                    reps, defs, present = read_chunk_levels(
-                        buf, by_path[p], leaf
-                    )
-                    vparts[p.rsplit(".", 1)[1]] = {
-                        "reps": reps, "defs": defs, "present": present,
-                        "max_def": leaf["max_def"],
-                        "d_value": leaf["levels"][2][0],
-                    }
-                out[c].extend(
-                    _assemble_map_struct_value(key_part, vparts)
-                )
-            else:
-                # deeper map values (map/list-of-struct/nested lists):
-                # the generic Dremel assembler (round 13)
-                out[c].extend(
-                    _decode_generic_column(buf, c, leaves, schema, by_path)
-                )
+        if leaves == [c] and schema[c]["max_rep"] == 0:
+            out[c].extend(read_column_chunk(buf, by_path[c], schema[c]))
         else:
-            # any other nesting composition — three-deep lists, deeper
-            # map values, struct<map>, list<map<..>> … — assembles
-            # through the generic Dremel recursion (round 13). Only
-            # parquet shapes with no Spark analogue (e.g. thrift UNION
-            # schemas) remain out of envelope, and they fail loudly in
-            # tree construction.
             out[c].extend(
                 _decode_generic_column(buf, c, leaves, schema, by_path)
             )

@@ -20,7 +20,9 @@ bit-pattern dictionary keys so -0.0/+0.0 survive)
 plus the TIMESTAMP_MICROS and DATE converted types over integer
 physicals (round 10 — epoch micros / epoch days in, real
 timestamp[us]/date32 logical types back out of pyarrow and DuckDB),
-OPTIONAL fields with null def-levels, codecs UNCOMPRESSED and SNAPPY,
+OPTIONAL fields with null def-levels, LIST / MAP / STRUCT columns
+composed to any depth (one Dremel level stream per leaf, see
+:func:`_generic_levels`), codecs UNCOMPRESSED, SNAPPY and BROTLI,
 PLAIN_DICTIONARY pages when a column's distinct count earns them
 (round 10), per-chunk column STATISTICS (null_count + min_value/
 max_value in the modern signed/byte-wise column order, the IEEE
@@ -483,122 +485,14 @@ def _write_column_chunk(body: bytearray, vals: list, ptype: int, codec_id: int):
     return encodings, dict_offset, data_offset, comp_size, uncomp_size, stats
 
 
-def _scalar_fields(body: str, ctx: str) -> list[tuple[str, str]]:
-    """Parse 'a:bigint,b:string' into [(name, type)] — scalar types
-    only; anything else declines loudly."""
-    fields = []
-    for part in _split_top(body):
-        name, _, t = part.partition(":")
-        t = t.strip().lower()
-        if t not in _SPARK_TO_PHYSICAL:
-            raise NotImplementedError(
-                f"{ctx} field type {t!r} not writable (scalar fields only)"
-            )
-        fields.append((name.strip(), t))
-    return fields
-
-
-def _parse_ddl(ddl: str):
-    """('scalar', t) | ('array', elem_t) | ('struct', [(name, t), ...])
-    | ('array_struct', [(name, t), ...]) | ('map', (key_t, val_t))
-    | ('map_struct', (key_t, fields)) | ('map_list', (key_t, elem_t))
-    for a Spark DDL type string — the ENUMERATED fast-path shapes
-    (round 11 adds array<struct<scalars>> and map<scalar,scalar>;
-    round 12 adds struct/list map values). Deeper compositions no
-    longer decline here: build_parquet_bytes falls through to
-    :func:`_parse_ddl_tree` + the generic level generator (round
-    13)."""
-    s = ddl.strip()
-    low = s.lower()
-    if low.startswith("array<") and s.endswith(">"):
-        elem = s[6:-1].strip()
-        el = elem.lower()
-        if el.startswith("struct<") and elem.endswith(">"):
-            return ("array_struct", _scalar_fields(elem[7:-1], "list<struct>"))
-        if el.startswith("array<") and elem.endswith(">"):
-            inner = elem[6:-1].strip().lower()
-            if inner not in _SPARK_TO_PHYSICAL:
-                raise NotImplementedError(
-                    f"list<list> element type {inner!r} not writable "
-                    "(scalar elements only)"
-                )
-            return ("array_array", inner)
-        if el not in _SPARK_TO_PHYSICAL:
-            raise NotImplementedError(
-                f"array element type {elem!r} not writable "
-                "(scalar or struct<scalars> elements only)"
-            )
-        return ("array", el)
-    if low.startswith("map<") and s.endswith(">"):
-        kv = _split_top(s[4:-1])
-        if len(kv) != 2:
-            raise NotImplementedError(f"type {ddl} not writable")
-        kt = kv[0].strip().lower()
-        vraw = kv[1].strip()
-        vt = vraw.lower()
-        if kt not in _SPARK_TO_PHYSICAL:
-            raise NotImplementedError(
-                f"map key type {kv[0]!r} not writable (scalar keys only)"
-            )
-        if vt.startswith("struct<") and vraw.endswith(">"):
-            # map<k, struct<scalars>> (round 12)
-            return (
-                "map_struct",
-                (kt, _scalar_fields(vraw[7:-1], "map<struct>")),
-            )
-        if vt.startswith("array<") and vraw.endswith(">"):
-            # map<k, array<scalar>> (round 12)
-            el = vraw[6:-1].strip().lower()
-            if el not in _SPARK_TO_PHYSICAL:
-                raise NotImplementedError(
-                    f"map list-value element {el!r} not writable "
-                    "(scalar elements only)"
-                )
-            return ("map_list", (kt, el))
-        if vt not in _SPARK_TO_PHYSICAL:
-            raise NotImplementedError(
-                f"map value type {kv[1]!r} not writable (scalar, "
-                "struct<scalars> or array<scalar> values only)"
-            )
-        return ("map", (kt, vt))
-    if low.startswith("struct<") and s.endswith(">"):
-        body = s[7:-1]
-        if "array<" in body.lower():
-            # struct with mixed scalar/list fields (round 11)
-            fields = []
-            for part in _split_top(body):
-                name, _, t = part.partition(":")
-                t = t.strip()
-                tl = t.lower()
-                if tl.startswith("array<") and t.endswith(">"):
-                    el = t[6:-1].strip().lower()
-                    if el not in _SPARK_TO_PHYSICAL:
-                        raise NotImplementedError(
-                            f"struct list-field element {el!r} not "
-                            "writable (scalar elements only)"
-                        )
-                    fields.append((name.strip(), ("array", el)))
-                elif tl in _SPARK_TO_PHYSICAL:
-                    fields.append((name.strip(), ("scalar", tl)))
-                else:
-                    raise NotImplementedError(
-                        f"struct field type {t!r} not writable"
-                    )
-            return ("struct_mixed", fields)
-        return ("struct", _scalar_fields(body, "struct"))
-    if low in _SPARK_TO_PHYSICAL:
-        return ("scalar", low)
-    raise NotImplementedError(f"type {ddl} not writable")
-
-
 def _parse_ddl_tree(ddl: str):
-    """Recursive type tree for the GENERIC nested writer (round 13):
-    ``('scalar', t)`` / ``('list', subtree)`` / ``('map', (key_t,
-    value_subtree))`` / ``('struct', [(name, subtree), ...])`` with
-    unbounded depth — three-deep lists, map values of any shape,
-    struct<map> all parse. Scalar leaves are restricted to the same
-    physical set as the flat writer; map keys must be scalar (the
-    parquet MAP convention)."""
+    """Type tree of one column's Spark DDL type: ``('scalar', t)`` /
+    ``('list', subtree)`` / ``('map', (key_t, value_subtree))`` /
+    ``('struct', [(name, subtree), ...])`` with unbounded depth. A
+    ``scalar`` root is a flat column; any other root is written by the
+    level generator. Scalar leaves are restricted to the physical set
+    of :data:`_SPARK_TO_PHYSICAL`; map keys must be scalar (the parquet
+    MAP convention)."""
     s = ddl.strip()
     low = s.lower()
     if low.startswith("array<") and s.endswith(">"):
@@ -631,133 +525,146 @@ def _parse_ddl_tree(ddl: str):
 class _WLeaf:
     """Per-leaf write stream for the generic level generator."""
 
-    __slots__ = ("path", "stype", "max_def", "max_rep", "defs", "reps",
-                 "present", "required")
+    __slots__ = ("path", "stype", "max_rep", "defs", "reps", "present")
 
-    def __init__(self, path, stype, max_def, max_rep, required=False):
+    def __init__(self, path, stype, max_rep):
         self.path = path
         self.stype = stype
-        self.max_def = max_def
         self.max_rep = max_rep
-        self.required = required
         self.defs: list[int] = []
         self.reps: list[int] = []
         self.present: list = []
 
-    def add(self, rep: int, d: int, value=None, defined=False) -> None:
-        self.reps.append(rep)
-        self.defs.append(d)
-        if defined:
-            self.present.append(value)
 
-
-def _annotate_tree(tree, path, d, r, leaves):
-    """Mirror of the type tree with write-time level annotations:
-    {kind, d (cumulative def BEFORE this node's own increments), r
-    (cumulative rep), lo/hi leaf-index range, children}. Leaves append
-    in depth-first order (the column-chunk emission order). Every
-    non-key node is written OPTIONAL (the writer's convention); map
-    keys are REQUIRED per the parquet MAP shape."""
+def _emitter(tree, path, d, r, leaves):
+    """Compile one type-tree node into ``emit(value, rep)``, which
+    appends the node's level entries to its subtree's leaves. ``d`` is
+    the cumulative def level BEFORE this node's own increments and
+    ``r`` the cumulative rep level, both fixed per node, so they are
+    bound here once with each leaf's streams. Leaves append in
+    depth-first order (the column-chunk emission order). Every non-key
+    node is written OPTIONAL (the writer's convention); map keys are
+    REQUIRED per the parquet MAP shape."""
     kind, detail = tree
-    node = {"kind": kind, "d": d, "r": r, "lo": len(leaves)}
+    lo = len(leaves)
     if kind == "scalar":
-        leaves.append(_WLeaf(path, detail, d + 1, r))
-    elif kind == "list":
-        node["child"] = _annotate_tree(
-            detail, path + ["list", "element"], d + 2, r + 1, leaves
+        leaf = _WLeaf(path, detail, r)
+        leaves.append(leaf)
+        reps, defs = leaf.reps.append, leaf.defs.append
+        present = leaf.present.append
+
+        def emit_scalar(value, rep):
+            reps(rep)
+            if value is None:
+                defs(d)
+            else:
+                defs(d + 1)
+                present(value)
+
+        return emit_scalar
+
+    r_next = r + 1
+    if kind == "list":
+        child = _emitter(
+            detail, path + ["list", "element"], d + 2, r_next, leaves
         )
+
+        def emit_list(value, rep):
+            if value is None:
+                cut(rep, d)
+                return
+            if not isinstance(value, (list, tuple)):
+                raise ValueError(
+                    f"list cell must be a sequence, got {type(value).__name__}"
+                )
+            if not value:
+                cut(rep, d + 1)
+                return
+            it = iter(value)
+            child(next(it), rep)
+            for item in it:
+                child(item, r_next)
+
+        emit = emit_list
     elif kind == "map":
         kt, vt = detail
-        leaves.append(
-            _WLeaf(path + ["key_value", "key"], kt, d + 2, r + 1,
-                   required=True)
+        key_leaf = _WLeaf(path + ["key_value", "key"], kt, r_next)
+        leaves.append(key_leaf)
+        key_reps, key_defs = key_leaf.reps.append, key_leaf.defs.append
+        key_present = key_leaf.present.append
+        vchild = _emitter(
+            vt, path + ["key_value", "value"], d + 2, r_next, leaves
         )
-        node["vchild"] = _annotate_tree(
-            vt, path + ["key_value", "value"], d + 2, r + 1, leaves
-        )
+
+        def emit_map(value, rep):
+            if value is None:
+                cut(rep, d)
+                return
+            if not hasattr(value, "items"):
+                raise ValueError(
+                    "map cell must be a dict/mapping, got "
+                    f"{type(value).__name__} (convert list-of-pairs rows "
+                    "with dict(...) before encoding)"
+                )
+            if len(value) == 0:
+                cut(rep, d + 1)
+                return
+            rr = rep
+            for k, v in value.items():
+                if k is None:
+                    raise ValueError(
+                        "map keys must be non-None: the parquet schema "
+                        "declares map keys REQUIRED"
+                    )
+                key_reps(rr)
+                key_defs(d + 2)
+                key_present(k)
+                vchild(v, rr)
+                rr = r_next
+
+        emit = emit_map
     else:  # struct
-        node["children"] = [
-            (fname, _annotate_tree(sub, path + [fname], d + 1, r, leaves))
+        fields = [
+            (fname, _emitter(sub, path + [fname], d + 1, r, leaves))
             for fname, sub in detail
         ]
-    node["hi"] = len(leaves)
-    return node
 
+        def emit_struct(value, rep):
+            if value is None:
+                cut(rep, d)
+                return
+            if not isinstance(value, dict):
+                raise ValueError(
+                    f"struct cell must be a dict, got {type(value).__name__}"
+                )
+            for fname, sub in fields:
+                sub(value.get(fname), rep)
+
+        emit = emit_struct
+    subtree = leaves[lo:]
+
+    def cut(rep, level):
+        # a null or empty node: one entry in EVERY subtree leaf
+        for leaf in subtree:
+            leaf.reps.append(rep)
+            leaf.defs.append(level)
+
+    return emit
 
 def _generic_levels(vals: list, tree) -> list:
     """Per-leaf ``_WLeaf`` streams for an arbitrarily nested column —
     the exact inverse of the reader's generic Dremel assembler. One
     entry lands in EVERY subtree leaf when a node is null/empty (the
     cutoff marker); repeated nodes emit one entry set per element with
-    the repetition level of the deepest continuing node. Cell-shape
-    and None-key validation mirror _map_levels."""
+    the repetition level of the deepest continuing node. Cells are
+    validated as they are met: a list cell must be a sequence, a map
+    cell any mapping with non-None keys, a struct cell a dict."""
     leaves: list[_WLeaf] = []
-    root = _annotate_tree(tree, [], 0, 0, leaves)
-
-    def add_all(node, rep, d):
-        for i in range(node["lo"], node["hi"]):
-            leaves[i].add(rep, d)
-
-    def emit(node, value, rep, d):
-        kind = node["kind"]
-        if kind == "scalar":
-            leaf = leaves[node["lo"]]
-            if value is None:
-                leaf.add(rep, d)
-            else:
-                leaf.add(rep, d + 1, value, defined=True)
-            return
-        if kind == "struct":
-            if value is None:
-                add_all(node, rep, d)
-                return
-            if not isinstance(value, dict):
-                raise ValueError(
-                    f"struct cell must be a dict, got {type(value).__name__}"
-                )
-            for fname, sub in node["children"]:
-                emit(sub, value.get(fname), rep, d + 1)
-            return
-        if kind == "list":
-            if value is None:
-                add_all(node, rep, d)
-                return
-            if not isinstance(value, (list, tuple)):
-                raise ValueError(
-                    f"list cell must be a sequence, got {type(value).__name__}"
-                )
-            if len(value) == 0:
-                add_all(node, rep, d + 1)
-                return
-            r_node = node["r"] + 1
-            for i, item in enumerate(value):
-                emit(node["child"], item, rep if i == 0 else r_node, d + 2)
-            return
-        # map
-        if value is None:
-            add_all(node, rep, d)
-            return
-        if not isinstance(value, dict):
-            raise ValueError(
-                f"map cell must be a dict, got {type(value).__name__}"
-            )
-        if len(value) == 0:
-            add_all(node, rep, d + 1)
-            return
-        key_leaf = leaves[node["lo"]]
-        r_node = node["r"] + 1
-        first = True
-        for k, v in value.items():
-            if k is None:
-                raise ValueError("map keys must be non-None")
-            rr = rep if first else r_node
-            first = False
-            key_leaf.add(rr, d + 2, k, defined=True)
-            emit(node["vchild"], v, rr, d + 2)
-
+    emit = _emitter(tree, [], 0, 0, leaves)
     for cell in vals:
-        emit(root, cell, 0, 0)
+        emit(cell, 0)
     return leaves
+
 
 
 def _tree_leaf_count(tree) -> int:
@@ -769,260 +676,6 @@ def _tree_leaf_count(tree) -> int:
     if kind == "map":
         return 1 + _tree_leaf_count(detail[1])
     return sum(_tree_leaf_count(sub) for _n, sub in detail)
-
-
-def _list_levels(vals: list):
-    """(def_levels, rep_levels, present) for the standard 3-level LIST
-    shape: def 0 = null list, 1 = empty list, 2 = null element,
-    3 = present element; rep 1 marks continuation within a row."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-        elif len(row) == 0:
-            defs.append(1)
-            reps.append(0)
-        else:
-            for k, e in enumerate(row):
-                reps.append(0 if k == 0 else 1)
-                if e is None:
-                    defs.append(2)
-                else:
-                    defs.append(3)
-                    present.append(e)
-    return defs, reps, present
-
-
-def _list_struct_levels(vals: list, fname: str):
-    """(def_levels, rep_levels, present) for ONE field of a
-    list<struct> column: def 0 = null list, 1 = empty list, 2 = null
-    element, 3 = present element / null field, 4 = value."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-        elif len(row) == 0:
-            defs.append(1)
-            reps.append(0)
-        else:
-            for k, e in enumerate(row):
-                reps.append(0 if k == 0 else 1)
-                if e is None:
-                    defs.append(2)
-                    continue
-                v = e.get(fname) if isinstance(e, dict) else getattr(e, fname)
-                if v is None:
-                    defs.append(3)
-                else:
-                    defs.append(4)
-                    present.append(v)
-    return defs, reps, present
-
-
-def _list_list_levels(vals: list):
-    """(def_levels, rep_levels, present) for list<list<scalar>>:
-    def 0 = null outer, 1 = empty outer, 2 = null inner, 3 = empty
-    inner, 4 = null element, 5 = value; rep 1 starts a new inner list,
-    rep 2 continues one."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-        elif len(row) == 0:
-            defs.append(1)
-            reps.append(0)
-        else:
-            for oi, inner in enumerate(row):
-                r0 = 0 if oi == 0 else 1
-                if inner is None:
-                    defs.append(2)
-                    reps.append(r0)
-                elif len(inner) == 0:
-                    defs.append(3)
-                    reps.append(r0)
-                else:
-                    for ei, e in enumerate(inner):
-                        reps.append(r0 if ei == 0 else 2)
-                        if e is None:
-                            defs.append(4)
-                        else:
-                            defs.append(5)
-                            present.append(e)
-    return defs, reps, present
-
-
-def _map_levels(vals: list, which: str):
-    """(def_levels, rep_levels, present) for the key or value leaf of
-    a map column. Keys are REQUIRED (def 0 = null map, 1 = empty map,
-    2 = key); values are OPTIONAL (2 = null value, 3 = value)."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-            continue
-        # validate the cell shape up front: a Spark-style list of
-        # (k, v) tuples or any other non-mapping would otherwise die
-        # on a bare AttributeError mid-encode, and a None key would
-        # die on an incidental TypeError in the stats/byte paths even
-        # though the schema declares keys REQUIRED (round-12 advice
-        # fix — decline descriptively instead)
-        if not hasattr(row, "items"):
-            raise ValueError(
-                "map cell must be a dict/mapping, got "
-                f"{type(row).__name__} (convert list-of-pairs rows "
-                "with dict(...) before encoding)"
-            )
-        if len(row) == 0:
-            defs.append(1)
-            reps.append(0)
-        else:
-            for k, (kk, vv) in enumerate(row.items()):
-                if kk is None:
-                    raise ValueError(
-                        "map key is None but the parquet schema "
-                        "declares map keys REQUIRED"
-                    )
-                reps.append(0 if k == 0 else 1)
-                if which == "key":
-                    defs.append(2)
-                    present.append(kk)
-                elif vv is None:
-                    defs.append(2)
-                else:
-                    defs.append(3)
-                    present.append(vv)
-    return defs, reps, present
-
-
-def _map_struct_field_levels(vals: list, fname: str):
-    """(def_levels, rep_levels, present) for ONE field leaf of a
-    map<k, struct<...>> value (round 12). Level alphabet: 0 null map,
-    1 empty map, 2 entry with NULL value struct, 3 struct present but
-    field null, 4 field value. The repetition structure mirrors the
-    key leaf exactly (one slot per entry)."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-        elif len(row) == 0:
-            defs.append(1)
-            reps.append(0)
-        else:
-            for k, vv in enumerate(row.values()):
-                reps.append(0 if k == 0 else 1)
-                if vv is None:
-                    defs.append(2)
-                    continue
-                f = (
-                    vv.get(fname)
-                    if isinstance(vv, dict)
-                    else getattr(vv, fname)
-                )
-                if f is None:
-                    defs.append(3)
-                else:
-                    defs.append(4)
-                    present.append(f)
-    return defs, reps, present
-
-
-def _map_list_value_levels(vals: list):
-    """(def_levels, rep_levels, present) for the element leaf of a
-    map<k, array<scalar>> value (round 12) — TWO repetition levels
-    (rep 1 = next entry, rep 2 = next element). Level alphabet:
-    0 null map, 1 empty map, 2 entry with NULL list, 3 empty list,
-    4 null element, 5 element value."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-        elif len(row) == 0:
-            defs.append(1)
-            reps.append(0)
-        else:
-            for k, vv in enumerate(row.values()):
-                r0 = 0 if k == 0 else 1
-                if vv is None:
-                    defs.append(2)
-                    reps.append(r0)
-                elif len(vv) == 0:
-                    defs.append(3)
-                    reps.append(r0)
-                else:
-                    for ei, e in enumerate(vv):
-                        reps.append(r0 if ei == 0 else 2)
-                        if e is None:
-                            defs.append(4)
-                        else:
-                            defs.append(5)
-                            present.append(e)
-    return defs, reps, present
-
-
-def _struct_list_field_levels(vals: list, fname: str):
-    """(def_levels, rep_levels, present) for a LIST-typed field of an
-    OPTIONAL struct: def 0 = null struct, 1 = null list field,
-    2 = empty list, 3 = null element, 4 = value."""
-    defs: list[int] = []
-    reps: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-            reps.append(0)
-            continue
-        v = row.get(fname) if isinstance(row, dict) else getattr(row, fname)
-        if v is None:
-            defs.append(1)
-            reps.append(0)
-        elif len(v) == 0:
-            defs.append(2)
-            reps.append(0)
-        else:
-            for k, e in enumerate(v):
-                reps.append(0 if k == 0 else 1)
-                if e is None:
-                    defs.append(3)
-                else:
-                    defs.append(4)
-                    present.append(e)
-    return defs, reps, present
-
-
-def _struct_field_levels(vals: list, fname: str):
-    """(def_levels, present) for one field of an OPTIONAL struct:
-    def 0 = null struct, 1 = present struct / null field, 2 = value."""
-    defs: list[int] = []
-    present: list = []
-    for row in vals:
-        if row is None:
-            defs.append(0)
-        else:
-            v = row.get(fname) if isinstance(row, dict) else getattr(row, fname)
-            if v is None:
-                defs.append(1)
-            else:
-                defs.append(2)
-                present.append(v)
-    return defs, present
 
 
 # v2 value encodings by physical type: the DELTA family for ints and
@@ -1420,13 +1073,21 @@ def build_parquet_bytes(
 ) -> bytes:
     """One parquet FILE as bytes.
 
-    ``ddl_types`` maps column name → Spark DDL scalar type (boolean /
-    int / bigint / double / string). All columns are written OPTIONAL
-    with real definition levels, so None round-trips as null. Columns
-    whose distinct count earns it get PLAIN_DICTIONARY pages; every
-    chunk carries null_count + min_value/max_value statistics; and
-    ``row_group_size`` splits rows into multiple row groups so those
-    statistics drive row-group skipping in readers.
+    ``ddl_types`` maps column name → Spark DDL type. Each column takes
+    one of two paths. A FLAT scalar column (boolean / int / bigint /
+    float / double / string / date / timestamp) goes through the flat
+    chunk writers: columns whose distinct count earns it get
+    PLAIN_DICTIONARY pages, and only flat columns take the page index
+    and bloom filters below. Any other type (``array<…>``, ``map<…>``,
+    ``struct<…>``, composed to any depth) is parsed into a type tree;
+    :func:`_generic_levels` turns its cells into one Dremel level
+    stream per leaf and every leaf is written as its own chunk (3-level
+    LIST, ``key_value`` MAP with REQUIRED keys, the parquet-format
+    LogicalTypes conventions). All nodes but map keys are written
+    OPTIONAL with real definition levels, so None round-trips as null.
+    Every chunk carries null_count + min_value/max_value statistics,
+    and ``row_group_size`` splits rows into multiple row groups so
+    those statistics drive row-group skipping in readers.
 
     ``page_version=2`` (round 11) writes DataPageV2 instead: levels
     outside the compressed region, DELTA_BINARY_PACKED ints/temporals,
@@ -1455,27 +1116,9 @@ def build_parquet_bytes(
     names = list(columns)
     num_rows = len(columns[names[0]]) if names else 0
 
-    def _plan(ddl: str):
-        # enumerated fast paths first; anything deeper goes through the
-        # generic level generator (round 13)
-        try:
-            return _parse_ddl(ddl)
-        except NotImplementedError:
-            return ("nested", _parse_ddl_tree(ddl))
-
-    plans = {c: _plan(ddl_types[c]) for c in names}
-    def _plan_leaves(p) -> int:
-        if p[0] in ("struct", "array_struct", "struct_mixed"):
-            return len(p[1])
-        if p[0] == "map_struct":  # key + one leaf per value field
-            return 1 + len(p[1][1])
-        if p[0] in ("map", "map_list"):
-            return 2
-        if p[0] == "nested":
-            return _tree_leaf_count(p[1])
-        return 1
-
-    n_leaves = sum(_plan_leaves(p) for p in plans.values())
+    # one type tree per column: a ('scalar', t) root is a flat column
+    plans = {c: _parse_ddl_tree(ddl_types[c]) for c in names}
+    n_leaves = sum(_tree_leaf_count(p) for p in plans.values())
     for c in bloom_cols or ():
         if c not in plans or plans[c][0] != "scalar" or plans[c][1] == "boolean":
             raise NotImplementedError(
@@ -1597,125 +1240,10 @@ def build_parquet_bytes(
                         _leaf_metadata([c], ptype, n_rg, chunk)
                     )
                 total_uncomp += chunk[4]
-            elif kind == "array":
-                ptype = _SPARK_TO_PHYSICAL[detail]
-                defs, reps, present = _list_levels(vals)
-                chunk = _write_nested_chunk(
-                    body, defs, reps, present, n_rg, ptype, codec_id,
-                    page_version,
-                )
-                col_chunks.append(
-                    _leaf_metadata(
-                        [c, "list", "element"], ptype, len(defs), chunk
-                    )
-                )
-                total_uncomp += chunk[4]
-            elif kind == "array_array":
-                ptype = _SPARK_TO_PHYSICAL[detail]
-                defs, reps, present = _list_list_levels(vals)
-                chunk = _write_nested_chunk(
-                    body, defs, reps, present, n_rg, ptype,
-                    codec_id, page_version,
-                )
-                col_chunks.append(
-                    _leaf_metadata(
-                        [c, "list", "element", "list", "element"],
-                        ptype, len(defs), chunk,
-                    )
-                )
-                total_uncomp += chunk[4]
-            elif kind == "array_struct":
-                for fname, ftype in detail:
-                    ptype = _SPARK_TO_PHYSICAL[ftype]
-                    defs, reps, present = _list_struct_levels(vals, fname)
-                    chunk = _write_nested_chunk(
-                        body, defs, reps, present, n_rg, ptype,
-                        codec_id, page_version,
-                    )
-                    col_chunks.append(
-                        _leaf_metadata(
-                            [c, "list", "element", fname], ptype,
-                            len(defs), chunk,
-                        )
-                    )
-                    total_uncomp += chunk[4]
-            elif kind == "map":
-                for which, t in zip(("key", "value"), detail):
-                    ptype = _SPARK_TO_PHYSICAL[t]
-                    defs, reps, present = _map_levels(vals, which)
-                    chunk = _write_nested_chunk(
-                        body, defs, reps, present, n_rg, ptype,
-                        codec_id, page_version,
-                    )
-                    col_chunks.append(
-                        _leaf_metadata(
-                            [c, "key_value", which], ptype,
-                            len(defs), chunk,
-                        )
-                    )
-                    total_uncomp += chunk[4]
-            elif kind == "map_struct":
-                key_t, fields = detail
-                ptype = _SPARK_TO_PHYSICAL[key_t]
-                # _map_levels also validates cell shape + non-None keys
-                defs, reps, present = _map_levels(vals, "key")
-                chunk = _write_nested_chunk(
-                    body, defs, reps, present, n_rg, ptype,
-                    codec_id, page_version,
-                )
-                col_chunks.append(
-                    _leaf_metadata(
-                        [c, "key_value", "key"], ptype, len(defs), chunk,
-                    )
-                )
-                total_uncomp += chunk[4]
-                for fname, ftype in fields:
-                    ptype = _SPARK_TO_PHYSICAL[ftype]
-                    defs, reps, present = _map_struct_field_levels(
-                        vals, fname
-                    )
-                    chunk = _write_nested_chunk(
-                        body, defs, reps, present, n_rg, ptype,
-                        codec_id, page_version,
-                    )
-                    col_chunks.append(
-                        _leaf_metadata(
-                            [c, "key_value", "value", fname], ptype,
-                            len(defs), chunk,
-                        )
-                    )
-                    total_uncomp += chunk[4]
-            elif kind == "map_list":
-                key_t, elem_t = detail
-                ptype = _SPARK_TO_PHYSICAL[key_t]
-                defs, reps, present = _map_levels(vals, "key")
-                chunk = _write_nested_chunk(
-                    body, defs, reps, present, n_rg, ptype,
-                    codec_id, page_version,
-                )
-                col_chunks.append(
-                    _leaf_metadata(
-                        [c, "key_value", "key"], ptype, len(defs), chunk,
-                    )
-                )
-                total_uncomp += chunk[4]
-                ptype = _SPARK_TO_PHYSICAL[elem_t]
-                defs, reps, present = _map_list_value_levels(vals)
-                chunk = _write_nested_chunk(
-                    body, defs, reps, present, n_rg, ptype,
-                    codec_id, page_version,
-                )
-                col_chunks.append(
-                    _leaf_metadata(
-                        [c, "key_value", "value", "list", "element"],
-                        ptype, len(defs), chunk,
-                    )
-                )
-                total_uncomp += chunk[4]
-            elif kind == "nested":
-                # generic nested column (round 13): one chunk per leaf
-                # from the recursive level generator
-                for leaf in _generic_levels(vals, detail):
+            else:
+                # nested column: one chunk per leaf from the level
+                # generator, leaves in depth-first (schema) order
+                for leaf in _generic_levels(vals, plans[c]):
                     ptype = _SPARK_TO_PHYSICAL[leaf.stype]
                     chunk = _write_nested_chunk(
                         body, leaf.defs,
@@ -1727,45 +1255,6 @@ def build_parquet_bytes(
                         _leaf_metadata(
                             [c] + leaf.path, ptype, len(leaf.defs), chunk
                         )
-                    )
-                    total_uncomp += chunk[4]
-            elif kind == "struct_mixed":
-                for fname, (fkind, ftype) in detail:
-                    ptype = _SPARK_TO_PHYSICAL[ftype]
-                    if fkind == "scalar":
-                        defs, present = _struct_field_levels(vals, fname)
-                        chunk = _write_nested_chunk(
-                            body, defs, None, present, n_rg, ptype,
-                            codec_id, page_version,
-                        )
-                        col_chunks.append(
-                            _leaf_metadata([c, fname], ptype, n_rg, chunk)
-                        )
-                    else:  # list field
-                        defs, reps, present = _struct_list_field_levels(
-                            vals, fname
-                        )
-                        chunk = _write_nested_chunk(
-                            body, defs, reps, present, n_rg, ptype,
-                            codec_id, page_version,
-                        )
-                        col_chunks.append(
-                            _leaf_metadata(
-                                [c, fname, "list", "element"], ptype,
-                                len(defs), chunk,
-                            )
-                        )
-                    total_uncomp += chunk[4]
-            else:  # struct
-                for fname, ftype in detail:
-                    ptype = _SPARK_TO_PHYSICAL[ftype]
-                    defs, present = _struct_field_levels(vals, fname)
-                    chunk = _write_nested_chunk(
-                        body, defs, None, present, n_rg, ptype,
-                        codec_id, page_version,
-                    )
-                    col_chunks.append(
-                        _leaf_metadata([c, fname], ptype, n_rg, chunk)
                     )
                     total_uncomp += chunk[4]
         row_groups.append((col_chunks, total_uncomp, n_rg))
@@ -1864,94 +1353,30 @@ def build_parquet_bytes(
         el.append(0)
         return bytes(el)
 
+    def _emit_tree(name, tree, repetition=1):
+        # 3-level LIST: optional group (LIST) { repeated group list
+        # { optional element } }; MAP: optional group (MAP) { repeated
+        # group key_value { required key; optional value } }
+        tkind, tdetail = tree
+        if tkind == "scalar":
+            schema_elems.append(_leaf_elem(name, tdetail, repetition))
+        elif tkind == "list":
+            schema_elems.append(_group_elem(name, 1, repetition, converted=3))
+            schema_elems.append(_group_elem("list", 1, 2))
+            _emit_tree("element", tdetail)
+        elif tkind == "map":
+            kt, vt = tdetail
+            schema_elems.append(_group_elem(name, 1, repetition, converted=1))
+            schema_elems.append(_group_elem("key_value", 2, 2))
+            schema_elems.append(_leaf_elem("key", kt, repetition=0))
+            _emit_tree("value", vt)
+        else:  # struct
+            schema_elems.append(_group_elem(name, len(tdetail), repetition))
+            for fname, sub in tdetail:
+                _emit_tree(fname, sub)
+
     for c in names:
-        kind, detail = plans[c]
-        if kind == "scalar":
-            schema_elems.append(_leaf_elem(c, detail))
-        elif kind == "array":
-            # the standard 3-level LIST shape: optional group (LIST)
-            # { repeated group list { optional <t> element } }
-            schema_elems.append(_group_elem(c, 1, 1, converted=3))
-            schema_elems.append(_group_elem("list", 1, 2))
-            schema_elems.append(_leaf_elem("element", detail))
-        elif kind == "array_array":
-            schema_elems.append(_group_elem(c, 1, 1, converted=3))
-            schema_elems.append(_group_elem("list", 1, 2))
-            schema_elems.append(_group_elem("element", 1, 1, converted=3))
-            schema_elems.append(_group_elem("list", 1, 2))
-            schema_elems.append(_leaf_elem("element", detail))
-        elif kind == "array_struct":
-            schema_elems.append(_group_elem(c, 1, 1, converted=3))
-            schema_elems.append(_group_elem("list", 1, 2))
-            schema_elems.append(_group_elem("element", len(detail), 1))
-            for fname, ftype in detail:
-                schema_elems.append(_leaf_elem(fname, ftype))
-        elif kind == "map":
-            # optional group (MAP) { repeated group key_value
-            # { required key; optional value } }
-            schema_elems.append(_group_elem(c, 1, 1, converted=1))
-            schema_elems.append(_group_elem("key_value", 2, 2))
-            schema_elems.append(_leaf_elem("key", detail[0], repetition=0))
-            schema_elems.append(_leaf_elem("value", detail[1]))
-        elif kind == "map_struct":
-            key_t, fields = detail
-            schema_elems.append(_group_elem(c, 1, 1, converted=1))
-            schema_elems.append(_group_elem("key_value", 2, 2))
-            schema_elems.append(_leaf_elem("key", key_t, repetition=0))
-            schema_elems.append(_group_elem("value", len(fields), 1))
-            for fname, ftype in fields:
-                schema_elems.append(_leaf_elem(fname, ftype))
-        elif kind == "map_list":
-            key_t, elem_t = detail
-            schema_elems.append(_group_elem(c, 1, 1, converted=1))
-            schema_elems.append(_group_elem("key_value", 2, 2))
-            schema_elems.append(_leaf_elem("key", key_t, repetition=0))
-            schema_elems.append(_group_elem("value", 1, 1, converted=3))
-            schema_elems.append(_group_elem("list", 1, 2))
-            schema_elems.append(_leaf_elem("element", elem_t))
-        elif kind == "struct_mixed":
-            schema_elems.append(_group_elem(c, len(detail), 1))
-            for fname, (fkind, ftype) in detail:
-                if fkind == "scalar":
-                    schema_elems.append(_leaf_elem(fname, ftype))
-                else:
-                    schema_elems.append(_group_elem(fname, 1, 1, converted=3))
-                    schema_elems.append(_group_elem("list", 1, 2))
-                    schema_elems.append(_leaf_elem("element", ftype))
-        elif kind == "nested":
-
-            def _emit_tree(name, tree, repetition=1):
-                tkind, tdetail = tree
-                if tkind == "scalar":
-                    schema_elems.append(
-                        _leaf_elem(name, tdetail, repetition)
-                    )
-                elif tkind == "list":
-                    schema_elems.append(
-                        _group_elem(name, 1, repetition, converted=3)
-                    )
-                    schema_elems.append(_group_elem("list", 1, 2))
-                    _emit_tree("element", tdetail)
-                elif tkind == "map":
-                    kt, vt = tdetail
-                    schema_elems.append(
-                        _group_elem(name, 1, repetition, converted=1)
-                    )
-                    schema_elems.append(_group_elem("key_value", 2, 2))
-                    schema_elems.append(_leaf_elem("key", kt, repetition=0))
-                    _emit_tree("value", vt)
-                else:  # struct
-                    schema_elems.append(
-                        _group_elem(name, len(tdetail), repetition)
-                    )
-                    for fname, sub in tdetail:
-                        _emit_tree(fname, sub)
-
-            _emit_tree(c, detail)
-        else:
-            schema_elems.append(_group_elem(c, len(detail), 1))
-            for fname, ftype in detail:
-                schema_elems.append(_leaf_elem(fname, ftype))
+        _emit_tree(c, plans[c])
 
     fmd = bytearray()
     last = 0

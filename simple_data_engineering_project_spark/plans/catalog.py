@@ -10781,7 +10781,9 @@ def sink_webdataset_q(spark, sf_dir):
         members = []
         for doc_id, text in zip(b["doc_id"], b["text"]):
             stem = f"{int(doc_id):012d}"
-            members.append((f"{stem}.txt", (text or "").encode("utf-8")))
+            # a NULL text has no .txt member (reads back as NULL)
+            if text is not None:
+                members.append((f"{stem}.txt", text.encode("utf-8")))
             members.append((f"{stem}.cls", str(int(doc_id) % 10).encode()))
         return encode_tar(members)
 
@@ -10791,7 +10793,9 @@ def sink_webdataset_q(spark, sf_dir):
         return [
             {
                 "doc_id": int(stem),
-                "text_sha": _hl.sha256(sample["txt"]).hexdigest(),
+                "text_sha": None
+                if "txt" not in sample
+                else _hl.sha256(sample["txt"]).hexdigest(),
                 "cls": int(sample["cls"].decode()),
             }
             for stem, sample in group_webdataset(parse_tar(payload)).items()
@@ -11109,10 +11113,14 @@ def sink_tar_zst_q(spark, sf_dir):
     from ..operators.zstd import zstd_compress
 
     def _encode(b):
+        # a NULL text has no .txt member: an empty {id}.null member
+        # keeps the document, and it reads back as NULL
         return zstd_compress(
             encode_tar(
                 [
-                    (f"{int(doc_id):012d}.txt", (text or "").encode("utf-8"))
+                    (f"{int(doc_id):012d}.null", b"")
+                    if text is None
+                    else (f"{int(doc_id):012d}.txt", text.encode("utf-8"))
                     for doc_id, text in zip(b["doc_id"], b["text"])
                 ]
             )
@@ -11121,19 +11129,23 @@ def sink_tar_zst_q(spark, sf_dir):
     def _decode(payload):
         import hashlib as _hl
 
-        return [
-            {
-                "doc_id": int(name[:-4]),
-                "text_sha": _hl.sha256(data).hexdigest(),
-                "n_bytes": len(data),
-            }
-            for name, data in parse_tar(payload)
-        ]
+        rows = []
+        for name, data in parse_tar(payload):
+            stem, _, ext = name.partition(".")
+            text = data if ext == "txt" else None
+            rows.append({
+                "doc_id": int(stem),
+                "text_sha": None
+                if text is None
+                else _hl.sha256(text).hexdigest(),
+                "n_bytes": None if text is None else len(text),
+            })
+        return rows
 
     return _shard_sink_roundtrip(
         spark, sf_dir, "tar_zst_sink", "tar.zst", _encode, _decode,
         "doc_id long, text_sha string, n_bytes long",
-        {"doc_id": "int64", "n_bytes": "int64"},
+        {"doc_id": "int64", "n_bytes": "Int64"},
     )
 
 
@@ -11179,12 +11191,14 @@ def sink_arrow_ipc_q(spark, sf_dir):
         _schema, recs = parse_arrow_ipc(payload)
         rows = []
         for r in recs:
-            raw = (r["text"] or "").encode("utf-8")
+            raw = None if r["text"] is None else r["text"].encode("utf-8")
             rows.append(
                 {
                     "doc_id": int(r["doc_id"]),
-                    "text_sha": _hl.sha256(raw).hexdigest(),
-                    "n_bytes": len(raw),
+                    "text_sha": None
+                    if raw is None
+                    else _hl.sha256(raw).hexdigest(),
+                    "n_bytes": None if raw is None else len(raw),
                 }
             )
         return rows
@@ -11192,7 +11206,7 @@ def sink_arrow_ipc_q(spark, sf_dir):
     return _shard_sink_roundtrip(
         spark, sf_dir, "arrow_ipc_sink", "arrows", _encode, _decode,
         "doc_id long, text_sha string, n_bytes long",
-        {"doc_id": "int64", "n_bytes": "int64"},
+        {"doc_id": "int64", "n_bytes": "Int64"},
     )
 
 

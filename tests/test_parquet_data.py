@@ -1831,47 +1831,59 @@ def test_map_assemblers_tolerate_optional_keys():
     """Round-12 review regression: the spec requires REQUIRED map
     keys, but a spec-odd OPTIONAL key must surface as a None key —
     never silently misalign every later entry (the first cut consumed
-    the key iterator unconditionally)."""
+    the key iterator unconditionally). Driven through the generic
+    assembler with map<string, struct<f>> and map<string, list>
+    values over hand-written level streams."""
     from simple_data_engineering_project_spark.operators.parquet_data import (
-        _assemble_map_list_value,
-        _assemble_map_struct_value,
+        _assemble_generic,
+        _build_column_tree,
+        _GenLeaf,
     )
+
+    def assemble(levels: dict, streams: dict) -> list:
+        # levels: leaf path -> cumulative (def, rep, repetition,
+        # converted) per path element, as _parse_schema records them
+        schema = {p: {"levels": lv} for p, lv in levels.items()}
+        tree = _build_column_tree("m", sorted(levels), schema)
+        curs = {
+            p: _GenLeaf(reps, defs, present, levels[p][-1][0])
+            for p, (reps, defs, present) in streams.items()
+        }
+        return _assemble_generic(tree, curs)
 
     # two rows, two entries each; second entry of row 1 has a NULL key
     # (def 2 < max_def 3 — an optional-key layout)
-    key = {
-        "reps": [0, 1, 0, 1],
-        "defs": [3, 2, 3, 3],
-        "present": ["a", "b", "c"],
-        "max_def": 3,
-        "d_outer": 1,
-        "d_rep": 2,
-    }
-    vparts = {
-        "f": {
-            "reps": [0, 1, 0, 1],
-            "defs": [4, 4, 4, 3],
-            "present": [1, 2, 3],
-            "max_def": 4,
-            "d_value": 3,
-        }
-    }
-    got = _assemble_map_struct_value(key, vparts)
+    m, kv = (1, 0, 1, 1), (2, 1, 2, None)  # optional MAP, repeated pair
+    key_lv = [m, kv, (3, 1, 1, 0)]  # OPTIONAL key leaf
+    key = ([0, 1, 0, 1], [3, 2, 3, 3], ["a", "b", "c"])
+    got = assemble(
+        {
+            "m.key_value.key": key_lv,
+            "m.key_value.value.f": [m, kv, (3, 1, 1, None), (4, 1, 1, None)],
+        },
+        {
+            "m.key_value.key": key,
+            "m.key_value.value.f": ([0, 1, 0, 1], [4, 4, 4, 3], [1, 2, 3]),
+        },
+    )
     assert got == [
         {"a": {"f": 1}, None: {"f": 2}},
         {"b": {"f": 3}, "c": {"f": None}},
     ]
-    vleaf = {
-        "reps": [0, 1, 0, 1],
-        "defs": [5, 5, 5, 4],
-        "present": [10, 20, 30],
-        "max_def": 5,
-        "d_outer": 1,
-        "d_rep": 2,
-        "d_value": 3,
-        "d_list": 4,
-    }
-    got = _assemble_map_list_value(key, vleaf)
+    got = assemble(
+        {
+            "m.key_value.key": key_lv,
+            "m.key_value.value.list.element": [
+                m, kv, (3, 1, 1, 3), (4, 2, 2, None), (5, 2, 1, None),
+            ],
+        },
+        {
+            "m.key_value.key": key,
+            "m.key_value.value.list.element": (
+                [0, 1, 0, 1], [5, 5, 5, 4], [10, 20, 30],
+            ),
+        },
+    )
     assert got == [
         {"a": [10], None: [20]},
         {"b": [30], "c": [None]},

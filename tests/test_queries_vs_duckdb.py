@@ -41,10 +41,10 @@ def test_rows_only_query_runs(spark, sf_smoke, name):
     assert len(df.columns) > 0
 
 
-def test_sink_parquet_pure_keeps_null_text(spark, sf_smoke, tmp_path):
-    """A NULL text hashes to NULL, as in the oracle's sha256(text); the
-    testdata has no NULL text, so the tables are copied and a few
-    documents lose theirs."""
+def _assert_sink_keeps_null_text(spark, sf_smoke, tmp_path, name):
+    """A NULL text hashes to NULL, as in the oracle's sha256(text) and
+    strlen(text); the testdata has no NULL text, so the tables are
+    copied and a few documents lose theirs."""
     import glob
     import shutil
 
@@ -61,13 +61,24 @@ def test_sink_parquet_pure_keeps_null_text(spark, sf_smoke, tmp_path):
     pq.write_table(docs, tmp_path / "documents.parquet")
     assert docs["text"].null_count > 0
 
-    q = CATALOG["sink_parquet_pure"]
+    q = CATALOG[name]
     con = duck_connection(str(tmp_path))
     try:
         problems = compare(q.fn(spark, str(tmp_path)), con, q.oracle, q.name)
     finally:
         con.close()
     assert not problems, "\n".join(problems)
+
+
+def test_sink_parquet_pure_keeps_null_text(spark, sf_smoke, tmp_path):
+    _assert_sink_keeps_null_text(spark, sf_smoke, tmp_path, "sink_parquet_pure")
+
+
+@pytest.mark.parametrize(
+    "name", ["sink_webdataset", "sink_tar_zst", "sink_arrow_ipc"]
+)
+def test_sink_keeps_null_text(spark, sf_smoke, tmp_path, name):
+    _assert_sink_keeps_null_text(spark, sf_smoke, tmp_path, name)
 
 
 def test_entry_smoke(spark):
