@@ -682,7 +682,7 @@ def connected_components(
                 F.min("component").alias("component"),
                 F.max(
                     F.when(F.col("__self"), F.col("component"))
-                ).alias("__old"),
+                ).alias("__prev"),
             )
         )
         if it == 0 and max_iter > 1:
@@ -698,7 +698,7 @@ def connected_components(
             continue
         step = step.localCheckpoint()
         changed = (
-            step.filter(F.col("component") != F.col("__old"))
+            step.filter(F.col("component") != F.col("__prev"))
             .limit(1)
             .count()
         )

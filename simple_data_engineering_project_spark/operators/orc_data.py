@@ -472,56 +472,21 @@ def _leaf_columns(types: list[dict]) -> dict[str, dict]:
 
 def read_orc_columns(path_or_bytes, columns: list[str]) -> dict[str, list]:
     """Decode the requested scalar columns of one ORC file into Python
-    lists (None for nulls), stripes concatenated in file order."""
+    lists (None for nulls), stripes concatenated in file order: the
+    nested reader, after refusing LIST / MAP / STRUCT columns."""
     if isinstance(path_or_bytes, (bytes, bytearray)):
         buf = bytes(path_or_bytes)
     else:
         with open(path_or_bytes, "rb") as f:
             buf = f.read()
-    codec, _footer, types, stripes = _parse_tail(buf)
-    leaves = _leaf_columns(types)
+    leaves = _leaf_columns(_parse_tail(buf)[2])
     for c in columns:
         if c not in leaves:
             raise ValueError(f"column {c!r} not in file")
         kind = leaves[c]["kind"]
         if kind in (_K_LIST, _K_MAP, _K_STRUCT):
             raise NotImplementedError(f"ORC column kind {kind} not supported")
-    out: dict[str, list] = {c: [] for c in columns}
-    for st in stripes:
-        offset = st.get(1, 0)
-        index_len = st.get(2, 0)
-        data_len = st.get(3, 0)
-        footer_len = st.get(4, 0)
-        n_rows = st.get(5, 0)
-        sf_raw = buf[offset + index_len + data_len :][:footer_len]
-        sf = _pb_map(_decompress_stream(codec, sf_raw))
-        streams = [_pb_map(s) for s in _as_list(sf.get(1))]
-        encodings = [_pb_map(e) for e in _as_list(sf.get(2))]
-        # stream bodies lie sequentially from the stripe start; record
-        # OFFSETS only and slice lazily per requested column — copying
-        # every stream (row indexes, unrequested columns) would re-copy
-        # the whole stripe per file (review-pass finding)
-        wanted = {leaves[c]["col_id"] for c in columns}
-        pos = offset
-        located: dict[tuple[int, int], bytes] = {}
-        for s in streams:
-            kind, col, ln = s.get(1, 0), s.get(2, 0), s.get(3, 0)
-            if col in wanted and kind in (
-                _S_PRESENT, _S_DATA, _S_LENGTH, _S_DICT, _S_SECONDARY
-            ):
-                located[(col, kind)] = buf[pos : pos + ln]
-            pos += ln
-        for c in columns:
-            cid = leaves[c]["col_id"]
-            kind = leaves[c]["kind"]
-            enc_pb = encodings[cid] if cid < len(encodings) else {}
-            out[c].extend(
-                _decode_column(
-                    located, codec, cid, kind,
-                    enc_pb.get(1, 0), enc_pb.get(2, 0), n_rows,
-                )
-            )
-    return out
+    return read_orc_nested_columns(buf, columns)
 
 
 def _subtype_ids(t: dict) -> list[int]:

@@ -792,9 +792,8 @@ def _decode_row_group(
         path_parts = [p.decode("utf-8") for p in md.get(3, [])]
         by_path[".".join(path_parts)] = md
     for c in columns:
-        leaves = sorted(
-            p for p in schema if p == c or p.startswith(c + ".")
-        )
+        # schema order (depth-first), so struct fields keep their order
+        leaves = [p for p in schema if p == c or p.startswith(c + ".")]
         if not leaves:
             raise ValueError(f"column {c!r} not in file")
         if leaves == [c] and schema[c]["max_rep"] == 0:
@@ -1247,19 +1246,13 @@ def read_parquet_columns(path: str, columns: list[str]) -> dict[str, list]:
 
 
 def read_parquet_bytes(buf: bytes, columns: list[str]) -> dict[str, list]:
-    """:func:`read_parquet_columns` over an in-memory file image."""
-    meta, schema = _parse_file(buf)
-    out: dict[str, list] = {c: [] for c in columns}
-    for rg in meta.get(4, []):
-        by_path: dict[str, dict] = {}
-        for cc in rg.get(1, []):
-            md = cc.get(3)
-            if md is None:
-                continue
-            path_parts = [p.decode("utf-8") for p in md.get(3, [])]
-            by_path[".".join(path_parts)] = md
-        for c in columns:
-            if c not in by_path:
-                raise ValueError(f"column {c!r} not in file")
-            out[c].extend(read_column_chunk(buf, by_path[c], schema[c]))
-    return out
+    """:func:`read_parquet_columns` over an in-memory file image: the
+    nested reader, after refusing any column that is not one flat
+    leaf."""
+    _meta, schema = _parse_file(buf)
+    for c in columns:
+        if c not in schema:
+            raise ValueError(f"column {c!r} not in file")
+        if schema[c]["max_rep"] > 0:
+            raise NotImplementedError("nested (repeated) columns not supported")
+    return read_parquet_nested_bytes(buf, columns)

@@ -31,16 +31,20 @@ schema-inference job runs. Filesystem work (listing, header probes,
 deletes, renames, archive moves) goes through one ``HadoopFS`` handle
 per call.
 
-One commit, :func:`_commit`, publishes every table write (first load,
-merge, legacy upgrade, rollback). The write goes to the temp tree
-``.cocoa_shipments_next``, then for each unit (a month, or the whole
-tree) the live copy, if stored, is renamed into the retired directory
-``.cocoa_shipments_retired`` and the new copy into its place. Last, the
-retired directory becomes snapshot ``_history/v{N}`` (``keep_history``)
-or is deleted. A crash between a unit's two renames leaves its live path
-absent, its old copy retired and its new one in the temp tree; nothing
-is lost, and the next write stops on the leftover retired directory
-instead of merging against the incomplete table.
+One writer. :func:`merge_into` is the stage-probe-upsert-write half of
+the daily job and the whole of a streaming micro-batch
+(``streaming.stream_upsert_warehouse``), and :func:`_commit` is the one
+code that publishes a table: every merge, first load, legacy upgrade,
+rollback and compaction (:func:`compact_small_files`). The write goes
+to the temp tree ``.{name}_next`` beside the table, then for each unit
+(a month, or the whole tree) the live copy, if stored, is renamed into
+the retired directory ``.{name}_retired`` and the new copy into its
+place. Last, the retired directory becomes snapshot ``_history/v{N}``
+(``keep_history``) or is deleted. A crash between a unit's two renames
+leaves its live path absent, its old copy retired and its new one in
+the temp tree; nothing is lost, and the next write stops on the
+leftover retired directory instead of merging against the incomplete
+table.
 """
 
 from __future__ import annotations
@@ -61,7 +65,7 @@ from .schemas import (
     PRICE_PER_KG_USD,
     REQUIRED_COCOA_COLUMNS,
 )
-from .sources import HadoopFS, scan_parquet, sink_parquet
+from .sources import HadoopFS, parquet_data_files, scan_parquet, sink_parquet
 
 
 def generate_cocoa_data(
@@ -291,39 +295,32 @@ class PipelineResult:
     version: int | None = None  # snapshot id when keep_history=True
 
 
-#: Hive partition column of the warehouse table. Month-of-timestamp keeps
-#: partition count bounded (12/year) while making the daily merge touch
-#: only the months a batch lands in.
+#: Hive partition column of every table :func:`merge_into` writes.
+#: Month-of-event-time keeps partition count bounded (12/year) while
+#: making a merge touch only the months its batch lands in.
 WAREHOUSE_PARTITION_COL = "load_month"
 
 
-def _load_month():
-    return F.expr("coalesce(date_format(`timestamp`, 'yyyy-MM'), 'unknown')")
-
-
-def _with_load_month(df: DataFrame) -> DataFrame:
-    return df.withColumn(WAREHOUSE_PARTITION_COL, _load_month())
-
-
-def _write_partitioned(df: DataFrame, path: str) -> int:
+def _write_partitioned(df: DataFrame, path: str, key: str) -> int:
     """partitionBy write clustered on the partition column and SORTED
-    on the merge key within partitions; returns the rows written.
+    on the table's first key ``key`` within partitions; returns the rows
+    written.
 
     Without the repartition every shuffle task holding rows of a month
     opens a writer for it — months × tasks small files. Clustering first
     yields ~one file per month; at real scale swap the plain repartition
     for (month, salt) with a per-file row target to cap file size.
 
-    The within-partition sort on shipment_id (round 11) costs one local
-    sort at write time — no extra shuffle — and makes every row group's
-    shipment_id min/max zone map TIGHT and disjoint, so the next run's
-    key-range probe (run_batch_pipeline's moved-month scan) skips row
-    groups at the parquet footer instead of decoding them. The same
-    layout move zorder_layout makes for multi-column ranges. Caveat:
-    the optimizer currently removes this sort, because the partitioned
-    writer adds its own local sort on the partition column above it,
-    so the written files are NOT key-sorted; sorting on
-    (partition column, shipment_id) would keep the order.
+    The within-partition key sort (round 11) costs one local sort at
+    write time — no extra shuffle — and makes every row group's key
+    min/max zone map TIGHT and disjoint, so the next merge's key-range
+    probe (:func:`merge_into`'s moved-month scan) skips row groups at the
+    parquet footer instead of decoding them. The same layout move
+    zorder_layout makes for multi-column ranges. Caveat: the optimizer
+    currently removes this sort, because the partitioned writer adds its
+    own local sort on the partition column above it, so the written
+    files are NOT key-sorted; sorting on (partition column, key) would
+    keep the order.
 
     The row count is an observation on the write itself, not a second
     job. It sits right after the exchange: adaptive execution replaces
@@ -336,7 +333,7 @@ def _write_partitioned(df: DataFrame, path: str) -> int:
     (
         df.repartition(F.col(WAREHOUSE_PARTITION_COL))
         .observe(written, F.count(F.lit(1)).alias("rows"))
-        .sortWithinPartitions("shipment_id")
+        .sortWithinPartitions(key)
         .write.mode("overwrite")
         .partitionBy(WAREHOUSE_PARTITION_COL)
         .parquet(path)
@@ -357,31 +354,11 @@ def run_batch_pipeline(
 
     Empty landing short-circuits (A15); invalid files are skipped and NOT
     archived so they re-scan next run (A17 semantics); valid files scan as
-    ONE DataFrame; the upsert is last-write-wins on shipment_id against
-    the parquet warehouse (A13); archive only after a successful commit
-    (A14 ordering — archival is what marks a file durable).
-
-    Spark work per run: the stage write, then on a first load the
-    warehouse write; on a merge the merge write, plus the moved-month
-    key probe only when the batch misses a stored month (when it spans
-    every stored month, the months it rewrites already hold any moved
-    key's old copy), plus a partition-pruned count only when some
-    months are untouched. ``rows_upserted`` and ``warehouse_rows`` come
-    from observations on the writes (the stage write also yields the
-    batch's key bounds and months), and every read-back uses the known
-    schema, so no side query or schema-inference job runs.
-
-    The commit is one :func:`_commit` for every layout: the first load
-    and a legacy flat table are one whole-tree unit, a partitioned table
-    one unit per affected month. Each unit's stored copy is renamed into
-    the retired directory, then its new copy (if the write produced one:
-    a month the merge emptied has none) into place. Which copies are
-    stored is known from the listing taken before the merge, so the
-    commit sends no probe for them. Crash window: between a unit's two
-    renames its live path is absent, with the old copy in
-    ``.cocoa_shipments_retired`` and the new one in
-    ``.cocoa_shipments_next``. A leftover retired directory makes the
-    next run raise ``IOError`` before it writes anything.
+    ONE DataFrame, which :func:`merge_into` upserts last-write-wins on
+    ``shipment_id`` (tiebreak ``processed_at``) into
+    ``{warehouse_dir}/cocoa_shipments`` (A13); archive only after a
+    successful commit (A14 ordering — archival is what marks a file
+    durable).
 
     ``keep_history=True`` turns every batch into a numbered snapshot
     (lakehouse-style time travel): the retired directory, holding the
@@ -393,106 +370,138 @@ def run_batch_pipeline(
     only the partitions each batch touches (never the table) — the same
     frugality contract as the merge itself.
     """
-    result = PipelineResult()
     fs = HadoopFS(spark)
     files = fs.list_files(landing_dir, ".csv")
-    if not files:
-        return result  # A15 empty-input short-circuit
-
-    valid = []
+    valid, skipped = [], []
     for path in files:
-        ok, missing = validate_header(spark, path, fs)
-        if ok:
-            valid.append(path)
-        else:
-            result.skipped_files.append(path)
+        (valid if validate_header(spark, path, fs)[0] else skipped).append(path)
     if not valid:
-        return result
+        return PipelineResult(skipped_files=skipped)  # A15 short-circuit
 
-    fs.check_retired(f"{warehouse_dir}/{RETIRED}")
     landed = (
         spark.read.schema(COCOA_LANDING_SCHEMA)
         .option("header", "true")
         .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss")
         .csv(valid)
     )
-    enriched = enrich(landed, deterministic_ts=deterministic_ts)
+    result = merge_into(
+        spark,
+        enrich(landed, deterministic_ts=deterministic_ts),
+        staging_dir,
+        f"{warehouse_dir}/{TABLE}",
+        ["shipment_id"],
+        "timestamp",
+        ["processed_at"],
+        keep_history,
+    )
+    result.skipped_files = skipped
+    result.processed_files = list(valid)
+    for path in valid:  # A14: archive only what committed
+        name = path.rsplit("/", 1)[-1]
+        if fs.move(path, f"{archive_dir}/{name}"):
+            result.archived_files.append(path)
+    return result
 
-    # Stage columnar (A9) — the warehouse loads from the stage, so a load
-    # failure never leaves the warehouse half-written from raw CSVs. The
-    # stage write observes the batch: row count, key bounds and months
-    # (bounded by the month domain).
+
+def merge_into(
+    spark: SparkSession,
+    batch: DataFrame,
+    staging_dir: str,
+    table_path: str,
+    keys: Sequence[str],
+    event_time: str,
+    tiebreak: Sequence[str],
+    keep_history: bool,
+) -> PipelineResult:
+    """Upsert ``batch`` last-write-wins on ``keys`` into the table at
+    ``table_path``, partitioned by the month of ``event_time``, and
+    publish it with :func:`_commit` — the one writer of the daily job
+    and the streaming micro-batch. Returns ``rows_upserted``,
+    ``warehouse_rows``, ``rewritten_partitions`` and ``version``.
+
+    The batch is staged columnar at ``staging_dir`` first (A9): the table
+    loads from the stage, so a load failure never leaves it half-written
+    from raw input. The stage write observes the batch's row count, the
+    bounds of its first key and its months (bounded by the month
+    domain). A table that does not exist yet, or a legacy flat one, is
+    written whole as one unit; a partitioned table rewrites only the
+    months that can hold a winner or a loser of this batch (reference
+    A13, dag.py:223-237: ON CONFLICT DO UPDATE touches only conflicting
+    rows; a daily batch over a 100 TB table must not rewrite 100 TB).
+
+    Spark work: the stage write and the table write, plus the
+    moved-month key probe only when the batch misses a stored month
+    (when it spans every stored month, the months it rewrites already
+    hold any moved key's old copy), plus a partition-pruned count only
+    when some months are untouched. Every read-back uses the known
+    schema, so no side query or schema-inference job runs. Which month
+    copies are stored is known from the listing taken before the merge,
+    so the commit sends no probe for them. A leftover retired directory
+    (see :func:`_commit`) raises ``IOError`` before anything is written.
+    """
+    fs = HadoopFS(spark)
+    fs.check_retired(_beside(table_path, RETIRED))
     part = WAREHOUSE_PARTITION_COL
+    month = F.expr(f"coalesce(date_format(`{event_time}`, 'yyyy-MM'), 'unknown')")
     observed = Observation()
     sink_parquet(
-        enriched.observe(
+        batch.observe(
             observed,
             F.count(F.lit(1)).alias("rows"),
-            F.min("shipment_id").alias("lo"),
-            F.max("shipment_id").alias("hi"),
-            F.collect_set(_load_month()).alias("months"),
+            F.min(keys[0]).alias("lo"),
+            F.max(keys[0]).alias("hi"),
+            F.collect_set(month).alias("months"),
         ),
         staging_dir,
     )
-    batch = observed.get
-    result.rows_upserted = batch["rows"]
-    schema = enriched.schema
-    staged_m = _with_load_month(spark.read.schema(schema).parquet(staging_dir))
+    seen = observed.get
+    result = PipelineResult(rows_upserted=seen["rows"])
+    schema = batch.schema
+    staged = spark.read.schema(schema).parquet(staging_dir).withColumn(part, month)
 
-    warehouse_path = f"{warehouse_dir}/{TABLE}"
     # the commit's units: month -> whether a live copy of it is stored,
     # or FULL for the whole tree (first load, legacy flat layout)
-    if fs.exists(warehouse_path):
-        # Partition-scoped merge (reference A13, dag.py:223-237): the
-        # reference's ON CONFLICT DO UPDATE touches only conflicting rows;
-        # the file-granular equivalent is rewriting only the hive
-        # partitions that can contain a winner or a loser of this batch —
-        # never the whole table (a daily batch over a 100 TB warehouse
-        # must not rewrite 100 TB).
-        months = _partitions(fs, warehouse_path)
+    if fs.exists(table_path):
+        months = _partitions(fs, table_path)
         if not months:
             # legacy flat layout: one-time full rewrite into the
             # partitioned layout, then future runs merge per-partition
-            old_affected = _with_load_month(
-                spark.read.schema(schema).parquet(warehouse_path)
+            old_affected = (
+                spark.read.schema(schema).parquet(table_path).withColumn(part, month)
             )
             units = {FULL: True}
         else:
             old = spark.read.schema(
                 StructType(schema.fields + [StructField(part, StringType())])
-            ).parquet(warehouse_path)
-            if set(months) <= set(batch["months"]):
+            ).parquet(table_path)
+            if set(months) <= set(seen["months"]):
                 # the probe below can only add stored months, and the
                 # batch rewrites every one of them already
-                affected = sorted(batch["months"])
-                old_affected = old
+                affected, old_affected = sorted(seen["months"]), old
             else:
                 # months holding a PRIOR version of a batch key (an
                 # update may move a key across months; its old copy must
-                # be deleted). Column-pruned scan of (key, month) only —
-                # parquet reads two columns, not the table — semi-joined
-                # against the batch keys. The batch key-RANGE prefilter
-                # (round 11) is conservative (the semi-join still decides
-                # membership) but PUSHES to the parquet scan: row groups
-                # whose shipment_id zone map lies outside the batch's key
-                # range are skipped at the footer, never decoded
-                # (selective once the files are key-sorted, see
-                # _write_partitioned).
+                # be deleted). Column-pruned scan of (keys, month) only,
+                # semi-joined against the batch keys. The range
+                # prefilter on the first key (round 11) is conservative
+                # (the semi-join still decides membership) but PUSHES to
+                # the parquet scan: row groups whose zone map lies
+                # outside the batch's key range are skipped at the
+                # footer, never decoded (selective once the files are
+                # key-sorted, see _write_partitioned).
                 moved = (
-                    old.select("shipment_id", part)
-                    .filter(
-                        F.col("shipment_id").between(batch["lo"], batch["hi"])
-                    )
+                    old.select(*keys, part)
+                    .filter(F.col(keys[0]).between(seen["lo"], seen["hi"]))
                     .join(
-                        F.broadcast(staged_m.select("shipment_id").distinct()),
-                        "shipment_id",
+                        F.broadcast(staged.select(*keys).distinct()),
+                        list(keys),
                         "left_semi",
                     )
                     .select(part)
                     .distinct()
                     .collect()
                 )
-                affected = sorted(set(batch["months"]) | {r[0] for r in moved})
+                affected = sorted(set(seen["months"]) | {r[0] for r in moved})
                 old_affected = old.filter(F.col(part).isin(affected))
             units = {m: m in months for m in affected}
             untouched = sorted(set(months) - set(affected))
@@ -502,58 +511,103 @@ def run_batch_pipeline(
                     F.col(part).isin(untouched)
                 ).count()
         merged = upsert_last_write_wins(
-            old_affected, staged_m, keys=["shipment_id"], tiebreak=["processed_at"]
+            old_affected, staged, keys=keys, tiebreak=tiebreak
         )
     else:
-        merged, units = staged_m, {FULL: False}
+        merged, units = staged, {FULL: False}
     # write-then-swap: never overwrite partitions we are reading from
-    result.warehouse_rows += _write_partitioned(merged, f"{warehouse_dir}/{NEXT}")
-    result.version = _commit(fs, warehouse_dir, units, keep_history, batch["months"])
+    result.warehouse_rows += _write_partitioned(
+        merged, _beside(table_path, NEXT), keys[0]
+    )
+    result.version = _commit(fs, table_path, units, keep_history, seen["months"])
     result.rewritten_partitions = ["*"] if FULL in units else list(units)
-
-    result.processed_files = list(valid)
-
-    for path in valid:  # A14: archive only what committed
-        name = path.rsplit("/", 1)[-1]
-        if fs.move(path, f"{archive_dir}/{name}"):
-            result.archived_files.append(path)
     return result
+
+
+def compact_small_files(
+    spark: SparkSession,
+    path: str,
+    target_file_bytes: int = 128 * 1024 * 1024,
+    sort_cols: Sequence[str] | None = None,
+) -> int:
+    """Compact a parquet directory's small files into ~target-size files.
+
+    The small-file problem is the classic failure mode of continuous
+    ingest (the reference lands one object per generated CSV,
+    gen_dag.py:39-51): thousands of tiny files mean per-file open/footer
+    overhead dominates scans and the driver's listing blows up.
+    Compaction = read → repartition to ceil(bytes / target) → write the
+    temp tree → :func:`_commit` as one whole-tree unit without history,
+    the same commit every table write goes through (a leftover retired
+    directory raises ``IOError`` before anything is written).
+
+    ``sort_cols`` additionally clusters rows within each output file
+    (sortWithinPartitions, no global shuffle beyond the repartition) so
+    parquet row-group min/max stats become selective — the poor man's
+    Z-order, and at 100 TB the difference between pruning row groups and
+    reading them.
+
+    Returns the number of output files written.
+    """
+    fs = HadoopFS(spark)
+    fs.check_retired(_beside(path, RETIRED))
+    n_out = max(1, -(-fs.content_bytes(path) // target_file_bytes))  # ceil
+    out = spark.read.parquet(path).repartition(int(n_out))
+    if sort_cols:
+        out = out.sortWithinPartitions(*sort_cols)
+    out.write.mode("overwrite").parquet(_beside(path, NEXT))
+    # the scan above already failed unless the directory is stored
+    _commit(fs, path, {FULL: True}, False)
+    return len(parquet_data_files(spark, path))
 
 
 # ----------------------------------------------------------------- commit
 
-#: The live table, the temp tree every write goes to, and the directory
-#: the commit renames replaced live copies into, all under the
-#: warehouse directory.
+#: The warehouse's live table under the warehouse directory.
 TABLE = "cocoa_shipments"
-NEXT = ".cocoa_shipments_next"
-RETIRED = ".cocoa_shipments_retired"
+
+#: Beside every table (see :func:`_beside`): the temp tree each write
+#: goes to, the directory the commit renames replaced live copies into,
+#: and the streaming micro-batch's stage.
+NEXT = ".{name}_next"
+RETIRED = ".{name}_retired"
+STAGE = ".{name}_stage"
 
 #: Commit unit standing for the whole table tree (and its name in a
-#: snapshot): a first load, a legacy flat layout, a rollback.
+#: snapshot): a first load, a legacy flat layout, a rollback, a
+#: compaction.
 FULL = "__full__"
+
+
+def _beside(table_path: str, leaf: str) -> str:
+    """``leaf`` in the directory holding the table at ``table_path``,
+    with ``{name}`` standing for the table's name: for
+    ``wh/cocoa_shipments``, :data:`NEXT` is ``wh/.cocoa_shipments_next``
+    and :data:`HISTORY_DIR` is ``wh/_history``."""
+    head, sep, name = table_path.rstrip("/").rpartition("/")
+    return f"{head}{sep}{leaf.format(name=name)}"
 
 
 def _commit(
     fs: HadoopFS,
-    warehouse_dir: str,
+    table_path: str,
     units: dict[str, bool],
     keep_history: bool,
     batch_months: Sequence[str] = (),
     **manifest_extra,
 ) -> int | None:
-    """Publish the temp tree over the live table: one
-    :meth:`HadoopFS.swap` of ``units`` (month → whether a live copy of
-    it is stored, or :data:`FULL` → whether the table exists), which
-    renames each stored copy into the retired directory and then the new
-    one into place.
+    """Publish the temp tree over the live table ``table_path``, the only
+    code that does: one :meth:`HadoopFS.swap` of ``units`` (month →
+    whether a live copy of it is stored, or :data:`FULL` → whether the
+    table exists), which renames each stored copy into the retired
+    directory and then the new one into place.
 
     ``keep_history`` only decides what becomes of the retired directory:
-    it is renamed to ``_history/v{N}`` after snapshot N's manifest is
-    written (returns N), or deleted (returns None). The manifest comes
-    from the units: a stored month was "replaced", a new one "created";
-    a whole-tree unit is ``full`` when it retired a tree, and otherwise
-    (a first load) creates ``batch_months``.
+    it is renamed to ``_history/v{N}`` beside the table after snapshot
+    N's manifest is written (returns N), or deleted (returns None). The
+    manifest comes from the units: a stored month was "replaced", a new
+    one "created"; a whole-tree unit is ``full`` when it retired a tree,
+    and otherwise (a first load) creates ``batch_months``.
 
     Crash window: between a unit's two renames its live path is absent,
     its old copy in the retired directory and its new one in the temp
@@ -561,13 +615,12 @@ def _commit(
     (:meth:`HadoopFS.check_retired`) instead of merging against the
     incomplete table.
     """
-    live, tmp = f"{warehouse_dir}/{TABLE}", f"{warehouse_dir}/{NEXT}"
-    retired = f"{warehouse_dir}/{RETIRED}"
+    tmp, retired = _beside(table_path, NEXT), _beside(table_path, RETIRED)
     # a unit's path below the table root, "" for the whole tree
     rel = {m: "" if m == FULL else f"/{WAREHOUSE_PARTITION_COL}={m}" for m in units}
     any_retired = fs.swap(
         [
-            (tmp + rel[m], live + rel[m], (rel[m][1:] or FULL) if stored else None)
+            (tmp + rel[m], table_path + rel[m], (rel[m][1:] or FULL) if stored else None)
             for m, stored in units.items()
         ],
         retired,
@@ -577,24 +630,25 @@ def _commit(
         if any_retired:
             fs.delete(retired)
         return None
-    manifests = _read_manifests(fs, warehouse_dir)
+    history = _beside(table_path, HISTORY_DIR)
+    manifests = _read_manifests(fs, history)
     version = manifests[-1]["version"] + 1 if manifests else 0
-    first_load = units == {FULL: False}
     manifest = {
         "version": version,
         "full": units.get(FULL, False),
+        # a first load creates the batch's months
         "created": sorted(
-            batch_months if first_load else [m for m in units if not units[m]]
+            batch_months if units == {FULL: False} else [m for m in units if not units[m]]
         ),
         "replaced": sorted(m for m in units if units[m] and m != FULL),
         **manifest_extra,
     }
     fs.write_bytes(
-        f"{warehouse_dir}/{HISTORY_DIR}/manifest_v{version:06d}.json",
+        f"{history}/manifest_v{version:06d}.json",
         json.dumps(manifest).encode("utf-8"),
     )
     if any_retired:
-        fs.move(retired, f"{warehouse_dir}/{HISTORY_DIR}/v{version}")
+        fs.move(retired, f"{history}/v{version}")
     return version
 
 
@@ -605,10 +659,10 @@ def _commit(
 HISTORY_DIR = "_history"
 
 
-def _read_manifests(fs: HadoopFS, warehouse_dir: str) -> list[dict]:
+def _read_manifests(fs: HadoopFS, history: str) -> list[dict]:
     out = [
         json.loads(fs.read_bytes(path).decode("utf-8"))
-        for path in fs.list_files(f"{warehouse_dir}/{HISTORY_DIR}", ".json")
+        for path in fs.list_files(history, ".json")
     ]
     return sorted(out, key=lambda m: m["version"])
 
@@ -646,7 +700,7 @@ def read_warehouse_version(
     part = WAREHOUSE_PARTITION_COL
     warehouse_path = f"{warehouse_dir}/{TABLE}"
     fs = HadoopFS(spark)
-    manifests = _read_manifests(fs, warehouse_dir)
+    manifests = _read_manifests(fs, f"{warehouse_dir}/{HISTORY_DIR}")
     if not manifests:
         raise ValueError(f"no snapshot history under {warehouse_dir}")
     max_v = manifests[-1]["version"]
@@ -717,11 +771,12 @@ def rollback_warehouse(
     as the merge's): the current live tree becomes the new snapshot's
     ``__full__`` copy. Returns the new snapshot id.
     """
+    table = f"{warehouse_dir}/{TABLE}"
     fs = HadoopFS(spark)
-    fs.check_retired(f"{warehouse_dir}/{RETIRED}")
+    fs.check_retired(_beside(table, RETIRED))
     state = read_warehouse_version(spark, warehouse_dir, version)
-    _write_partitioned(state, f"{warehouse_dir}/{NEXT}")
-    return _commit(fs, warehouse_dir, {FULL: True}, True, rollback_of=version)
+    _write_partitioned(state, _beside(table, NEXT), "shipment_id")
+    return _commit(fs, table, {FULL: True}, True, rollback_of=version)
 
 
 def expire_history(
@@ -738,7 +793,7 @@ def expire_history(
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     fs = HadoopFS(spark)
-    manifests = _read_manifests(fs, warehouse_dir)
+    manifests = _read_manifests(fs, f"{warehouse_dir}/{HISTORY_DIR}")
     if not manifests:
         return []
     cutoff = manifests[-1]["version"] - keep_last + 1

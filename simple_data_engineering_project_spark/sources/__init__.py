@@ -18,7 +18,7 @@ works unchanged — at 100 TB these same calls fan out over the cluster.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -114,6 +114,11 @@ class HadoopFS:
     def exists(self, path: str) -> bool:
         fs, p = self._resolve(path)
         return bool(fs.exists(p))
+
+    def content_bytes(self, path: str) -> int:
+        """Total length of the files under ``path``."""
+        fs, p = self._resolve(path)
+        return int(fs.getContentSummary(p).getLength())
 
     def delete(self, path: str) -> bool:
         """Recursive delete; False when ``path`` is absent."""
@@ -246,31 +251,6 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
     """Recursive Hadoop-FS delete (no-op if absent) — portable, unlike
     shutil.rmtree which only understands local paths."""
     return HadoopFS(spark).delete(path)
-
-
-def rewrite_directory(
-    spark: SparkSession, path: str, write: Callable[[str, bool], None]
-) -> None:
-    """Replace the directory ``path`` with the copy ``write(tmp, stored)``
-    writes to ``tmp`` (``stored``: whether ``path`` exists now).
-
-    The new copy is published by :meth:`HadoopFS.swap` through the
-    retired directory ``{path}__old``, which is deleted once the new copy
-    is in place. Readers see the old or the new directory, never a
-    partial write; only between the swap's two renames is ``path``
-    absent, and then its old copy is in ``{path}__old``. A
-    ``{path}__old`` left by an unfinished rewrite raises ``IOError``
-    before anything is written, and is kept.
-    """
-    fs = HadoopFS(spark)
-    old = f"{path}__old"
-    fs.check_retired(old)
-    stored = fs.exists(path)
-    tmp = f"{path}__next"
-    write(tmp, stored)
-    name = path.rstrip("/").rsplit("/", 1)[-1]
-    if fs.swap([(tmp, path, name if stored else None)], old):
-        fs.delete(old)
 
 
 def scan_csv(
@@ -412,42 +392,6 @@ def save_bucketed(
     w.format("parquet").saveAsTable(table)
 
 
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_cols: Sequence[str] | None = None,
-) -> int:
-    """Compact a parquet directory's small files into ~target-size files.
-
-    The small-file problem is the classic failure mode of continuous
-    ingest (the reference lands one object per generated CSV,
-    gen_dag.py:39-51; our streaming upsert inherits that shape): thousands
-    of tiny files mean per-file open/footer overhead dominates scans and
-    the driver's listing blows up. Compaction = read → repartition to
-    ceil(bytes / target) → rewrite → atomic swap.
-
-    ``sort_cols`` additionally clusters rows within each output file
-    (sortWithinPartitions, no global shuffle beyond the repartition) so
-    parquet row-group min/max stats become selective — the poor man's
-    Z-order, and at 100 TB the difference between pruning row groups and
-    reading them.
-
-    Returns the number of output files written.
-    """
-    fs, p = HadoopFS(spark)._resolve(path)
-    total_bytes = fs.getContentSummary(p).getLength()
-    n_out = max(1, -(-total_bytes // target_file_bytes))  # ceil
-    df = spark.read.parquet(path)
-    out = df.repartition(int(n_out))
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    rewrite_directory(
-        spark, path, lambda tmp, _: out.write.mode("overwrite").parquet(tmp)
-    )
-    return len(parquet_data_files(spark, path))
-
-
 def list_files(spark: SparkSession, directory: str, suffix: str = ".csv") -> list[str]:
     """Landing discovery (reference A1, dag.py:66-68): list + suffix filter.
 
@@ -471,7 +415,5 @@ __all__ = [
     "HadoopFS",
     "fs_exists",
     "fs_delete",
-    "rewrite_directory",
-    "compact_small_files",
     "list_files",
 ]

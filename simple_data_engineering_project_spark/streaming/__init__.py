@@ -11,7 +11,10 @@ Every transformation here is also valid on a batch DataFrame — the batch
 twin of each query lives in plans/catalog.py (events_tumbling_agg,
 events_session_agg) and is what the DuckDB oracle checks; these builders
 add only watermarks + output mode, so stream and batch share one logical
-plan (the Structured Streaming contract).
+plan (the Structured Streaming contract). That covers the write too:
+the streaming upsert's micro-batch is the batch pipeline's one writer,
+``pipeline.merge_into``, with the same stage, partition-scoped merge
+and commit.
 """
 
 from __future__ import annotations
@@ -192,41 +195,30 @@ def stream_upsert_warehouse(
     discovery → keyed last-write-wins upsert into the parquet warehouse,
     one transaction per micro-batch via ``foreachBatch``.
 
-    Each micro-batch applies :func:`~..operators.upsert.upsert_last_write_wins`
-    between the current warehouse and the batch, writes the result to a
-    side path and publishes it with
-    :func:`~..sources.rewrite_directory` (the current copy is renamed
-    aside, then the new one into place). The checkpoint replaces the
-    reference's manifest snapshots (A2); replay of a failed batch is
-    idempotent because the upsert is deterministic — the exact guarantee
-    the reference gets from ON CONFLICT (README.md:31). A copy left aside
-    by a crash between those two renames fails every later micro-batch
-    instead of being taken for "no warehouse yet".
-
-    At warehouse scale the swap becomes partition-overwrite or a Delta
-    MERGE; the per-batch logic is unchanged.
+    Each micro-batch is one :func:`~..pipeline.merge_into` — the daily
+    job's own merge and commit — on ``keys``, partitioned by the month of
+    ``ts``: the batch is staged to ``.{name}_stage`` beside the table,
+    and only the months it touches (plus any month holding the old copy
+    of a moved key) are rewritten and published through the table's
+    retired directory. The checkpoint replaces the reference's manifest
+    snapshots (A2); replay of a failed batch is idempotent because the
+    upsert is deterministic — the exact guarantee the reference gets
+    from ON CONFLICT (README.md:31). A copy left in the retired
+    directory by a crash between a commit's two renames fails every
+    later micro-batch instead of being taken for "no warehouse yet". A
+    flat table is upgraded to the partitioned layout by its next
+    micro-batch.
     """
-    from ..operators.upsert import upsert_last_write_wins
-    from ..sources import rewrite_directory
+    from ..pipeline import STAGE, _beside, merge_into
 
     keys = keys or ["event_id"]
+    stage = _beside(warehouse_path, STAGE)
 
     def _apply(batch_df, batch_id: int) -> None:
-        s = batch_df.sparkSession
-
-        def write(tmp: str, stored: bool) -> None:
-            # only "warehouse not yet created" may fall back to
-            # merged=batch; any other failure (schema-drift ValueError
-            # from the upsert, transient FS error) must propagate so the
-            # micro-batch fails and REPLAYS — swallowing it would replace
-            # the whole warehouse with one micro-batch
-            merged = batch_df
-            if stored:
-                current = s.read.parquet(warehouse_path)
-                merged = upsert_last_write_wins(current, batch_df, keys=keys)
-            merged.write.mode("overwrite").parquet(tmp)
-
-        rewrite_directory(s, warehouse_path, write)
+        merge_into(
+            batch_df.sparkSession, batch_df, stage, warehouse_path, keys,
+            "ts", (), False,
+        )
 
     events = read_events_stream(spark, source_dir, max_files_per_trigger)
     return (

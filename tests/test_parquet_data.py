@@ -2439,3 +2439,24 @@ def test_page_index_truncation_and_bitflips_never_hang():
             # data-region flip: values may legally decode corrupted;
             # raise-or-return is the whole contract here
             pass
+
+
+def test_struct_fields_read_back_in_schema_order():
+    # the nested reader builds a struct from its leaves in schema
+    # (depth-first) order, so the fields come back in declared order,
+    # as pyarrow and the pure ORC reader return them
+    from simple_data_engineering_project_spark.operators.parquet_data import (
+        read_parquet_nested_bytes,
+    )
+    from simple_data_engineering_project_spark.operators.parquet_write import (
+        build_parquet_bytes,
+    )
+
+    blob = build_parquet_bytes(
+        {"s": [{"b": 1, "a": 2}]}, {"s": "struct<b:bigint,a:bigint>"}
+    )
+    (cell,) = read_parquet_nested_bytes(blob, ["s"])["s"]
+    (want,) = pq.read_table(io.BytesIO(blob)).column("s").to_pylist()
+    assert list(want) == ["b", "a"]
+    assert list(cell) == list(want)
+    assert cell == want

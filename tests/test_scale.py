@@ -131,10 +131,10 @@ def test_q6_predicates_reach_scan(spark, sf_smoke):
 def test_compact_small_files(spark, sf_smoke, tmp_path):
     import os
 
-    from simple_data_engineering_project_spark.sources import (
+    from simple_data_engineering_project_spark.pipeline import (
         compact_small_files,
-        read_table,
     )
+    from simple_data_engineering_project_spark.sources import read_table
 
     path = str(tmp_path / "frag")
     ev = read_table(spark, sf_smoke, "events")
@@ -154,11 +154,12 @@ def test_compact_small_files(spark, sf_smoke, tmp_path):
 
 
 def test_compaction_stops_on_a_leftover_retired_directory(spark, tmp_path):
-    # {path}__old left by an unfinished rewrite may hold the only copy of
-    # the data: compaction raises before writing anything and keeps it
+    # a .{name}_retired directory left by an unfinished commit may hold
+    # the only copy of the data: compaction raises before writing
+    # anything and keeps it
     import os
 
-    from simple_data_engineering_project_spark.sources import (
+    from simple_data_engineering_project_spark.pipeline import (
         compact_small_files,
     )
 
@@ -172,12 +173,13 @@ def test_compaction_stops_on_a_leftover_retired_directory(spark, tmp_path):
 
     path = str(tmp_path / "frag")
     spark.range(200).repartition(8).write.parquet(path)
-    spark.range(50).write.parquet(f"{path}__old/frag")
-    before = (tree(path), tree(f"{path}__old"))
-    with pytest.raises(IOError, match="frag__old"):
+    retired = str(tmp_path / ".frag_retired")
+    spark.range(50).write.parquet(f"{retired}/__full__")
+    before = (tree(path), tree(retired))
+    with pytest.raises(IOError, match=".frag_retired"):
         compact_small_files(spark, path)
-    assert (tree(path), tree(f"{path}__old")) == before
-    assert sorted(os.listdir(tmp_path)) == ["frag", "frag__old"]
+    assert (tree(path), tree(retired)) == before
+    assert sorted(os.listdir(tmp_path)) == [".frag_retired", "frag"]
 
 
 def _iter_physical_nodes(node):
@@ -820,9 +822,9 @@ def test_compact_parquet_reduces_file_count(spark, sf_smoke, tmp_path):
 # New broadcast sites FAIL this audit until added here with a
 # boundedness justification in the comment.
 _BROADCAST_ALLOWLIST = {
-    # pipeline: staged batch keys — bounded by a single ingest batch,
-    # not by warehouse size
-    ("pipeline.py", "run_batch_pipeline", "staged_m.select('shipment_id').distinct()"),
+    # pipeline / streaming micro-batch: staged batch keys — bounded by a
+    # single ingest batch, not by table size
+    ("pipeline.py", "merge_into", "staged.select(*keys).distinct()"),
     # nation (25 rows) / region (5 rows) dims — constant at every sf
     ("plans/catalog.py", "agg_value_by_region", "n"),
     ("plans/catalog.py", "agg_value_by_region", "r"),
@@ -993,7 +995,7 @@ _COLLECT_ALLOWLIST = {
     # moved-month probe: distinct months only — bounded by the month
     # domain, never row-proportional (round 11 added the pushed
     # key-range prefilter ahead of the semi-join)
-    ("pipeline.py", "run_batch_pipeline", "old.select('shipment_id', part).filter(F.col('shipment_id')."),
+    ("pipeline.py", "merge_into", "old.select(*keys, part).filter(F.col(keys[0]).between(seen['"),
     # fixed-domain / capped censuses
     ("plans/catalog.py", "join_bloom_prefilter_q", "dim.select(F.explode(F.array(*pos_cols)).alias('pos')).selec"),  # 256 bloom words
     ("plans/catalog.py", "embedding_pca_power_q", "x.mapInPandas(_gram, schema='j int, k int, g long').groupBy("),  # 64×64 Gram

@@ -5,6 +5,8 @@ maxFilesPerTrigger batching and watermarked session windows.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -174,7 +176,7 @@ def test_stream_upsert_warehouse(spark, sf_smoke, events_dir, tmp_path):
     loaded = spark.read.parquet(wh)
     batch = read_table(spark, sf_smoke, "events")
     assert loaded.count() == batch.count()  # event_id unique → full load
-    assert sorted(loaded.columns) == sorted(batch.columns)
+    assert sorted(loaded.drop("load_month").columns) == sorted(batch.columns)
     # replay with a fresh checkpoint: idempotent (same keyed result)
     q2 = stream_upsert_warehouse(
         spark, events_dir, wh, str(tmp_path / "ckpt2"), keys=["event_id"]
@@ -182,6 +184,127 @@ def test_stream_upsert_warehouse(spark, sf_smoke, events_dir, tmp_path):
     q2.awaitTermination(180)
     q2.stop()
     assert spark.read.parquet(wh).count() == batch.count()
+
+
+def _append_events(spark, src, first, last, day):
+    """Append one parquet file of events ``first``..``last - 1`` at noon
+    of ``day`` to the stream source ``src``."""
+    (
+        spark.range(first, last)
+        .selectExpr(
+            "id AS event_id",
+            f"TIMESTAMP'{day} 12:00:00' AS ts",
+            "id % 7 AS user_id",
+            "'view' AS event_type",
+            "CAST(id AS DOUBLE) AS value",
+            "CAST(NULL AS STRING) AS props",
+        )
+        .coalesce(1)
+        .write.mode("append")
+        .parquet(src)
+    )
+
+
+def _upsert_once(spark, src, wh, ckpt):
+    from simple_data_engineering_project_spark.streaming import (
+        stream_upsert_warehouse,
+    )
+
+    q = stream_upsert_warehouse(spark, src, wh, ckpt, keys=["event_id"])
+    try:
+        q.awaitTermination(180)
+    finally:
+        q.stop()
+
+
+def _file_digests(root):
+    """{path below root: (size, sha256)} of every file under root."""
+    import hashlib
+    import os
+
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            full = os.path.join(dirpath, fn)
+            with open(full, "rb") as f:
+                digest = hashlib.sha256(f.read()).hexdigest()
+            out[os.path.relpath(full, root)] = (os.path.getsize(full), digest)
+    return out
+
+
+def _stored_events(spark, wh):
+    return sorted(
+        (r["event_id"], r["value"])
+        for r in spark.read.parquet(wh).select("event_id", "value").collect()
+    )
+
+
+def test_stream_micro_batch_rewrites_only_its_months(spark, tmp_path):
+    # a micro-batch goes through the batch pipeline's merge: it rewrites
+    # the months it touches and leaves every file of the others alone
+    src, wh, ckpt = (str(tmp_path / d) for d in ("src", "wh", "ckpt"))
+    _append_events(spark, src, 0, 100, "2024-01-15")
+    _append_events(spark, src, 100, 200, "2024-02-15")
+    _upsert_once(spark, src, wh, ckpt)
+    january = _file_digests(f"{wh}/load_month=2024-01")
+    february = _file_digests(f"{wh}/load_month=2024-02")
+    assert january and february
+
+    _append_events(spark, src, 200, 250, "2024-02-20")
+    _upsert_once(spark, src, wh, ckpt)
+    assert _file_digests(f"{wh}/load_month=2024-01") == january
+    assert _file_digests(f"{wh}/load_month=2024-02") != february
+    assert _stored_events(spark, wh) == [(i, float(i)) for i in range(250)]
+    assert [n for n in os.listdir(tmp_path) if n.startswith(".wh_")] == [".wh_stage"]
+
+
+def test_stream_stops_on_a_leftover_retired_directory(spark, tmp_path):
+    # a .{name}_retired directory left by an unfinished commit may hold
+    # the only copy of a month: the micro-batch raises before writing
+    # anything, and the directory stays as it was
+    from pyspark.errors import StreamingQueryException
+
+    src, wh, ckpt = (str(tmp_path / d) for d in ("src", "wh", "ckpt"))
+    _append_events(spark, src, 0, 100, "2024-01-15")
+    _upsert_once(spark, src, wh, ckpt)
+    retired = str(tmp_path / ".wh_retired")
+    spark.range(5).write.parquet(f"{retired}/load_month=2024-01")
+    _append_events(spark, src, 100, 150, "2024-01-20")
+
+    def written():  # the table, its stage and the retired directory
+        return {
+            d: _file_digests(str(tmp_path / d))
+            for d in os.listdir(tmp_path)
+            if d not in ("src", "ckpt")
+        }
+
+    before = written()
+    with pytest.raises(StreamingQueryException, match="wh_retired"):
+        _upsert_once(spark, src, wh, ckpt)
+    assert written() == before
+
+
+def test_stream_upgrades_a_flat_events_table(spark, tmp_path):
+    # a flat events table, as the stream wrote it before it partitioned
+    # by month, is rewritten whole into the partitioned layout by the
+    # next micro-batch, keeping its rows
+    src, wh, ckpt = (str(tmp_path / d) for d in ("src", "wh", "ckpt"))
+    _append_events(spark, str(tmp_path / "old"), 0, 100, "2024-01-15")
+    _append_events(spark, str(tmp_path / "old"), 100, 200, "2024-02-15")
+    spark.read.parquet(str(tmp_path / "old")).write.parquet(wh)
+    _append_events(spark, src, 150, 250, "2024-03-15")
+    _upsert_once(spark, src, wh, ckpt)
+    assert sorted(n for n in os.listdir(wh) if not n.startswith((".", "_"))) == [
+        "load_month=2024-01", "load_month=2024-02", "load_month=2024-03",
+    ]
+    stored = spark.read.parquet(wh)
+    assert _stored_events(spark, wh) == [(i, float(i)) for i in range(250)]
+    months = dict(
+        stored.filter("event_id IN (0, 120, 180)")
+        .select("event_id", "load_month")
+        .collect()
+    )
+    assert months == {0: "2024-01", 120: "2024-02", 180: "2024-03"}
 
 
 def test_stream_stream_conversion_join_matches_batch(spark, sf_smoke, events_dir):
