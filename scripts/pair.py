@@ -2,13 +2,15 @@
 
 Usage:
     python scripts/pair.py PARENT_TREE CHANGE_TREE --workload daily_upsert \
-        --seeds 1-10 [--seconds 15]
+        --seeds 1-10
 
-For each seed it runs ``python3 perfbench/run.py --workload W --seed N
---seconds S --trace 0`` once in each tree (the tree is the working
-directory), one after the other; the side that runs first alternates
-from pair to pair, so drift on a shared host falls on both sides alike.
-Each run's last stdout line is its JSON result.
+For each seed it runs the benchmark's command from ``BENCHMARK.json``
+(read from CHANGE_TREE) as ``python3 perfbench/run.py --workload W
+--seconds S --trace 0 --seed N``, S being its ``run_seconds``, once in
+each tree (the tree is the working directory), one after the other, so
+both sides run exactly as the benchmark does. The side that runs first
+alternates from pair to pair, so drift on a shared host falls on both
+sides alike. Each run's last stdout line is its JSON result.
 
 It prints every pair's end-to-end metrics, then one row per metric of
 ``BENCHMARK.json`` (read from CHANGE_TREE): the parent and change
@@ -37,14 +39,12 @@ def parse_seeds(text: str) -> list[int]:
     return seeds
 
 
-def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict | None:
-    """One benchmark run in ``tree``; its JSON result, or None when the
-    run printed none."""
-    cmd = [
-        "python3", "perfbench/run.py", "--workload", workload,
-        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0",
-    ]
-    proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+def run_once(tree: str, cmd: list[str], seed: int) -> dict | None:
+    """One benchmark run of ``cmd`` with seed ``seed`` in ``tree``; its
+    JSON result, or None when the run printed none."""
+    proc = subprocess.run(
+        [*cmd, "--seed", str(seed)], cwd=tree, capture_output=True, text=True
+    )
     for line in reversed(proc.stdout.strip().splitlines()):
         if line.startswith("{"):
             return json.loads(line)
@@ -102,10 +102,14 @@ def main() -> int:
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 1-10 or 3,5,8")
-    ap.add_argument("--seconds", type=float, default=15)
     args = ap.parse_args()
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
-        end_to_end = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    end_to_end = bench["end_to_end"]
+    cmd = [
+        *bench["command"], "--workload", args.workload,
+        "--seconds", str(bench["run_seconds"]), "--trace", "0",
+    ]
     names = [m["name"] for m in end_to_end]
     sides = {"parent": args.parent, "change": args.change}
     totals = {side: [0, 0] for side in sides}  # failed, attempted
@@ -116,7 +120,7 @@ def main() -> int:
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         got = {
-            side: run_once(sides[side], args.workload, seed, args.seconds)
+            side: run_once(sides[side], cmd, seed)
             for side in order
         }
         for side, res in got.items():

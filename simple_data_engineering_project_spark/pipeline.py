@@ -374,9 +374,14 @@ def run_batch_pipeline(
     files = fs.list_files(landing_dir, ".csv")
     valid, skipped = [], []
     for path in files:
-        (valid if validate_header(spark, path, fs)[0] else skipped).append(path)
+        ok, _missing = validate_header(spark, path, fs)
+        if ok:
+            valid.append(path)
+        else:
+            skipped.append(path)
     if not valid:
-        return PipelineResult(skipped_files=skipped)  # A15 short-circuit
+        # A15: an empty landing (or one of invalid files only) short-circuits
+        return PipelineResult(skipped_files=skipped)
 
     landed = (
         spark.read.schema(COCOA_LANDING_SCHEMA)
@@ -437,12 +442,20 @@ def merge_into(
     schema, so no side query or schema-inference job runs. Which month
     copies are stored is known from the listing taken before the merge,
     so the commit sends no probe for them. A leftover retired directory
-    (see :func:`_commit`) raises ``IOError`` before anything is written.
+    (see :func:`_commit`) raises ``IOError``, and a stored table whose
+    columns are not the batch's raises ``ValueError`` (schema drift: a
+    failed micro-batch replays), both before anything is written.
     """
     fs = HadoopFS(spark)
     fs.check_retired(_beside(table_path, RETIRED))
+    stored = fs.exists(table_path)
+    months = _partitions(fs, table_path) if stored else []
+    if stored:
+        _check_columns(fs, table_path, months, batch.columns)
     part = WAREHOUSE_PARTITION_COL
-    month = F.expr(f"coalesce(date_format(`{event_time}`, 'yyyy-MM'), 'unknown')")
+    month = F.expr(
+        f"coalesce(date_format(`{event_time}`, 'yyyy-MM'), 'unknown')"
+    )
     observed = Observation()
     sink_parquet(
         batch.observe(
@@ -457,17 +470,20 @@ def merge_into(
     seen = observed.get
     result = PipelineResult(rows_upserted=seen["rows"])
     schema = batch.schema
-    staged = spark.read.schema(schema).parquet(staging_dir).withColumn(part, month)
+    staged = (
+        spark.read.schema(schema).parquet(staging_dir).withColumn(part, month)
+    )
 
     # the commit's units: month -> whether a live copy of it is stored,
     # or FULL for the whole tree (first load, legacy flat layout)
-    if fs.exists(table_path):
-        months = _partitions(fs, table_path)
+    if stored:
         if not months:
             # legacy flat layout: one-time full rewrite into the
             # partitioned layout, then future runs merge per-partition
             old_affected = (
-                spark.read.schema(schema).parquet(table_path).withColumn(part, month)
+                spark.read.schema(schema)
+                .parquet(table_path)
+                .withColumn(part, month)
             )
             units = {FULL: True}
         else:
@@ -477,7 +493,8 @@ def merge_into(
             if set(months) <= set(seen["months"]):
                 # the probe below can only add stored months, and the
                 # batch rewrites every one of them already
-                affected, old_affected = sorted(seen["months"]), old
+                affected = sorted(seen["months"])
+                old_affected = old
             else:
                 # months holding a PRIOR version of a batch key (an
                 # update may move a key across months; its old copy must
@@ -514,14 +531,38 @@ def merge_into(
             old_affected, staged, keys=keys, tiebreak=tiebreak
         )
     else:
-        merged, units = staged, {FULL: False}
+        merged = staged
+        units = {FULL: False}
     # write-then-swap: never overwrite partitions we are reading from
     result.warehouse_rows += _write_partitioned(
         merged, _beside(table_path, NEXT), keys[0]
     )
-    result.version = _commit(fs, table_path, units, keep_history, seen["months"])
+    result.version = _commit(
+        fs, table_path, units, keep_history, seen["months"]
+    )
     result.rewritten_partitions = ["*"] if FULL in units else list(units)
     return result
+
+
+def _check_columns(
+    fs: HadoopFS, table_path: str, months: Sequence[str], columns: Sequence[str]
+) -> None:
+    """Raise ``ValueError`` unless the stored table at ``table_path``
+    holds exactly the batch's ``columns`` (names, any order), read from
+    one data file's footer: the merge reads the table with the batch's
+    schema, which would silently drop a stored column the batch lacks
+    and read one only the batch has as NULL for every stored row. The
+    partition column lives in directory names, not in the files."""
+    first = table_path + _unit_dir(months[0] if months else FULL)
+    files = fs.list_files(first, ".parquet")
+    if not files:
+        return
+    stored = fs.parquet_columns(files[0])
+    if sorted(stored) != sorted(columns):
+        raise ValueError(
+            f"{table_path} stores columns {sorted(stored)}, the batch has "
+            f"{sorted(columns)}; a merge requires identical column sets"
+        )
 
 
 def compact_small_files(
@@ -537,9 +578,15 @@ def compact_small_files(
     gen_dag.py:39-51): thousands of tiny files mean per-file open/footer
     overhead dominates scans and the driver's listing blows up.
     Compaction = read → repartition to ceil(bytes / target) → write the
-    temp tree → :func:`_commit` as one whole-tree unit without history,
-    the same commit every table write goes through (a leftover retired
-    directory raises ``IOError`` before anything is written).
+    temp tree → :func:`_commit` without history, the same commit every
+    table write goes through (a leftover retired directory raises
+    ``IOError`` before anything is written). A table partitioned by
+    month, the layout :func:`merge_into` writes, compacts month by month
+    and keeps that layout: each month is one commit unit, so the next
+    merge still rewrites only its months, and the snapshots of a
+    history-keeping warehouse still resolve against the live months
+    (compaction changes files, not rows). A flat directory is one
+    whole-tree unit.
 
     ``sort_cols`` additionally clusters rows within each output file
     (sortWithinPartitions, no global shuffle beyond the repartition) so
@@ -551,14 +598,21 @@ def compact_small_files(
     """
     fs = HadoopFS(spark)
     fs.check_retired(_beside(path, RETIRED))
-    n_out = max(1, -(-fs.content_bytes(path) // target_file_bytes))  # ceil
-    out = spark.read.parquet(path).repartition(int(n_out))
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
-    out.write.mode("overwrite").parquet(_beside(path, NEXT))
-    # the scan above already failed unless the directory is stored
-    _commit(fs, path, {FULL: True}, False)
-    return len(parquet_data_files(spark, path))
+    tmp = _beside(path, NEXT)
+    units = _partitions(fs, path) or [FULL]
+    for unit in units:
+        sub = _unit_dir(unit)
+        total = sum(sz for _, sz in parquet_data_files(spark, path + sub))
+        n_out = max(1, -(-total // target_file_bytes))  # ceil
+        out = spark.read.parquet(path + sub).repartition(int(n_out))
+        if sort_cols:
+            out = out.sortWithinPartitions(*sort_cols)
+        out.write.mode("overwrite").parquet(tmp + sub)
+    # the scans above already failed unless every unit is stored
+    _commit(fs, path, dict.fromkeys(units, True), False)
+    return sum(
+        len(parquet_data_files(spark, path + _unit_dir(unit))) for unit in units
+    )
 
 
 # ----------------------------------------------------------------- commit
@@ -588,6 +642,12 @@ def _beside(table_path: str, leaf: str) -> str:
     return f"{head}{sep}{leaf.format(name=name)}"
 
 
+def _unit_dir(unit: str) -> str:
+    """A commit unit's directory below the table root: ``/load_month=m``
+    for month ``m``, "" for :data:`FULL`."""
+    return "" if unit == FULL else f"/{WAREHOUSE_PARTITION_COL}={unit}"
+
+
 def _commit(
     fs: HadoopFS,
     table_path: str,
@@ -615,12 +675,16 @@ def _commit(
     (:meth:`HadoopFS.check_retired`) instead of merging against the
     incomplete table.
     """
-    tmp, retired = _beside(table_path, NEXT), _beside(table_path, RETIRED)
-    # a unit's path below the table root, "" for the whole tree
-    rel = {m: "" if m == FULL else f"/{WAREHOUSE_PARTITION_COL}={m}" for m in units}
+    tmp = _beside(table_path, NEXT)
+    retired = _beside(table_path, RETIRED)
+    rel = {m: _unit_dir(m) for m in units}
     any_retired = fs.swap(
         [
-            (tmp + rel[m], table_path + rel[m], (rel[m][1:] or FULL) if stored else None)
+            (
+                tmp + rel[m],
+                table_path + rel[m],
+                (rel[m][1:] or FULL) if stored else None,
+            )
             for m, stored in units.items()
         ],
         retired,
@@ -633,12 +697,12 @@ def _commit(
     history = _beside(table_path, HISTORY_DIR)
     manifests = _read_manifests(fs, history)
     version = manifests[-1]["version"] + 1 if manifests else 0
+    first_load = units == {FULL: False}
     manifest = {
         "version": version,
         "full": units.get(FULL, False),
-        # a first load creates the batch's months
         "created": sorted(
-            batch_months if units == {FULL: False} else [m for m in units if not units[m]]
+            batch_months if first_load else [m for m in units if not units[m]]
         ),
         "replaced": sorted(m for m in units if units[m] and m != FULL),
         **manifest_extra,
@@ -744,10 +808,8 @@ def read_warehouse_version(
                 f"{warehouse_dir}/{HISTORY_DIR}/"
                 f"v{replaced_later[p]}/{part}={p}"
             )
-        elif p in base:
+        else:  # p is in base
             src = f"{base_path}/{part}={p}"
-        else:
-            continue
         pieces.append(
             spark.read.parquet(src).withColumn(part, F.lit(p))
         )

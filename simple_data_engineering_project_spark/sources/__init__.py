@@ -115,11 +115,6 @@ class HadoopFS:
         fs, p = self._resolve(path)
         return bool(fs.exists(p))
 
-    def content_bytes(self, path: str) -> int:
-        """Total length of the files under ``path``."""
-        fs, p = self._resolve(path)
-        return int(fs.getContentSummary(p).getLength())
-
     def delete(self, path: str) -> bool:
         """Recursive delete; False when ``path`` is absent."""
         fs, p = self._resolve(path)
@@ -227,6 +222,14 @@ class HadoopFS:
             return bytes(io_utils.toByteArray(stream))
         finally:
             stream.close()
+
+    def parquet_columns(self, path: str) -> list[str]:
+        """Top-level column names of the parquet file ``path``, read from
+        its footer alone (no Spark job)."""
+        _, p = self._resolve(path)
+        reader = self._class("org.apache.parquet.hadoop.ParquetFileReader")
+        schema = reader.readFooter(self._conf, p).getFileMetaData().getSchema()
+        return [schema.getFieldName(i) for i in range(schema.getFieldCount())]
 
     def write_bytes(self, path: str, data: bytes) -> None:
         fs, p = self._resolve(path)

@@ -205,9 +205,11 @@ def stream_upsert_warehouse(
     upsert is deterministic — the exact guarantee the reference gets
     from ON CONFLICT (README.md:31). A copy left in the retired
     directory by a crash between a commit's two renames fails every
-    later micro-batch instead of being taken for "no warehouse yet". A
-    flat table is upgraded to the partitioned layout by its next
-    micro-batch.
+    later micro-batch instead of being taken for "no warehouse yet", and
+    so does schema drift (a stored table whose columns are not the
+    micro-batch's), so the batch replays rather than dropping a stored
+    column. A flat table is upgraded to the partitioned layout by its
+    next micro-batch.
     """
     from ..pipeline import STAGE, _beside, merge_into
 

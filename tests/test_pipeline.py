@@ -344,6 +344,42 @@ def test_time_travel_reconstructs_every_snapshot(spark, dirs):
     assert snaps[0] != snaps[1] != snaps[2]
 
 
+def test_compaction_keeps_the_month_layout_and_every_snapshot(spark, dirs):
+    # compacting a history-keeping warehouse rewrites each month in
+    # place: the month directories stay, every snapshot still
+    # reconstructs as before, and the next merge rewrites only its months
+    import os
+
+    from simple_data_engineering_project_spark.pipeline import (
+        compact_small_files,
+        read_warehouse_version,
+    )
+
+    for seed in [42, 99, 7]:
+        _run_hist(spark, dirs, seed)
+    table = f"{dirs['warehouse']}/cocoa_shipments"
+    months = sorted(n for n in os.listdir(table) if n.startswith("load_month="))
+    versions = [
+        _snapshot_of(read_warehouse_version(spark, dirs["warehouse"], v))
+        for v in range(3)
+    ]
+
+    n_files = compact_small_files(spark, table)
+    names = os.listdir(table)
+    assert sorted(n for n in names if n.startswith("load_month=")) == months
+    assert not any(n.endswith(".parquet") for n in names)
+    assert n_files == len(months)
+    for v, want in enumerate(versions):
+        got = read_warehouse_version(spark, dirs["warehouse"], v)
+        assert _snapshot_of(got) == want, f"version {v} mismatch"
+    assert sorted(os.listdir(dirs["warehouse"])) == ["_history", "cocoa_shipments"]
+
+    land_csv_files(spark, dirs["landing"], num_files=1, rows_per_file=5, seed=8)
+    res = _run(spark, dirs, keep_history=True)
+    assert "*" not in res.rewritten_partitions
+    assert len(res.rewritten_partitions) < len(months)
+
+
 def test_time_travel_rejects_out_of_range(spark, dirs):
     from simple_data_engineering_project_spark.pipeline import (
         read_warehouse_version,

@@ -284,6 +284,30 @@ def test_stream_stops_on_a_leftover_retired_directory(spark, tmp_path):
     assert written() == before
 
 
+@pytest.mark.parametrize("layout", ["partitioned", "flat"])
+def test_stream_stops_on_a_stored_column_the_batch_lacks(spark, tmp_path, layout):
+    # schema drift: the stored table holds a column the micro-batch does
+    # not; merging would drop it from every rewritten month, so the
+    # micro-batch fails before writing anything
+    from pyspark.errors import StreamingQueryException
+
+    src, wh, ckpt = (str(tmp_path / d) for d in ("src", "wh", "ckpt"))
+    old = str(tmp_path / "old")
+    _append_events(spark, old, 0, 100, "2024-01-15")
+    stored = spark.read.parquet(old).withColumn("extra", F.lit(1))
+    if layout == "partitioned":
+        stored = stored.withColumn("load_month", F.lit("2024-01"))
+        stored.write.partitionBy("load_month").parquet(wh)
+    else:
+        stored.write.parquet(wh)
+    before = _file_digests(wh)
+    _append_events(spark, src, 50, 150, "2024-01-20")
+    with pytest.raises(StreamingQueryException, match="extra"):
+        _upsert_once(spark, src, wh, ckpt)
+    assert _file_digests(wh) == before
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "old", "src", "wh"]
+
+
 def test_stream_upgrades_a_flat_events_table(spark, tmp_path):
     # a flat events table, as the stream wrote it before it partitioned
     # by month, is rewritten whole into the partitioned layout by the
